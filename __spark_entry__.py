@@ -85,9 +85,11 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         business_priority="Critical",
     )
     compiled = compile_task(spark, task, resolver)
+    # the verdict plan carries no metadata columns (the engine attaches
+    # them on the driver); the table names are plain literals here
     return compiled.metrics_df.select(
-        "source_table",
-        "target_table",
+        F.lit(task.source_parts()[2]).alias("source_table"),
+        F.lit(task.target_parts()[2]).alias("target_table"),
         "result_payload",
         "overall_validation_passed",
     )

@@ -19,13 +19,14 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from datapact_spark import aggregate as agg
 from datapact_spark.config import DataPactConfig, ValidationTask
 from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
 from datapact_spark.plans.compiler import compile_task
+from datapact_spark.session import release_cached
 from datapact_spark.sources.loader import TableResolver
 
 log = logging.getLogger("datapact_spark")
@@ -95,15 +96,16 @@ class DataPactEngine:
             )
 
         plans: dict[str, str] = {}
+        resolver = self.resolver.scoped()
         for task in config.validations:
-            compiled = compile_task(self.spark, task, self.resolver)
+            compiled = compile_task(self.spark, task, resolver)
             text = fmt(compiled.metrics_df)
             if task.partition_by:
                 from datapact_spark.plans.partitioned import compile_partition_verdicts
 
                 text += "\n\n== Per-partition verdict plan (partition_by=%s) ==\n" % (
                     task.partition_by,
-                ) + fmt(compile_partition_verdicts(self.spark, task, self.resolver))
+                ) + fmt(compile_partition_verdicts(self.spark, task, resolver))
             plans[task.task_key] = text
         return plans
 
@@ -121,6 +123,9 @@ class DataPactEngine:
         job_start_ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         result = RunResult(run_id=run_id, job_name=job_name)
         parallelism = max_parallel or config.max_parallel_tasks
+        # one read per distinct table ref for this run, shared by every
+        # task, partition verdict and referential parent lookup
+        resolver = self.resolver.scoped()
 
         def _run_one(task: ValidationTask) -> tuple[TaskOutcome, Row | None]:
             # FAIR-pool isolation per task; local properties are
@@ -132,11 +137,12 @@ class DataPactEngine:
             try:
                 self._log_colocation(task)
                 compiled = compile_task(
-                    self.spark, task, self.resolver, baseline_store=self.baselines
+                    self.spark, task, resolver, baseline_store=self.baselines
                 )
                 row = compiled.ledger_row(
-                    run_id, run_id, job_name, job_start_ts
-                ).collect()[0]
+                    compiled.metrics_df.collect()[0],
+                    run_id, run_id, job_name, job_start_ts,
+                )
                 for kind, vdf in compiled.violation_dfs.items():
                     self.ledger.write_violations(run_id, task.task_key, kind, vdf)
                 for dcheck, src_df in compiled.bootstrap_drift:
@@ -165,7 +171,9 @@ class DataPactEngine:
                     # north-star mode: per-partition verdicts computed,
                     # checkpointed, and folded into the task payload +
                     # status (any failing group fails the task)
-                    row = self._augment_with_partition_verdicts(task, run_id, row)
+                    row = self._augment_with_partition_verdicts(
+                        task, run_id, row, resolver
+                    )
                 outcome = TaskOutcome(
                     task_key=task.task_key,
                     status=row["status"],
@@ -194,9 +202,14 @@ class DataPactEngine:
                     rows.append(row)
 
         if rows:
-            ledger_df = self.spark.createDataFrame(rows, LEDGER_SCHEMA)
-            self.ledger.append(ledger_df)
-            self._refresh_exec_tables(run_id)
+            # a frame of driver-side rows is a Python RDD: persisted, the
+            # ledger write decodes it once and the exec tables reuse it
+            ledger_df = self.spark.createDataFrame(rows, LEDGER_SCHEMA).persist()
+            try:
+                self.ledger.append(ledger_df)
+                self._refresh_exec_tables(run_id, ledger_df)
+            finally:
+                ledger_df.unpersist(blocking=True)
 
         if raise_on_failure and not result.passed:
             raise DataPactValidationError(
@@ -236,7 +249,7 @@ class DataPactEngine:
         return coloc
 
     def _augment_with_partition_verdicts(
-        self, task: ValidationTask, run_id: int, row: Row
+        self, task: ValidationTask, run_id: int, row: Row, resolver: TableResolver
     ) -> Row:
         """Run per-partition verdicts for a partition_by task and fold a
         summary (group counts + up-to-10 failing group keys) into the
@@ -247,6 +260,7 @@ class DataPactEngine:
                 run_id,
                 batches=task.partition_batches,
                 salt_buckets=task.partition_salt_buckets,
+                resolver=resolver,
             )
         except ValueError:
             # no groupable checks configured (e.g. custom-SQL only) —
@@ -292,6 +306,7 @@ class DataPactEngine:
         batches: int = 4,
         resume: bool = True,
         salt_buckets: int = 0,
+        resolver: TableResolver | None = None,
     ):
         """North-star execution mode: per-partition verdicts with
         checkpointed, exactly-resumable batches.
@@ -307,6 +322,9 @@ class DataPactEngine:
         directory then gets its own commit marker; a killed run resumes
         by recomputing only unmarked buckets (idempotent dynamic
         overwrite replaces exactly those directories).
+
+        ``resolver`` is the calling run's scoped resolver, so the task's
+        tables are read once per run; default: a scope of its own.
         """
         from datapact_spark.ledger import CheckpointStore
         from datapact_spark.plans.partitioned import compile_partition_verdicts
@@ -315,7 +333,8 @@ class DataPactEngine:
         group_cols = task.partition_by or []
         self._log_colocation(task)
         verdicts = compile_partition_verdicts(
-            self.spark, task, self.resolver, salt_buckets=salt_buckets
+            self.spark, task, resolver or self.resolver.scoped(),
+            salt_buckets=salt_buckets,
         )
         missing = [
             b
@@ -346,13 +365,14 @@ class DataPactEngine:
         # note there); release it now that the verdicts are written so
         # a long-lived session running many tasks doesn't accumulate
         # verdict-sized cache entries
-        cached = getattr(verdicts, "_datapact_cached", None)
-        if cached is not None:
-            cached.unpersist()
+        release_cached(verdicts)
         return store.read_verdicts(task.task_key, run_id)
 
-    def _refresh_exec_tables(self, run_id: int) -> None:
-        run_rows = self.ledger.run_results(run_id)
+    def _refresh_exec_tables(self, run_id: int, run_rows: DataFrame) -> None:
+        """Write the run's four exec tables from its in-memory ledger
+        rows — the same rows ``ledger.append`` just wrote, so reading
+        ``run_history`` back (schema inference plus a listing of every
+        past run's partition) would only add cost."""
         self.ledger.write_exec_table("exec_run_summary", agg.run_summary(run_rows), run_id)
         self.ledger.write_exec_table(
             "exec_domain_breakdown", agg.domain_breakdown(run_rows), run_id

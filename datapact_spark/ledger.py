@@ -15,6 +15,14 @@ the sandbox there's no transactional table format, so:
 
 On a real cluster, swap the writes for Delta/Iceberg ``MERGE``/
 ``replaceWhere`` — the engine code above this layer is unchanged.
+
+Ledger timestamps are driver clock readings (naive UTC).
+``validation_begin_ts`` is taken when the task is compiled and
+``validation_complete_ts`` right after its verdict row is collected, so
+their difference is the task's planning plus execution time. Before the
+ledger row was built on the driver (``CompiledTask.ledger_row``),
+``validation_complete_ts`` was ``current_timestamp()`` inside the task
+plan — fixed at query start, before the scan ran.
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ LEDGER_SCHEMA = (
     "business_priority string, expected_sla_hours double, "
     "estimated_impact_usd double, result_payload string"
 )
+LEDGER_COLUMNS = [c.split()[0] for c in LEDGER_SCHEMA.split(", ")]
 
 
 class ResultsLedger:

@@ -22,11 +22,12 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from datapact_spark.config import ValidationTask
 from datapact_spark.functions import exprs as E
+from datapact_spark.ledger import LEDGER_COLUMNS
 from datapact_spark.operators import constraints as CK
 from datapact_spark.operators import freshness as FR
 from datapact_spark.operators import profile as P
@@ -35,34 +36,18 @@ from datapact_spark.operators import rowhash as H
 from datapact_spark.operators.custom_sql import custom_sql_metrics, render_custom_sql
 from datapact_spark.sources.loader import TableResolver
 
-LEDGER_COLUMNS = [
-    "task_key",
-    "status",
-    "run_id",
-    "job_id",
-    "job_name",
-    "job_start_ts",
-    "validation_begin_ts",
-    "validation_complete_ts",
-    "source_catalog",
-    "source_schema",
-    "source_table",
-    "target_catalog",
-    "target_schema",
-    "target_table",
-    "business_domain",
-    "business_owner",
-    "business_priority",
-    "expected_sla_hours",
-    "estimated_impact_usd",
-    "result_payload",
-]
-
-
 @dataclass
 class CompiledTask:
     task: ValidationTask
-    metrics_df: DataFrame  # one row: metadata + result_payload + overall_validation_passed
+    # one row: result_payload + overall_validation_passed. Run and task
+    # metadata are attached on the driver (ledger_row), never in the
+    # plan: Spark inlines long/timestamp literals into generated Java,
+    # so a run_id or timestamp in the plan would make every task's final
+    # stage a new class to compile on every run
+    metrics_df: DataFrame
+    # driver clock at compile time: the ledger's validation_begin_ts and
+    # the reference instant of freshness checks
+    begin_ts: dt.datetime
     violation_dfs: dict[str, DataFrame] = field(default_factory=dict)
     # snapshot-mode drift checks with no stored baseline yet: the engine
     # bootstraps (writes) these after the run — compile stays side-effect
@@ -70,48 +55,37 @@ class CompiledTask:
     bootstrap_drift: list = field(default_factory=list)  # [(check, source_df)]
 
     def ledger_row(
-        self, run_id: int, job_id: int, job_name: str, job_start_ts: dt.datetime
-    ) -> DataFrame:
-        """Project the metrics row into the ledger schema
-        (validation.sql.j2:489-491)."""
-        return self.metrics_df.select(
-            F.lit(self.task.task_key).alias("task_key"),
-            F.when(F.col("overall_validation_passed"), F.lit("SUCCESS"))
-            .otherwise(F.lit("FAILURE"))
-            .alias("status"),
-            F.lit(run_id).cast("long").alias("run_id"),
-            F.lit(job_id).cast("long").alias("job_id"),
-            F.lit(job_name).alias("job_name"),
-            F.lit(job_start_ts).cast("timestamp").alias("job_start_ts"),
-            *[F.col(c) for c in LEDGER_COLUMNS[6:]],
-        )
-
-
-def _meta_cols(task: ValidationTask, begin_ts: dt.datetime) -> list[Column]:
-    s_cat, s_sch, s_tbl = task.source_parts()
-    t_cat, t_sch, t_tbl = task.target_parts()
-
-    def s(v: str | None) -> Column:
-        return F.lit(v).cast("string")
-
-    def n(v: float | None) -> Column:
-        return F.lit(v).cast("double")
-
-    return [
-        F.lit(begin_ts).cast("timestamp").alias("validation_begin_ts"),
-        F.current_timestamp().alias("validation_complete_ts"),
-        s(s_cat).alias("source_catalog"),
-        s(s_sch).alias("source_schema"),
-        s(s_tbl).alias("source_table"),
-        s(t_cat).alias("target_catalog"),
-        s(t_sch).alias("target_schema"),
-        s(t_tbl).alias("target_table"),
-        s(task.business_domain).alias("business_domain"),
-        s(task.business_owner).alias("business_owner"),
-        s(task.business_priority).alias("business_priority"),
-        n(task.expected_sla_hours).alias("expected_sla_hours"),
-        n(task.estimated_impact_usd).alias("estimated_impact_usd"),
-    ]
+        self,
+        verdict: Row,
+        run_id: int,
+        job_id: int,
+        job_name: str,
+        job_start_ts: dt.datetime,
+    ) -> Row:
+        """The task's ledger row (validation.sql.j2:489-491), in
+        LEDGER_SCHEMA order: the collected ``metrics_df`` row plus run
+        and task metadata. Call right after the collect —
+        ``validation_complete_ts`` is the driver clock now."""
+        task = self.task
+        values = [
+            task.task_key,
+            "SUCCESS" if verdict["overall_validation_passed"] else "FAILURE",
+            run_id,
+            job_id,
+            job_name,
+            job_start_ts,
+            self.begin_ts,
+            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+            *task.source_parts(),
+            *task.target_parts(),
+            task.business_domain,
+            task.business_owner,
+            task.business_priority,
+            task.expected_sla_hours,
+            task.estimated_impact_usd,
+            verdict["result_payload"],
+        ]
+        return Row(**dict(zip(LEDGER_COLUMNS, values)))
 
 
 _SKETCH_SNAPSHOT_COLS = {
@@ -181,11 +155,10 @@ def compile_task(
             )
         )
         metrics = spark.range(0, 1, 1, 1).select(
-            *_meta_cols(task, begin_ts),
             payload.alias("result_payload"),
             F.lit(True).alias("overall_validation_passed"),
         )
-        return CompiledTask(task=task, metrics_df=metrics)
+        return CompiledTask(task=task, metrics_df=metrics, begin_ts=begin_ts)
 
     metric_dfs: list[DataFrame] = []
     payload_fields: list[Column] = [
@@ -722,13 +695,13 @@ def compile_task(
         overall = overall & cond
 
     metrics = combined.select(
-        *_meta_cols(task, begin_ts),
         F.to_json(F.struct(*payload_fields)).alias("result_payload"),
         overall.alias("overall_validation_passed"),
     )
     return CompiledTask(
         task=task,
         metrics_df=metrics,
+        begin_ts=begin_ts,
         violation_dfs=violation_dfs,
         bootstrap_drift=bootstrap_drift,
     )

@@ -11,11 +11,18 @@ Here a ref resolves, in order:
 This keeps the engine catalog-agnostic: on the target cluster the same
 config reads Iceberg tables; in the sandbox it reads the driver's
 parquet test data.
+
+Every resolve of a path or catalog ref is a new read (a file listing
+and, for parquet, a schema-inference job). The engine therefore takes a
+``scoped`` resolver per run, which reads each distinct ref once and
+hands every task the same DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,6 +75,23 @@ class TableResolver:
         self.base_dir = base_dir
         self._registry: dict[str, DataFrame] = {}
         self._paths: dict[str, str] = {}
+        # ref -> its one read; None outside a ``scoped`` copy
+        self._reads: dict[str, Future] | None = None
+        self._lock = threading.Lock()
+
+    def scoped(self) -> TableResolver:
+        """A copy of this resolver that reads each distinct ref at most
+        once. Take one per run and share it across the run's tasks; the
+        next run takes a new one, so it sees rewritten files.
+
+        Thread-safe: tasks resolving the same ref concurrently wait for
+        one read. A ref whose read fails raises that error in every task
+        that resolves it, and in no other."""
+        run = TableResolver(self.spark, self.base_dir)
+        run._registry = dict(self._registry)
+        run._paths = dict(self._paths)
+        run._reads = {}
+        return run
 
     def _read_iceberg(self, spec: str) -> DataFrame:
         name, options = parse_iceberg_ref(spec)
@@ -96,6 +120,21 @@ class TableResolver:
             self._registry[name] = df_or_path
 
     def resolve(self, ref: str) -> DataFrame:
+        if self._reads is None:
+            return self._read(ref)
+        with self._lock:
+            read = self._reads.get(ref)
+            first = read is None
+            if first:
+                read = self._reads[ref] = Future()
+        if first:
+            try:
+                read.set_result(self._read(ref))
+            except Exception as e:  # noqa: BLE001 — re-raised to each caller
+                read.set_exception(e)
+        return read.result()
+
+    def _read(self, ref: str) -> DataFrame:
         if ref in self._registry:
             return self._registry[ref]
         if ref.startswith("iceberg:"):

@@ -28,6 +28,7 @@ this module adds two Spark-native modes:
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from typing import Callable
 
@@ -95,7 +96,7 @@ def validate_stream(
     ``foreachBatch``; the ``target`` resolves through ``resolver`` as
     usual (a static reference table). Returns the StreamingQuery.
     """
-    from datapact_spark.ledger import ResultsLedger
+    from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
 
     # per-stream ledger subdirectory: micro-batch run_ids are batch ids,
     # which collide across different streaming tasks — and the ledger's
@@ -104,24 +105,20 @@ def validate_stream(
     ledger = ResultsLedger(spark, os.path.join(results_path, f"stream_{task.task_key}"))
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_resolver = TableResolver(spark, base_dir=resolver.base_dir)
-        batch_resolver._registry.update(resolver._registry)
-        batch_resolver._paths.update(resolver._paths)
+        job_start_ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        batch_resolver = resolver.scoped()
         batch_resolver.register(task.source_ref, batch_df)
         compiled = compile_task(spark, task, batch_resolver)
-        import datetime as dt
-
-        row_df = compiled.ledger_row(
+        row = compiled.ledger_row(
+            compiled.metrics_df.collect()[0],
             run_id=batch_id,
             job_id=batch_id,
             job_name=job_name,
-            job_start_ts=dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+            job_start_ts=job_start_ts,
         )
-        rows = row_df.collect()
-        ledger.append(spark.createDataFrame(rows, row_df.schema))
+        ledger.append(spark.createDataFrame([row], LEDGER_SCHEMA))
         if on_batch is not None:
-            r = rows[0]
-            on_batch(batch_id, r["status"], r["status"] == "SUCCESS")
+            on_batch(batch_id, row["status"], row["status"] == "SUCCESS")
 
     writer = stream_df.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
