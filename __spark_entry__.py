@@ -751,10 +751,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 5_000_000).alias("doc_id"),
         F.substring("text", 10, 120).alias("text"),
     )
-    # vectorized=True: numpy rolling-hash gram path (same windows, same
-    # distinct-overlap counts — hash-agnostic downstream; r7 A/B 5.4-7.5s
-    # -> 1.7-1.9s, collected rows byte-identical)
-    return contamination_check(docs, evals, k=20, min_shared=5, vectorized=True)
+    return contamination_check(docs, evals, k=20, min_shared=5)
 
 
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1688,14 +1685,12 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     document: total gram windows, windows shared with >= 2 docs, and
     the duplication fraction. STRICT oracle: DuckDB recomputes the
     same counts from the literal gram strings (no hashing), equal to
-    the hash-based engine path up to a 2^-62 collision. Runs the
-    vectorized production path (numpy rolling hash — ~3× the Column
-    path's throughput; path equivalence is unit-tested)."""
+    the hash-based engine path up to a 2^-62 collision."""
     from datapact_spark.operators.dedup import doc_duplication_score
     from datapact_spark.session import propagate_cached
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = doc_duplication_score(docs, k=20, min_docs=2, vectorized=True)
+    scored = doc_duplication_score(docs, k=20, min_docs=2)
     return propagate_cached(
         scored,
         scored.select(

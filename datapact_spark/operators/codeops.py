@@ -612,15 +612,17 @@ def code_fingerprints_vectorized(
     path_col: str = "path",
     content_col: str = "content",
 ) -> DataFrame:
-    """Python-worker twin of ``code_fingerprints`` — bit-identical
-    output (unit-tested), computed with Python ``re`` + hashlib instead
-    of interpreted Column higher-order functions (the per-token
-    when/rlike transform and the per-shingle md5 transform are
-    interpreted per element on the JVM; one numpy/re pass per file is
-    ~3× faster and ships only the compact (file_key, n_tokens, fp)
-    rows). All regexes are ASCII-only and group-free, so Java and
-    Python semantics coincide; keyword/classing rules mirror
-    ``code_token_classes`` exactly."""
+    """``code_fingerprints`` computed in the Python worker with ``re`` +
+    hashlib instead of interpreted Column higher-order functions (the
+    per-token when/rlike transform and the per-shingle md5 transform
+    are interpreted per element on the JVM; one ``re`` pass per file
+    ships only the compact (file_key, n_tokens, fp) rows). The
+    production path of ``near_clone_pairs``; its output equals the
+    Column reference row for row — null key components are skipped as
+    ``concat_ws`` skips them, and rows are distinct across input rows
+    sharing a (repo, path). All regexes are ASCII-only and group-free,
+    so Java and Python semantics coincide; keyword/classing rules
+    mirror ``code_token_classes`` exactly."""
     import hashlib
     import re
 
@@ -674,7 +676,7 @@ def code_fingerprints_vectorized(
                     )
                     if h % mod == 0:
                         seen.add(h)
-                key = f"{repo}/{path}"
+                key = "/".join(p for p in (repo, path) if p is not None)
                 for h in seen:
                     keys.append(key)
                     ntoks.append(n)
@@ -685,9 +687,12 @@ def code_fingerprints_vectorized(
                  "fp": pd.Series(fps, dtype="int64")}
             )
 
+    # the distinct runs on an fp-hashed exchange, so the fp-keyed
+    # consumers in near_clone_pairs (bucket cap, pair join) reuse its
+    # partitioning instead of shuffling again
     return df.select(repo_col, path_col, content_col).mapInPandas(
         batches, schema="file_key string, n_tokens int, fp long"
-    )
+    ).repartition("fp").distinct()
 
 
 def near_clone_pairs(
@@ -701,7 +706,6 @@ def near_clone_pairs(
     repo_col: str = "repo",
     path_col: str = "path",
     content_col: str = "content",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Type-3 (near-miss) clone pairs: files sharing >= ``min_shared``
     winnowed token-class fingerprints with overlap similarity
@@ -723,6 +727,9 @@ def near_clone_pairs(
     only, the same discipline as SourcererC-style frequency filtering.
     The self-join's two sides read one repartition("fp") exchange
     (byte-identical subtrees → AQE ReusedExchange, the r4 ANN lesson).
+    The fingerprint kernel's distinct is hashed on fp, so the bucket cap
+    adds no exchange, and neither does that repartition while the
+    per-file counts broadcast.
     Files with < ``min_fingerprints`` surviving fingerprints are
     excluded — too short for a meaningful overlap ratio. The persisted
     relation rides the returned frame's ``_datapact_cached`` handle —
@@ -732,10 +739,7 @@ def near_clone_pairs(
     from datapact_spark.operators.dedup import cap_bucket_size
     from datapact_spark.session import track_cached
 
-    # vectorized=True (default): Python-worker fingerprint twin —
-    # bit-identical (unit-tested), ~2× the interpreted-HOF Column path
-    fp_fn = code_fingerprints_vectorized if vectorized else code_fingerprints
-    fps = fp_fn(
+    fps = code_fingerprints_vectorized(
         df, k=k, mod=mod, repo_col=repo_col, path_col=path_col,
         content_col=content_col,
     ).select("file_key", "fp").persist(StorageLevel.MEMORY_AND_DISK)

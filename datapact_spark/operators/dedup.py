@@ -130,6 +130,16 @@ def exact_duplicates(
     )
 
 
+def _minhash_perms(num_hashes: int, seed: int) -> list[tuple[int, int]]:
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE))
+        for _ in range(num_hashes)
+    ]
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -137,71 +147,79 @@ def minhash_signatures(
     num_hashes: int = 32,
     shingle_n: int = 3,
     seed: int = 42,
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id, sig: array<bigint>) — minhash signature per document.
 
-    Permutation i is (a_i·h + b_i) mod M over the shingle hashes.
+    Permutation i is (a_i·h + b_i) mod M over the shingle hashes. Token
+    hashes stay on the JVM (Spark ``xxhash64`` has no portable Python
+    twin); the shingle rolling hash, distinct, and the ``num_hashes``
+    permutation minima run as one numpy pass per document inside
+    ``mapInPandas``, so the per-doc aggregation completes in the worker
+    (no (id, shingle-hash) explode + grouped aggregation, no interpreted
+    higher-order-function chain). Signatures are bit-identical to
+    ``minhash_signatures_column``, the reference the tests compare
+    against. The id column keeps its input type, so string doc ids
+    work."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    ``vectorized=True`` (default): token hashes stay on the JVM (Spark
-    ``xxhash64`` has no portable Python twin), but the shingle rolling
-    hash, distinct, and the ``num_hashes`` permutation minima run as
-    one numpy pass per document inside ``mapInPandas`` — bit-identical
-    to the Column path (unit-tested, incl. sub-``shingle_n``-token and
-    empty/null-text edge docs) while skipping the interpreted
-    higher-order-function chain AND the (id, shingle-hash) explode +
-    grouped 32-buffer aggregation (the per-doc aggregation completes in
-    the worker, guide §2.3). ``vectorized=False`` keeps the pure-Column
-    path (string doc ids, no-Python environments)."""
-    import random
+    abs_ = _minhash_perms(num_hashes, seed)
+    A = np.array([a for a, _ in abs_], dtype=np.int64)
+    B = np.array([b for _, b in abs_], dtype=np.int64)
+    n = shingle_n
 
-    rng = random.Random(seed)
-    abs_ = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
+    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    hashed = df.select(
+        F.col(id_col).alias("id"),
+        F.transform(
+            tokens, lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
+        ).alias("__h"),
+    )
+    schema = StructType([
+        StructField("id", hashed.schema[0].dataType),
+        StructField("sig", ArrayType(LongType())),
+    ])
 
-    if vectorized:
-        import numpy as np
-        import pandas as pd
+    def batches(it):
+        for pdf in it:
+            rows, sigs = [], []
+            for row, arr in enumerate(pdf["__h"]):
+                if arr is None:
+                    # null text → explode(null) emitted no rows
+                    continue
+                h = np.asarray(arr, dtype=np.int64)
+                s = h.size
+                # zip_with(acc, slice(h, j+1, ...), coalesce(b, 0))
+                # ≡ rolling over h padded with n-1 zeros; keep the
+                # first max(s - (n-1), 1) entries, then distinct —
+                # exactly _shingles' Column semantics
+                hp = np.concatenate([h, np.zeros(n - 1, dtype=np.int64)])
+                acc = h.copy()
+                for j in range(1, n):
+                    acc = (acc * _PR + hp[j:j + s]) % _MERSENNE
+                sh = np.unique(acc[: max(s - (n - 1), 1)])
+                sig = ((sh[:, None] * A + B) % _MERSENNE).min(axis=0)
+                rows.append(row)
+                sigs.append([int(x) for x in sig])
+            yield pd.DataFrame(
+                {"id": pdf["id"].take(rows).reset_index(drop=True),
+                 "sig": pd.Series(sigs, dtype="object")}
+            )
 
-        A = np.array([a for a, _ in abs_], dtype=np.int64)
-        B = np.array([b for _, b in abs_], dtype=np.int64)
-        n = shingle_n
+    return hashed.mapInPandas(batches, schema=schema)
 
-        tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        hashed = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(
-                tokens, lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
-            ).alias("__h"),
-        )
 
-        def batches(it):
-            for pdf in it:
-                ids, sigs = [], []
-                for did, arr in zip(pdf["id"], pdf["__h"]):
-                    if arr is None:
-                        # null text → explode(null) emitted no rows
-                        continue
-                    h = np.asarray(arr, dtype=np.int64)
-                    s = h.size
-                    # zip_with(acc, slice(h, j+1, ...), coalesce(b, 0))
-                    # ≡ rolling over h padded with n-1 zeros; keep the
-                    # first max(s - (n-1), 1) entries, then distinct —
-                    # exactly _shingles' Column semantics
-                    hp = np.concatenate([h, np.zeros(n - 1, dtype=np.int64)])
-                    acc = h.copy()
-                    for j in range(1, n):
-                        acc = (acc * _PR + hp[j:j + s]) % _MERSENNE
-                    sh = np.unique(acc[: max(s - (n - 1), 1)])
-                    sig = ((sh[:, None] * A + B) % _MERSENNE).min(axis=0)
-                    ids.append(int(did))
-                    sigs.append([int(x) for x in sig])
-                yield pd.DataFrame(
-                    {"id": pd.Series(ids, dtype="int64"),
-                     "sig": pd.Series(sigs, dtype="object")}
-                )
-
-        return hashed.mapInPandas(batches, schema="id long, sig array<bigint>")
-
+def minhash_signatures_column(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    shingle_n: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """Pure-Column ``minhash_signatures``: the reference its signatures
+    are tested against (same permutations, same shingles)."""
     def _perm(a: int, b: int):
         # closure factory: F.transform introspects the lambda's arity,
         # so defaults-as-captures would look like a 3-arg lambda
@@ -212,9 +230,8 @@ def minhash_signatures(
     # Explode shingle hashes to (id, h) rows and take the num_hashes
     # permutation minima as ONE grouped aggregate. This evaluates the
     # shingling exactly once (array expressions referenced N times get
-    # re-evaluated N× after Catalyst's CollapseProject), gets map-side
-    # partial aggregation for free, and the shuffle carries only
-    # (id, 32 longs) partials — the shape that scales to 10^12 docs.
+    # re-evaluated N× after Catalyst's CollapseProject) and the shuffle
+    # carries only (id, num_hashes longs) partials.
     exploded = df.select(
         F.col(id_col).alias("id"),
         F.explode(_shingles(text_col, shingle_n)).alias("h"),
@@ -222,7 +239,7 @@ def minhash_signatures(
     mins = exploded.groupBy("id").agg(
         *[
             F.min(_perm(a, b)(F.col("h"))).alias(f"m{i}")
-            for i, (a, b) in enumerate(abs_)
+            for i, (a, b) in enumerate(_minhash_perms(num_hashes, seed))
         ]
     )
     return mins.select(
@@ -599,22 +616,16 @@ def char_ngram_hashes(
     text_col: str = "text",
     k: int = 20,
     stride: int = 1,
-    portable: bool = False,
     mod_sample: int | None = None,
 ) -> DataFrame:
     """(id, pos, gram_hash) rows — one per character ``k``-gram window
-    (every ``stride`` characters). JVM-side: a ``transform`` over a
-    position sequence hashing ``substring`` windows (the per-element
-    work references only plain column attributes, so the
-    interpreted-HOF re-evaluation trap does not bite), then
-    ``posexplode``. Output volume is O(total chars / stride) rows of
-    (long, int, long) — the shape that scales: no joins, no Python.
+    (every ``stride`` characters), hashed with xxhash64. JVM-side: a
+    ``transform`` over a position sequence hashing ``substring``
+    windows, then ``posexplode``. The operators below run
+    ``char_ngram_doc_counts_vectorized``; this Column form is the
+    reference its window count and positions are tested against.
 
-    ``portable=True`` hashes with the md5-prefix fold (bit-identical in
-    any engine with md5 — used by the strict oracle); default xxhash64
-    is the fast path.
-
-    Sampling levers (100-TB volume control):
+    Sampling levers (100-TB volume control), shared with the kernel:
     * ``stride`` decimates POSITIONALLY — intra-document window
       counting only. Two documents sharing a span sample the same
       windows only when their span alignments agree mod stride, so
@@ -632,19 +643,12 @@ def char_ngram_hashes(
         F.lit(0),
     ).cast("int")
 
-    def gram_hash(gram: F.Column) -> F.Column:
-        if portable:
-            return F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
-        return F.xxhash64(gram)
-
     # guard: sequence(0, -1) would DESCEND for texts shorter than k
     grams = F.when(
         n_grams > 0,
         F.transform(
             F.sequence(F.lit(0), n_grams - 1),
-            lambda i: gram_hash(
-                F.substring(F.col(text_col), i * stride + 1, k)
-            ),
+            lambda i: F.xxhash64(F.substring(F.col(text_col), i * stride + 1, k)),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     out = df.select(F.col(id_col).alias("id"), grams.alias("__g")).select(
@@ -655,7 +659,7 @@ def char_ngram_hashes(
     return out
 
 
-def char_ngram_hashes_vectorized(
+def char_ngram_doc_counts_vectorized(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -663,34 +667,37 @@ def char_ngram_hashes_vectorized(
     stride: int = 1,
     mod_sample: int | None = None,
 ) -> DataFrame:
-    """Fast path for ``char_ngram_hashes``: a numpy rolling polynomial
-    hash inside ``mapInPandas`` (the sanctioned vectorized-hash role).
-    Each Arrow batch hashes every window as one sliding-window matrix ·
-    power-vector product — no per-element interpreted lambda, ~10-20×
-    the Column-path throughput at stride 1.
+    """Per-document DISTINCT gram counts, aggregated inside the Python
+    worker: (id, gram_hash, occ) with one row per distinct gram per
+    document — the one gram kernel of ``repeated_substring_grams``,
+    ``doc_duplication_score`` and ``contamination_check``.
 
-    Hash values differ from the JVM path (polynomial vs xxhash64), but
-    windows are CODEPOINT grams (text decoded to UTF-32 before the
-    sliding view), so window count and positions match the JVM char
-    path for all text, not just ASCII; downstream counts (repeated
-    grams, duplication scores) are hash-agnostic.
+    Each window is hashed by a numpy rolling polynomial hash (one
+    sliding-window matrix · power-vector product per document). Hash
+    values differ from ``char_ngram_hashes`` (polynomial vs xxhash64),
+    but windows are CODEPOINT grams (text decoded to UTF-32 before the
+    sliding view), so window count and positions match the Column
+    reference for all text, not just ASCII; downstream counts are
+    hash-agnostic.
 
-    Requires an INTEGRAL ``id_col`` (output schema pins ``id`` to
-    long); raises TypeError otherwise — use the JVM path
-    (``vectorized=False``), which preserves the id type, for string
-    doc ids."""
+    A document is whole within its batch row, so a numpy
+    ``unique(return_counts=True)`` per doc completes the (id, gram)
+    aggregation map-side — no per-occurrence rows cross Arrow, and a
+    downstream per-(id, gram) groupBy becomes unnecessary WHEN ids are
+    unique per input row (with duplicated ids, aggregate the output
+    again before relying on distinctness). ``id`` keeps the input
+    column's Spark type, so string doc ids work."""
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    id_type = df.select(id_col).schema[0].dataType
-    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            f"char_ngram_hashes_vectorized requires an integral id column "
-            f"(output schema pins id to long); {id_col!r} is {id_type.simpleString()} "
-            f"— use vectorized=False for non-integral doc ids"
-        )
+    src = df.select(id_col, text_col)
+    schema = StructType([
+        StructField("id", src.schema[0].dataType),
+        StructField("gram_hash", LongType()),
+        StructField("occ", LongType()),
+    ])
 
     # TWO independent 31-bit rolling hashes packed into one 62-bit
     # value: a single 31-bit hash collides at ~10^5 distinct grams
@@ -706,101 +713,12 @@ def char_ngram_hashes_vectorized(
 
     def batches(it):
         for pdf in it:
-            ids, poss, hashes = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            rows, hashes, occs = [], [], []
+            for row, text in enumerate(pdf[text_col]):
                 if text is None:
                     continue
                 # UTF-32-LE → one uint32 per CODEPOINT: windows align
-                # with the JVM path's character windows on any text
-                # (uint8 over UTF-8 bytes would shift window counts and
-                # positions for non-ASCII); for ASCII the values equal
-                # the byte values, so hashes are unchanged there
-                b = np.frombuffer(
-                    str(text).encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                if b.size < k:
-                    continue
-                win = sliding_window_view(b, k)[::stride].astype(np.int64)
-                h = (
-                    ((win @ powers1) % _MERSENNE) << 31
-                ) | ((win @ powers2) % _MERSENNE)
-                pos = np.arange(0, h.size * stride, stride, dtype=np.int64)[: h.size]
-                if mod_sample and mod_sample > 1:
-                    keep = (h % mod_sample) == 0
-                    h, pos = h[keep], pos[keep]
-                if h.size == 0:
-                    continue
-                ids.append(np.full(h.size, int(did), dtype=np.int64))
-                poss.append(pos)
-                hashes.append(h)
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "id": np.concatenate(ids),
-                        "pos": np.concatenate(poss),
-                        "gram_hash": np.concatenate(hashes),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {"id": pd.Series(dtype="int64"),
-                     "pos": pd.Series(dtype="int64"),
-                     "gram_hash": pd.Series(dtype="int64")}
-                )
-
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema="id long, pos long, gram_hash long"
-    )
-
-
-def char_ngram_doc_counts_vectorized(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
-    stride: int = 1,
-    mod_sample: int | None = None,
-) -> DataFrame:
-    """Per-document DISTINCT gram counts, aggregated inside the Python
-    worker: (id, gram_hash, occ) with one row per distinct gram per
-    document. A document is whole within its batch row, so a numpy
-    ``unique(return_counts=True)`` per doc completes the (id, gram)
-    aggregation map-side — the Arrow transfer drops the unused ``pos``
-    column and the per-occurrence rows, and a downstream per-(id, gram)
-    groupBy (one full shuffle of the gram stream) becomes unnecessary
-    WHEN ids are unique per input row (one row per document — the
-    operator-level callers' documented input shape; with duplicated
-    ids, aggregate the output again before relying on distinctness).
-    Same hash/window semantics as ``char_ngram_hashes_vectorized``
-    (integral ids only; raises TypeError otherwise)."""
-    import numpy as np
-    import pandas as pd
-    from numpy.lib.stride_tricks import sliding_window_view
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    id_type = df.select(id_col).schema[0].dataType
-    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            f"char_ngram_doc_counts_vectorized requires an integral id column "
-            f"(output schema pins id to long); {id_col!r} is "
-            f"{id_type.simpleString()} — use the JVM path for string doc ids"
-        )
-
-    def _powers(p: int) -> "np.ndarray":
-        out, acc = np.empty(k, dtype=np.int64), 1
-        for j in range(k):
-            out[j] = acc
-            acc = (acc * p) % _MERSENNE
-        return out
-
-    powers1, powers2 = _powers(_PR), _powers(1_000_033)
-
-    def batches(it):
-        for pdf in it:
-            ids, hashes, occs = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
+                # with the Column reference's character windows on any text
                 b = np.frombuffer(
                     str(text).encode("utf-32-le"), dtype=np.uint32
                 ).astype(np.int64)
@@ -815,27 +733,26 @@ def char_ngram_doc_counts_vectorized(
                 if h.size == 0:
                     continue
                 uniq, cnt = np.unique(h, return_counts=True)
-                ids.append(np.full(uniq.size, int(did), dtype=np.int64))
+                rows.append(np.full(uniq.size, row, dtype=np.int64))
                 hashes.append(uniq)
                 occs.append(cnt.astype(np.int64))
-            if ids:
+            if rows:
+                ids = pdf[id_col].take(np.concatenate(rows))
                 yield pd.DataFrame(
                     {
-                        "id": np.concatenate(ids),
+                        "id": ids.reset_index(drop=True),
                         "gram_hash": np.concatenate(hashes),
                         "occ": np.concatenate(occs),
                     }
                 )
             else:
                 yield pd.DataFrame(
-                    {"id": pd.Series(dtype="int64"),
+                    {"id": pdf[id_col].iloc[:0],
                      "gram_hash": pd.Series(dtype="int64"),
                      "occ": pd.Series(dtype="int64")}
                 )
 
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema="id long, gram_hash long, occ long"
-    )
+    return src.mapInPandas(batches, schema=schema)
 
 
 def repeated_substring_grams(
@@ -845,35 +762,22 @@ def repeated_substring_grams(
     k: int = 20,
     stride: int = 1,
     min_docs: int = 2,
-    portable: bool = False,
-    vectorized: bool = False,
     mod_sample: int | None = None,
 ) -> DataFrame:
     """Char ``k``-grams appearing in at least ``min_docs`` DISTINCT
     documents: (gram_hash, n_docs, n_occurrences). One groupBy on the
-    gram hash (map-side partials; the shuffle carries one partial row
-    per distinct gram per task) — never a self-join, so a gram shared
-    by every document costs one counter, not O(n²) pairs.
-    ``vectorized=True`` requires an integral id column (raises
-    TypeError otherwise — see ``char_ngram_hashes_vectorized``)."""
-    g = _grams(df, id_col, text_col, k, stride, portable, vectorized, mod_sample)
+    gram hash over the per-doc counts (map-side partials; the shuffle
+    carries one partial row per distinct gram per task) — never a
+    self-join, so a gram shared by every document costs one counter,
+    not O(n²) pairs."""
+    g = char_ngram_doc_counts_vectorized(df, id_col, text_col, k, stride, mod_sample)
     return (
         g.groupBy("gram_hash")
         .agg(
             F.count_distinct("id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occurrences"),
+            F.sum("occ").alias("n_occurrences"),
         )
         .where(F.col("n_docs") >= min_docs)
-    )
-
-
-def _grams(df, id_col, text_col, k, stride, portable, vectorized, mod_sample=None):
-    if vectorized:
-        return char_ngram_hashes_vectorized(
-            df, id_col, text_col, k, stride, mod_sample
-        )
-    return char_ngram_hashes(
-        df, id_col, text_col, k, stride, portable, mod_sample
     )
 
 
@@ -884,8 +788,6 @@ def doc_duplication_score(
     k: int = 20,
     stride: int = 1,
     min_docs: int = 2,
-    portable: bool = False,
-    vectorized: bool = False,
     mod_sample: int | None = None,
     carrier_strategy: str = "join",
     broadcast_rep_max: int = 2_000_000,
@@ -893,9 +795,8 @@ def doc_duplication_score(
     """Per-document verbatim-duplication score: the fraction of a
     document's ``k``-gram windows that also occur in >= ``min_docs``
     documents (id, n_grams, shared_grams, dup_score). Training
-    pipelines drop or trim documents past a score threshold.
-    ``vectorized=True`` uses the numpy rolling-hash fast path
-    (integral doc ids only — see ``char_ngram_hashes_vectorized``).
+    pipelines drop or trim documents past a score threshold. Expects
+    one row per document id (see ``char_ngram_doc_counts_vectorized``).
 
     ``carrier_strategy``:
 
@@ -915,20 +816,12 @@ def doc_duplication_score(
       carrier count runs over ``Window.partitionBy(gram_hash)`` and
       AQE never splits skewed windows.
     """
-    if vectorized:
-        # per-doc distinct counts complete the (id, gram) aggregation
-        # inside the Python worker — no per-occurrence Arrow transfer,
-        # no pos column, and the per-(gram, id) groupBy shuffle of the
-        # raw gram stream disappears outright (guide §2.3/§4: aggregate
-        # before you shuffle, ship only what the consumer needs)
-        gi = char_ngram_doc_counts_vectorized(
-            df, id_col, text_col, k, stride, mod_sample
-        ).withColumnRenamed("occ", "__occ")
-    else:
-        g = _grams(
-            df, id_col, text_col, k, stride, portable, vectorized, mod_sample
-        )
-        gi = g.groupBy("gram_hash", "id").agg(F.count(F.lit(1)).alias("__occ"))
+    # per-doc distinct counts complete the (id, gram) aggregation
+    # inside the Python worker — no per-occurrence Arrow transfer and
+    # no per-(gram, id) groupBy shuffle of the raw gram stream
+    gi = char_ngram_doc_counts_vectorized(
+        df, id_col, text_col, k, stride, mod_sample
+    ).withColumnRenamed("occ", "__occ")
 
     if carrier_strategy == "window":
         from pyspark.sql.window import Window
@@ -993,8 +886,6 @@ def contamination_check(
     text_col: str = "text",
     k: int = 20,
     stride: int = 1,
-    portable: bool = False,
-    vectorized: bool = False,
     mod_sample: int | None = None,
     min_shared: int = 1,
 ) -> DataFrame:
@@ -1019,16 +910,10 @@ def contamination_check(
     gram sampling to BOTH sides, so a shared span is still detected
     alignment-independently at ~1/m of the volume."""
     def _side(side_df):
-        # vectorized: per-doc distinct grams pre-aggregated in the
-        # Python worker (no pos column, no per-occurrence rows across
-        # Arrow); distinctness per (id, gram) is what both consumers
-        # below want anyway
-        if vectorized:
-            return char_ngram_doc_counts_vectorized(
-                side_df, id_col, text_col, k, stride, mod_sample
-            ).select("id", "gram_hash")
-        return _grams(
-            side_df, id_col, text_col, k, stride, portable, False, mod_sample
+        # per-doc distinct grams pre-aggregated in the Python worker;
+        # distinctness per (id, gram) is what both consumers below want
+        return char_ngram_doc_counts_vectorized(
+            side_df, id_col, text_col, k, stride, mod_sample
         ).select("id", "gram_hash")
 
     tg = _side(train).select(F.col("id").alias("train_id"), "gram_hash")

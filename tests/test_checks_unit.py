@@ -536,9 +536,6 @@ class TestSubstringDedup:
         rep = repeated_substring_grams(docs, k=20, mod_sample=4)
         assert rep.count() > 0
         assert rep.agg(F.min("n_docs")).collect()[0][0] == 2
-        # vectorized path agrees on the selected-gram count
-        rep_v = repeated_substring_grams(docs, k=20, mod_sample=4, vectorized=True)
-        assert rep_v.count() > 0
 
 
 class TestRound5Fixes:
@@ -587,28 +584,64 @@ class TestRound5Fixes:
             )
 
     def test_vectorized_windows_are_codepoint_aligned(self, spark):
-        """Non-ASCII text: the numpy fast path must produce the same
-        window COUNT and POSITIONS as the JVM char path (UTF-8 byte
+        """Non-ASCII text: the numpy gram kernel must count the same
+        windows as the Column reference's character windows (UTF-8 byte
         windows would over-count for multibyte text)."""
         from datapact_spark.operators.dedup import (
+            char_ngram_doc_counts_vectorized,
             char_ngram_hashes,
-            char_ngram_hashes_vectorized,
         )
 
         # 30 codepoints, all multibyte (UTF-8: 2-3 bytes each)
         text = "é" * 10 + "中" * 10 + "ß" * 10
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
         jvm = char_ngram_hashes(docs, k=20).collect()
-        vec = char_ngram_hashes_vectorized(docs, k=20).collect()
-        assert sorted(r["pos"] for r in vec) == sorted(r["pos"] for r in jvm)
-        assert len(vec) == 30 - 20 + 1
+        vec = char_ngram_doc_counts_vectorized(docs, k=20)
+        assert vec.agg(F.sum("occ")).collect()[0][0] == len(jvm) == 30 - 20 + 1
 
-    def test_vectorized_string_id_raises(self, spark):
-        from datapact_spark.operators.dedup import char_ngram_hashes_vectorized
+    def test_gram_operators_keep_string_ids(self, spark):
+        """The gram kernel passes the id column through with its input
+        type: string doc ids give the same per-doc scores and
+        contamination pairs as the same docs under long ids."""
+        from datapact_spark.operators.dedup import (
+            char_ngram_doc_counts_vectorized,
+            contamination_check,
+            doc_duplication_score,
+        )
 
-        docs = spark.createDataFrame([("a", "x" * 30)], "doc_id string, text string")
-        with pytest.raises(TypeError, match="integral id"):
-            char_ngram_hashes_vectorized(docs, k=20)
+        docs = self._boiler_docs(spark)
+        sdocs = docs.select(
+            F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
+        )
+        assert dict(
+            char_ngram_doc_counts_vectorized(sdocs, k=20).dtypes
+        )["id"] == "string"
+
+        def by_id(df, key, prefix=""):
+            return sorted(
+                (prefix + str(r[key]),) + tuple(r[c] for c in df.columns if c != key)
+                for r in df.collect()
+            )
+
+        assert by_id(doc_duplication_score(sdocs, k=20), "id") == by_id(
+            doc_duplication_score(docs, k=20), "id", "d"
+        )
+        evals = docs.where(F.col("doc_id") == 2).select(
+            F.lit(9).cast("long").alias("doc_id"), F.substring("text", 20, 60).alias("text")
+        )
+        sevals = evals.select(F.lit("e9").alias("doc_id"), "text")
+        long_pairs = sorted(
+            (f"d{r['train_id']}", f"e{r['eval_id']}", r["shared_grams"],
+             r["contamination_score"])
+            for r in contamination_check(docs, evals, k=20).collect()
+        )
+        str_pairs = sorted(
+            (r["train_id"], r["eval_id"], r["shared_grams"],
+             r["contamination_score"])
+            for r in contamination_check(sdocs, sevals, k=20).collect()
+        )
+        assert str_pairs == long_pairs
+        assert {p[0] for p in str_pairs} == {"d1", "d2", "d4"}
 
     def test_simhash_exact_past_million_tokens(self, spark):
         """A document with > 2^20 whitespace tokens must produce the
@@ -1034,6 +1067,65 @@ class TestMinHashProbe:
         pairs = {(r["id_a"], r["id_b"]) for r in
                  minhash_lsh_candidates(sigs, bands=16, rows_per_band=2).collect()}
         assert (5, 100) in pairs
+
+    def test_string_ids_match_long_ids(self, spark):
+        """String doc ids (streaming near-dedup passes any ``id_col``)
+        give the same signatures and near-dup pairs as long ids."""
+        from datapact_spark.operators.dedup import minhash_dedup, minhash_signatures
+
+        docs = self._corpus(spark).unionByName(
+            spark.createDataFrame(
+                [(100 + i, " ".join(f"w{i}_{j}" for j in range(30)) + " tail")
+                 for i in (3, 7, 11)],
+                "doc_id long, text string",
+            )
+        )
+        sdocs = docs.select(
+            F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
+        )
+        sigs = {f"d{r['id']}": r["sig"] for r in minhash_signatures(docs).collect()}
+        ssigs = {r["id"]: r["sig"] for r in minhash_signatures(sdocs).collect()}
+        assert ssigs == sigs and len(sigs) == 43
+
+        pairs = {
+            (frozenset((f"d{r['id_a']}", f"d{r['id_b']}")), r["jaccard"])
+            for r in minhash_dedup(docs, threshold=0.5).collect()
+        }
+        spairs = {
+            (frozenset((r["id_a"], r["id_b"])), r["jaccard"])
+            for r in minhash_dedup(sdocs, threshold=0.5).collect()
+        }
+        assert spairs == pairs
+        assert {p for p, _ in pairs} == {
+            frozenset((f"d{i}", f"d{100 + i}")) for i in (3, 7, 11)
+        }
+
+    def test_signatures_match_column_reference(self, spark):
+        """The numpy signature kernel is bit-identical to the Column
+        reference, including docs shorter than ``shingle_n`` tokens,
+        empty/blank text (one empty-token shingle) and null text (no
+        row), for long and string ids."""
+        from datapact_spark.operators.dedup import (
+            minhash_signatures,
+            minhash_signatures_column,
+        )
+
+        edge = spark.createDataFrame(
+            [(100, "one"), (101, "two words"), (102, ""), (103, "   "),
+             (104, None), (105, "Repeat repeat REPEAT repeat")],
+            "doc_id long, text string",
+        )
+        docs = self._corpus(spark).unionByName(edge).repartition(3)
+        sdocs = docs.select(
+            F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
+        )
+        for frame in (docs, sdocs):
+            for n in (1, 3):
+                got = {r["id"]: r["sig"] for r in
+                       minhash_signatures(frame, num_hashes=16, shingle_n=n).collect()}
+                ref = {r["id"]: r["sig"] for r in
+                       minhash_signatures_column(frame, num_hashes=16, shingle_n=n).collect()}
+                assert got == ref and len(got) == 45
 
     def test_probe_finds_near_dups_and_skips_unrelated(self, spark, tmp_path):
         from datapact_spark.operators.dedup import probe_near_dups

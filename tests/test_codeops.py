@@ -321,36 +321,42 @@ class TestNearClones:
         assert near_clone_pairs(df, k=8).count() == 0
 
     def test_fingerprints_vectorized_matches_jvm(self, spark):
-        """The Python-worker fingerprint twin must be BIT-IDENTICAL to
-        the Column path — token pattern, keyword/class rules (ASCII
-        ranges only: unicode letters/digits must NOT class as I/N),
-        comment stripping, shingle md5, mod-sampling, per-file
-        distinctness, short-file exclusion."""
+        """The Python-worker fingerprint kernel must equal the Column
+        reference row for row — token pattern, keyword/class rules
+        (ASCII ranges only: unicode letters/digits must NOT class as
+        I/N), comment stripping, shingle md5, mod-sampling, per-file
+        distinctness (also across rows sharing a (repo, path)),
+        concat_ws null-skipping file keys, short-file exclusion."""
         from datapact_spark.operators.codeops import (
             code_fingerprints,
             code_fingerprints_vectorized,
         )
 
+        java = (
+            "int process(int[] data, int limit) {\n"
+            "    int sum = 0;\n"
+            "    for (int i = 0; i < data.length; i++) {\n"
+            "        sum += data[i] * 2;\n    }\n    return sum;\n}\n"
+        )
         df = self._df(spark, [
             ("r1", "a.py", "py",
              "def f(x):\n    # comment\n    return x + 1  /* block\n"
              " spans */ 'str' \"dq\" 0x1f 12.5\n"),
             ("r1", "uni.py", "py", "café = ٣ + 1 " * 20),
-            ("r2", "b.java", "java",
-             "int process(int[] data, int limit) {\n"
-             "    int sum = 0;\n"
-             "    for (int i = 0; i < data.length; i++) {\n"
-             "        sum += data[i] * 2;\n    }\n    return sum;\n}\n"),
+            ("r2", "b.java", "java", java),
             ("r2", "short.py", "py", "x = 1"),
             ("r3", "none.py", "py", None),
-        ])
+            (None, "norepo.java", "java", java),
+            ("r2", "b.java", "java", java),
+        ]).repartition(3)
         for kk in (4, 8):
-            a = {(r["file_key"], r["n_tokens"], r["fp"])
-                 for r in code_fingerprints(df, k=kk, mod=2).collect()}
-            b = {(r["file_key"], r["n_tokens"], r["fp"])
-                 for r in code_fingerprints_vectorized(
-                     df, k=kk, mod=2).collect()}
-            assert a == b, f"k={kk}: {a ^ b}"
+            a = sorted((r["file_key"], r["n_tokens"], r["fp"])
+                       for r in code_fingerprints(df, k=kk, mod=2).collect())
+            b = sorted((r["file_key"], r["n_tokens"], r["fp"])
+                       for r in code_fingerprints_vectorized(
+                           df, k=kk, mod=2).collect())
+            assert a == b, f"k={kk}: {set(a) ^ set(b)}"
+            assert any(key == "norepo.java" for key, _, _ in b)
 
     def test_universal_fingerprint_bucket_capped(self, spark):
         from pyspark.sql import functions as F

@@ -138,9 +138,7 @@ def main() -> None:
         spark, args.docs, words=args.words, boiler_grams=args.boiler_grams
     )
     t0 = time.monotonic()
-    out = doc_duplication_score(
-        docs, k=20, vectorized=True, carrier_strategy=args.strategy
-    )
+    out = doc_duplication_score(docs, k=20, carrier_strategy=args.strategy)
     # noop sink: materialize every output column without driver collect
     out.write.format("noop").mode("overwrite").save()
     wall = time.monotonic() - t0
