@@ -303,10 +303,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 1000000).alias("doc_id"), "text"
         )
     )
-    from datapact_spark.session import propagate_cached
-
-    dup = exact_duplicates(dup_input)
-    return propagate_cached(dup, dup.select("keep_id", "dup_id"))
+    return exact_duplicates(dup_input).select("keep_id", "dup_id")
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,6 +551,7 @@ def q_code_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from datapact_spark.operators.sampling import portable_id_hash
     from datapact_spark.operators.textops import code_stats
+    from datapact_spark.session import persist_scoped
 
     # Persisting the derived code table splits the fused scan→content-
     # CASE→hygiene→license→normalize→md5 whole-stage-codegen span in
@@ -564,7 +562,7 @@ def q_code_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compiles (r7: 2 compile errors -> 0, warm 3.9 s -> 2.1 s). The
     # production analogue is the stage-boundary parquet materialization
     # pipeline.py already does; MEMORY_AND_DISK spills gracefully.
-    code = _code_table(spark, sf_dir).persist()
+    code = persist_scoped(_code_table(spark, sf_dir))
     hygienic = code_hygiene(code).where(F.col("hygiene_keep")).select(
         "repo", "path", "lang", "content"
     )
@@ -578,9 +576,9 @@ def q_code_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the hash stage once — three downstream stage
     # aggregates would otherwise re-derive the normalization regexes
-    hashed = licensed.withColumn(
-        "norm_hash", F.md5(normalize_code("content"))
-    ).persist()
+    hashed = persist_scoped(
+        licensed.withColumn("norm_hash", F.md5(normalize_code("content")))
+    )
     hashed.count()
     keepers = hashed.groupBy("norm_hash").agg(F.min("path").alias("path"))
     decloned = hashed.join(keepers, ["norm_hash", "path"]).select(
@@ -598,17 +596,13 @@ def q_code_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("id_hash_sum"),
         ).select(F.lit(name).alias("stage"), "n_rows", "id_hash_sum")
 
-    from datapact_spark.session import track_cached
-
-    return track_cached(
+    return (
         stage("1_raw", code)
         .unionByName(stage("2_hygiene", hygienic))
         .unionByName(stage("3_licensed", licensed))
         .unionByName(stage("4_decloned", decloned))
         .unionByName(stage("5_quality", quality))
-        .orderBy("stage"),
-        hashed,
-        code,
+        .orderBy("stage")
     )
 
 
@@ -683,15 +677,13 @@ def q_code_near_clones(spark: SparkSession, sf_dir: str) -> DataFrame:
     all engine-portable; DuckDB recomputes every pair bitwise. ACTIVE
     driver entry (new in r6)."""
     from datapact_spark.operators.codeops import near_clone_pairs
-    from datapact_spark.session import propagate_cached
 
     code = _code_table(spark, sf_dir).unionByName(
         spark.createDataFrame(
             _NC_ROWS, "repo string, path string, commit string, lang string, content string"
         )
     )
-    pairs = near_clone_pairs(code)
-    return propagate_cached(pairs, pairs.orderBy("file_a", "file_b"))
+    return near_clone_pairs(code).orderBy("file_a", "file_b")
 
 
 def q_code_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,16 +717,11 @@ def q_freshness_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["event_type"], count_tolerance=0.0,
         freshness_checks=[FreshnessCheck(column="ts", max_age_hours=24.0)],
     )
-    v = compile_partition_verdicts(spark, task, resolver)
-    from datapact_spark.session import propagate_cached
-
-    # carry the cached joined-profile handle through the projection
-    # (same orphaned-handle leak class as q_partitioned_verdict)
-    return propagate_cached(v, v.select(
+    return compile_partition_verdicts(spark, task, resolver).select(
         "event_type", "source_count", "freshness_max_ts_source",
         "freshness_ts_source_passed", "count_passed",
         "overall_validation_passed",
-    ).orderBy("event_type"))
+    ).orderBy("event_type")
 
 
 def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,6 +800,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_summary,
         redact_pii,
     )
+    from datapact_spark.session import persist_scoped
 
     header = "// Copyright 2026 Example Corp\n// SPDX-License-Identifier: MIT"
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -838,7 +826,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregates below otherwise re-derive the strip for every branch,
     # and a lazy persist would be raced by the sibling branches of the
     # union, so force it eagerly
-    red = redact_pii(cleaned).persist()
+    red = persist_scoped(redact_pii(cleaned))
     red.count()
     fp = red.withColumn(
         "f", F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
@@ -848,7 +836,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = deterministic_split(
         deduped, {"train": 0.9, "val": 0.05, "test": 0.05}
     ).where(F.col("split") == "train")
-    chunks = chunk_documents(train, max_tokens=40, overlap=8).persist()
+    chunks = persist_scoped(chunk_documents(train, max_tokens=40, overlap=8))
     chunks.count()
     seqs = pack_summary(
         pack_sequences(chunks, context_len=128, shards=4), context_len=128
@@ -863,7 +851,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(name).alias("stage"), "n_rows", "id_hash_sum")
 
     did = F.col("doc_id").cast("string")
-    out = (
+    return (
         stage("1_raw", raw, did)
         # redaction never drops rows, so the cleaned-stage count/hash
         # can read the cached post-redaction relation
@@ -888,16 +876,6 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("stage")
     )
-    # hand the two eager persists to the materializing caller for
-    # release (bench/tests call session.release_cached) instead of
-    # pinning them for the session
-    from datapact_spark.session import track_cached
-
-    # red + chunks are the eager persists; stripped carries the boiler
-    # hash-set persist from strip_boilerplate
-    from datapact_spark.session import propagate_cached
-
-    return propagate_cached(stripped, track_cached(out, red, chunks))
 
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,13 +899,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridges = docs.where(F.col("doc_id") % 70 == 0).select(
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 7).alias("id_b")
     )
-    from datapact_spark.session import propagate_cached
-
-    labels = dup_clusters(pairs.unionByName(bridges))
-    # carry BOTH cache handles out: the labels persist from the loop
-    # and exact_duplicates' fingerprint-proxy persist
-    out = propagate_cached(labels, labels.orderBy("id"))
-    return propagate_cached(dup, out)
+    return dup_clusters(pairs.unionByName(bridges)).orderBy("id")
 
 
 def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1015,14 +987,11 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "doc_id long, text string",
     )
-    from datapact_spark.session import propagate_cached
-
-    out = strip_boilerplate(docs.unionByName(injected), min_docs=3)
-    return propagate_cached(out, out.select(
+    return strip_boilerplate(docs.unionByName(injected), min_docs=3).select(
         "doc_id", "n_lines", "n_boiler",
         F.md5("cleaned_text").alias("cleaned_md5"),
         F.length("cleaned_text").cast("long").alias("cleaned_len"),
-    ).orderBy("doc_id"))
+    ).orderBy("doc_id")
 
 
 QUOTA_BUDGETS = {"en": 20_000, "de": 6_000, "fr": 0}
@@ -1687,15 +1656,10 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same counts from the literal gram strings (no hashing), equal to
     the hash-based engine path up to a 2^-62 collision."""
     from datapact_spark.operators.dedup import doc_duplication_score
-    from datapact_spark.session import propagate_cached
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = doc_duplication_score(docs, k=20, min_docs=2)
-    return propagate_cached(
-        scored,
-        scored.select(
-            F.col("id").alias("doc_id"), "n_grams", "shared_grams", "dup_score"
-        ),
+    return doc_duplication_score(docs, k=20, min_docs=2).select(
+        F.col("id").alias("doc_id"), "n_grams", "shared_grams", "dup_score"
     )
 
 
@@ -1805,14 +1769,9 @@ def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ],
     )
-    v = compile_partition_verdicts(spark, task, resolver, salt_buckets=4)
-    from datapact_spark.session import propagate_cached
-
-    # the select would otherwise orphan the cached joined-profile
-    # handle compile_partition_verdicts hands off — the one relation
-    # the r7 full-board leak audit found still pinned after
-    # release_cached, crowding storage for every later bench query
-    return propagate_cached(v, v.select(
+    return compile_partition_verdicts(
+        spark, task, resolver, salt_buckets=4
+    ).select(
         "o_orderpriority", "source_count", "target_count",
         "total_compared_rows", "mismatch_count",
         "count_passed", "row_hash_passed", "uniqueness_passed",
@@ -1821,7 +1780,7 @@ def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         "constraint_violations_no_mod101_target",
         "constraint_no_mod101_target_passed",
         "overall_validation_passed",
-    ))
+    )
 
 
 _EVENTS_STREAM_SCHEMA = (

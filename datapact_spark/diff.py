@@ -167,6 +167,7 @@ def diff_partitions(
     failing groups by mismatch count)."""
     from datapact_spark.config import ValidationTask
     from datapact_spark.plans.partitioned import compile_partition_verdicts
+    from datapact_spark.session import cache_scope, persist_scoped
 
     task = ValidationTask(
         task_key="adhoc_diff",
@@ -181,8 +182,8 @@ def diff_partitions(
         hash_algo=algo,
         row_hash_mode="fingerprint_multiset",
     )
-    v = compile_partition_verdicts(spark, task, resolver).persist()
-    try:
+    with cache_scope():
+        v = persist_scoped(compile_partition_verdicts(spark, task, resolver))
         n_groups = v.count()
         failing = v.where(~F.col("overall_validation_passed"))
         n_fail = failing.count()
@@ -195,6 +196,4 @@ def diff_partitions(
             .limit(sample)
             .collect()
         ]
-    finally:
-        v.unpersist()
     return n_groups, n_fail, rows

@@ -26,7 +26,7 @@ from datapact_spark import aggregate as agg
 from datapact_spark.config import DataPactConfig, ValidationTask
 from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
 from datapact_spark.plans.compiler import compile_task
-from datapact_spark.session import release_cached
+from datapact_spark.session import cache_scope
 from datapact_spark.sources.loader import TableResolver
 
 log = logging.getLogger("datapact_spark")
@@ -103,9 +103,15 @@ class DataPactEngine:
             if task.partition_by:
                 from datapact_spark.plans.partitioned import compile_partition_verdicts
 
+                # explaining runs no job: release what the compiler
+                # persisted as soon as the plan text exists
+                with cache_scope():
+                    verdict_plan = fmt(
+                        compile_partition_verdicts(self.spark, task, resolver)
+                    )
                 text += "\n\n== Per-partition verdict plan (partition_by=%s) ==\n" % (
                     task.partition_by,
-                ) + fmt(compile_partition_verdicts(self.spark, task, resolver))
+                ) + verdict_plan
             plans[task.task_key] = text
         return plans
 
@@ -332,40 +338,38 @@ class DataPactEngine:
         store = CheckpointStore(self.spark, self.ledger.path)
         group_cols = task.partition_by or []
         self._log_colocation(task)
-        verdicts = compile_partition_verdicts(
-            self.spark, task, resolver or self.resolver.scoped(),
-            salt_buckets=salt_buckets,
-        )
-        missing = [
-            b
-            for b in range(batches)
-            if not (resume and store.batch_done(task.task_key, run_id, b))
-        ]
-        if len(missing) < batches:
-            log.info(
-                "task %s: %d/%d batches already committed — recomputing %s",
-                task.task_key, batches - len(missing), batches, missing,
+        # the scope releases what the verdict plan persisted (the joined
+        # profile, with constraint/freshness folds) once the batches are
+        # written: the checkpoint is the durable copy from then on
+        with cache_scope():
+            verdicts = compile_partition_verdicts(
+                self.spark, task, resolver or self.resolver.scoped(),
+                salt_buckets=salt_buckets,
             )
-        if missing:
-            bucket = F.pmod(
-                F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(batches)
-            ).cast("int")
-            out = verdicts.withColumn("batch", bucket)
+            missing = [
+                b
+                for b in range(batches)
+                if not (resume and store.batch_done(task.task_key, run_id, b))
+            ]
             if len(missing) < batches:
-                out = out.where(F.col("batch").isin(missing))
-            # drop orphan files of killed attempts first: a batch that is
-            # EMPTY in this recompute produces no dir in the dynamic
-            # overwrite, so leftovers would otherwise survive finalize
-            store.clear_uncommitted_batches(task.task_key, run_id, missing)
-            store.write_batches(task.task_key, run_id, out)
-            for b in missing:
-                store.finalize_batch(task.task_key, run_id, b, verdicts.schema)
-        # compile_partition_verdicts caches the joined-profile relation
-        # when constraint/freshness folds are present (see the persist
-        # note there); release it now that the verdicts are written so
-        # a long-lived session running many tasks doesn't accumulate
-        # verdict-sized cache entries
-        release_cached(verdicts)
+                log.info(
+                    "task %s: %d/%d batches already committed — recomputing %s",
+                    task.task_key, batches - len(missing), batches, missing,
+                )
+            if missing:
+                bucket = F.pmod(
+                    F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(batches)
+                ).cast("int")
+                out = verdicts.withColumn("batch", bucket)
+                if len(missing) < batches:
+                    out = out.where(F.col("batch").isin(missing))
+                # drop orphan files of killed attempts first: a batch that
+                # is EMPTY in this recompute produces no dir in the dynamic
+                # overwrite, so leftovers would otherwise survive finalize
+                store.clear_uncommitted_batches(task.task_key, run_id, missing)
+                store.write_batches(task.task_key, run_id, out)
+                for b in missing:
+                    store.finalize_batch(task.task_key, run_id, b, verdicts.schema)
         return store.read_verdicts(task.task_key, run_id)
 
     def _refresh_exec_tables(self, run_id: int, run_rows: DataFrame) -> None:

@@ -732,17 +732,19 @@ def near_clone_pairs(
     per-file counts broadcast.
     Files with < ``min_fingerprints`` surviving fingerprints are
     excluded — too short for a meaningful overlap ratio. The persisted
-    relation rides the returned frame's ``_datapact_cached`` handle —
-    ``session.release_cached(out)`` after materializing."""
+    fingerprint relation is released by the caller's ``cache_scope``."""
     from pyspark.storagelevel import StorageLevel
 
     from datapact_spark.operators.dedup import cap_bucket_size
-    from datapact_spark.session import track_cached
+    from datapact_spark.session import persist_scoped
 
-    fps = code_fingerprints_vectorized(
-        df, k=k, mod=mod, repo_col=repo_col, path_col=path_col,
-        content_col=content_col,
-    ).select("file_key", "fp").persist(StorageLevel.MEMORY_AND_DISK)
+    fps = persist_scoped(
+        code_fingerprints_vectorized(
+            df, k=k, mod=mod, repo_col=repo_col, path_col=path_col,
+            content_col=content_col,
+        ).select("file_key", "fp"),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     capped = cap_bucket_size(fps, ["fp"], max_bucket_size)
     counts = capped.groupBy("file_key").agg(
         F.count(F.lit(1)).alias("n_fps")
@@ -763,7 +765,7 @@ def near_clone_pairs(
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
         .where(F.col("shared_fps") >= min_shared)
     )
-    out = pairs.select(
+    return pairs.select(
         "file_a",
         "file_b",
         "shared_fps",
@@ -774,4 +776,3 @@ def near_clone_pairs(
             / F.least("fps_a", "fps_b").cast("double")
         ).alias("similarity"),
     ).where(F.col("similarity") >= threshold)
-    return track_cached(out, fps)

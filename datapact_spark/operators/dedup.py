@@ -106,7 +106,7 @@ def exact_duplicates(
     duplicate document (keeper = min id per group), columns
     (fingerprint, keep_id, dup_id)."""
     from datapact_spark.operators.textops import doc_fingerprint
-    from datapact_spark.session import track_cached
+    from datapact_spark.session import persist_scoped
     from pyspark.storagelevel import StorageLevel
 
     # Persist the compact (id, fingerprint) proxy: the keepers
@@ -114,19 +114,18 @@ def exact_duplicates(
     # persist each re-runs the full text scan + normalize + md5 (the
     # dominant cost — plan-verified doubled scans at r7). The cached
     # rows are ~50 B/doc (guide-§8 lightweight-proxy shape), orders of
-    # magnitude under the text they replace at any scale. The handle
-    # rides ``_datapact_cached`` — callers release after materializing.
-    fp = (
+    # magnitude under the text they replace at any scale. The caller's
+    # ``cache_scope`` releases it.
+    fp = persist_scoped(
         doc_fingerprint(df.select(id_col, text_col), text_col)
-        .select(F.col(id_col).alias("dup_id"), "fingerprint")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(F.col(id_col).alias("dup_id"), "fingerprint"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     keepers = fp.groupBy("fingerprint").agg(F.min("dup_id").alias("keep_id"))
-    return track_cached(
+    return (
         fp.join(keepers, "fingerprint")
         .where(F.col("dup_id") != F.col("keep_id"))
-        .select("fingerprint", "keep_id", "dup_id"),
-        fp,
+        .select("fingerprint", "keep_id", "dup_id")
     )
 
 
@@ -833,11 +832,12 @@ def doc_duplication_score(
     elif carrier_strategy == "join":
         from pyspark.storagelevel import StorageLevel
 
+        from datapact_spark.session import persist_scoped
+
         # Rows of gi are distinct (gram, doc) pairs, so count == the
-        # carrier-doc count. The persist rides the returned frame's
-        # _datapact_cached handle — release with
-        # session.release_cached(out) after materializing.
-        gi = gi.persist(StorageLevel.MEMORY_AND_DISK)
+        # carrier-doc count. The caller's cache_scope releases the
+        # persist.
+        gi = persist_scoped(gi, StorageLevel.MEMORY_AND_DISK)
         rep = (
             gi.groupBy("gram_hash")
             .agg(F.count(F.lit(1)).alias("__n_docs"))
@@ -859,7 +859,7 @@ def doc_duplication_score(
             f"carrier_strategy must be 'join' or 'window', got {carrier_strategy!r}"
         )
 
-    out = scored.groupBy("id").agg(
+    return scored.groupBy("id").agg(
         F.sum("__occ").alias("n_grams"),
         F.sum(
             F.when(F.col("__shared"), F.col("__occ")).otherwise(0)
@@ -872,11 +872,6 @@ def doc_duplication_score(
             "dup_score"
         ),
     )
-    if carrier_strategy == "join":
-        from datapact_spark.session import track_cached
-
-        out = track_cached(out, gi)
-    return out
 
 
 def contamination_check(
@@ -978,10 +973,11 @@ def dup_clusters(
     Raises if ``max_iterations`` rounds do not converge (pathological
     diameter — raise the cap). The RETURNED frame stays persisted (its
     lineage is the whole iteration chain; unpersisting would re-run
-    every round per downstream action) and carries itself on the
-    ``_datapact_cached`` handle — ``session.release_cached(out)`` (or
-    ``out.unpersist()``) when done."""
+    every round per downstream action); the caller's ``cache_scope``
+    releases it."""
     from pyspark.storagelevel import StorageLevel
+
+    from datapact_spark.session import persist_scoped
 
     checkpoint_every = 5
 
@@ -1033,7 +1029,10 @@ def dup_clusters(
             # of the pre-checkpoint plan
             updated_full = updated_full.localCheckpoint(eager=True)
         else:
-            updated_full = updated_full.persist(StorageLevel.MEMORY_AND_DISK)
+            # scoped: the converged round's frame is the one returned
+            updated_full = persist_scoped(
+                updated_full, StorageLevel.MEMORY_AND_DISK
+            )
         changed = updated_full.where(
             F.col("cluster_id") != F.col("__prev")
         ).count()
@@ -1042,9 +1041,7 @@ def dup_clusters(
         labels = updated_full.select("id", "cluster_id")
         if changed == 0:
             edges.unpersist()
-            from datapact_spark.session import track_cached
-
-            return track_cached(labels, labels_cached)
+            return labels
     edges.unpersist()
     labels_cached.unpersist()
     raise RuntimeError(
@@ -1115,16 +1112,20 @@ def strip_boilerplate(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_docs: int = 2,
-    boiler: DataFrame | None = None,
 ) -> DataFrame:
-    """Remove boilerplate lines from every document and reconstruct the
-    cleaned text (line order preserved, blank lines kept). Pass a
-    precomputed ``boilerplate_lines`` output via ``boiler`` to reuse the
-    corpus scan; otherwise it is derived at ``min_docs``.
+    """Remove boilerplate lines — ``boilerplate_lines(df, ...,
+    min_docs)`` — from every document and reconstruct the cleaned text
+    (line order preserved, blank lines kept).
 
     Returns ``(id, n_lines, n_boiler, cleaned_text)``; documents whose
     every line is boilerplate survive with ``cleaned_text = ''``, and
     null-text documents pass through with nulls.
+
+    Eager: the broadcast gate below runs one ``count()`` job over the
+    boilerplate line aggregation when this function is called, not
+    when the result is materialized. The hash set it counts is
+    persisted for the join and released by the caller's
+    ``cache_scope``.
 
     Scale shape: explode -> left_anti hash-join against the boilerplate
     hash set (broadcast when small) -> one groupBy(id) rebuild via
@@ -1132,10 +1133,8 @@ def strip_boilerplate(
     (id, line) pairs once; no window over the skewed line key.
     """
     from pyspark.storagelevel import StorageLevel
-    from datapact_spark.session import track_cached
+    from datapact_spark.session import persist_scoped
 
-    if boiler is None:
-        boiler = boilerplate_lines(df, id_col, text_col, min_docs)
     # Counted broadcast gate (same pattern as doc_duplication_score's
     # broadcast_rep_max): the hash set is 32 B/row, so up to ~2M
     # boilerplate lines broadcast in ~64 MB and the exploded line
@@ -1143,9 +1142,11 @@ def strip_boilerplate(
     # for the anti-join. Past the cap, AQE keeps the shuffled join.
     # The persist keeps the boiler derivation single-pass (the count
     # would otherwise recompute the full line aggregation the join
-    # needs again); the handle rides ``_datapact_cached``.
-    hashes = boiler.select("line_hash").persist(StorageLevel.MEMORY_AND_DISK)
-    hashes_cached = hashes
+    # needs again).
+    hashes = persist_scoped(
+        boilerplate_lines(df, id_col, text_col, min_docs).select("line_hash"),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     if hashes.count() <= 2_000_000:
         hashes = F.broadcast(hashes)
     lines = df.select(
@@ -1178,7 +1179,7 @@ def strip_boilerplate(
             F.size(F.split(F.col(text_col), "\n", -1)).cast("long"),
         ).alias("n_lines"),
     )
-    return track_cached(
+    return (
         totals
         .join(rebuilt, id_col, "left")
         .select(
@@ -1189,6 +1190,5 @@ def strip_boilerplate(
                 F.col("n_lines").isNotNull(),
                 F.coalesce("cleaned_text", F.lit("")),
             ).alias("cleaned_text"),
-        ),
-        hashes_cached,
+        )
     )

@@ -143,7 +143,6 @@ def grouped_row_hash_metrics_fingerprint(
     group_cols: list[str],
     hash_columns: list[str] | None = None,
     algo: str = "md5",
-    persist: bool = False,
     scope_join: str = "broadcast",
 ) -> DataFrame:
     """Fingerprint-first grouped hash compare — the minimal-shuffle path.
@@ -155,9 +154,7 @@ def grouped_row_hash_metrics_fingerprint(
 
     Each side is projected ONCE to a compact frame
     ``(group…, k1, k2, h)`` — the 128-bit folded PK plus the 64-bit
-    folded row hash (~40 B/row vs the full ~1 KB row) — optionally
-    persisted (MEMORY_AND_DISK; measured counterproductive on a single
-    box where branch stages contend, hence default off). From that
+    folded row hash (~40 B/row vs the full ~1 KB row). From that
     frame:
 
     1. a per-group commutative fingerprint ``sum(xxhash64(k1,k2,h))``
@@ -168,13 +165,13 @@ def grouped_row_hash_metrics_fingerprint(
        (total_compared_rows = source rows, mismatch_count = 0);
     2. ONLY fingerprint-unequal groups — in a healthy pipeline, a tiny
        fraction — are re-checked with the exact (k1,k2) join, scoped by
-       a broadcast semi-join against the failing-group key list. The
-       persisted compact frame means this costs a cached 40 B/row read,
-       NOT a second scan+hash of the raw input.
+       a broadcast semi-join against the failing-group key list; on
+       group-partitioned input, dynamic partition pruning limits that
+       second read to the failing groups' files.
 
     At 10^12 rows with 0.1% dirty groups this shuffles ~0.1% of what the
     all-groups join does, and the heavy work (scan + sha256) happens
-    exactly once per side. Duplicate-PK semantics: the fingerprint is a
+    once per side plus once more for the dirty groups. Duplicate-PK semantics: the fingerprint is a
     commutative sum over (pk, row_hash), so a fingerprint-equal group
     has EQUAL MULTISETS of (pk, hash) — no corruption is ever missed
     (unequal multisets fingerprint-unequal, collision ~2^-64) — but the
@@ -188,8 +185,6 @@ def grouped_row_hash_metrics_fingerprint(
     matches ``grouped_row_hash_metrics``:
     (group_cols…, total_compared_rows, mismatch_count).
     """
-    from pyspark import StorageLevel
-
     cols = hash_columns if hash_columns else [
         c for c in source.columns if c not in group_cols
     ]
@@ -197,13 +192,12 @@ def grouped_row_hash_metrics_fingerprint(
     pk_cols = [F.col(pk) for pk in primary_keys]
 
     def compact(df: DataFrame) -> DataFrame:
-        out = df.select(
+        return df.select(
             *[F.col(g) for g in group_cols],
             F.xxhash64(*pk_cols).alias("__k1"),
             F.xxhash64(F.lit(0x9E3779B9), *pk_cols).alias("__k2"),
             F.xxhash64(rh).alias("__h"),
         )
-        return out.persist(StorageLevel.MEMORY_AND_DISK) if persist else out
 
     s, t = compact(source), compact(target)
     fp = F.sum(F.xxhash64("__k1", "__k2", "__h").cast("decimal(38,0)"))

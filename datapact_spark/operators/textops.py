@@ -413,17 +413,15 @@ def tfidf_terms(
     (vocabulary-sized, sublinear) doc-freq relation is the scale-safe
     shape. The final window partitions per doc_id, bounded by a single
     document's vocabulary. The cached tf relation (aggregated, far
-    smaller than the token stream) rides the returned DataFrame's
-    ``_datapact_cached`` handle — release it after materializing with
-    ``session.release_cached(out)`` so long-lived sessions running many
-    corpora don't accumulate pinned storage (the r4 dup_clusters leak
-    class).
+    smaller than the token stream) is released by the caller's
+    ``cache_scope``, so long-lived sessions running many corpora don't
+    accumulate pinned storage (the r4 dup_clusters leak class).
     """
+    from datapact_spark.session import persist_scoped
+
     toks = _regex_terms(df, text_col, id_col)
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    tf = persist_scoped(
+        toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     tf.count()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -442,14 +440,11 @@ def tfidf_terms(
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.asc("term")
     )
-    from datapact_spark.session import track_cached
-
-    out = (
+    return (
         scored.withColumn("term_rank", F.row_number().over(w))
         .where(F.col("term_rank") <= top_n)
         .select("doc_id", "term", "tf", "doc_freq", "score", "term_rank")
     )
-    return track_cached(out, tf)
 
 
 def vocab_topk(

@@ -33,6 +33,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datapact_spark.session import cache_scope
+
 
 @dataclass
 class Stage:
@@ -107,16 +109,13 @@ class PipelineRunner:
                     rows=None, seconds=round(time.monotonic() - t0, 4),
                 ))
                 continue
-            out = st.fn(prev)
-            # one job: write is the materialization AND the checkpoint
-            # (_SUCCESS only lands on success; a kill leaves no marker)
-            out.write.mode("overwrite").parquet(d)
-            # release any mid-plan persists the stage operator handed
-            # off (e.g. strip_boilerplate's boiler hash set) — the
-            # parquet checkpoint is the durable copy from here on
-            from datapact_spark.session import release_cached
-
-            release_cached(out)
+            # the scope releases the stage operator's mid-plan persists
+            # (e.g. strip_boilerplate's boiler hash set) once the write
+            # lands — the parquet checkpoint is the durable copy
+            with cache_scope():
+                # one job: write is the materialization AND the checkpoint
+                # (_SUCCESS only lands on success; a kill leaves no marker)
+                st.fn(prev).write.mode("overwrite").parquet(d)
             prev = self.spark.read.parquet(d)
             rows = prev.count()
             results.append(StageResult(

@@ -32,6 +32,7 @@ from datapact_spark.functions import exprs as E
 from datapact_spark.operators import profile as P
 from datapact_spark.operators import referential as R
 from datapact_spark.operators import rowhash as H
+from datapact_spark.session import persist_scoped
 from datapact_spark.sources.loader import TableResolver
 
 
@@ -46,6 +47,9 @@ def compile_partition_verdicts(
     ``salt_buckets > 0`` enables two-level (salted) aggregation for the
     grouped profiles — use when one group (a mega-repo) dominates; see
     ``grouped_profile_salted``.
+
+    May persist the joined profile (fingerprint mode with constraint or
+    freshness folds): materialize the verdicts inside a ``cache_scope``.
     """
     group_cols = task.partition_by
     if not group_cols:
@@ -170,8 +174,8 @@ def compile_partition_verdicts(
         # +65% at 16M files). Caching the joined profile — one row per
         # group — restores single-scan behavior: the scope's broadcast
         # stage materializes the cache first and every later consumer
-        # reads it.
-        joined = joined.persist()
+        # reads it. The caller's cache_scope releases it.
+        joined = persist_scoped(joined)
 
     pass_conds: list[tuple[str, F.Column]] = []
     metric_cols: list[F.Column] = [
@@ -430,19 +434,12 @@ def compile_partition_verdicts(
         overall = overall & c
     named_conds = [c.alias(name) for name, c in pass_conds]
 
-    out = step.select(
+    return step.select(
         *[F.col(c) for c in group_cols],
         *metric_cols,
         *named_conds,
         overall.alias("overall_validation_passed"),
     )
-    if joined.is_cached:
-        # hand the cached joined-profile relation to the caller so it
-        # can be released once the verdicts are materialized (a LIST —
-        # propagate_cached/track_cached iterate the handle, and a bare
-        # DataFrame would star-unpack into its Columns)
-        out._datapact_cached = [joined]
-    return out
 
 
 def grouped_profile_salted(

@@ -4,13 +4,20 @@ AQE (runtime re-planning, skew-join splitting, partition coalescing) and
 Arrow-batched Python UDF transfer are on by default — these are the
 settings the engine assumes at 100 TB scale and they are equally correct
 on local[N].
+
+Cached intermediates have one owner: operators pin them with
+``persist_scoped`` and the enclosing ``cache_scope`` releases them.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -75,38 +82,62 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def track_cached(out, *cached):
-    """Attach mid-plan persisted relations to the DataFrame that
-    consumes them, so the caller that MATERIALIZES the result can
-    release them (``release_cached``) instead of pinning executor
-    storage for the whole session — the leak class behind the r4
-    ``dup_clusters`` bug. The handle rides the same ``_datapact_cached``
-    attribute the partitioned-verdict engine hands off."""
-    existing = list(getattr(out, "_datapact_cached", None) or [])
-    out._datapact_cached = existing + list(cached)
-    return out
+class _Scopes(threading.local):
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
 
 
-def release_cached(df) -> int:
-    """Unpersist every relation ``track_cached`` attached to ``df``.
-    Call AFTER materializing (collect / write); returns how many
-    relations were released. Safe on DataFrames with no handle."""
-    cached = getattr(df, "_datapact_cached", None) or []
-    if not isinstance(cached, list):
-        cached = [cached]
-    for c in cached:
-        c.unpersist()
-    df._datapact_cached = []
-    return len(cached)
+_scopes = _Scopes()
+_unscoped: list[DataFrame] = []
+_unscoped_lock = threading.Lock()
 
 
-def propagate_cached(src, dst):
-    """Move the ``_datapact_cached`` handle from ``src`` onto ``dst`` —
-    use when a wrapper derives a new DataFrame (select/alias/orderBy)
-    from a handle-carrying one, which would otherwise orphan the
-    persisted relations."""
-    cached = getattr(src, "_datapact_cached", None) or []
-    if not isinstance(cached, list):
-        # a bare DataFrame handle would star-unpack into its Columns
-        cached = [cached]
-    return track_cached(dst, *cached)
+def _unpersist_all(owned: list[DataFrame]) -> int:
+    for df in owned:
+        df.unpersist()
+    return len(owned)
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Own every relation ``persist_scoped`` pins inside the block and
+    unpersist them all on exit, normal or by exception. Scopes nest and
+    are thread-local: an inner scope releases only its own relations,
+    and a scope opened in one pool thread never sees another thread's.
+    Open one around the code that materializes (collect / write) a
+    result; frames derived from a released relation stay valid and
+    simply recompute."""
+    owned: list[DataFrame] = []
+    _scopes.stack.append(owned)
+    try:
+        yield
+    finally:
+        _scopes.stack.pop()
+        _unpersist_all(owned)
+
+
+def persist_scoped(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """Persist ``df`` (default level: ``DataFrame.persist``'s own) and
+    register it with the innermost open ``cache_scope`` of this thread;
+    outside any scope it joins the session-wide list that
+    ``release_cached`` drains."""
+    df = df.persist(level)
+    if _scopes.stack:
+        _scopes.stack[-1].append(df)
+    else:
+        with _unscoped_lock:
+            _unscoped.append(df)
+    return df
+
+
+def release_cached(df: DataFrame | None = None) -> int:
+    """Unpersist every relation ``persist_scoped`` pinned outside any
+    ``cache_scope`` and return how many. For callers that materialize a
+    result without a scope (``bench.py``, ``tools/``); ``df`` is
+    accepted for their call shape and not used."""
+    with _unscoped_lock:
+        owned = _unscoped[:]
+        _unscoped.clear()
+    return _unpersist_all(owned)

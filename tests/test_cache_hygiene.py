@@ -1,12 +1,17 @@
-"""Cache lifecycle hygiene (VERDICT r5 #4): queries that persist a
-mid-plan relation must hand it off via ``_datapact_cached`` so the
-materializing caller can release it — no query may pin executor storage
-for the rest of the session (the r4 ``dup_clusters`` leak class).
+"""Cache lifecycle hygiene: every relation an operator persists is owned
+by the innermost ``cache_scope`` (or, outside any scope, drained by the
+``release_cached`` shim), so no query pins executor storage for the
+rest of the session (the r4 ``dup_clusters`` leak class). The oracle
+sweep in ``test_oracle_parity.py`` checks the census for every query.
 """
+
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from datapact_spark.session import release_cached, track_cached
+from datapact_spark.session import cache_scope, persist_scoped, release_cached
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -15,59 +20,128 @@ def _n_cached_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def test_track_release_roundtrip(spark):
-    df = spark.range(100).persist()
-    df.count()
-    out = track_cached(spark.range(1), df)
-    assert _n_cached_rdds(spark) >= 1
-    assert release_cached(out) == 1
-    assert release_cached(out) == 0  # idempotent
+def _pinned(df) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
 
 
-def test_release_without_handle_is_noop(spark):
-    assert release_cached(spark.range(1)) == 0
+def test_nested_scope_releases_only_its_own(spark):
+    with cache_scope():
+        outer = persist_scoped(spark.range(101))
+        with cache_scope():
+            inner = persist_scoped(spark.range(102))
+        assert not _pinned(inner)
+        assert _pinned(outer)
+    assert not _pinned(outer)
+
+
+def test_scope_releases_on_exception(spark):
+    with pytest.raises(RuntimeError, match="mid-scope"):
+        with cache_scope():
+            df = persist_scoped(spark.range(201))
+            df.count()
+            raise RuntimeError("mid-scope")
+    assert not _pinned(df)
+
+
+def test_scopes_in_pool_threads_are_isolated(spark):
+    """The engine's case: tasks open scopes in pool threads at the same
+    time; closing one must not release the other's relations."""
+    a_persisted, b_closed = threading.Event(), threading.Event()
+
+    def task_a():
+        with cache_scope():
+            df = persist_scoped(spark.range(301))
+            a_persisted.set()
+            assert b_closed.wait(60)
+            return df, _pinned(df)
+
+    def task_b():
+        assert a_persisted.wait(60)
+        with cache_scope():
+            df = persist_scoped(spark.range(302))
+        b_closed.set()
+        return df
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fa, fb = pool.submit(task_a), pool.submit(task_b)
+        a_df, a_pinned_after_b = fa.result()
+        b_df = fb.result()
+    assert a_pinned_after_b, "closing b's scope released a's relation"
+    assert not _pinned(a_df) and not _pinned(b_df)
+
+
+class _FakeFrame:
+    """Stands in for a DataFrame: counts its unpersist calls."""
+
+    def __init__(self):
+        self.released = 0
+
+    def persist(self, level):
+        return self
+
+    def unpersist(self):
+        self.released += 1
+
+
+def test_unscoped_persists_survive_concurrent_drains():
+    """Pool threads persist outside any scope while another thread
+    drains the shim: every relation is released exactly once (a lost
+    update would leave one unreleased or uncounted)."""
+    release_cached()
+    n_threads, per_thread = 8, 20_000
+    stop = threading.Event()
+    drained: list[int] = []
+
+    def persist_many():
+        return [persist_scoped(_FakeFrame()) for _ in range(per_thread)]
+
+    def drain():
+        while not stop.is_set():
+            drained.append(release_cached())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    drainer = threading.Thread(target=drain)
+    drainer.start()
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            futures = [pool.submit(persist_many) for _ in range(n_threads)]
+            frames = [df for f in futures for df in f.result(timeout=120)]
+    finally:
+        stop.set()
+        drainer.join(60)
+        sys.setswitchinterval(old)
+    assert not drainer.is_alive()
+    drained.append(release_cached())
+    assert sum(drained) == n_threads * per_thread
+    assert all(df.released == 1 for df in frames)
+
+
+def test_shim_drains_only_unscoped_persists(spark):
+    release_cached()  # leftovers of earlier unscoped callers
+    loose = persist_scoped(spark.range(401))
+    with cache_scope():
+        owned = persist_scoped(spark.range(402))
+        assert release_cached() == 1
+        assert not _pinned(loose)
+        assert _pinned(owned)
+    assert release_cached() == 0
 
 
 @pytest.mark.parametrize("name", ["tfidf_terms", "corpus_pipeline"])
 def test_driver_queries_release_their_persists(spark, name):
-    """The two handle-carrying driver queries: after materializing and
-    releasing, the session's persistent-RDD census returns to its
-    pre-query level — nothing stays pinned."""
+    """``bench.py``'s path: no scope, materialize, then
+    ``release_cached(df)`` — the persistent-RDD census returns to its
+    pre-query level."""
     import __spark_entry__ as entry_mod
 
-    spark.catalog.clearCache()
+    release_cached()
     before = _n_cached_rdds(spark)
     df = entry_mod.queries_all()[name](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
-    handles = getattr(df, "_datapact_cached", None)
-    assert handles, f"{name} should hand off its persisted relations"
-    released = release_cached(df)
-    assert released == len(handles) if isinstance(handles, list) else 1
+    assert _n_cached_rdds(spark) > before, f"{name} should persist"
+    assert release_cached(df) >= 1
     assert _n_cached_rdds(spark) <= before, (
         f"{name} left {_n_cached_rdds(spark) - before} relations pinned"
     )
-
-
-def test_no_other_active_query_pins_storage(spark):
-    """Census over the rest of the active board: any query that persists
-    must either release internally or carry a handle — running it and
-    releasing must never grow the persistent-RDD census. Streaming and
-    index-building queries are exercised by their own lifecycle tests;
-    here we cover the cheap plan-only families that could silently grow
-    a long-lived server's cache."""
-    import __spark_entry__ as entry_mod
-
-    cheap = [
-        "dedup_exact", "minhash_dedup", "dup_clusters", "vocab_topk",
-        "chunk_documents", "pack_sequences", "quota_sample",
-        "contamination_check", "code_pipeline", "substring_dedup",
-        "code_near_clones",
-    ]
-    queries = entry_mod.queries_all()
-    spark.catalog.clearCache()
-    before = _n_cached_rdds(spark)
-    for name in cheap:
-        df = queries[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        release_cached(df)
-    assert _n_cached_rdds(spark) <= before, "a query pinned storage"

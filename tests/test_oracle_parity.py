@@ -12,6 +12,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from datapact_spark.session import cache_scope
 
 SF_DIR = os.environ.get("DATAPACT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -56,11 +57,20 @@ def ddb():
     return con
 
 
+def _n_cached_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.mark.parametrize("name", ORACLE_KEYS)
 def test_query_matches_oracle(spark, ddb, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
+    # the sweep doubles as the leak test for the whole surface: every
+    # relation the query persists must be released with its scope
+    before = _n_cached_rdds(spark)
+    with cache_scope():
+        sdf = QUERIES[name](spark, SF_DIR)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    pinned = _n_cached_rdds(spark) - before
 
     res = ddb.execute(ORACLES[name])
     d_cols = [d[0] for d in res.description]
@@ -72,6 +82,7 @@ def test_query_matches_oracle(spark, ddb, name):
     dc = _rows_canon(d_cols, d_rows)
     mismatches = [(a, b) for a, b in zip(sc, dc) if a != b]
     assert not mismatches, f"{name}: first value mismatch: {mismatches[:3]}"
+    assert pinned <= 0, f"{name} left {pinned} relations pinned"
 
 
 def test_all_queries_have_oracle_or_are_rows_only():

@@ -300,7 +300,7 @@ def test_fingerprint_detail_scan_uses_dynamic_partition_pruning(spark, tmp_path)
     s = spark.read.parquet(src_p)
     t = spark.read.parquet(tgt_p)
     m = grouped_row_hash_metrics_fingerprint(
-        s, t, ["repo", "path"], ["repo", "lang"], ["content"], "sha256", persist=False
+        s, t, ["repo", "path"], ["repo", "lang"], ["content"], "sha256"
     )
     plan = m._sc._jvm.PythonSQLUtils.explainString(m._jdf.queryExecution(), "formatted")
     assert "dynamicpruning" in plan.lower(), f"no DPP in detail scan:\n{plan[:3000]}"

@@ -185,7 +185,6 @@ def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
         pack_summary,
         redact_pii,
     )
-    from datapact_spark.session import release_cached
 
     oracle_rows = {
         r["stage"]: (r["n_rows"], r["id_hash_sum"])
@@ -232,7 +231,7 @@ def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
             pack_sequences(df, context_len=128, shards=4), context_len=128)),
     ]
     runner = PipelineRunner(spark, str(tmp_path))
-    out, results = runner.run("corpus", 1, raw, stages)
+    _, results = runner.run("corpus", 1, raw, stages)
 
     def pin(df, key):
         r = df.agg(
@@ -258,7 +257,6 @@ def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
         stage_dfs["sequences"],
         F.concat_ws(":", F.col("shard").cast("string"), F.col("seq_in_shard")),
     ) == oracle_rows["6_sequences"]
-    release_cached(out)
 
 
 class TestDeclarativePipelines:
@@ -357,6 +355,25 @@ class TestDeclarativePipelines:
             "hand", 1, docs, _stages()[:2]
         )
         assert [r.rows for r in decl] == [r.rows for r in hand]
+
+    def test_runs_release_stage_persists(self, spark, docs, tmp_path):
+        """strip_boilerplate persists its boiler hash set and the stage
+        projects the operator's output; every run must still leave the
+        session's persistent-RDD census where it found it."""
+        from datapact_spark.pipeline import build_stages
+
+        stages = build_stages(self._spec(stages=[
+            {"kind": "filter", "where": "length(text) > 10"},
+            {"kind": "strip_boilerplate", "min_docs": 3},
+        ]))
+        census = spark.sparkContext._jsc.getPersistentRDDs
+        before = census().size()
+        runner = PipelineRunner(spark, str(tmp_path))
+        for run_id in (1, 2, 3):
+            runner.run("prep", run_id, docs, stages)
+            assert census().size() <= before, (
+                f"run {run_id} left {census().size() - before} relations pinned"
+            )
 
     def test_pipeline_cli_end_to_end_and_resume(self, spark, tmp_path, sf_dir):
         import subprocess

@@ -277,7 +277,7 @@ def test_unresolvable_ref_errors_only_its_tasks(spark, sf_dir, tmp_path):
 def test_run_partitioned_with_constraint_and_freshness_releases_cache(spark, tmp_path):
     """In fingerprint mode, constraint/freshness folds make the partition
     verdicts cache their joined profile; the engine releases it after
-    writing the batches."""
+    writing the batches, and ``plan`` releases it once explained."""
     from datapact_spark.sources.codegen import corrupt_code_table, synthesize_code_table
 
     stamp = F.to_timestamp(F.lit("2026-01-01 00:00:00"))
@@ -296,6 +296,8 @@ def test_run_partitioned_with_constraint_and_freshness_releases_cache(spark, tmp
         freshness_checks=[{"column": "updated_at", "max_age_hours": 1_000_000, "side": "both"}],
     )
     spark.catalog.clearCache()
+    engine.plan(DataPactConfig(validations=[task]))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
 
     verdicts = engine.run_partitioned(task, run_id=3)
