@@ -31,7 +31,8 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from datapact_spark.session import cache_scope
 
@@ -57,7 +58,15 @@ class StageResult:
 
 class PipelineRunner:
     """Run ``stages`` over a source DataFrame with stage-boundary
-    materialization and exactly-at-boundary resume."""
+    materialization and exactly-at-boundary resume.
+
+    A fresh stage costs the jobs of its own write and nothing more: its
+    row count rides the write as an ``Observation`` (a
+    ``count(lit(1))`` metric read once the write has returned), and the
+    next stage reads the parquet back with the schema the stage already
+    has, so neither a schema-inference job nor a separate ``count()``
+    runs. A resumed stage is read with an inferred schema and reports
+    ``rows=None``."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -112,12 +121,18 @@ class PipelineRunner:
             # the scope releases the stage operator's mid-plan persists
             # (e.g. strip_boilerplate's boiler hash set) once the write
             # lands — the parquet checkpoint is the durable copy
+            obs = Observation(f"stage_{idx:02d}_{st.name}")
             with cache_scope():
-                # one job: write is the materialization AND the checkpoint
-                # (_SUCCESS only lands on success; a kill leaves no marker)
-                st.fn(prev).write.mode("overwrite").parquet(d)
-            prev = self.spark.read.parquet(d)
-            rows = prev.count()
+                out = st.fn(prev)
+                # the write is the materialization, the checkpoint and
+                # the row count (_SUCCESS only lands on success; a kill
+                # leaves no marker)
+                out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite").parquet(d)
+            # only now: obs.get blocks until the write's metrics arrive,
+            # and a failed write has raised before reaching this line
+            rows = obs.get["rows"]
+            prev = self.spark.read.schema(out.schema).parquet(d)
             results.append(StageResult(
                 stage=st.name, index=idx, path=d, resumed=False,
                 rows=rows, seconds=round(time.monotonic() - t0, 4),
@@ -182,8 +197,6 @@ def build_stages(spec) -> list[Stage]:
     chunk_text)``; ``pack`` appends the shard/sequence assignment.
     Duplicate kinds get ``_2``/``_3`` name suffixes so the stage dirs
     stay unique."""
-    from pyspark.sql import functions as F
-
     idc, txt = spec.id_column, spec.text_column
     stages: list[Stage] = []
     used: dict[str, int] = {}

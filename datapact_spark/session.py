@@ -5,6 +5,22 @@ Arrow-batched Python UDF transfer are on by default — these are the
 settings the engine assumes at 100 TB scale and they are equally correct
 on local[N].
 
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every Column/DataFrame call walks the Python stack and makes several py4j
+round trips (active session, the stack-depth conf, origin set and
+clear); compiling a dozen validation tasks paid ~8k of them, about
+two-thirds of the driver's gateway traffic. What is lost is the Python
+line in the "== DataFrame ==" block that runtime errors (e.g. ANSI
+``DIVIDE_BY_ZERO``) carry: it names the line that built the failing
+expression, which here is always a line inside datapact, never the
+user's YAML; with capture off the block names a JVM frame instead.
+Analysis errors (``UNRESOLVED_COLUMN`` with the column name and
+suggestions) read the same either way. Re-enable capture with
+``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"})``; PySpark reads the setting once per Python process, from the
+first active session.
+
 Cached intermediates have one owner: operators pin them with
 ``persist_scoped`` and the enclosing ``cache_scope`` releases them.
 """
@@ -70,6 +86,8 @@ def get_spark(
         # cache (measured: 23-35 warm recompiles of a 5-task suite vs a
         # steady 13 with stable names).
         "spark.sql.codegen.useIdInClassName": "false",
+        # No per-call Python call-site capture (module docstring).
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.driver.memory": os.environ.get("DATAPACT_DRIVER_MEM", "8g"),
     }
     if os.environ.get("DATAPACT_LOCAL_DIR"):

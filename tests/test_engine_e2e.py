@@ -147,3 +147,21 @@ def test_no_checks_vacuous_pass(engine):
     assert result.passed
     payload = json.loads(result.outcomes["noop"].payload)
     assert "No validations configured" in payload["message"]
+
+
+def test_filter_on_missing_column_errors_with_its_name(engine, spark):
+    """With PySpark's call-site capture off (session.py) a bad filter
+    still ends the task ERROR with the column and the error class."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    config = DataPactConfig(validations=[
+        ValidationTask(task_key="bad_filter", source="orders", target="orders",
+                       count_tolerance=0.0, filter="o_no_such_col > 0"),
+        ValidationTask(task_key="good", source="orders", target="orders",
+                       count_tolerance=0.0),
+    ])
+    result = engine.run(config)
+    outcome = result.outcomes["bad_filter"]
+    assert outcome.status == "ERROR"
+    assert "UNRESOLVED_COLUMN" in outcome.error
+    assert "o_no_such_col" in outcome.error
+    assert result.outcomes["good"].status == "SUCCESS"

@@ -168,6 +168,103 @@ def test_pipeline_validations(spark, docs, tmp_path):
         runner.run("p", 1, docs, [Stage("a", lambda d: d), Stage("a", lambda d: d)])
 
 
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group`` and return (fn's result,
+    number of Spark jobs the group ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_stage_runs_one_job(spark, docs, tmp_path):
+    """A map-only stage costs the one job of its write: its row count
+    rides the write and the read-back needs no schema-inference job."""
+    stages = [
+        Stage("filter", lambda df: df.where(F.length("text") > 10)),
+        Stage("measure", lambda df: df.withColumn("n_chars", F.length("text"))),
+    ]
+    runner = PipelineRunner(spark, str(tmp_path))
+    (out, results), jobs = _jobs_in_group(
+        spark, f"pipeline-jobs-{tmp_path.name}",
+        lambda: runner.run("jobs", 1, docs, stages),
+    )
+    assert jobs == len(stages), jobs
+    expected = docs.where(F.length("text") > 10).count()
+    assert [r.rows for r in results] == [expected, expected]
+    assert out.columns == ["doc_id", "text", "n_chars"]
+    assert out.count() == expected
+
+
+def test_empty_stage_reports_zero_rows_and_feeds_next(spark, docs, tmp_path):
+    stages = [
+        Stage("nothing", lambda df: df.where("1 = 0")),
+        Stage("after", lambda df: df.withColumn("n_chars", F.length("text"))),
+    ]
+    out, results = PipelineRunner(spark, str(tmp_path)).run("empty", 1, docs, stages)
+    assert [r.rows for r in results] == [0, 0]
+    assert os.path.exists(os.path.join(results[1].path, "_SUCCESS"))
+    assert out.columns == ["doc_id", "text", "n_chars"]
+    assert out.count() == 0
+
+
+def test_concurrent_pipelines_with_same_stage_names_count_their_own(
+        spark, docs, tmp_path):
+    """Two runners with identical stage names (so identical observation
+    names) write at the same time; each reports its own counts."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    preds = {"even": F.col("doc_id") % 2 == 0, "thirds": F.col("doc_id") % 3 == 0}
+    start = threading.Barrier(len(preds))
+
+    def run(label):
+        pred = preds[label]
+        stages = [
+            Stage("keep", lambda df: df.where(pred)),
+            Stage("long", lambda df: df.where(F.length("text") > 40)),
+        ]
+        start.wait()
+        _, results = PipelineRunner(spark, str(tmp_path / label)).run(
+            "prep", 1, docs, stages)
+        return [r.rows for r in results]
+
+    with ThreadPoolExecutor(max_workers=len(preds)) as pool:
+        got = dict(zip(preds, pool.map(run, preds, timeout=300)))
+    for label, pred in preds.items():
+        kept = docs.where(pred)
+        assert got[label] == [kept.count(), kept.where(F.length("text") > 40).count()]
+    assert got["even"] != got["thirds"]
+
+
+def test_failed_stage_write_raises_without_waiting_on_its_count(
+        spark, docs, tmp_path):
+    """A write that fails at execution time raises out of ``run``
+    promptly (the count is read only after a write returns) and commits
+    nothing."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    stages = [
+        Stage("ok", lambda df: df.where(F.length("text") > 10)),
+        Stage("boom", lambda df: df.withColumn("text", F.when(
+            F.col("doc_id") >= 0, F.raise_error(F.lit("stage boom"))
+        ).otherwise(F.col("text")))),
+    ]
+    runner = PipelineRunner(spark, str(tmp_path))
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        attempt = pool.submit(runner.run, "fail", 1, docs, stages)
+        with pytest.raises(Exception, match="stage boom"):
+            attempt.result(timeout=300)
+    base = os.path.join(str(tmp_path), "fail", "run_id=1")
+    assert os.path.exists(os.path.join(base, "stage_00_ok", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(base, "stage_01_boom", "_SUCCESS"))
+
+
 def test_corpus_pipeline_through_runner_matches_oracle_pins(spark, tmp_path):
     """The six-stage corpus pipeline executed THROUGH the runner (each
     stage materialized + resumable) reproduces the exact per-stage

@@ -24,6 +24,12 @@ from datapact_spark.sources.loader import TableResolver
 # is numbered per plan.
 MAX_WARM_COMPILES = 30
 
+# py4j round trips to compile REUSE_TASKS once more on a warm session.
+# With PySpark's per-call DataFrame call-site capture on, every Column
+# and DataFrame call adds several (~7k here); with it off (session.py)
+# ~3k remain.
+MAX_COMPILE_GATEWAY_CALLS = 5000
+
 REUSE_TASKS = [
     # no freshness check: its reference instant is a per-run literal
     {"task_key": "li_count_schema", "source": "lineitem", "target": "lineitem",
@@ -87,6 +93,29 @@ def test_warm_run_reuses_plans_and_reads_each_table_once(spark, sf_dir, tmp_path
     assert sorted(parquet_reads) == sorted(
         os.path.join(sf_dir, f"{r}.parquet") for r in refs
     )
+
+
+def test_compile_gateway_traffic_is_bounded(spark, sf_dir, monkeypatch):
+    from datapact_spark.plans.compiler import compile_task
+
+    resolver = TableResolver(spark, base_dir=sf_dir).scoped()
+    tasks = [ValidationTask(**t) for t in REUSE_TASKS]
+    for task in tasks:  # warm: reads memoized, classes loaded
+        compile_task(spark, task, resolver)
+
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    orig = client.send_command
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    for task in tasks:
+        compile_task(spark, task, resolver)
+    monkeypatch.undo()
+    assert calls[0] < MAX_COMPILE_GATEWAY_CALLS, calls[0]
 
 
 def test_ledger_row_metadata_attached_on_driver(spark, sf_dir, tmp_path):
