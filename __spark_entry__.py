@@ -198,7 +198,7 @@ def q_uniqueness_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_row_hash_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-hash compare (J1) with engine-portable concat serialization;
     target deterministically corrupted."""
-    from datapact_spark.operators.rowhash import row_hash_metrics
+    from datapact_spark.operators.rowhash import pk_join_metrics
     from datapact_spark.functions.exprs import hash_mismatch_ratio, pass_fail
 
     li = _t(spark, sf_dir, "lineitem")
@@ -212,8 +212,9 @@ def q_row_hash_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("l_returnflag"),
         "l_linestatus",
     )
-    m = row_hash_metrics(
-        src, tgt, ["l_orderkey", "l_linenumber"], cols, "md5", serialization="concat"
+    m = pk_join_metrics(
+        src, tgt, ["l_orderkey", "l_linenumber"],
+        hash_columns=cols, algo="md5", serialization="concat",
     )
     ratio = hash_mismatch_ratio(F.col("mismatch_count"), F.col("total_compared_rows"))
     return m.select(

@@ -439,7 +439,11 @@ class ValidationTask(BaseModel):
     #   when most groups are clean. Bit-identical to 'join' only when PKs
     #   are unique per group, so it REQUIRES a uniqueness check on (a
     #   subset of) the PKs; groups with dup PKs are routed to the exact
-    #   join (see rowhash.grouped_row_hash_metrics_fingerprint);
+    #   join (see plans/partitioned.py ``fp_in_profile``). The
+    #   fingerprint folds the PK tuple with xxhash64, which skips NULL
+    #   components, so rows with a NULL PK component (which the exact
+    #   join never matches) still count in a clean group's
+    #   total_compared_rows;
     # 'fingerprint_multiset' — same plan WITHOUT the uniqueness
     #   requirement: group equality is (pk, row_hash) MULTISET equality.
     #   Never misses corruption (unequal multisets always fingerprint-
@@ -557,9 +561,9 @@ class ValidationTask(BaseModel):
     @model_validator(mode="after")
     def _validate_fingerprint_requires_pk_uniqueness(self) -> "ValidationTask":
         # fingerprint row-hash mode is only exact when PKs are unique per
-        # group (rowhash.grouped_row_hash_metrics_fingerprint: equal
-        # multisets with duplicate PKs fingerprint-match while the join
-        # path would count cross-pair mismatches). Enforce the guard at
+        # group (plans/partitioned.py ``fp_in_profile``: equal multisets
+        # with duplicate PKs fingerprint-match while the join path would
+        # count cross-pair mismatches). Enforce the guard at
         # compile time: a uniqueness check over (a subset of) the primary
         # keys must be configured — uniqueness of a PK subset implies PK
         # uniqueness — so dup-PK data fails the uniqueness check loudly

@@ -120,10 +120,7 @@ def diff_tables(
     if not keys:
         return res
 
-    from datapact_spark.operators.rowhash import (
-        row_hash_metrics,
-        row_hash_violations,
-    )
+    from datapact_spark.operators.rowhash import pk_join_metrics, row_hash_violations
 
     s_keys = source.select(*keys)
     t_keys = target.select(*keys)
@@ -136,7 +133,9 @@ def diff_tables(
         if c in set(target.columns) and c not in set(keys)
     ]
     hcols = hash_columns or common
-    m = row_hash_metrics(source, target, keys, hcols, algo).collect()[0]
+    m = pk_join_metrics(
+        source, target, keys, hash_columns=hcols, algo=algo
+    ).collect()[0]
     res.compared_rows = m["total_compared_rows"]
     res.hash_mismatches = m["mismatch_count"]
     if res.hash_mismatches:

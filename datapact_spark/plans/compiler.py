@@ -5,8 +5,8 @@ but as native DataFrames):
 
     filtered_source ──► source_stats (single-pass agg) ─┐
     filtered_target ──► target_stats (single-pass agg) ─┤
-    src ⋈ tgt on PKs ──► row_hash_metrics (1 row)       ├─ crossJoin ─► payload + verdict
-    src ⋈ tgt on PKs ──► null_join_metrics (1 row)      │   (1 row)
+    src ⋈ tgt on PKs ──► pk_join_metrics (1 row:       ├─ crossJoin ─► payload + verdict
+                         row hash + PK null parity)     │   (1 row)
     custom SQL ×n  ────► custom_sql_metrics_<slug>      │
     child ⟕̸ parent ───► referential metrics (1 row)    ┘
 
@@ -324,13 +324,24 @@ def compile_task(
         )
         pass_conds.append(diff <= task.count_tolerance)
 
-    # ---- row hash ---------------------------------------------------
-    if task.pk_row_hash_check and task.primary_keys:
+    # ---- PK join: row hash and PK null parity ----------------------
+    pk_hash = bool(task.pk_row_hash_check and task.primary_keys)
+    null_configured = bool(
+        task.null_validation_columns and task.null_validation_tolerance is not None
+    )
+    if pk_hash or (null_configured and task.primary_keys):
         metric_dfs.append(
-            H.row_hash_metrics(
-                source, target, task.primary_keys, task.hash_columns, task.hash_algo
+            H.pk_join_metrics(
+                source, target, task.primary_keys,
+                row_hash=pk_hash,
+                hash_columns=task.hash_columns,
+                algo=task.hash_algo,
+                null_columns=task.null_validation_columns if null_configured else (),
             )
         )
+
+    # ---- row hash ---------------------------------------------------
+    if pk_hash:
         tol = task.pk_hash_tolerance if task.pk_hash_tolerance is not None else 0.0
         ratio = E.hash_mismatch_ratio(
             F.col("mismatch_count"), F.col("total_compared_rows")
@@ -351,14 +362,8 @@ def compile_task(
             )
 
     # ---- nulls ------------------------------------------------------
-    if task.null_validation_columns and task.null_validation_tolerance is not None:
+    if null_configured:
         tol = task.null_validation_tolerance
-        if task.primary_keys:
-            metric_dfs.append(
-                H.null_join_metrics(
-                    source, target, task.primary_keys, task.null_validation_columns
-                )
-            )
         for col in task.null_validation_columns:
             sn = F.col(f"source_nulls_{col}")
             tn = F.col(f"target_nulls_{col}")

@@ -73,13 +73,15 @@ def compile_partition_verdicts(
         and task.row_hash_mode in ("fingerprint", "fingerprint_multiset")
     )
 
+    # one hashed-column list for the fingerprint and the PK join
+    hash_cols = task.hash_columns or [
+        c for c in source.columns if c not in group_cols
+    ]
+
     def _fp_sig() -> F.Column:
         from datapact_spark.functions.hashing import row_hash
 
-        cols = task.hash_columns or [
-            c for c in source.columns if c not in group_cols
-        ]
-        rh = row_hash([F.col(c) for c in cols], task.hash_algo)
+        rh = row_hash([F.col(c) for c in hash_cols], task.hash_algo)
         pk_cols = [F.col(pk) for pk in task.primary_keys]
         return F.xxhash64(
             F.xxhash64(*pk_cols),
@@ -194,15 +196,14 @@ def compile_partition_verdicts(
         metric_cols.append(diff.alias("count_rel_diff"))
         pass_conds.append(("count_passed", ok))
 
-    null_join_df = None
-    if task.null_validation_columns and task.null_validation_tolerance is not None:
+    pk_hash = bool(task.pk_row_hash_check and task.primary_keys)
+    null_configured = bool(
+        task.null_validation_columns and task.null_validation_tolerance is not None
+    )
+    # PK-join null parity per group (reference semantics j2:360-375)
+    pk_nulls = task.null_validation_columns if null_configured and task.primary_keys else ()
+    if null_configured:
         tol = task.null_validation_tolerance
-        if task.primary_keys:
-            # PK-join variant per group (reference semantics j2:360-375)
-            null_join_df = H.grouped_null_join_metrics(
-                source, target, task.primary_keys,
-                task.null_validation_columns, group_cols,
-            )
         for col in task.null_validation_columns:
             sn = F.coalesce(F.col(f"source_nulls_{col}"), F.lit(0))
             tn = F.coalesce(F.col(f"target_nulls_{col}"), F.lit(0))
@@ -237,9 +238,17 @@ def compile_partition_verdicts(
         pass_conds.append(("uniqueness_passed", (s_ratio <= tol) & (t_ratio <= tol)))
 
     step = joined
-    if null_join_df is not None:
-        step = step.join(null_join_df, on=group_cols, how="left")
-    if task.pk_row_hash_check and task.primary_keys:
+    if pk_nulls and (fp_in_profile or not pk_hash):
+        # fingerprint modes join only the dirty groups for the row hash
+        # below, so null parity takes its own join over all rows
+        step = step.join(
+            H.pk_join_metrics(
+                source, target, task.primary_keys, group_cols,
+                row_hash=False, null_columns=pk_nulls,
+            ),
+            on=group_cols, how="left",
+        )
+    if pk_hash:
         tol = task.pk_hash_tolerance if task.pk_hash_tolerance is not None else 0.0
         if fp_in_profile:
             # fingerprints came along with the profile scan: groups whose
@@ -285,14 +294,14 @@ def compile_partition_verdicts(
                 *[F.col(g) for g in group_cols]
             )
             # broadcast (default) vs AQE-decided join for the scoping —
-            # see config.fingerprint_scope_join / rowhash.scope_join
+            # see config.fingerprint_scope_join
             if task.fingerprint_scope_join == "broadcast":
                 failing_keys = F.broadcast(failing_keys)
             src_f = source.join(failing_keys, on=group_cols, how="left_semi")
             tgt_f = target.join(failing_keys, on=group_cols, how="left_semi")
-            hm = H.grouped_row_hash_metrics(
+            hm = H.pk_join_metrics(
                 src_f, tgt_f, task.primary_keys, group_cols,
-                task.hash_columns, task.hash_algo,
+                hash_columns=hash_cols, algo=task.hash_algo,
             )
             step = step.join(hm, on=group_cols, how="left")
             tc = F.when(fp_equal, F.col("source_count")).otherwise(
@@ -309,10 +318,12 @@ def compile_partition_verdicts(
             pass_conds.append(("row_hash_passed", ratio <= tol))
         else:
             # row_hash_mode='join' (fingerprint modes always take the
-            # in-profile fold above, salted or not)
-            hm = H.grouped_row_hash_metrics(
+            # in-profile fold above, salted or not): one join carries the
+            # row hash and the PK null parity
+            hm = H.pk_join_metrics(
                 source, target, task.primary_keys, group_cols,
-                task.hash_columns, task.hash_algo,
+                hash_columns=hash_cols, algo=task.hash_algo,
+                null_columns=pk_nulls,
             )
             step = step.join(hm, on=group_cols, how="left")
             ratio = E.hash_mismatch_ratio(

@@ -54,13 +54,15 @@ def test_row_hash_over_bucketed_tables_no_exchange_before_join(
     spark, bucketed_tables, no_broadcast
 ):
     """The engine's row-hash compare inherits bucketing: hashing is a
-    projection, so the join beneath grouped metrics still needs no
-    exchange before the SMJ when inputs are co-bucketed on the PKs."""
-    from datapact_spark.operators.rowhash import row_hash_metrics
+    projection, so the PK join needs no exchange before the SMJ when
+    inputs are co-bucketed on the PKs — task-level and per partition
+    group alike (the join key is the exact PK tuple, not a hash fold)."""
+    from datapact_spark.operators.rowhash import pk_join_metrics
 
     a, b = bucketed_tables
-    m = row_hash_metrics(
-        spark.table(a), spark.table(b), ["repo", "path"], ["content"], "sha256"
+    m = pk_join_metrics(
+        spark.table(a), spark.table(b), ["repo", "path"],
+        hash_columns=["content"], algo="sha256",
     )
     plan = _explain(m)
     tree = plan.split("\n\n")[0]
@@ -70,6 +72,19 @@ def test_row_hash_over_bucketed_tables_no_exchange_before_join(
     assert plan.count("Exchange hashpartitioning") == 0, (
         f"PK join over bucketed tables shuffled:\n{tree}"
     )
+
+    grouped = pk_join_metrics(
+        spark.table(a), spark.table(b), ["repo", "path"], ["repo", "lang"],
+        hash_columns=["content"], algo="sha256",
+    )
+    tree = _explain(grouped).split("\n\n")[0]
+    # the per-group aggregate above the join may exchange on (repo,
+    # lang); nothing below the SortMergeJoin may
+    below = tree.split("SortMergeJoin", 1)[1]
+    assert "Exchange" not in below, (
+        f"grouped PK join over bucketed tables shuffled:\n{tree}"
+    )
+    assert grouped.count() > 0
 
 
 def test_is_colocated(spark, bucketed_tables):

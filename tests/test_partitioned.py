@@ -186,6 +186,47 @@ def test_grouped_pk_null_join_variant(spark, tmp_path):
     assert rows["b"]["target_nulls_payload"] == 3
 
 
+def test_null_pk_components_match_task_level_row_hash(spark):
+    """Rows with a NULL PK component never match in the PK join (SQL
+    equality), per partition exactly as at task level. Target = source
+    with each row's NULL component swapped to the other PK column: a
+    hash fold of the PK tuple that skips NULLs would join (a, NULL) with
+    (NULL, a) and compare 6 rows with 2 mismatches instead of 1 and 0."""
+    import json
+
+    from datapact_spark.plans.compiler import compile_task
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
+
+    schema = "grp string, k1 string, k2 string, payload string"
+    src = spark.createDataFrame(
+        [("g", "a", None, "p1"), ("g", None, "a", "p2"),
+         ("g", "b", None, "p3"), ("g", "c", "c", "p4")],
+        schema,
+    )
+    tgt = spark.createDataFrame(
+        [("g", None, "a", "p1"), ("g", "a", None, "p2"),
+         ("g", None, "b", "p3"), ("g", "c", "c", "p4")],
+        schema,
+    )
+    resolver = TableResolver(spark)
+    resolver.register("nk_src", src)
+    resolver.register("nk_tgt", tgt)
+    task = dict(
+        task_key="null_pk", source="nk_src", target="nk_tgt",
+        primary_keys=["k1", "k2"], pk_row_hash_check=True, pk_hash_tolerance=0.0,
+        hash_columns=["payload"],
+    )
+    compiled = compile_task(spark, ValidationTask(**task), resolver)
+    payload = json.loads(compiled.metrics_df.collect()[0]["result_payload"])
+    rh = payload["row_hash_validation"]
+    assert (rh["compared_rows"], rh["mismatch_count"], rh["status"]) == ("1", "0", "PASS")
+    grouped = ValidationTask(**task, partition_by=["grp"])
+    (row,) = compile_partition_verdicts(spark, grouped, resolver).collect()
+    assert (
+        row["total_compared_rows"], row["mismatch_count"], row["row_hash_passed"]
+    ) == (1, 0, True)
+
+
 def test_partitioned_write_is_single_pass(engine, spark, tmp_path):
     """The batched verdict write must scan each input side exactly once
     regardless of the batch count (round 1 rescanned the full DAG once
@@ -251,10 +292,7 @@ def test_fingerprint_mode_matches_join_mode(engine, spark):
 def test_fingerprint_mode_localized_corruption_scopes_join(spark, tmp_path):
     """With corruption confined to one repo, every other group passes by
     fingerprint and only the dirty repo's rows enter the exact join."""
-    from datapact_spark.operators.rowhash import (
-        grouped_row_hash_metrics,
-        grouped_row_hash_metrics_fingerprint,
-    )
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
 
     src = synthesize_code_table(spark, 30000, n_repos=10, seed=3)
     tgt = src.withColumn(
@@ -264,17 +302,25 @@ def test_fingerprint_mode_localized_corruption_scopes_join(spark, tmp_path):
             F.concat(F.col("content"), F.lit(" CORRUPT")),
         ).otherwise(F.col("content")),
     )
-    fp = grouped_row_hash_metrics_fingerprint(
-        src, tgt, ["repo", "path"], ["repo", "lang"], ["content"], "sha256"
-    )
-    jn = grouped_row_hash_metrics(
-        src, tgt, ["repo", "path"], ["repo", "lang"], ["content"], "sha256"
-    )
-    as_map = lambda df: {
-        (r["repo"], r["lang"]): (r["total_compared_rows"], r["mismatch_count"])
-        for r in df.collect()
-    }
-    m_fp, m_jn = as_map(fp), as_map(jn)
+    resolver = TableResolver(spark)
+    resolver.register("loc_src", src)
+    resolver.register("loc_tgt", tgt)
+
+    def verdicts(mode):
+        df = compile_partition_verdicts(
+            spark,
+            _task(
+                task_key=f"loc_{mode}", source="loc_src", target="loc_tgt",
+                count_tolerance=None, row_hash_mode=mode,
+            ),
+            resolver,
+        )
+        return {
+            (r["repo"], r["lang"]): (r["total_compared_rows"], r["mismatch_count"])
+            for r in df.collect()
+        }
+
+    m_fp, m_jn = verdicts("fingerprint_multiset"), verdicts("join")
     assert m_fp == m_jn
     dirty = {k for k, v in m_fp.items() if v[1] > 0}
     assert dirty and all(k[0] == "repo_0" for k in dirty)
@@ -282,10 +328,10 @@ def test_fingerprint_mode_localized_corruption_scopes_join(spark, tmp_path):
 
 def test_fingerprint_detail_scan_uses_dynamic_partition_pruning(spark, tmp_path):
     """On repo-partitioned storage (the Iceberg-at-scale layout), the
-    fingerprint mode's detail re-scan must prune to the dirty repos via
-    dynamic partition pruning from the broadcast semi-join — reading ~2%
-    of the data, not all of it."""
-    from datapact_spark.operators.rowhash import grouped_row_hash_metrics_fingerprint
+    per-partition verdict's fingerprint detail re-scan must prune to
+    the dirty repos via dynamic partition pruning from the broadcast
+    semi-join — reading ~2% of the data, not all of it."""
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
 
     src = synthesize_code_table(spark, 20000, n_repos=10, seed=5)
     src_p, tgt_p = str(tmp_path / "psrc"), str(tmp_path / "ptgt")
@@ -297,16 +343,28 @@ def test_fingerprint_detail_scan_uses_dynamic_partition_pruning(spark, tmp_path)
             F.concat(F.col("content"), F.lit(" DIRTY")),
         ).otherwise(F.col("content")),
     ).write.partitionBy("repo").parquet(tgt_p)
-    s = spark.read.parquet(src_p)
-    t = spark.read.parquet(tgt_p)
-    m = grouped_row_hash_metrics_fingerprint(
-        s, t, ["repo", "path"], ["repo", "lang"], ["content"], "sha256"
-    )
-    plan = m._sc._jvm.PythonSQLUtils.explainString(m._jdf.queryExecution(), "formatted")
-    assert "dynamicpruning" in plan.lower(), f"no DPP in detail scan:\n{plan[:3000]}"
-    rows = {(r["repo"], r["lang"]): r["mismatch_count"] for r in m.collect()}
-    dirty = {k for k, v in rows.items() if v > 0}
-    assert dirty and all(k[0] == "repo_3" for k in dirty)
+    resolver = TableResolver(spark)
+    resolver.register("dpp_src", spark.read.parquet(src_p))
+    resolver.register("dpp_tgt", spark.read.parquet(tgt_p))
+    uniq = dict(uniqueness_columns=["repo", "path"], uniqueness_tolerance=0.0)
+    for mode, extra in (("fingerprint", uniq), ("fingerprint_multiset", {})):
+        m = compile_partition_verdicts(
+            spark,
+            _task(
+                task_key=f"dpp_{mode}", source="dpp_src", target="dpp_tgt",
+                count_tolerance=None, row_hash_mode=mode, **extra,
+            ),
+            resolver,
+        )
+        plan = m._sc._jvm.PythonSQLUtils.explainString(
+            m._jdf.queryExecution(), "formatted"
+        )
+        assert "dynamicpruning" in plan.lower(), (
+            f"{mode}: no DPP in detail scan:\n{plan[:3000]}"
+        )
+        rows = {(r["repo"], r["lang"]): r["mismatch_count"] for r in m.collect()}
+        dirty = {k for k, v in rows.items() if v > 0}
+        assert dirty and all(k[0] == "repo_3" for k in dirty), mode
 
 
 def test_fingerprint_mode_requires_pk_uniqueness_config():
@@ -442,8 +500,8 @@ def test_clear_uncommitted_batches_drops_stale_rows(spark, tmp_path):
 
 
 def test_salted_profile_with_fingerprint_mode(engine, spark):
-    """salt_buckets + row_hash_mode=fingerprint routes through the
-    standalone fingerprint operator and still matches the join path."""
+    """salt_buckets + row_hash_mode=fingerprint carries the fingerprint
+    through the salted profile and still matches the join path."""
     from datapact_spark.plans.partitioned import compile_partition_verdicts
 
     def run(mode, salt):

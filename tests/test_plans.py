@@ -88,21 +88,81 @@ def test_referential_shuffle_hint_respected(spark, sf_dir):
 
 
 def test_grouped_hash_metrics_shuffles_narrow_rows(spark, sf_dir):
-    """compact_shuffle: the exchange before the join must carry only the
-    64-bit key + 64-bit hash + group cols, never `content`."""
-    from datapact_spark.operators.rowhash import grouped_row_hash_metrics
+    """The exchange before the grouped PK join must carry only the PK
+    values, the row digest and the group cols, never `content`."""
+    from datapact_spark.operators.rowhash import pk_join_metrics
     from datapact_spark.sources.codegen import synthesize_code_table
 
     src = synthesize_code_table(spark, 1000, n_repos=5)
     plan = _explain(
-        grouped_row_hash_metrics(
-            src, src, ["repo", "path"], ["repo", "lang"], ["content"], "sha256"
+        pk_join_metrics(
+            src, src, ["repo", "path"], ["repo", "lang"],
+            hash_columns=["content"], algo="sha256",
         )
     )
     # find the Exchange blocks and assert none carries the content column
     for block in plan.split("\n\n"):
         if block.strip().startswith("(") and "Exchange" in block.split("\n")[0]:
             assert "content" not in block, f"content leaked into shuffle:\n{block}"
+
+
+def test_pk_hash_and_null_parity_share_one_join(spark, sf_dir):
+    """A PK task with both row-hash and PK null parity plans ONE PK join
+    (the reference's single join, validation.sql.j2:190-241), and its
+    payload sections equal those of the two single-check tasks."""
+    import json
+
+    from datapact_spark.plans.compiler import compile_task
+    from datapact_spark.sources.loader import TableResolver
+
+    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    resolver = TableResolver(spark)
+    resolver.register("orders", orders)
+    resolver.register(
+        "orders_t",
+        orders.where("o_orderkey % 13 != 0")
+        .withColumn(
+            "o_orderstatus",
+            F.when(F.col("o_orderkey") % 7 == 0, F.lit(None)).otherwise(
+                F.col("o_orderstatus")
+            ),
+        )
+        .withColumn(
+            "o_totalprice",
+            F.when(F.col("o_orderkey") % 11 == 0, F.col("o_totalprice") + 1).otherwise(
+                F.col("o_totalprice")
+            ),
+        ),
+    )
+    hash_check = dict(pk_row_hash_check=True, pk_hash_tolerance=0.01)
+    null_check = dict(
+        null_validation_columns=["o_orderstatus", "o_orderpriority"],
+        null_validation_tolerance=0.05,
+    )
+
+    def compiled(key, **checks):
+        task = ValidationTask(
+            task_key=key, source="orders", target="orders_t",
+            primary_keys=["o_orderkey"], **checks,
+        )
+        return compile_task(spark, task, resolver).metrics_df
+
+    both = compiled("both", **hash_check, **null_check)
+    # equi-joins list their keys; the 1-row metric crossJoins do not
+    assert _explain(both).count("Left keys") == 1
+
+    def payload(df):
+        return json.loads(df.collect()[0]["result_payload"])
+
+    p_both = payload(both)
+    p_hash = payload(compiled("hash", **hash_check))
+    p_null = payload(compiled("nulls", **null_check))
+    assert p_both["row_hash_validation"] == p_hash["row_hash_validation"]
+    assert p_both["row_hash_validation"]["status"] == "FAIL"
+    for col in ("o_orderstatus", "o_orderpriority"):
+        key = f"null_validation_{col}"
+        assert p_both[key] == p_null[key]
+    assert p_both["null_validation_o_orderstatus"]["status"] == "FAIL"
 
 
 def test_aqe_enabled(spark):
