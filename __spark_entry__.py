@@ -178,18 +178,25 @@ def q_agg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_uniqueness_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniqueness (A6): duplicate ratio via the scale path
-    (hash-repartitioned groupBy-count, operators/uniqueness.py)."""
-    from datapact_spark.operators.uniqueness import uniqueness_metrics_scalable
+    """Uniqueness (A6): duplicate ratio from the single-pass profile's
+    ``COUNT(DISTINCT struct)`` (operators/profile.py)."""
+    from datapact_spark.config import ValidationTask
     from datapact_spark.functions.exprs import dupe_ratio, pass_fail
+    from datapact_spark.operators.profile import profile_df
 
     orders = _t(spark, sf_dir, "orders")
-    m = uniqueness_metrics_scalable(orders, ["o_custkey"])
-    ratio = dupe_ratio(F.col("row_count"), F.col("distinct_count"))
+    task = ValidationTask(
+        task_key="uniq", source="orders", target="orders",
+        uniqueness_columns=["o_custkey"], uniqueness_tolerance=0.95,
+    )
+    m = profile_df(orders, task, "source")
+    ratio = dupe_ratio(F.col("source_count"), F.col("source_distinct_uniqs"))
     return m.select(
-        "row_count",
-        "distinct_count",
-        "duplicate_count",
+        F.col("source_count").alias("row_count"),
+        F.col("source_distinct_uniqs").alias("distinct_count"),
+        (F.col("source_count") - F.col("source_distinct_uniqs")).alias(
+            "duplicate_count"
+        ),
         ratio.alias("dupe_ratio"),
         pass_fail(ratio <= 0.95).alias("status"),
     )
@@ -1711,8 +1718,8 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's FLAGSHIP scale mode — per-partition-group verdicts
-    with SALTED profiles carrying the fingerprint row-hash fold
-    (salt_buckets=4, row_hash_mode=fingerprint) — strict-oracle-checked
+    with grouped profiles carrying the fingerprint row-hash fold
+    (row_hash_mode=fingerprint) — strict-oracle-checked
     end to end. The target is a deterministically corrupted orders
     copy: '1-URGENT' loses every 101st row (count check must fail it),
     '3-MEDIUM' gets every 97th o_totalprice bumped (+1.0 — counts
@@ -1723,7 +1730,7 @@ def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched counts, and value-inequality mismatches — equal to the
     hash-based engine decision up to a 2^-64 fold collision, the same
     bound every hash query here carries. Late-r5: two row constraints
-    ride the same salted profile scans — one passes every group under
+    ride the same grouped profile scans — one passes every group under
     its tolerance, one (target-side ``o_orderkey % 101 <> 0``) fails
     exactly the groups whose %101 keys the corruption did NOT delete —
     so the driver also verifies the CHECK-constraint fold end to end."""
@@ -1753,7 +1760,7 @@ def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_columns=["o_totalprice", "o_orderstatus"], hash_algo="md5",
         uniqueness_columns=["o_orderkey"], uniqueness_tolerance=0.0,
         row_hash_mode="fingerprint",
-        # row constraints ride the SAME salted profile scans: one must
+        # row constraints ride the SAME grouped profile scans: one must
         # pass every group (~10% violations, tolerance 0.5), one must
         # fail exactly the groups whose %101 keys were NOT removed (the
         # target-side corruption deleted them from group '1-URGENT')
@@ -1770,9 +1777,7 @@ def q_partitioned_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ],
     )
-    return compile_partition_verdicts(
-        spark, task, resolver, salt_buckets=4
-    ).select(
+    return compile_partition_verdicts(spark, task, resolver).select(
         "o_orderpriority", "source_count", "target_count",
         "total_compared_rows", "mismatch_count",
         "count_passed", "row_hash_passed", "uniqueness_passed",

@@ -416,12 +416,11 @@ class ValidationTask(BaseModel):
     agg_validations: list[AggValidation] | None = None
     uniqueness_columns: list[str] | None = None
     uniqueness_tolerance: float | None = None
-    # 'scalable' (north-star default: hash-repartitioned groupBy-count,
-    # key-only shuffle, no Expand) | 'parity' (COUNT(DISTINCT struct)
-    # folded into the single-pass profile — one scan, but Expand doubles
-    # the profile's shuffle at 10^12 rows) | 'approx' (HyperLogLog++,
-    # ~1% rsd, one scan and NO key shuffle — for tolerances ≫ rsd) |
-    # 'auto' = scalable
+    # 'auto' (default: exact COUNT(DISTINCT struct) in the single-pass
+    # profile) | 'approx' (HyperLogLog++ in the same profile, ~1% rsd,
+    # NO key shuffle — for tolerances ≫ rsd). Saved configs' 'parity'
+    # and 'scalable' load as 'auto'. Per-partition verdicts always
+    # count exactly.
     uniqueness_strategy: str = "auto"
     business_domain: str | None = None
     business_owner: str | None = None
@@ -439,11 +438,7 @@ class ValidationTask(BaseModel):
     #   when most groups are clean. Bit-identical to 'join' only when PKs
     #   are unique per group, so it REQUIRES a uniqueness check on (a
     #   subset of) the PKs; groups with dup PKs are routed to the exact
-    #   join (see plans/partitioned.py ``fp_in_profile``). The
-    #   fingerprint folds the PK tuple with xxhash64, which skips NULL
-    #   components, so rows with a NULL PK component (which the exact
-    #   join never matches) still count in a clean group's
-    #   total_compared_rows;
+    #   join (see plans/partitioned.py ``fp_in_profile``);
     # 'fingerprint_multiset' — same plan WITHOUT the uniqueness
     #   requirement: group equality is (pk, row_hash) MULTISET equality.
     #   Never misses corruption (unequal multisets always fingerprint-
@@ -461,10 +456,8 @@ class ValidationTask(BaseModel):
     fingerprint_scope_join: str = "broadcast"
     partition_by: list[str] | None = None
     # resume granularity (checkpointed batches; each batch re-filters the
-    # input, so more batches = finer resume but more scans) and group-by
-    # skew salting for per-partition runs
+    # input, so more batches = finer resume but more scans)
     partition_batches: int = 4
-    partition_salt_buckets: int = 0
     schema_check: SchemaCheck | bool | None = None
     freshness_checks: list[FreshnessCheck] | None = None
     referential_checks: list[ReferentialCheck] | None = None
@@ -538,9 +531,10 @@ class ValidationTask(BaseModel):
     def _validate_uniq_strategy(cls, v: str) -> str:
         if v not in {"auto", "parity", "scalable", "approx"}:
             raise ValueError(
-                "uniqueness_strategy must be auto, parity, scalable, or approx"
+                "uniqueness_strategy must be auto or approx "
+                "(parity and scalable load as auto)"
             )
-        return v
+        return "approx" if v == "approx" else "auto"
 
     @field_validator("row_hash_mode")
     @classmethod
@@ -596,13 +590,6 @@ class ValidationTask(BaseModel):
     def _validate_partition_batches(cls, v: int) -> int:
         if v < 1:
             raise ValueError("partition_batches must be >= 1")
-        return v
-
-    @field_validator("partition_salt_buckets")
-    @classmethod
-    def _validate_salt_buckets(cls, v: int) -> int:
-        if v < 0:
-            raise ValueError("partition_salt_buckets must be >= 0")
         return v
 
     @model_validator(mode="after")

@@ -265,7 +265,6 @@ class DataPactEngine:
                 task,
                 run_id,
                 batches=task.partition_batches,
-                salt_buckets=task.partition_salt_buckets,
                 resolver=resolver,
             )
         except ValueError:
@@ -311,7 +310,6 @@ class DataPactEngine:
         run_id: int,
         batches: int = 4,
         resume: bool = True,
-        salt_buckets: int = 0,
         resolver: TableResolver | None = None,
     ):
         """North-star execution mode: per-partition verdicts with
@@ -343,8 +341,7 @@ class DataPactEngine:
         # written: the checkpoint is the durable copy from then on
         with cache_scope():
             verdicts = compile_partition_verdicts(
-                self.spark, task, resolver or self.resolver.scoped(),
-                salt_buckets=salt_buckets,
+                self.spark, task, resolver or self.resolver.scoped()
             )
             missing = [
                 b

@@ -1,14 +1,14 @@
-"""Uniqueness checks — parity path and scale path.
+"""Uniqueness violations — the duplicated keys behind a failed check.
 
-Parity path (in the single-pass profile, operators/profile.py):
-``COUNT(DISTINCT struct(cols))`` exactly like validation.sql.j2:135-141.
-Catalyst plans this as Expand + two-phase aggregation — correct, but at
-10^12 rows the Expand doubles the shuffled volume.
+The duplicate COUNT itself is not computed here: the single-pass
+profile (operators/profile.py) carries ``COUNT(DISTINCT struct(cols))``
+exactly like validation.sql.j2:135-141. One distinct aggregate plans no
+Expand — Catalyst's single-distinct rewrite shuffles the distinct key
+once, then the partial counts — so it costs the same two exchanges a
+separate ``groupBy(keys).count()`` would, without a second scan.
 
-Scale path (here): hash-repartition on the key columns and
-``groupBy(keys).count()`` — the north-star-mandated strategy. It needs
-one shuffle of just the key columns, produces the duplicate count AND
-the violation rows in the same plan, and AQE coalesces the output.
+Here: ``groupBy(keys).count()`` filtered to keys seen more than once,
+for materialized violation rows and report samples.
 """
 
 from __future__ import annotations
@@ -41,66 +41,4 @@ def top_duplicates(df: DataFrame, key_columns: list[str], n: int = 100) -> DataF
         duplicate_groups(df, key_columns)
         .orderBy(F.col("dup_count").desc(), *[F.col(c) for c in key_columns])
         .limit(n)
-    )
-
-
-def uniqueness_metrics_scalable(df: DataFrame, key_columns: list[str]) -> DataFrame:
-    """1-row (count, distinct, duplicates) via groupBy-count — the scale
-    variant of the profile's COUNT(DISTINCT struct). Two-level
-    aggregation: first by key (shuffle on key), then a global rollup of
-    the tiny per-key counts."""
-    per_key = df.groupBy(*[F.col(c) for c in key_columns]).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return per_key.agg(
-        F.sum("n").alias("row_count"),
-        F.count(F.lit(1)).alias("distinct_count"),
-        (F.sum("n") - F.count(F.lit(1))).alias("duplicate_count"),
-    )
-
-
-def uniqueness_metrics_approx(
-    df: DataFrame, key_columns: list[str], rsd: float = 0.01
-) -> DataFrame:
-    """1-row (row_count, distinct_count, duplicate_count) via
-    HyperLogLog++ (``approx_count_distinct``) — for scale regimes where
-    even the key-only shuffle of the exact groupBy-count is unwanted.
-    ONE scan, no shuffle beyond the single-row final aggregate, ~rsd
-    relative error on distinct_count (duplicate_count inherits it).
-    Use only with a tolerance comfortably above the rsd; the exact path
-    (``uniqueness_metrics_scalable``) is the default."""
-    from pyspark.sql import functions as F
-
-    return df.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.approx_count_distinct(
-            F.struct(*[F.col(c) for c in key_columns]), rsd
-        ).alias("distinct_count"),
-        (
-            F.count(F.lit(1))
-            - F.approx_count_distinct(F.struct(*[F.col(c) for c in key_columns]), rsd)
-        ).alias("duplicate_count"),
-    )
-
-
-def salted_group_count(
-    df: DataFrame, key_columns: list[str], salt_buckets: int = 32
-) -> DataFrame:
-    """Skew-resistant groupBy-count: pre-aggregate on (keys, salt), then
-    re-aggregate on keys. Salt is derived deterministically from a
-    high-cardinality remainder of the row (monotonically_increasing_id
-    is partition-local, so salts distribute within each input split).
-
-    Use when one key (a mega-repo) would overwhelm a single reducer —
-    Catalyst/AQE only splits skewed *join* partitions, not group-bys
-    (SURVEY.md §4.2), so this is explicit engine logic.
-    """
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(*[F.col(c) for c in key_columns], F.col("__salt"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return partial.groupBy(*[F.col(c) for c in key_columns]).agg(
-        F.sum("n").alias("count")
     )

@@ -29,7 +29,6 @@ from datapact_spark.config import ValidationTask
 from datapact_spark.functions import exprs as E
 from datapact_spark.ledger import LEDGER_COLUMNS
 from datapact_spark.operators import constraints as CK
-from datapact_spark.operators import freshness as FR
 from datapact_spark.operators import profile as P
 from datapact_spark.operators import referential as R
 from datapact_spark.operators import rowhash as H
@@ -219,66 +218,18 @@ def compile_task(
         pass_conds.append(F.lit(bool(schema_ok)))
 
     # ---- single-pass stats profiles -------------------------------
-    # uniqueness strategy: 'scalable' (auto default) computes distincts
-    # via hash-repartitioned groupBy-count (key-only shuffle, no Expand
-    # node inflating the profile's shuffle at 10^12 rows); 'parity'
-    # folds COUNT(DISTINCT struct) into the profile like the reference
-    uniq_configured = (
-        task.uniqueness_columns and task.uniqueness_tolerance is not None
-    )
-    uniq_strategy = (
-        "scalable" if task.uniqueness_strategy == "auto" else task.uniqueness_strategy
-    )
-    uniq_external = uniq_configured and uniq_strategy in ("scalable", "approx")
-    # Row constraints fold into the profile scans (one SUM each — zero
-    # extra scans); a side with constraints but no profiled stats gets
-    # its own standalone 1-row aggregate below.
-    all_cons = list(task.constraint_checks or [])
-    con_by_side: dict[str, list] = {"source": [], "target": []}
-    for cc in all_cons:
-        for cside in ("source", "target") if cc.side == "both" else (cc.side,):
-            con_by_side[cside].append(cc)
-    # symmetric fold: both profiles carry the same constraint SUMs (in
-    # config order) wherever the predicate resolves, so the two plans
-    # stay structurally identical and AQE can reuse one scan+exchange
-    # under self-validation — see CK.foldable_checks
-    con_fold = {
-        "source": CK.foldable_checks(source, all_cons, con_by_side["source"]),
-        "target": CK.foldable_checks(target, all_cons, con_by_side["target"]),
-    }
-    # freshness MAX(ts) aggregates ride the same scans with the same
-    # symmetric-fold rule
-    all_fresh = list(task.freshness_checks or [])
-    fresh_by_side: dict[str, list] = {"source": [], "target": []}
-    for fc in all_fresh:
-        for fside in ("source", "target") if fc.side == "both" else (fc.side,):
-            fresh_by_side[fside].append(fc)
-    fresh_fold = {
-        "source": FR.foldable_freshness(source, all_fresh, fresh_by_side["source"]),
-        "target": FR.foldable_freshness(target, all_fresh, fresh_by_side["target"]),
-    }
+    # Row count, measures and the uniqueness distinct count share one
+    # scan per side. Row constraints and freshness MAX(ts) fold into the
+    # same scans; a side with those but no profiled stats gets its own
+    # standalone 1-row aggregate below.
+    folds = P.side_folds(task, source, target)
+    con_by_side, con_fold, fresh_by_side, fresh_fold = folds
     profile_built = P.stats_needed(task)
     if profile_built:
-        metric_dfs.append(
-            P.profile_df(
-                source,
-                task,
-                "source",
-                include_uniqueness=not uniq_external,
-                extra_exprs=CK.violation_exprs(con_fold["source"], "source")
-                + FR.max_ts_exprs(fresh_fold["source"], "source"),
+        for side, df_side in (("source", source), ("target", target)):
+            metric_dfs.append(
+                P.profile_df(df_side, task, side, extra_exprs=folds.exprs(side))
             )
-        )
-        metric_dfs.append(
-            P.profile_df(
-                target,
-                task,
-                "target",
-                include_uniqueness=not uniq_external,
-                extra_exprs=CK.violation_exprs(con_fold["target"], "target")
-                + FR.max_ts_exprs(fresh_fold["target"], "target"),
-            )
-        )
     else:
         for cside, df_side in (("source", source), ("target", target)):
             if con_by_side[cside] or fresh_by_side[cside]:
@@ -287,27 +238,9 @@ def compile_task(
                         F.count(F.lit(1))
                         .cast("long")
                         .alias(f"constraint_rows_{cside}"),
-                        *CK.violation_exprs(con_fold[cside], cside),
-                        *FR.max_ts_exprs(fresh_fold[cside], cside),
+                        *folds.exprs(cside),
                     )
                 )
-    if uniq_external:
-        from datapact_spark.operators.uniqueness import (
-            uniqueness_metrics_approx,
-            uniqueness_metrics_scalable,
-        )
-
-        fn = (
-            uniqueness_metrics_approx
-            if uniq_strategy == "approx"
-            else uniqueness_metrics_scalable
-        )
-        for side, df_side in (("source", source), ("target", target)):
-            metric_dfs.append(
-                fn(df_side, task.uniqueness_columns).select(
-                    F.col("distinct_count").alias(f"{side}_distinct_uniqs")
-                )
-            )
 
     # ---- count ------------------------------------------------------
     if task.count_tolerance is not None:

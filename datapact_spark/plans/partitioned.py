@@ -20,6 +20,13 @@ BASELINE.json north rule):
 Missing-group semantics: a group present in source but absent in target
 (or vice versa) gets zeroed counts on the missing side, so the count
 check fails it (rel diff 100%) rather than silently dropping it.
+
+Skew: a hot group key (a mega-repo) needs no salting. The grouped
+profile runs a partial HashAggregate map-side below its group-key
+exchange, so the hot key's reducer reads one partial row per upstream
+partition. Its one COUNT(DISTINCT) plans no Expand: the distinct
+combinations shuffle on the high-cardinality (group ⊕ uniqueness) key
+first, then the per-group count is partially aggregated the same way.
 """
 
 from __future__ import annotations
@@ -40,13 +47,8 @@ def compile_partition_verdicts(
     spark: SparkSession,
     task: ValidationTask,
     resolver: TableResolver,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Per-group verdict DataFrame for one task.
-
-    ``salt_buckets > 0`` enables two-level (salted) aggregation for the
-    grouped profiles — use when one group (a mega-repo) dominates; see
-    ``grouped_profile_salted``.
 
     May persist the joined profile (fingerprint mode with constraint or
     freshness folds): materialize the verdicts inside a ``cache_scope``.
@@ -63,10 +65,7 @@ def compile_partition_verdicts(
 
     # fingerprint row-hash mode folds the per-group (pk, row_hash)
     # fingerprint into the SAME profile scan — zero extra passes for
-    # clean groups. The fp sum is a plain additive decimal, so it salts
-    # exactly like count/sum: the salted profile carries it as one more
-    # partial/merge pair — a skewed mega-repo table gets skew
-    # protection AND the 99%-shuffle-cut compare at once.
+    # clean groups
     fp_in_profile = (
         task.pk_row_hash_check
         and task.primary_keys
@@ -78,84 +77,34 @@ def compile_partition_verdicts(
         c for c in source.columns if c not in group_cols
     ]
 
-    def _fp_sig() -> F.Column:
+    def _fp_exprs(side: str) -> list[F.Column]:
         from datapact_spark.functions.hashing import row_hash
 
         rh = row_hash([F.col(c) for c in hash_cols], task.hash_algo)
         pk_cols = [F.col(pk) for pk in task.primary_keys]
-        return F.xxhash64(
+        sig = F.xxhash64(
             F.xxhash64(*pk_cols),
             F.xxhash64(F.lit(0x9E3779B9), *pk_cols),
             F.xxhash64(rh),
         ).cast("decimal(38,0)")
+        # the rows the exact PK join can match: no NULL PK component
+        pk_complete = F.lit(True)
+        for c in pk_cols:
+            pk_complete = pk_complete & c.isNotNull()
+        return [
+            F.sum(sig).alias(f"{side}_rowfp"),
+            F.count(F.when(pk_complete, 1)).alias(f"{side}_pk_rows"),
+        ]
 
-    def _fp_exprs(side: str) -> list[F.Column]:
-        return [F.sum(_fp_sig()).alias(f"{side}_rowfp")]
-
-    con_by_side: dict[str, list] = {"source": [], "target": []}
-    for cc in task.constraint_checks or []:
-        for cside in ("source", "target") if cc.side == "both" else (cc.side,):
-            con_by_side[cside].append(cc)
-
-    # symmetric fold (see operators/constraints.foldable_checks): both
-    # grouped profiles carry the same constraint SUMs wherever the
-    # predicate resolves, preserving AQE scan/exchange reuse under
-    # self-validation; the verdict reads only the configured columns
-    from datapact_spark.operators.constraints import (
-        foldable_checks,
-        violation_exprs,
+    folds = P.side_folds(task, source, target)
+    con_by_side, con_fold, fresh_by_side, fresh_fold = folds
+    s_prof, t_prof = (
+        P.grouped_profile_df(
+            df, task, side, group_cols,
+            extra_exprs=(_fp_exprs(side) if fp_in_profile else []) + folds.exprs(side),
+        )
+        for side, df in (("source", source), ("target", target))
     )
-
-    all_cons = list(task.constraint_checks or [])
-    con_fold = {
-        "source": foldable_checks(source, all_cons, con_by_side["source"]),
-        "target": foldable_checks(target, all_cons, con_by_side["target"]),
-    }
-
-    from datapact_spark.operators.freshness import (
-        foldable_freshness,
-        max_ts_exprs,
-    )
-
-    all_fresh = list(task.freshness_checks or [])
-    fresh_by_side: dict[str, list] = {"source": [], "target": []}
-    for fc in all_fresh:
-        for fside in ("source", "target") if fc.side == "both" else (fc.side,):
-            fresh_by_side[fside].append(fc)
-    fresh_fold = {
-        "source": foldable_freshness(source, all_fresh, fresh_by_side["source"]),
-        "target": foldable_freshness(target, all_fresh, fresh_by_side["target"]),
-    }
-
-    def _con_exprs(side: str) -> list[F.Column]:
-        return violation_exprs(con_fold[side], side)
-
-    if salt_buckets > 0:
-        s_prof = grouped_profile_salted(
-            source, task, "source", group_cols, salt_buckets,
-            fp_sig=_fp_sig() if fp_in_profile else None,
-            constraints=con_fold["source"],
-            freshness=fresh_fold["source"],
-        )
-        t_prof = grouped_profile_salted(
-            target, task, "target", group_cols, salt_buckets,
-            fp_sig=_fp_sig() if fp_in_profile else None,
-            constraints=con_fold["target"],
-            freshness=fresh_fold["target"],
-        )
-    else:
-        s_prof = P.grouped_profile_df(
-            source, task, "source", group_cols,
-            extra_exprs=(_fp_exprs("source") if fp_in_profile else [])
-            + _con_exprs("source")
-            + max_ts_exprs(fresh_fold["source"], "source"),
-        )
-        t_prof = P.grouped_profile_df(
-            target, task, "target", group_cols,
-            extra_exprs=(_fp_exprs("target") if fp_in_profile else [])
-            + _con_exprs("target")
-            + max_ts_exprs(fresh_fold["target"], "target"),
-        )
 
     joined = s_prof.join(t_prof, on=group_cols, how="full_outer")
     # zero-fill the count columns so missing groups fail loudly
@@ -253,7 +202,7 @@ def compile_partition_verdicts(
         if fp_in_profile:
             # fingerprints came along with the profile scan: groups whose
             # counts AND (pk,row_hash) fingerprints match are exactly
-            # equal → (source_count, 0) with NO join at all; only
+            # equal → (source_pk_rows, 0) with NO join at all; only
             # fingerprint-unequal groups enter the exact compact join,
             # scoped by a broadcast semi-join. Clean data ⇒ the row-hash
             # check costs zero extra scans and ~zero shuffle.
@@ -264,6 +213,11 @@ def compile_partition_verdicts(
             # and fp sentinels -1/-2 can't make missing == present
             fp_equal = (
                 F.col("source_count") == F.col("target_count")
+            ) & (
+                # every profile column stays referenced here, so the
+                # key-pruned copy below still reuses the profile scans
+                F.coalesce(F.col("source_pk_rows"), F.lit(-1))
+                == F.coalesce(F.col("target_pk_rows"), F.lit(-2))
             ) & (
                 F.coalesce(F.col("source_rowfp"), F.lit(-1).cast("decimal(38,0)"))
                 == F.coalesce(F.col("target_rowfp"), F.lit(-2).cast("decimal(38,0)"))
@@ -304,7 +258,9 @@ def compile_partition_verdicts(
                 hash_columns=hash_cols, algo=task.hash_algo,
             )
             step = step.join(hm, on=group_cols, how="left")
-            tc = F.when(fp_equal, F.col("source_count")).otherwise(
+            # a clean group compares what the exact join would match:
+            # its rows with no NULL PK component
+            tc = F.when(fp_equal, F.col("source_pk_rows")).otherwise(
                 F.coalesce(F.col("total_compared_rows"), F.lit(0))
             )
             mm = F.when(fp_equal, F.lit(0).cast("long")).otherwise(
@@ -318,7 +274,7 @@ def compile_partition_verdicts(
             pass_conds.append(("row_hash_passed", ratio <= tol))
         else:
             # row_hash_mode='join' (fingerprint modes always take the
-            # in-profile fold above, salted or not): one join carries the
+            # in-profile fold above): one join carries the
             # row hash and the PK null parity
             hm = H.pk_join_metrics(
                 source, target, task.primary_keys, group_cols,
@@ -451,105 +407,3 @@ def compile_partition_verdicts(
         *named_conds,
         overall.alias("overall_validation_passed"),
     )
-
-
-def grouped_profile_salted(
-    df: DataFrame,
-    task: ValidationTask,
-    side: str,
-    group_cols: list[str],
-    salt_buckets: int,
-    fp_sig: F.Column | None = None,
-    constraints: list | None = None,
-    freshness: list | None = None,
-) -> DataFrame:
-    """Two-level grouped profile for skewed verdict keys: partial
-    aggregate on (keys, salt), then merge per key. Catalyst/AQE splits
-    skewed *join* partitions but never skewed group-bys (SURVEY.md
-    §4.2), so a mega-repo key would otherwise pin one reducer.
-
-    COUNT_DISTINCT cannot be merged through a salt split, so when
-    uniqueness is configured the distinct count is computed separately
-    per key via the scale path (groupBy the full key set — key+columns
-    — then count per key), which is itself salt-free but shuffles only
-    the distinct combinations.
-
-    ``fp_sig`` (fingerprint row-hash mode): a per-row decimal signature
-    whose per-group SUM is the (pk, row_hash) fingerprint. Plain
-    integer addition is associative/commutative, so it rides the salt
-    split as one more partial/merge pair — emitted as ``{side}_rowfp``,
-    byte-identical to the unsalted fold.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in group_cols], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    # partial: additive measures only
-    partial_exprs = [F.count(F.lit(1)).alias("__cnt")]
-    merge_exprs = [F.sum("__cnt").alias(f"{side}_count")]
-    if fp_sig is not None:
-        partial_exprs.append(F.sum(fp_sig).alias("__fp"))
-        merge_exprs.append(F.sum("__fp").alias(f"{side}_rowfp"))
-    # constraint-violation sums are plain integer addition — one more
-    # partial/merge pair per check, byte-identical to the unsalted fold
-    for cc in constraints or []:
-        from datapact_spark.operators.constraints import violation_flag
-
-        partial_exprs.append(
-            F.sum(F.when(violation_flag(cc), 1).otherwise(0)).alias(f"__cv_{cc.name}")
-        )
-        merge_exprs.append(
-            F.sum(f"__cv_{cc.name}")
-            .cast("long")
-            .alias(f"constraint_violations_{cc.name}_{side}")
-        )
-    # MAX is associative/commutative — freshness rides the salt split too
-    for fc in freshness or []:
-        partial_exprs.append(
-            F.max(F.col(fc.column).cast("timestamp")).alias(f"__fr_{fc.column}")
-        )
-        merge_exprs.append(
-            F.max(f"__fr_{fc.column}").alias(f"freshness_max_{fc.column}_{side}")
-        )
-    nulls_tc = (
-        task.null_validation_columns
-        and task.null_validation_tolerance is not None
-        and not task.primary_keys
-    )
-    if nulls_tc:
-        for col in task.null_validation_columns:
-            partial_exprs.append(
-                F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(f"__n_{col}")
-            )
-            merge_exprs.append(F.sum(f"__n_{col}").alias(f"{side}_nulls_{col}"))
-    for av in task.agg_validations or []:
-        for v in av.validations:
-            agg = v.agg.upper()
-            out = f"{side}_value_{av.column}_{agg}"
-            if agg == "SUM":
-                partial_exprs.append(F.sum(av.column).alias(f"__s_{out}"))
-                merge_exprs.append(F.sum(f"__s_{out}").cast(E.DEC6).alias(out))
-            elif agg == "MIN":
-                partial_exprs.append(F.min(av.column).alias(f"__s_{out}"))
-                merge_exprs.append(F.min(f"__s_{out}").cast(E.DEC6).alias(out))
-            elif agg == "MAX":
-                partial_exprs.append(F.max(av.column).alias(f"__s_{out}"))
-                merge_exprs.append(F.max(f"__s_{out}").cast(E.DEC6).alias(out))
-            elif agg == "COUNT":
-                partial_exprs.append(F.count(av.column).alias(f"__s_{out}"))
-                merge_exprs.append(F.sum(f"__s_{out}").cast(E.DEC6).alias(out))
-            elif agg == "AVG":
-                # mergeable as (sum, count)
-                partial_exprs.append(F.sum(av.column).alias(f"__sum_{out}"))
-                partial_exprs.append(F.count(av.column).alias(f"__cnt_{out}"))
-                merge_exprs.append(
-                    (F.sum(f"__sum_{out}") / F.sum(f"__cnt_{out}")).cast(E.DEC6).alias(out)
-                )
-    partial = df.groupBy(*group_cols, salt.alias("__salt")).agg(*partial_exprs)
-    merged = partial.groupBy(*group_cols).agg(*merge_exprs)
-    if task.uniqueness_columns and task.uniqueness_tolerance is not None:
-        distinct = (
-            df.groupBy(*group_cols, *task.uniqueness_columns)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .groupBy(*group_cols)
-            .agg(F.count(F.lit(1)).alias(f"{side}_distinct_uniqs"))
-        )
-        merged = merged.join(distinct, on=group_cols, how="left")
-    return merged

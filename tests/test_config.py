@@ -266,13 +266,14 @@ class TestRound2Validators:
     def test_partition_batches_must_be_positive(self):
         with pytest.raises(ValueError, match="partition_batches"):
             self._task(partition_batches=0)
-        with pytest.raises(ValueError, match="salt_buckets"):
-            self._task(partition_salt_buckets=-1)
         assert self._task(partition_batches=1).partition_batches == 1
 
     def test_uniqueness_strategy_validated(self):
         assert self._task().uniqueness_strategy == "auto"
-        assert self._task(uniqueness_strategy="parity").uniqueness_strategy == "parity"
+        assert self._task(uniqueness_strategy="approx").uniqueness_strategy == "approx"
+        # saved configs' retired strategies load as the exact default
+        for old in ("parity", "scalable"):
+            assert self._task(uniqueness_strategy=old).uniqueness_strategy == "auto"
         with pytest.raises(ValueError, match="uniqueness_strategy"):
             self._task(uniqueness_strategy="fastest")
 

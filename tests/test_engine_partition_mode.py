@@ -135,3 +135,35 @@ def test_genie_tables(engine, spark):
     issues = agg.genie_issues(ledger).collect()
     assert issues and all(i["task_key"] == "g1" for i in issues)
     assert any(i["check_type"] == "row_hash" for i in issues)
+
+
+def test_retired_salt_and_strategy_keys_load_and_run(engine, tmp_path):
+    """A config saved with the retired ``partition_salt_buckets`` key and
+    ``uniqueness_strategy: scalable`` still loads (the strategy reads as
+    the exact default, the salt key is ignored) and runs."""
+    from datapact_spark.config import load_config
+
+    path = tmp_path / "saved.yml"
+    path.write_text(
+        "validations:\n"
+        "  - task_key: saved_keys\n"
+        "    source: code_src\n"
+        "    target: code_src\n"
+        "    primary_keys: [repo, path]\n"
+        "    partition_by: [repo, lang]\n"
+        "    partition_salt_buckets: 16\n"
+        "    count_tolerance: 0.0\n"
+        "    uniqueness_columns: [repo, path]\n"
+        "    uniqueness_tolerance: 0.0\n"
+        "    uniqueness_strategy: scalable\n"
+    )
+    cfg = load_config(str(path))
+    (task,) = cfg.validations
+    assert task.uniqueness_strategy == "auto"
+    assert not hasattr(task, "partition_salt_buckets")
+    res = engine.run(cfg, job_name="saved", run_id=7)
+    assert res.passed
+    p = json.loads(res.outcomes["saved_keys"].payload)
+    assert p["uniqueness_validation_repo_path"]["source_duplicates"] == "0"
+    assert p["partition_verdicts"]["status"] == "PASS"
+    assert p["partition_verdicts"]["total_groups"] > 0

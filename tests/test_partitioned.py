@@ -1,4 +1,4 @@
-"""Per-partition verdicts, checkpoint/resume, salting, and the
+"""Per-partition verdicts, checkpoint/resume, skewed group keys, and the
 sha256(content) row invariant on the synthetic code table."""
 
 import os
@@ -93,11 +93,14 @@ def test_resume_skips_committed_batches(engine, tmp_path):
     assert verdicts.count() > 0
 
 
-def test_salted_profile_matches_unsalted(engine, spark):
+def test_grouped_profile_matches_direct_aggregates(engine, code_tables, spark):
+    """The grouped profile's per-group counts, COUNT aggregate and
+    duplicate counts equal direct per-group aggregates of each side (a
+    group missing on one side reads 0 there)."""
     from datapact_spark.plans.partitioned import compile_partition_verdicts
 
     task = _task(
-        task_key="code_salt",
+        task_key="code_profile",
         pk_row_hash_check=False,
         agg_validations=[
             {"column": "path", "validations": [{"agg": "COUNT", "tolerance": 0.0}]}
@@ -105,33 +108,26 @@ def test_salted_profile_matches_unsalted(engine, spark):
         uniqueness_columns=["path"],
         uniqueness_tolerance=0.0,
     )
-    plain = compile_partition_verdicts(spark, task, engine.resolver, salt_buckets=0)
-    salted = compile_partition_verdicts(spark, task, engine.resolver, salt_buckets=8)
-    cols = ["repo", "lang", "source_count", "target_count", "overall_validation_passed"]
-    p = {tuple(r) for r in plain.select(*cols).collect()}
-    s = {tuple(r) for r in salted.select(*cols).collect()}
-    assert p == s
+    verdicts = compile_partition_verdicts(spark, task, engine.resolver).collect()
 
+    def direct(df):
+        rows = df.groupBy("repo", "lang").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count("path").alias("c"),
+            F.countDistinct("path").alias("d"),
+        ).collect()
+        return {(r["repo"], r["lang"]): (r["n"], r["c"], r["n"] - r["d"]) for r in rows}
 
-def test_salted_profile_matches_unsalted_fingerprint_mode(engine, spark):
-    """salt_buckets + row_hash_mode=fingerprint: the fp sum is additive
-    and must ride the salt split — full verdict rows (fingerprint-based
-    compare columns included) byte-identical to the unsalted fold."""
-    from datapact_spark.plans.partitioned import compile_partition_verdicts
-
-    def run(salt):
-        task = _task(
-            task_key=f"code_fp_salt{salt}",
-            row_hash_mode="fingerprint",
-            uniqueness_columns=["repo", "path"],
-            uniqueness_tolerance=0.0,
-        )
-        df = compile_partition_verdicts(
-            spark, task, engine.resolver, salt_buckets=salt
-        )
-        return {tuple(r) for r in df.collect()}
-
-    assert run(8) == run(0)
+    src, tgt = (direct(df) for df in code_tables)
+    assert len(verdicts) == len(set(src) | set(tgt))
+    for r in verdicts:
+        key = (r["repo"], r["lang"])
+        s_n, s_c, s_dup = src.get(key, (0, None, 0))
+        t_n, t_c, t_dup = tgt.get(key, (0, None, 0))
+        assert (r["source_count"], r["target_count"]) == (s_n, t_n)
+        assert (r["source_duplicates"], r["target_duplicates"]) == (s_dup, t_dup)
+        got_c = r["source_value_path_COUNT"], r["target_value_path_COUNT"]
+        assert tuple(None if v is None else int(v) for v in got_c) == (s_c, t_c)
 
 
 def test_sha256_invariant_jvm_vs_python(spark, code_tables):
@@ -186,12 +182,16 @@ def test_grouped_pk_null_join_variant(spark, tmp_path):
     assert rows["b"]["target_nulls_payload"] == 3
 
 
-def test_null_pk_components_match_task_level_row_hash(spark):
+@pytest.mark.parametrize("row_hash_mode", ["join", "fingerprint", "fingerprint_multiset"])
+def test_null_pk_components_match_task_level_row_hash(spark, row_hash_mode):
     """Rows with a NULL PK component never match in the PK join (SQL
     equality), per partition exactly as at task level. Target = source
     with each row's NULL component swapped to the other PK column: a
     hash fold of the PK tuple that skips NULLs would join (a, NULL) with
-    (NULL, a) and compare 6 rows with 2 mismatches instead of 1 and 0."""
+    (NULL, a) and compare 6 rows with 2 mismatches instead of 1 and 0.
+    In fingerprint modes the group is fingerprint-clean, and its
+    compared-row count must still leave out the NULL-PK rows (counting
+    them would read 4)."""
     import json
 
     from datapact_spark.plans.compiler import compile_task
@@ -220,7 +220,14 @@ def test_null_pk_components_match_task_level_row_hash(spark):
     payload = json.loads(compiled.metrics_df.collect()[0]["result_payload"])
     rh = payload["row_hash_validation"]
     assert (rh["compared_rows"], rh["mismatch_count"], rh["status"]) == ("1", "0", "PASS")
-    grouped = ValidationTask(**task, partition_by=["grp"])
+    # 'fingerprint' requires a uniqueness check on the PKs
+    uniq = (
+        dict(uniqueness_columns=["k1", "k2"], uniqueness_tolerance=0.0)
+        if row_hash_mode == "fingerprint" else {}
+    )
+    grouped = ValidationTask(
+        **task, **uniq, partition_by=["grp"], row_hash_mode=row_hash_mode
+    )
     (row,) = compile_partition_verdicts(spark, grouped, resolver).collect()
     assert (
         row["total_compared_rows"], row["mismatch_count"], row["row_hash_passed"]
@@ -499,43 +506,37 @@ def test_clear_uncommitted_batches_drops_stale_rows(spark, tmp_path):
     )
 
 
-def test_salted_profile_with_fingerprint_mode(engine, spark):
-    """salt_buckets + row_hash_mode=fingerprint carries the fingerprint
-    through the salted profile and still matches the join path."""
-    from datapact_spark.plans.partitioned import compile_partition_verdicts
-
-    def run(mode, salt):
-        df = compile_partition_verdicts(
-            spark,
-            _task(
-                task_key=f"sf_{mode}_{salt}",
-                row_hash_mode=mode,
-                uniqueness_columns=["repo", "path"],
-                uniqueness_tolerance=0.0,
-            ),
-            engine.resolver, salt_buckets=salt,
-        )
-        return {
-            (r["repo"], r["lang"]): (r["total_compared_rows"], r["mismatch_count"],
-                                     r["overall_validation_passed"])
-            for r in df.collect()
-        }
-
-    assert run("fingerprint", 8) == run("join", 0)
+def _shuffle_stages(node, out: list) -> list:
+    """The ShuffleQueryStageExec nodes of an executed adaptive plan."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _shuffle_stages(node.executedPlan(), out)
+    if name.endswith("QueryStageExec"):
+        if name == "ShuffleQueryStageExec":
+            out.append(node)
+        return _shuffle_stages(node.plan(), out)
+    children = node.children()
+    for i in range(children.size()):
+        _shuffle_stages(children.apply(i), out)
+    return out
 
 
 def test_distinct_path_spreads_skewed_group(spark):
     """VERDICT r4 #7: the uniqueness/distinct path must not funnel a
-    mega-group to one reducer.  The distinct-combination aggregate
-    shuffles on the FULL (group ⊕ uniqueness) key — high-cardinality
-    even when one group holds 20% of all rows — and the per-group
-    count on top is protected by map-side partial aggregation (the
-    reducer sees one partial row per upstream partition, not one per
-    combination).  Asserted empirically: with AQE coalescing off, no
-    reducer of the combination shuffle receives > 2x the median row
-    count, and the verdict-side distinct counts match countDistinct."""
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    mega-group to one reducer.  Measured on the grouped profile the
+    per-partition verdicts run, over one mega-repo with 20% of rows:
+
+    * a partial HashAggregate sits under every exchange, so the hot
+      group key reaches its reducer as partial rows, never raw rows;
+    * the distinct-combination exchange shuffles on the FULL (group ⊕
+      uniqueness) key — high-cardinality even with the mega-repo — and,
+      with AQE coalescing off, no reducer of it receives > 2x the median
+      bytes;
+    * the distinct counts equal countDistinct."""
+    from datapact_spark.operators.profile import grouped_profile_df
+
+    coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
         # one mega-repo with 20% of rows; 20 small repos with 4% each
         df = (
@@ -545,28 +546,38 @@ def test_distinct_path_spreads_skewed_group(spark):
                 "concat('f', id) AS path",
             )
         )
-        combos = df.groupBy("repo", "path").agg(F.count(F.lit(1)).alias("__n"))
-        dist = (
-            combos.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .count()
-            .collect()
+        task = ValidationTask(
+            task_key="skew", source="s", target="s", partition_by=["repo"],
+            count_tolerance=0.0,
+            uniqueness_columns=["repo", "path"], uniqueness_tolerance=0.0,
         )
-        counts = sorted(r["count"] for r in dist)
-        median = counts[len(counts) // 2]
-        assert counts[-1] <= 2 * median, (counts[-1], median)
+        prof = grouped_profile_df(df, task, "source", ["repo"])
+        got = {r["repo"]: r["source_distinct_uniqs"] for r in prof.collect()}
 
-        per_group = (
-            combos.groupBy("repo")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .collect()
-        )
+        stages = _shuffle_stages(prof._jdf.queryExecution().executedPlan(), [])
+        exchanges = [st.plan() for st in stages]
+        assert len(exchanges) == 2, [e.toString() for e in exchanges]
+        for ex in exchanges:
+            child = ex.child()
+            if child.getClass().getSimpleName() == "WholeStageCodegenExec":
+                child = child.child()
+            assert child.getClass().getSimpleName() == "HashAggregateExec", ex.toString()
+            assert "partial_" in child.toString(), child.toString()
+
+        (combo,) = [
+            st for st in stages
+            if "struct" in st.plan().outputPartitioning().toString()
+        ]
+        sizes = sorted(combo.mapStats().get().bytesByPartitionId())
+        median = sizes[len(sizes) // 2]
+        assert sizes[-1] <= 2 * median, sizes
+
         truth = {
             r["repo"]: r["d"]
             for r in df.groupBy("repo")
             .agg(F.countDistinct("path").alias("d"))
             .collect()
         }
-        assert {r["repo"]: r["d"] for r in per_group} == truth
+        assert got == truth
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)

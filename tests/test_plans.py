@@ -180,30 +180,18 @@ def _compile(spark, sf_dir, **task_kwargs):
     return compile_task(spark, task, resolver).metrics_df
 
 
-def test_uniqueness_scalable_avoids_distinct_aggregate(spark, sf_dir):
-    """Default (auto→scalable) uniqueness must plan the groupBy-count
-    path: no count(distinct …) rewrite (which shuffles the full distinct
-    struct through 4 aggregate phases and, with >1 distinct group, an
-    Expand — SURVEY §4.2) and no Expand node."""
-    df = _compile(
-        spark, sf_dir,
-        count_tolerance=0.0, uniqueness_columns=["o_custkey"], uniqueness_tolerance=0.9,
-    )
-    plan = _explain(df)
-    assert "count(distinct" not in plan, "scalable path must not plan COUNT DISTINCT"
-    assert "Expand" not in plan
-
-
 def test_uniqueness_parity_uses_count_distinct(spark, sf_dir):
-    """Opt-in parity path keeps COUNT(DISTINCT struct) in the single-pass
-    profile (one scan per side, reference plan shape)."""
+    """The default uniqueness strategy keeps COUNT(DISTINCT struct) in
+    the single-pass profile, the reference plan shape: one scan per side
+    for a count check and a uniqueness check together, and no Expand
+    (one distinct aggregate takes the single-distinct rewrite)."""
     df = _compile(
         spark, sf_dir,
         count_tolerance=0.0, uniqueness_columns=["o_custkey"], uniqueness_tolerance=0.9,
-        uniqueness_strategy="parity",
     )
     plan = _explain(df)
     assert "count(distinct struct" in plan
+    assert "Expand" not in plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Scan parquet") == 2  # one per side — no extra scans
 
@@ -234,8 +222,9 @@ def test_custom_sql_reference_fingerprint_opt_in(spark, sf_dir):
 
 
 def test_uniqueness_approx_no_key_shuffle(spark, sf_dir):
-    """'approx' uniqueness (HLL++) plans one scan per side with no
-    hash-partitioned exchange, and lands within rsd of the exact count."""
+    """'approx' uniqueness (HLL++) rides the profile: one scan per side
+    with no hash-partitioned exchange, and lands within rsd of the exact
+    count."""
     df = _compile(
         spark, sf_dir,
         count_tolerance=0.0, uniqueness_columns=["o_custkey"], uniqueness_tolerance=0.95,
@@ -244,6 +233,7 @@ def test_uniqueness_approx_no_key_shuffle(spark, sf_dir):
     plan = _explain(df)
     assert "approx_count_distinct" in plan
     assert "Exchange hashpartitioning" not in plan
+    assert plan.split("\n\n")[0].count("Scan parquet") == 2
     row = df.collect()[0]
     import json
 
