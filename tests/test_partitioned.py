@@ -296,6 +296,37 @@ def test_fingerprint_mode_matches_join_mode(engine, spark):
     assert True in stats or any(v[0] == 0 for v in j.values())
 
 
+def test_salted_profile_with_fingerprint_mode(engine, spark):
+    """Fingerprint mode folds its fingerprint and the uniqueness distinct
+    count into the one grouped profile (no salting, no separate scan):
+    duplicate counts, the uniqueness verdict and the row-hash verdict
+    all match the join path."""
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
+
+    def run(mode):
+        df = compile_partition_verdicts(
+            spark,
+            _task(
+                task_key=f"sf_{mode}",
+                row_hash_mode=mode,
+                uniqueness_columns=["repo", "path"],
+                uniqueness_tolerance=0.0,
+            ),
+            engine.resolver,
+        )
+        return {
+            (r["repo"], r["lang"]): (r["total_compared_rows"], r["mismatch_count"],
+                                     r["source_duplicates"], r["target_duplicates"],
+                                     r["uniqueness_passed"],
+                                     r["overall_validation_passed"])
+            for r in df.collect()
+        }
+
+    fp, j = run("fingerprint"), run("join")
+    assert fp == j and len(fp) > 0
+    assert all(v[4] for v in fp.values())
+
+
 def test_fingerprint_mode_localized_corruption_scopes_join(spark, tmp_path):
     """With corruption confined to one repo, every other group passes by
     fingerprint and only the dirty repo's rows enter the exact join."""
