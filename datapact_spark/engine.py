@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from datapact_spark import aggregate as agg
 from datapact_spark.config import DataPactConfig, ValidationTask
 from datapact_spark.ledger import LEDGER_SCHEMA, ResultsLedger
+from datapact_spark.operators.drift import baseline_snapshot
 from datapact_spark.plans.compiler import compile_task
 from datapact_spark.session import cache_scope
 from datapact_spark.sources.loader import TableResolver
@@ -152,27 +153,9 @@ class DataPactEngine:
                 for kind, vdf in compiled.violation_dfs.items():
                     self.ledger.write_violations(run_id, task.task_key, kind, vdf)
                 for dcheck, src_df in compiled.bootstrap_drift:
-                    from datapact_spark.operators.drift import histogram_snapshot
-                    from datapact_spark.operators.quantiles import (
-                        kll_sketch,
-                        tdigest_sketch,
+                    self.baselines.write(
+                        task.task_key, dcheck.column, baseline_snapshot(src_df, dcheck)
                     )
-
-                    if dcheck.kind == "categorical":
-                        from datapact_spark.operators.drift import (
-                            categorical_snapshot,
-                        )
-
-                        snap = categorical_snapshot(
-                            src_df, dcheck.column, dcheck.bins
-                        )
-                    elif dcheck.sketch == "tdigest":
-                        snap = tdigest_sketch(src_df, dcheck.column, dcheck.delta)
-                    elif dcheck.sketch == "kll":
-                        snap = kll_sketch(src_df, dcheck.column, dcheck.bins)
-                    else:
-                        snap = histogram_snapshot(src_df, dcheck.column, dcheck.bins)
-                    self.baselines.write(task.task_key, dcheck.column, snap)
                 if task.partition_by:
                     # north-star mode: per-partition verdicts computed,
                     # checkpointed, and folded into the task payload +

@@ -1,29 +1,37 @@
-"""Distribution-drift checks: PSI / KS vs another dataset or a snapshot.
+"""Distribution-drift checks: PSI / KS / TV vs another dataset or a
+stored baseline snapshot.
 
 North-star requirement (BASELINE.json): drift detection via mergeable
 sketches compared against baseline snapshots with PSI/KS thresholds.
 
-Two paths:
+One builder per sketch family, and this module is the only place that
+dispatches on the family (``drift_metrics``, ``baseline_snapshot``):
 
-* **Two-sample (default)** — source vs target in one lazy plan, fully
-  JVM-side: bin both sides on a shared grid derived from the source
-  min/max (a 1-row bounds relation crossJoined in — stays lazy, no
-  driver round-trip), ``groupBy(bin).count()`` per side, full-outer join
-  the 64-row histograms, then PSI as a sum and KS as a running-max over
-  the cumulative distribution (window over 64 rows — negligible).
-  Everything is a single DAG: two scans, two tiny shuffles.
+* **histogram** — both sides binned on one fixed grid cut from the
+  baseline's min/max; counts per (group, bin).
+* **categorical** — counts per (group, category) on the baseline's
+  top-k categories plus ``__OTHER__``.
+* **tdigest** / **kll** — quantile sketches (operators/quantiles.py):
+  masses per (group, bin) on the baseline's equal-mass bins.
 
-* **Snapshot** — ``histogram_snapshot`` materializes the binned
-  histogram (a mergeable sketch: histograms over the same grid merge by
-  addition) to parquet; ``drift_vs_snapshot`` compares a later run
-  against it. Sketch *build* is distributed (map-side partial counts);
-  the merged sketch is 64 rows.
+Every family reduces to per-(group, bin) counts and shares one tail
+(``drift_terms`` + ``psi_ks_from_counts``): per-bin PSI terms and
+running CDFs, with PSI folded in bin order so the sum is the same IEEE
+op sequence on every engine. All shuffles are on the group key.
+
+Task level is the same builder over no group keys: a mergeable summary
+over no keys is the global summary, and the 1-row bounds grid, the
+categorical frame and the baseline digest are broadcast instead of
+joined. Snapshot mode is the same builder fed a stored
+``baseline_snapshot`` in place of the source side.
 
 PSI = Σ (p−q)·ln(p/q) with ε-smoothing for empty bins;
-KS  = max |CDF_p − CDF_q|.
+KS  = max |CDF_p − CDF_q|;  TV = ½ Σ |p − q|.
 """
 
 from __future__ import annotations
+
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,298 +41,351 @@ from datapact_spark.config import DriftCheck
 
 _EPS = 1e-6
 
+OTHER_CATEGORY = "__OTHER__"
 
-def _binned(df: DataFrame, column: str, bins: int, bounds: DataFrame) -> DataFrame:
-    """(bin, cnt) histogram of ``column`` over the bounds grid.
+_SKETCH_SNAPSHOT_COLS = {
+    # marker columns unique to each sketch family's stored snapshot
+    "histogram": {"bin", "cnt"},
+    "tdigest": {"means", "weights", "total"},
+    "kll": {"prob", "quantile", "cnt"},
+    "categorical": {"category", "cnt"},
+}
 
-    The 1-row ``bounds`` relation is crossJoined (broadcast) so the
-    whole computation stays lazy and distributed.
-    """
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
-    with_bin = (
-        df.select(F.col(column).cast("double").alias("__v"))
-        .where(F.col("__v").isNotNull())
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.least(
-                F.greatest(
-                    F.floor((F.col("__v") - F.col("__lo")) / F.nullif(width, F.lit(0.0))),
-                    F.lit(0),
-                ),
-                F.lit(bins - 1),
-            )
-            .cast("int")
-            .alias("bin")
-        )
-        .fillna({"bin": 0})  # degenerate grid (lo == hi) → single bin
+
+def _family(check: DriftCheck) -> str:
+    return "categorical" if check.kind == "categorical" else check.sketch
+
+
+def _check_snapshot_family(snap: DataFrame, check: DriftCheck) -> None:
+    """Fail fast with a clear message when a stored drift baseline was
+    written by a different sketch family than the check now configures
+    (e.g. a DriftCheck flipped between sketch='histogram' and 'tdigest'
+    across runs). Without this, the mismatched columns surface as an
+    opaque missing-column AnalysisException deep inside the drift plan."""
+    cols = set(snap.columns)
+    family = _family(check)
+    if _SKETCH_SNAPSHOT_COLS[family] <= cols:
+        return
+    stored = next(
+        (fam for fam, mk in _SKETCH_SNAPSHOT_COLS.items() if mk <= cols), "unknown"
     )
-    return with_bin.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
+    raise ValueError(
+        f"drift baseline snapshot for column '{check.column}' was written by "
+        f"sketch family '{stored}' (columns {sorted(cols)}) but the check is "
+        f"configured with sketch family '{family}'. Delete the stored "
+        f"baseline to re-bootstrap, or restore the original sketch setting."
+    )
 
 
-def _bounds(df: DataFrame, column: str) -> DataFrame:
-    return df.agg(
+def drift_metrics(
+    source: DataFrame | None,
+    target: DataFrame,
+    check: DriftCheck,
+    group_cols: Sequence[str] = (),
+    snapshot: DataFrame | None = None,
+) -> DataFrame:
+    """(group..., drift_<metric>_<column>): drift of ``target`` against
+    the baseline, one row per group of ``group_cols`` — one row in all
+    at task level (no keys).
+
+    The baseline is ``source`` (two-sample), or the stored
+    ``baseline_snapshot`` when ``snapshot`` is given (``source`` is then
+    unused). Stored baselines carry no group key, so snapshot compares
+    are task-level. A side with no rows (empty, or all NULL) is zero
+    mass, so it reads as maximal drift, never as no comparison."""
+    g = list(group_cols)
+    family = _family(check)
+    if snapshot is not None:
+        _check_snapshot_family(snapshot, check)
+    if family == "histogram":
+        scores = psi_ks_from_counts(
+            _histogram_counts(source, target, check.column, check.bins, g, snapshot), g
+        )
+    elif family == "categorical":
+        scores = psi_ks_from_counts(
+            _categorical_counts(source, target, check.column, check.bins, g, snapshot),
+            g,
+            "category",
+        )
+    elif family == "tdigest":
+        from datapact_spark.operators.quantiles import tdigest_drift, tdigest_sketch
+
+        base = snapshot if snapshot is not None else tdigest_sketch(
+            source, check.column, check.delta, g
+        )
+        now = tdigest_sketch(target, check.column, check.delta, g)
+        scores = tdigest_drift(base, now, check.bins, g)
+    else:
+        from datapact_spark.operators.quantiles import kll_drift, kll_sketch
+
+        base = snapshot if snapshot is not None else kll_sketch(
+            source, check.column, check.bins, group_cols=g
+        )
+        now = kll_sketch(target, check.column, check.bins, group_cols=g)
+        scores = kll_drift(base, now, check.bins, group_cols=g)
+    return scores.select(
+        *g, F.col(check.metric).alias(f"drift_{check.metric}_{check.column}")
+    )
+
+
+def baseline_snapshot(df: DataFrame, check: DriftCheck) -> DataFrame:
+    """The stored baseline of ``check``'s sketch family over ``df``:
+    what a later snapshot-mode ``drift_metrics`` reads as its baseline
+    side. Persist with ``.write.parquet(path)``."""
+    family = _family(check)
+    if family == "histogram":
+        return histogram_snapshot(df, check.column, check.bins)
+    if family == "categorical":
+        return categorical_snapshot(df, check.column, check.bins)
+    from datapact_spark.operators.quantiles import kll_sketch, tdigest_sketch
+
+    if family == "tdigest":
+        return tdigest_sketch(df, check.column, check.delta)
+    return kll_sketch(df, check.column, check.bins)
+
+
+# ---------------------------------------------------------------------------
+# the shared tail: per-(group, bin) counts -> terms -> PSI / KS / TV
+# ---------------------------------------------------------------------------
+
+
+def merge_counts(base: DataFrame, now: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., p_cnt, q_cnt) from two (keys..., cnt) frames: a key
+    missing from one side is zero mass on that side."""
+    return (
+        base.select(*keys, F.col("cnt").alias("p_cnt"))
+        .join(now.select(*keys, F.col("cnt").alias("q_cnt")), on=keys, how="full_outer")
+        .select(
+            *keys,
+            F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
+            F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
+        )
+    )
+
+
+def drift_terms(
+    merged: DataFrame, group_cols: Sequence[str] = (), key: str = "bin"
+) -> DataFrame:
+    """Per-(group, key) drift terms from counts ``(group..., key,
+    p_cnt, q_cnt)``: masses ``p``/``q``, ``psi_term``, running CDFs
+    ``p_cdf``/``q_cdf``, ``tv_term = |p − q|``, and the key-ordered
+    running folds ``psi_run``/``tv_run``. Every value is a fixed
+    sequence of IEEE ops from exact counts (one division, +ε, ln, −, ×
+    and ordered running sums), so the rows are bitwise engine-portable.
+    Per-group totals ride an unbounded window over the (≤ bins rows per
+    group) frame: a separate .agg() would recompute the upstream scans,
+    since Catalyst shares no non-exchange subplans."""
+    g = list(group_cols)
+    wt = Window.partitionBy(*g).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    w = Window.partitionBy(*g).orderBy(key).rowsBetween(Window.unboundedPreceding, 0)
+
+    def mass(cnt: str) -> F.Column:
+        total = F.nullif(F.sum(cnt).over(wt).cast("double"), F.lit(0.0))
+        return F.coalesce(F.col(cnt) / total, F.lit(0.0))
+
+    ratios = merged.select(
+        *g, key, "p_cnt", "q_cnt", mass("p_cnt").alias("p"), mass("q_cnt").alias("q")
+    )
+    ps, qs = F.col("p") + F.lit(_EPS), F.col("q") + F.lit(_EPS)
+    psi_term = (ps - qs) * F.log(ps / qs)
+    tv_term = F.abs(F.col("p") - F.col("q"))
+    return ratios.select(
+        *g, key, "p_cnt", "q_cnt", "p", "q",
+        psi_term.alias("psi_term"),
+        F.sum("p").over(w).alias("p_cdf"),
+        F.sum("q").over(w).alias("q_cdf"),
+        # the ordered fold, not an unordered SUM: the same IEEE op
+        # sequence every engine's ordered fold executes
+        F.sum(psi_term).over(w).alias("psi_run"),
+        tv_term.alias("tv_term"),
+        F.sum(tv_term).over(w).alias("tv_run"),
+    )
+
+
+def psi_ks_from_counts(
+    merged: DataFrame, group_cols: Sequence[str] = (), key: str = "bin"
+) -> DataFrame:
+    """(group..., psi, ks, tv) from per-(group, key) counts — the one
+    tail of every sketch family and of windowed drift. PSI and TV are
+    the last values of their key-ordered running folds (the terms are
+    non-negative, so last == max). Over no keys an empty input still
+    yields one row, of NULLs."""
+    g = list(group_cols)
+    return drift_terms(merged, g, key).groupBy(*g).agg(
+        F.max("psi_run").alias("psi"),
+        F.max(F.abs(F.col("p_cdf") - F.col("q_cdf"))).alias("ks"),
+        (F.max("tv_run") * 0.5).alias("tv"),
+    )
+
+
+def psi_ks_terms(hist_p: DataFrame, hist_q: DataFrame) -> DataFrame:
+    """(bin, psi_term, p_cdf, q_cdf) from two (bin, cnt) histograms on
+    one grid — the task-level rows of ``drift_terms``."""
+    return drift_terms(merge_counts(hist_p, hist_q, ["bin"])).select(
+        "bin", "psi_term", "p_cdf", "q_cdf"
+    )
+
+
+# ---------------------------------------------------------------------------
+# histogram family
+# ---------------------------------------------------------------------------
+
+
+def _bounds(df: DataFrame, column: str, group_cols: Sequence[str] = ()) -> DataFrame:
+    return df.groupBy(*group_cols).agg(
         F.min(F.col(column).cast("double")).alias("__lo"),
         F.max(F.col(column).cast("double")).alias("__hi"),
     )
 
 
+def _binned(
+    df: DataFrame,
+    column: str,
+    bins: int,
+    bounds: DataFrame,
+    group_cols: Sequence[str] = (),
+) -> DataFrame:
+    """(group..., bin, cnt) histogram of ``column`` over the bounds
+    grid. Over no keys the 1-row ``bounds`` relation is broadcast, so
+    the whole computation stays lazy and distributed; per group it
+    joins on the group key."""
+    g = list(group_cols)
+    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
+    return (
+        df.select(*g, F.col(column).cast("double").alias("__v"))
+        .where(F.col("__v").isNotNull())
+        .join(bounds if g else F.broadcast(bounds), on=g or None, how="inner")
+        .select(
+            *g,
+            F.coalesce(
+                F.least(
+                    F.greatest(
+                        F.floor((F.col("__v") - F.col("__lo")) / F.nullif(width, F.lit(0.0))),
+                        F.lit(0),
+                    ),
+                    F.lit(bins - 1),
+                ).cast("int"),
+                F.lit(0),  # degenerate grid (lo == hi) → single bin
+            ).alias("bin"),
+        )
+        .groupBy(*g, "bin")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def histogram_snapshot(df: DataFrame, column: str, bins: int = 64) -> DataFrame:
-    """Mergeable histogram sketch of one column: (bin, cnt, __lo, __hi).
-    Persist with ``.write.parquet(path)`` as the baseline snapshot."""
+    """Mergeable histogram sketch of one column: (bin, cnt, __lo, __hi)
+    — histograms over the same grid merge by addition."""
     bounds = _bounds(df, column)
     return _binned(df, column, bins, bounds).crossJoin(F.broadcast(bounds))
 
 
-def psi_ks_terms(hist_p: DataFrame, hist_q: DataFrame) -> DataFrame:
-    """Per-bin drift terms from two (bin, cnt) histograms on one grid:
-    (bin, psi_term, p_cdf, q_cdf). Every value is a fixed sequence of
-    IEEE ops from exact integer counts (one division, +ε, ln, −, ×, and
-    an ordered running sum), so the rows are bitwise engine-portable —
-    the DuckDB oracle checks them value-exactly; only the final Σ of
-    psi_term is summation-order-dependent."""
-    p = hist_p.select(F.col("bin"), F.col("cnt").alias("p_cnt"))
-    q = hist_q.select(F.col("bin"), F.col("cnt").alias("q_cnt"))
-    merged = p.join(q, on="bin", how="full_outer").select(
-        F.col("bin"),
-        F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-        F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-    )
-    # totals as an unbounded window over the (tiny, ≤bins-row) merged
-    # histogram — NOT a separate .agg(): a second aggregate re-computes
-    # the whole upstream subtree (scans included) since Catalyst doesn't
-    # share non-exchange subplans, doubling the input scans at scale
-    wt = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    merged = merged.select(
-        "bin", "p_cnt", "q_cnt",
-        F.sum("p_cnt").over(wt).alias("p_tot"),
-        F.sum("q_cnt").over(wt).alias("q_tot"),
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        merged
-        .select(
-            F.col("bin"),
-            (F.col("p_cnt") / F.nullif(F.col("p_tot").cast("double"), F.lit(0.0))).alias("p"),
-            (F.col("q_cnt") / F.nullif(F.col("q_tot").cast("double"), F.lit(0.0))).alias("q"),
-        )
-        .fillna({"p": 0.0, "q": 0.0})
-        .select(
-            F.col("bin"),
-            (F.col("p") + F.lit(_EPS)).alias("ps"),
-            (F.col("q") + F.lit(_EPS)).alias("qs"),
-            F.sum("p").over(w).alias("p_cdf"),
-            F.sum("q").over(w).alias("q_cdf"),
-        )
-        .select(
-            "bin",
-            ((F.col("ps") - F.col("qs")) * F.log(F.col("ps") / F.col("qs"))).alias(
-                "psi_term"
-            ),
-            "p_cdf",
-            "q_cdf",
-        )
-    )
-
-
-def _psi_ks(hist_p: DataFrame, hist_q: DataFrame, bins: int) -> DataFrame:
-    """1-row (psi, ks) from two (bin, cnt) histograms on the same grid."""
-    return psi_ks_terms(hist_p, hist_q).agg(
-        F.sum("psi_term").alias("psi"),
-        F.max(F.abs(F.col("p_cdf") - F.col("q_cdf"))).alias("ks"),
-    )
-
-
-def drift_metrics(source: DataFrame, target: DataFrame, check: DriftCheck) -> DataFrame:
-    """1-row DF with column ``drift_<metric>_<column>`` (two-sample)."""
-    bounds = _bounds(source, check.column)
-    hist_s = _binned(source, check.column, check.bins, bounds)
-    hist_t = _binned(target, check.column, check.bins, bounds)
-    both = _psi_ks(hist_s, hist_t, check.bins)
-    metric_col = F.col("psi") if check.metric == "psi" else F.col("ks")
-    return both.select(metric_col.alias(f"drift_{check.metric}_{check.column}"))
-
-
-def grouped_drift_metrics(
-    source: DataFrame,
+def _histogram_counts(
+    source: DataFrame | None,
     target: DataFrame,
-    check: DriftCheck,
-    group_cols: list[str],
+    column: str,
+    bins: int,
+    g: list[str],
+    snapshot: DataFrame | None,
 ) -> DataFrame:
-    """Per-partition-group two-sample drift: one PSI/KS value per group.
-
-    Same construction as the global path, but every piece carries the
-    group key: per-group bounds (from the source side), per-(group, bin)
-    histograms, per-group totals, and a group-partitioned running CDF.
-    All shuffles are on the group key; nothing collects to the driver.
-    """
-    bins = check.bins
-    bounds = source.groupBy(*group_cols).agg(
-        F.min(F.col(check.column).cast("double")).alias("__lo"),
-        F.max(F.col(check.column).cast("double")).alias("__hi"),
-    )
-
-    def binned(df: DataFrame) -> DataFrame:
-        width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
-        return (
-            df.select(*group_cols, F.col(check.column).cast("double").alias("__v"))
-            .where(F.col("__v").isNotNull())
-            .join(bounds, on=group_cols, how="inner")
-            .select(
-                *group_cols,
-                F.coalesce(
-                    F.least(
-                        F.greatest(
-                            F.floor(
-                                (F.col("__v") - F.col("__lo"))
-                                / F.nullif(width, F.lit(0.0))
-                            ),
-                            F.lit(0),
-                        ),
-                        F.lit(bins - 1),
-                    ).cast("int"),
-                    F.lit(0),
-                ).alias("bin"),
-            )
-            .groupBy(*group_cols, "bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    p = binned(source).withColumnRenamed("cnt", "p_cnt")
-    q = binned(target).withColumnRenamed("cnt", "q_cnt")
-    merged = p.join(q, on=[*group_cols, "bin"], how="full_outer").select(
-        *group_cols,
-        "bin",
-        F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-        F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-    )
-    out = grouped_psi_ks_from_counts(merged, list(group_cols))
-    metric = F.col("psi") if check.metric == "psi" else F.col("ks")
-    return out.select(
-        *group_cols, metric.alias(f"drift_{check.metric}_{check.column}")
-    )
-
-
-def grouped_psi_ks_from_counts(
-    merged: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """(group..., psi, ks) from per-(group, bin) counts/masses
-    ``(group..., bin, p_cnt, q_cnt)`` — the shared tail of the grouped
-    histogram AND grouped t-digest drift paths.  All shuffles are on
-    the group key; per-group totals ride the same window shuffle as
-    the CDF (a groupBy+join would recompute the upstream scans)."""
-    wt = Window.partitionBy(*group_cols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    merged = merged.select(
-        *group_cols, "bin", "p_cnt", "q_cnt",
-        F.sum("p_cnt").over(wt).alias("p_tot"),
-        F.sum("q_cnt").over(wt).alias("q_tot"),
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ratios = (
-        merged
-        .select(
-            *group_cols,
-            F.col("bin"),
-            F.coalesce(
-                F.col("p_cnt") / F.nullif(F.col("p_tot").cast("double"), F.lit(0.0)),
-                F.lit(0.0),
-            ).alias("p"),
-            F.coalesce(
-                F.col("q_cnt") / F.nullif(F.col("q_tot").cast("double"), F.lit(0.0)),
-                F.lit(0.0),
-            ).alias("q"),
-        )
-        .select(
-            *group_cols,
-            F.col("bin"),
-            (F.col("p") + F.lit(_EPS)).alias("ps"),
-            (F.col("q") + F.lit(_EPS)).alias("qs"),
-            F.sum("p").over(w).alias("p_cdf"),
-            F.sum("q").over(w).alias("q_cdf"),
-        )
-        .select(
-            *group_cols,
-            # PSI as the LAST value of a bin-ordered running fold — the
-            # same IEEE op sequence every engine's ordered fold executes
-            # (an unordered SUM is summation-order-dependent). PSI terms
-            # are non-negative, so last-of-running == max-of-running,
-            # and the fold rides the same sorted window as the CDF.
-            F.sum(
-                (F.col("ps") - F.col("qs")) * F.log(F.col("ps") / F.col("qs"))
-            ).over(w).alias("psi_run"),
-            "p_cdf",
-            "q_cdf",
-        )
-    )
-    return ratios.groupBy(*group_cols).agg(
-        F.max("psi_run").alias("psi"),
-        F.max(F.abs(F.col("p_cdf") - F.col("q_cdf"))).alias("ks"),
-    )
-
-
-def drift_vs_snapshot(
-    df: DataFrame, snapshot: DataFrame, check: DriftCheck
-) -> DataFrame:
-    """1-row drift of ``df`` against a stored ``histogram_snapshot``.
-    The snapshot's grid (its __lo/__hi) is reused so bins align."""
-    bounds = snapshot.select("__lo", "__hi").limit(1)
-    hist_now = _binned(df, check.column, check.bins, bounds)
-    hist_base = snapshot.select("bin", "cnt")
-    both = _psi_ks(hist_base, hist_now, check.bins)
-    metric_col = F.col("psi") if check.metric == "psi" else F.col("ks")
-    return both.select(metric_col.alias(f"drift_{check.metric}_{check.column}"))
+    if snapshot is None:
+        bounds = _bounds(source, column, g)
+        base = _binned(source, column, bins, bounds, g)
+    else:
+        # the stored grid rides every snapshot row, so bins align
+        bounds = snapshot.select("__lo", "__hi").limit(1)
+        base = snapshot
+    return merge_counts(base, _binned(target, column, bins, bounds, g), [*g, "bin"])
 
 
 # ---------------------------------------------------------------------------
-# categorical drift — frequency-based PSI / total variation over a
+# categorical family — frequency-based PSI / total variation over a
 # string (or any discrete) column: the other half of real-world drift
 # monitoring (event types, languages, domains, labels)
 # ---------------------------------------------------------------------------
 
-OTHER_CATEGORY = "__OTHER__"
+
+def top_categories(
+    df: DataFrame, column: str, top_k: int, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """The ``top_k`` most frequent SOURCE categories per group (count
+    DESC, value ASC ties — deterministic), excluding NULL: the
+    comparison frame every side is folded onto. At unbounded
+    cardinality swap the exact groupBy for ``frequency.heavy_hitters``
+    — the frame only needs the dominant categories, the tail is
+    __OTHER__ by design."""
+    g = list(group_cols)
+    counted = (
+        df.select(*g, F.col(column).cast("string").alias("category"))
+        .where(F.col("category").isNotNull())
+        .groupBy(*g, "category")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+    order = [F.col("__c").desc(), F.col("category").asc()]
+    if not g:
+        return counted.orderBy(*order).limit(top_k).select("category")
+    rank = F.row_number().over(Window.partitionBy(*g).orderBy(*order))
+    return (
+        counted.withColumn("__r", rank)
+        .where(F.col("__r") <= top_k)
+        .select(*g, "category")
+    )
 
 
 def category_counts(
-    df: DataFrame, column: str, categories: DataFrame
+    df: DataFrame,
+    column: str,
+    categories: DataFrame,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(category, cnt) with every value outside the ``categories``
-    relation folded into ``__OTHER__`` — the bounded-cardinality frame
-    that makes categorical drift scale to unbounded key domains. NULLs
-    count into __OTHER__ as well."""
-    cats = categories.select(F.col("category").alias("__cat"))
-    joined = (
-        df.select(F.col(column).cast("string").alias("__v"))
-        .join(
-            F.broadcast(cats), F.col("__v").eqNullSafe(F.col("__cat")), "left"
-        )
-        .select(
-            F.coalesce(F.col("__cat"), F.lit(OTHER_CATEGORY)).alias("category")
-        )
-    )
-    return joined.groupBy("category").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def top_categories(df: DataFrame, column: str, top_k: int) -> DataFrame:
-    """The ``top_k`` most frequent SOURCE categories (count DESC,
-    value ASC ties — deterministic), excluding NULL: the comparison
-    frame every side is folded onto. At unbounded cardinality swap the
-    exact groupBy for ``frequency.heavy_hitters`` — the frame only
-    needs the dominant categories, the tail is __OTHER__ by design."""
+    """(group..., category, cnt) with every value outside the
+    ``categories`` relation folded into ``__OTHER__`` — the
+    bounded-cardinality frame that makes categorical drift scale to
+    unbounded key domains. NULLs count into __OTHER__ as well. Over no
+    keys the frame is broadcast."""
+    g = list(group_cols)
+    frame = categories.select(*g, F.col("category").alias("__v"), F.lit(1).alias("__in"))
     return (
-        df.select(F.col(column).cast("string").alias("category"))
-        .where(F.col("category").isNotNull())
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .orderBy(F.col("__c").desc(), F.col("category").asc())
-        .limit(top_k)
-        .select("category")
+        df.select(*g, F.col(column).cast("string").alias("__v"))
+        .join(frame if g else F.broadcast(frame), on=[*g, "__v"], how="left")
+        .select(
+            *g,
+            F.when(F.col("__in") == 1, F.col("__v"))
+            .otherwise(F.lit(OTHER_CATEGORY))
+            .alias("category"),
+        )
+        .groupBy(*g, "category")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def categorical_snapshot(df: DataFrame, column: str, top_k: int = 20) -> DataFrame:
+    """Stored categorical baseline: (category, cnt) over the top-k +
+    __OTHER__ frame — trivially mergeable (counts add) and the frame
+    travels with the snapshot."""
+    return category_counts(df, column, top_categories(df, column, top_k))
+
+
+def _categorical_counts(
+    source: DataFrame | None,
+    target: DataFrame,
+    column: str,
+    top_k: int,
+    g: list[str],
+    snapshot: DataFrame | None,
+) -> DataFrame:
+    if snapshot is None:
+        cats = top_categories(source, column, top_k, g)
+        base = category_counts(source, column, cats, g)
+    else:
+        # the snapshot's categories are the frame; its __OTHER__ row is
+        # baseline tail mass
+        cats = snapshot.select("category").where(F.col("category") != OTHER_CATEGORY)
+        base = snapshot
+    return merge_counts(
+        base, category_counts(target, column, cats, g), [*g, "category"]
     )
 
 
@@ -337,199 +398,8 @@ def categorical_drift_terms(
     × 0.5 is the total-variation distance — every value exact counts
     and single IEEE divisions/subtractions, hence strict-oracle
     portable (unlike PSI's ln)."""
-    from pyspark.sql.window import Window
-
-    cats = top_categories(source, column, top_k)
-    p = category_counts(source, column, cats).select(
-        "category", F.col("cnt").alias("p_cnt")
-    )
-    q = category_counts(target, column, cats).select(
-        "category", F.col("cnt").alias("q_cnt")
-    )
-    merged = p.join(q, on="category", how="full_outer").select(
-        "category",
-        F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-        F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-    )
-    wt = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    wr = Window.orderBy("category").rowsBetween(Window.unboundedPreceding, 0)
-    ratios = merged.select(
-        "category",
-        "p_cnt",
-        "q_cnt",
-        F.coalesce(
-            F.col("p_cnt") / F.nullif(F.sum("p_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("p"),
-        F.coalesce(
-            F.col("q_cnt") / F.nullif(F.sum("q_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("q"),
-    )
-    return ratios.select(
-        "category", "p_cnt", "q_cnt", "p", "q",
-        F.abs(F.col("p") - F.col("q")).alias("tv_term"),
-        F.sum(F.abs(F.col("p") - F.col("q"))).over(wr).alias("tv_running"),
-    )
-
-
-def categorical_drift_metrics(
-    source: DataFrame, target: DataFrame, check
-) -> DataFrame:
-    """1-row DF ``drift_<metric>_<column>`` over the categorical frame:
-    ``psi`` (with the usual +1e-6 smoothing, category-ordered fold) or
-    ``tv`` (total variation = 0.5 · Σ|p-q|). ``check.bins`` is the
-    top-k category budget."""
-    terms = categorical_drift_terms(source, target, check.column, check.bins)
-    from pyspark.sql.window import Window
-
-    wr = Window.orderBy("category").rowsBetween(Window.unboundedPreceding, 0)
-    folded = terms.select(
-        (
-            F.sum(
-                (F.col("p") + F.lit(_EPS) - (F.col("q") + F.lit(_EPS)))
-                * F.log((F.col("p") + F.lit(_EPS)) / (F.col("q") + F.lit(_EPS)))
-            ).over(wr)
-        ).alias("psi_run"),
-        F.col("tv_running"),
-    ).agg(
-        F.max("psi_run").alias("psi"),
-        (F.max("tv_running") * 0.5).alias("tv"),
-    )
-    metric = F.col("psi") if check.metric == "psi" else F.col("tv")
-    return folded.select(metric.alias(f"drift_{check.metric}_{check.column}"))
-
-
-def categorical_snapshot(df: DataFrame, column: str, top_k: int = 20) -> DataFrame:
-    """Stored categorical baseline: (category, cnt) over the top-k +
-    __OTHER__ frame — trivially mergeable (counts add) and the frame
-    travels with the snapshot."""
-    cats = top_categories(df, column, top_k)
-    return category_counts(df, column, cats)
-
-
-def categorical_drift_vs_snapshot(
-    df: DataFrame, snapshot: DataFrame, check
-) -> DataFrame:
-    """1-row drift of ``df`` against a stored categorical snapshot:
-    the SNAPSHOT's categories are the comparison frame (its __OTHER__
-    row is baseline tail mass; current rows outside the frame fold
-    into __OTHER__ the same way)."""
-    from pyspark.sql.window import Window
-
-    cats = snapshot.select("category").where(
-        F.col("category") != OTHER_CATEGORY
-    )
-    q = category_counts(df, check.column, cats).select(
-        "category", F.col("cnt").alias("q_cnt")
-    )
-    p = snapshot.select("category", F.col("cnt").alias("p_cnt"))
-    merged = p.join(q, on="category", how="full_outer").select(
-        "category",
-        F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-        F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-    )
-    wt = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    wr = Window.orderBy("category").rowsBetween(Window.unboundedPreceding, 0)
-    ratios = merged.select(
-        "category",
-        F.coalesce(
-            F.col("p_cnt") / F.nullif(F.sum("p_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("p"),
-        F.coalesce(
-            F.col("q_cnt") / F.nullif(F.sum("q_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("q"),
-    )
-    folded = ratios.select(
-        F.sum(
-            (F.col("p") + F.lit(_EPS) - (F.col("q") + F.lit(_EPS)))
-            * F.log((F.col("p") + F.lit(_EPS)) / (F.col("q") + F.lit(_EPS)))
-        ).over(wr).alias("psi_run"),
-        F.sum(F.abs(F.col("p") - F.col("q"))).over(wr).alias("tv_run"),
-    ).agg(
-        F.max("psi_run").alias("psi"), (F.max("tv_run") * 0.5).alias("tv")
-    )
-    metric = F.col("psi") if check.metric == "psi" else F.col("tv")
-    return folded.select(metric.alias(f"drift_{check.metric}_{check.column}"))
-
-
-def grouped_categorical_drift(
-    source: DataFrame,
-    target: DataFrame,
-    column: str,
-    group_cols: list[str],
-    top_k: int = 20,
-) -> DataFrame:
-    """(group..., psi, tv) — per-partition-group categorical drift on
-    each group's own source top-k + __OTHER__ frame. All shuffles are
-    on the group key; psi folds category-ordered (deterministic), tv is
-    half the ordered |p-q| fold's last value."""
-    gcols = list(group_cols)
-    wr_top = Window.partitionBy(*gcols).orderBy(
-        F.col("__c").desc(), F.col("category").asc()
-    )
-    cats = (
-        source.select(*gcols, F.col(column).cast("string").alias("category"))
-        .where(F.col("category").isNotNull())
-        .groupBy(*gcols, "category")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .withColumn("__r", F.row_number().over(wr_top))
-        .where(F.col("__r") <= top_k)
-        .select(*gcols, F.col("category").alias("__v"), F.lit(1).alias("__in"))
-    )
-
-    def counts(df: DataFrame, out: str) -> DataFrame:
-        folded = (
-            df.select(*gcols, F.col(column).cast("string").alias("__v"))
-            .join(cats, on=[*gcols, "__v"], how="left")
-            .select(
-                *gcols,
-                F.when(F.col("__in") == 1, F.col("__v"))
-                .otherwise(F.lit(OTHER_CATEGORY))
-                .alias("category"),
-            )
-        )
-        return folded.groupBy(*gcols, "category").agg(
-            F.count(F.lit(1)).alias(out)
-        )
-
-    merged = (
-        counts(source, "p_cnt")
-        .join(counts(target, "q_cnt"), on=[*gcols, "category"], how="full_outer")
-        .select(
-            *gcols,
-            "category",
-            F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-            F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-        )
-    )
-    wt = Window.partitionBy(*gcols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    wr = Window.partitionBy(*gcols).orderBy("category").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ratios = merged.select(
-        *gcols,
-        "category",
-        F.coalesce(
-            F.col("p_cnt") / F.nullif(F.sum("p_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("p"),
-        F.coalesce(
-            F.col("q_cnt") / F.nullif(F.sum("q_cnt").over(wt).cast("double"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("q"),
-    ).select(
-        *gcols,
-        F.sum(
-            (F.col("p") + F.lit(_EPS) - (F.col("q") + F.lit(_EPS)))
-            * F.log((F.col("p") + F.lit(_EPS)) / (F.col("q") + F.lit(_EPS)))
-        ).over(wr).alias("psi_run"),
-        F.sum(F.abs(F.col("p") - F.col("q"))).over(wr).alias("tv_run"),
-    )
-    return ratios.groupBy(*gcols).agg(
-        F.max("psi_run").alias("psi"), (F.max("tv_run") * 0.5).alias("tv")
+    merged = _categorical_counts(source, target, column, top_k, [], None)
+    return drift_terms(merged, (), "category").select(
+        "category", "p_cnt", "q_cnt", "p", "q", "tv_term",
+        F.col("tv_run").alias("tv_running"),
     )

@@ -4,8 +4,11 @@ exact/approx percentile helpers.
 North-star requirement (BASELINE.json): "distribution drift via
 t-digest/KLL sketches compared against baseline snapshots with PSI/KS
 thresholds ... vectorized pandas/Arrow UDFs only for sketch merge and
-sha256 hashing".  The histogram path (operators/drift.py) covers
-fixed-grid sketches; this module adds the quantile-sketch path:
+sha256 hashing".  operators/drift.py holds the fixed-grid and
+categorical families and is the one place that dispatches on the
+sketch family; this module holds the two quantile-sketch families, one
+drift builder each (``tdigest_drift``, ``kll_drift``) serving task
+level (no group keys), per-group verdicts and snapshot compares alike:
 
 * **t-digest** (Dunning & Ertl's merging variant): centroids are formed
   by grouping sorted values on the scale function
@@ -15,11 +18,14 @@ fixed-grid sketches; this module adds the quantile-sketch path:
   builds per-batch partial digests, ``applyInPandas`` merges them — the
   same two-level map-side-partial / reduce shape as a Spark aggregate,
   so 10^12 rows stream through without any per-row Python.
-* **PSI / KS on equal-mass bins**: the baseline digest's quantiles cut
-  ``bins`` equal-mass bins; both digests' CDFs are evaluated on those
-  edges, and the resulting per-bin masses feed the exact same
-  ``psi_ks_terms`` arithmetic as the histogram path.  (Equal-mass PSI
-  is the standard production formulation — deciles of the baseline.)
+* **PSI / KS on equal-mass bins**: the baseline sketch's quantiles cut
+  ``bins`` equal-mass bins; both sides' masses are evaluated on those
+  edges per group, and the per-(group, bin) masses feed the one
+  ``drift.psi_ks_from_counts`` tail every family shares.  (Equal-mass
+  PSI is the standard production formulation — deciles of the
+  baseline.)  A side with no sketch row is zero mass.
+* **KLL** (``kll_sketch``): Spark's JVM ``percentile_approx`` on a
+  uniform probability grid, compared the same way with zero Python.
 * **Snapshot lifecycle**: a digest is a 1-row DataFrame (or 1 row per
   group) of array columns; it round-trips through the BaselineStore
   parquet layout unchanged and merges with a later digest by
@@ -39,7 +45,7 @@ from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
@@ -304,110 +310,30 @@ def tdigest_quantiles(
     return digest.mapInPandas(evaluate, schema=schema)
 
 
-def tdigest_bin_masses(
-    digest_p: DataFrame, digest_q: DataFrame, bins: int = 10
-) -> DataFrame:
-    """(bin, p_cnt, q_cnt) — both digests' mass on ``bins`` equal-mass
-    bins cut at the BASELINE digest's quantiles (production PSI
-    formulation: deciles of the baseline).  Feed to
-    ``drift.psi_ks_terms`` for the same PSI/KS arithmetic as the
-    histogram path."""
-    p1 = digest_p.select(
-        F.col("means").alias("p_means"), F.col("weights").alias("p_weights"),
-        F.col("total").alias("p_total"),
-        F.col("vmin").alias("p_vmin"), F.col("vmax").alias("p_vmax"),
-    )
-    q1 = digest_q.select(
-        F.col("means").alias("q_means"), F.col("weights").alias("q_weights"),
-        F.col("total").alias("q_total"),
-        F.col("vmin").alias("q_vmin"), F.col("vmax").alias("q_vmax"),
-    )
-    both = p1.crossJoin(F.broadcast(q1))
-    schema = StructType([
-        StructField("bin", LongType(), False),
-        StructField("p_cnt", DoubleType(), False),
-        StructField("q_cnt", DoubleType(), False),
-    ])
-
-    def masses(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                pm = np.asarray(r["p_means"], dtype=np.float64)
-                pw = np.asarray(r["p_weights"], dtype=np.float64)
-                qm = np.asarray(r["q_means"], dtype=np.float64)
-                qw = np.asarray(r["q_weights"], dtype=np.float64)
-                edges = _digest_quantile(
-                    np.linspace(0.0, 1.0, bins + 1), pm, pw,
-                    float(r["p_total"]), float(r["p_vmin"]), float(r["p_vmax"]),
-                )
-                # open tails so values outside the baseline range count
-                edges[0], edges[-1] = -np.inf, np.inf
-                p_cdf = _digest_cdf(edges, pm, pw, float(r["p_total"]),
-                                    float(r["p_vmin"]), float(r["p_vmax"]))
-                q_cdf = _digest_cdf(edges, qm, qw, float(r["q_total"]),
-                                    float(r["q_vmin"]), float(r["q_vmax"]))
-                p_mass = np.diff(p_cdf) * float(r["p_total"])
-                q_mass = np.diff(q_cdf) * float(r["q_total"])
-                for i in range(bins):
-                    out.append({"bin": i, "p_cnt": float(p_mass[i]),
-                                "q_cnt": float(q_mass[i])})
-            yield pd.DataFrame(out, columns=["bin", "p_cnt", "q_cnt"])
-
-    return both.mapInPandas(masses, schema=schema)
-
-
 def tdigest_drift(
-    digest_p: DataFrame, digest_q: DataFrame, bins: int = 10
-) -> DataFrame:
-    """1-row (psi, ks) between two digests on baseline equal-mass bins
-    — same downstream arithmetic as the histogram drift path."""
-    from datapact_spark.operators.drift import psi_ks_terms
-
-    masses = tdigest_bin_masses(digest_p, digest_q, bins)
-    terms = psi_ks_terms(
-        masses.select("bin", F.col("p_cnt").alias("cnt")),
-        masses.select("bin", F.col("q_cnt").alias("cnt")),
-    )
-    return terms.agg(
-        F.sum("psi_term").alias("psi"),
-        F.max(F.abs(F.col("p_cdf") - F.col("q_cdf"))).alias("ks"),
-    )
-
-
-def grouped_tdigest_drift(
-    source: DataFrame,
-    target: DataFrame,
-    column: str,
-    group_cols: Sequence[str],
-    delta: float = 200.0,
+    digest_p: DataFrame,
+    digest_q: DataFrame,
     bins: int = 10,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group (psi, ks) from per-group t-digests — the quantile-
-    sketch variant of ``drift.grouped_drift_metrics`` for partitioned
-    verdicts.  One digest per (group, side) is built with the two-level
-    partial/merge plan; the digest join and the mass evaluation touch
-    only #groups rows.  Groups present in the source but absent from
-    the target get all-target-mass-zero bins (max drift), matching the
-    histogram path's treatment of missing groups."""
-    gcols = list(group_cols)
-    dig_p = tdigest_sketch(source, column, delta, gcols)
-    dig_q = tdigest_sketch(target, column, delta, gcols)
-    p1 = dig_p.select(
-        *gcols,
-        F.col("means").alias("p_means"), F.col("weights").alias("p_weights"),
-        F.col("total").alias("p_total"),
-        F.col("vmin").alias("p_vmin"), F.col("vmax").alias("p_vmax"),
-    )
-    q1 = dig_q.select(
-        *gcols,
-        F.col("means").alias("q_means"), F.col("weights").alias("q_weights"),
-        F.col("total").alias("q_total"),
-        F.col("vmin").alias("q_vmin"), F.col("vmax").alias("q_vmax"),
-    )
-    both = p1.join(q1, on=gcols, how="left")
+    """(group..., psi, ks, tv) between baseline digests ``digest_p``
+    and current digests ``digest_q``, one row per group (one in all
+    over no keys), on ``bins`` equal-mass bins cut at the BASELINE
+    digest's quantiles (production PSI formulation: deciles of the
+    baseline) — the shared ``drift.psi_ks_from_counts`` tail of every
+    sketch family. Only #groups digest rows are joined and evaluated.
+    A group with no current digest (no rows, or all NULL) gets
+    all-zero current mass — maximal drift, never no comparison."""
+    from datapact_spark.operators.drift import psi_ks_from_counts
+
+    g = list(group_cols)
+    fields = ("means", "weights", "total", "vmin", "vmax")
+    p1 = digest_p.select(*g, *[F.col(c).alias(f"p_{c}") for c in fields])
+    q1 = digest_q.select(*g, *[F.col(c).alias(f"q_{c}") for c in fields])
+    # over no keys the 1-row current digest is broadcast
+    both = p1.join(q1 if g else F.broadcast(q1), on=g or None, how="left")
     schema = StructType(
-        [p1.schema[c] for c in gcols]
+        [p1.schema[c] for c in g]
         + [StructField("bin", LongType(), False),
            StructField("p_cnt", DoubleType(), False),
            StructField("q_cnt", DoubleType(), False)]
@@ -423,6 +349,7 @@ def grouped_tdigest_drift(
                     np.linspace(0.0, 1.0, bins + 1), pm, pw,
                     float(r["p_total"]), float(r["p_vmin"]), float(r["p_vmax"]),
                 )
+                # open tails so values outside the baseline range count
                 edges[0], edges[-1] = -np.inf, np.inf
                 p_cdf = _digest_cdf(edges, pm, pw, float(r["p_total"]),
                                     float(r["p_vmin"]), float(r["p_vmax"]))
@@ -438,15 +365,13 @@ def grouped_tdigest_drift(
                                         float(r["q_vmin"]), float(r["q_vmax"]))
                     q_mass = np.diff(q_cdf) * float(r["q_total"])
                 for i in range(bins):
-                    row = {c: r[c] for c in gcols}
+                    row = {c: r[c] for c in g}
                     row.update(bin=i, p_cnt=float(p_mass[i]),
                                q_cnt=float(q_mass[i]))
                     out.append(row)
             yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    from datapact_spark.operators.drift import grouped_psi_ks_from_counts
-
-    return grouped_psi_ks_from_counts(both.mapInPandas(masses, schema=schema), gcols)
+    return psi_ks_from_counts(both.mapInPandas(masses, schema=schema), g)
 
 
 def approx_quantile_sketch(
@@ -517,116 +442,54 @@ def kll_drift(
     now: DataFrame,
     bins: int,
     points_per_bin: int = KLL_POINTS_PER_BIN,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """1-row (psi, ks) between two ``kll_sketch`` summaries, on the
-    BASELINE's equal-mass bins (edges = baseline quantiles at probs
-    k/bins) — the same comparison contract as ``tdigest_drift``. Both
-    summaries are treated as uniform point masses; each point lands in
-    bin 1 + #(edges strictly below it). Everything is a join/agg over
-    O(bins·points_per_bin) rows — lazy and JVM-only.
+    """(group..., psi, ks, tv) between two ``kll_sketch`` summaries,
+    on the BASELINE's equal-mass bins (edges = baseline quantiles at
+    probs k/bins) — the same comparison contract as ``tdigest_drift``.
+    Both summaries are treated as uniform point masses; each point
+    lands in bin 1 + #(edges strictly below it). Everything is a
+    join/agg over O(bins·points_per_bin) rows per group — lazy and
+    JVM-only. With ``bins == 1`` there are no interior edges, every
+    point lands in bin 1 and drift is 0."""
+    from datapact_spark.operators.drift import merge_counts, psi_ks_from_counts
 
-    ``bins == 1`` is a degenerate single-bin comparison: there are no
-    interior edges, every point of both summaries lands in bin 1, and
-    drift is 0 by construction — short-circuited here because the
-    edge cross join below would otherwise drop every point row and
-    return null psi/ks instead of 0."""
-    from datapact_spark.operators.drift import _psi_ks
+    g = list(group_cols)
+    edges = _kll_edges(base, bins, points_per_bin, g)
+    # over no keys the edges are broadcast; the left join keeps every
+    # point when there are none
+    edges = edges if g else F.broadcast(edges)
 
-    if bins == 1:
-        return base.sparkSession.range(0, 1, 1, 1).select(
-            F.lit(0.0).alias("psi"), F.lit(0.0).alias("ks")
+    def binned(points: DataFrame) -> DataFrame:
+        # prob is unique within a summary, so it serves as the row id
+        return (
+            points.select(*g, "prob", F.col("quantile").alias("__q"))
+            .join(edges, on=g or None, how="left")
+            .groupBy(*g, "prob", "__q")
+            .agg(
+                F.sum(F.when(F.col("__e") < F.col("__q"), 1).otherwise(0)).alias("__k")
+            )
+            .select(*g, (F.col("__k") + 1).cast("int").alias("bin"))
+            .groupBy(*g, "bin")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-    edges = _kll_edges(base, bins, points_per_bin)
-    return _psi_ks(
-        _kll_binned(base, edges), _kll_binned(now, edges), bins
-    )
+
+    return psi_ks_from_counts(merge_counts(binned(base), binned(now), [*g, "bin"]), g)
 
 
-def _kll_edges(base: DataFrame, bins: int, ppb: int) -> DataFrame:
-    w = Window.orderBy("prob")
-    ranked = base.select("prob", "quantile", F.row_number().over(w).alias("__j"))
+def _kll_edges(
+    base: DataFrame, bins: int, ppb: int, group_cols: Sequence[str] = ()
+) -> DataFrame:
+    """(group..., __e): the interior bin edges of a ``kll_sketch``."""
+    g = list(group_cols)
+    w = Window.partitionBy(*g).orderBy("prob")
+    ranked = base.select(*g, "prob", "quantile", F.row_number().over(w).alias("__j"))
     # interior edge k (1..bins-1) sits at point index j = k*ppb + 1
     return ranked.where(
         ((F.col("__j") - 1) % ppb == 0)
         & (F.col("__j") > 1)
         & (F.col("__j") < bins * ppb + 1)
-    ).select(F.col("quantile").alias("__e"))
-
-
-def _kll_binned(points: DataFrame, edges: DataFrame) -> DataFrame:
-    """(bin, cnt) from a quantile-point summary: bin of a point is
-    1 + the number of edges strictly below its value (prob is unique
-    within a summary, so it serves as the row id through the tiny
-    cross join)."""
-    return (
-        points.select("prob", F.col("quantile").alias("__q"))
-        .crossJoin(F.broadcast(edges))
-        .groupBy("prob", "__q")
-        .agg(
-            F.sum(F.when(F.col("__e") < F.col("__q"), 1).otherwise(0)).alias("__k")
-        )
-        .select((F.col("__k") + 1).cast("int").alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def grouped_kll_drift(
-    source: DataFrame,
-    target: DataFrame,
-    column: str,
-    group_cols: Sequence[str],
-    bins: int = 10,
-    accuracy: int = 10_000,
-    points_per_bin: int = KLL_POINTS_PER_BIN,
-) -> DataFrame:
-    """(group..., psi, ks) — per-partition-group KLL drift: grouped
-    JVM quantile summaries on both sides, per-group source edges,
-    per-(group, bin) point-mass counts, shared PSI/KS tail. All
-    shuffles are on the group key; per group only
-    O(bins·points_per_bin) summary rows exist past the aggregate."""
-    from datapact_spark.operators.drift import grouped_psi_ks_from_counts
-
-    gcols = list(group_cols)
-    s = kll_sketch(source, column, bins, accuracy, points_per_bin, gcols)
-    t = kll_sketch(target, column, bins, accuracy, points_per_bin, gcols)
-    wj = Window.partitionBy(*gcols).orderBy("prob")
-    edges = (
-        s.select(*gcols, "prob", "quantile", F.row_number().over(wj).alias("__j"))
-        .where(
-            ((F.col("__j") - 1) % points_per_bin == 0)
-            & (F.col("__j") > 1)
-            & (F.col("__j") < bins * points_per_bin + 1)
-        )
-        .select(*gcols, F.col("quantile").alias("__e"))
-    )
-
-    def binned(points: DataFrame, out: str) -> DataFrame:
-        return (
-            points.select(*gcols, "prob", F.col("quantile").alias("__q"))
-            .join(edges, on=gcols, how="left")
-            .groupBy(*gcols, "prob", "__q")
-            .agg(
-                F.sum(
-                    F.when(F.col("__e") < F.col("__q"), 1).otherwise(0)
-                ).alias("__k")
-            )
-            .select(*gcols, (F.col("__k") + 1).cast("int").alias("bin"))
-            .groupBy(*gcols, "bin")
-            .agg(F.count(F.lit(1)).alias(out))
-        )
-
-    merged = (
-        binned(s, "p_cnt")
-        .join(binned(t, "q_cnt"), on=[*gcols, "bin"], how="full_outer")
-        .select(
-            *gcols,
-            "bin",
-            F.coalesce(F.col("p_cnt"), F.lit(0)).alias("p_cnt"),
-            F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
-        )
-    )
-    return grouped_psi_ks_from_counts(merged, gcols)
+    ).select(*g, F.col("quantile").alias("__e"))
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ not violations (they're counted separately).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,48 +50,33 @@ def referential_violations(
 
 
 def referential_metrics(
-    child: DataFrame, parent: DataFrame, check: ReferentialCheck
+    child: DataFrame,
+    parent: DataFrame,
+    check: ReferentialCheck,
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """1-row DF: (child_count_<name>, violation_count_<name>).
+    """(group..., child_count_<name>, violation_count_<name>): one row
+    per group of ``group_cols``, one row in all over no keys.
 
     Single pass over the child: LEFT join against the deduped parent
     keys (multiplicity 1 by construction) and count null-matches —
     instead of a separate count + anti-join, which scans the child
-    twice. NULL-FK rows count toward child_count but are never
-    violations (SQL FK convention)."""
+    twice — so groups with zero violations still appear. NULL-FK rows
+    count toward child_count but are never violations (SQL FK
+    convention)."""
     name = check.name
     keys = _parent_keys(parent, check).withColumn("__matched", F.lit(1))
     non_null_pred = F.lit(True)
     for fk in check.fk_columns:
         non_null_pred = non_null_pred & F.col(fk).isNotNull()
     joined = child.join(keys, on=check.fk_columns, how="left")
-    return joined.agg(
+    return joined.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias(f"child_count_{name}"),
+        # an empty child over no keys sums to NULL
         F.coalesce(
             F.sum(
                 F.when(non_null_pred & F.col("__matched").isNull(), 1).otherwise(0)
             ),
             F.lit(0),
         ).alias(f"violation_count_{name}"),
-    )
-
-
-def grouped_referential_metrics(
-    child: DataFrame,
-    parent: DataFrame,
-    check: ReferentialCheck,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-partition-group violation counts (left join + null-match count
-    in one pass, so groups with zero violations still appear)."""
-    keys = _parent_keys(parent, check).withColumn("__matched", F.lit(1))
-    non_null_pred = F.lit(True)
-    for fk in check.fk_columns:
-        non_null_pred = non_null_pred & F.col(fk).isNotNull()
-    joined = child.join(keys, on=check.fk_columns, how="left")
-    return joined.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias(f"child_count_{check.name}"),
-        F.sum(
-            F.when(non_null_pred & F.col("__matched").isNull(), 1).otherwise(0)
-        ).alias(f"violation_count_{check.name}"),
     )

@@ -33,6 +33,7 @@ from datapact_spark.operators import profile as P
 from datapact_spark.operators import referential as R
 from datapact_spark.operators import rowhash as H
 from datapact_spark.operators.custom_sql import custom_sql_metrics, render_custom_sql
+from datapact_spark.operators.drift import drift_metrics
 from datapact_spark.sources.loader import TableResolver
 
 @dataclass
@@ -85,37 +86,6 @@ class CompiledTask:
             verdict["result_payload"],
         ]
         return Row(**dict(zip(LEDGER_COLUMNS, values)))
-
-
-_SKETCH_SNAPSHOT_COLS = {
-    # marker columns unique to each sketch family's stored snapshot
-    "histogram": {"bin", "cnt"},
-    "tdigest": {"means", "weights", "total"},
-    "kll": {"prob", "quantile", "cnt"},
-    "categorical": {"category", "cnt"},
-}
-
-
-def _check_snapshot_family(snap: DataFrame, dcheck) -> None:
-    """Fail fast with a clear message when a stored drift baseline was
-    written by a different sketch family than the check now configures
-    (e.g. a DriftCheck flipped between sketch='histogram' and 'tdigest'
-    across runs). Without this, the mismatched columns surface as an
-    opaque missing-column AnalysisException deep inside the drift plan."""
-    cols = set(snap.columns)
-    family = "categorical" if dcheck.kind == "categorical" else dcheck.sketch
-    want = _SKETCH_SNAPSHOT_COLS[family]
-    if want <= cols:
-        return
-    stored = next(
-        (fam for fam, mk in _SKETCH_SNAPSHOT_COLS.items() if mk <= cols), "unknown"
-    )
-    raise ValueError(
-        f"drift baseline snapshot for column '{dcheck.column}' was written by "
-        f"sketch family '{stored}' (columns {sorted(cols)}) but the check is "
-        f"configured with sketch family '{family}'. Delete the stored "
-        f"baseline to re-bootstrap, or restore the original sketch setting."
-    )
 
 
 def compile_task(
@@ -527,85 +497,21 @@ def compile_task(
     # ---- distribution drift (north-star) -------------------------------
     bootstrap_drift: list = []
     for dcheck in task.drift_checks or []:
-        from datapact_spark.operators.drift import drift_metrics, drift_vs_snapshot
-        from datapact_spark.operators.quantiles import (
-            kll_drift,
-            kll_sketch,
-            tdigest_drift,
-            tdigest_sketch,
-        )
-
         metric_name = f"drift_{dcheck.metric}_{dcheck.column}"
-        if dcheck.kind == "categorical":
-            from datapact_spark.operators.drift import (
-                categorical_drift_metrics,
-                categorical_drift_vs_snapshot,
-            )
-
-            if dcheck.baseline == "snapshot" and baseline_store is not None:
-                if baseline_store.exists(task.task_key, dcheck.column):
-                    snap = baseline_store.read(task.task_key, dcheck.column)
-                    _check_snapshot_family(snap, dcheck)
-                    metric_dfs.append(
-                        categorical_drift_vs_snapshot(source, snap, dcheck)
-                    )
-                else:
-                    metric_dfs.append(
-                        spark.range(0, 1, 1, 1).select(F.lit(0.0).alias(metric_name))
-                    )
-                    bootstrap_drift.append((dcheck, source))
-            else:
-                metric_dfs.append(
-                    categorical_drift_metrics(source, target, dcheck)
-                )
-        elif dcheck.baseline == "snapshot" and baseline_store is not None:
+        if dcheck.baseline == "snapshot" and baseline_store is not None:
             if baseline_store.exists(task.task_key, dcheck.column):
                 snap = baseline_store.read(task.task_key, dcheck.column)
-                _check_snapshot_family(snap, dcheck)
-                if dcheck.sketch == "tdigest":
-                    now = tdigest_sketch(source, dcheck.column, dcheck.delta)
-                    metric_dfs.append(
-                        tdigest_drift(snap, now, bins=dcheck.bins).select(
-                            F.col(dcheck.metric).alias(metric_name)
-                        )
-                    )
-                elif dcheck.sketch == "kll":
-                    now = kll_sketch(source, dcheck.column, dcheck.bins)
-                    metric_dfs.append(
-                        kll_drift(snap, now, bins=dcheck.bins).select(
-                            F.col(dcheck.metric).alias(metric_name)
-                        )
-                    )
-                else:
-                    metric_dfs.append(drift_vs_snapshot(source, snap, dcheck))
+                metric_dfs.append(drift_metrics(None, source, dcheck, snapshot=snap))
             else:
                 # bootstrap run: no baseline yet — vacuous 0 drift now,
                 # engine persists the snapshot after the run
                 metric_dfs.append(
-                    spark.range(0, 1, 1, 1).select(
-                        F.lit(0.0).alias(f"drift_{dcheck.metric}_{dcheck.column}")
-                    )
+                    spark.range(0, 1, 1, 1).select(F.lit(0.0).alias(metric_name))
                 )
                 bootstrap_drift.append((dcheck, source))
-        elif dcheck.sketch == "tdigest":
-            dig_s = tdigest_sketch(source, dcheck.column, dcheck.delta)
-            dig_t = tdigest_sketch(target, dcheck.column, dcheck.delta)
-            metric_dfs.append(
-                tdigest_drift(dig_s, dig_t, bins=dcheck.bins).select(
-                    F.col(dcheck.metric).alias(metric_name)
-                )
-            )
-        elif dcheck.sketch == "kll":
-            sk_s = kll_sketch(source, dcheck.column, dcheck.bins)
-            sk_t = kll_sketch(target, dcheck.column, dcheck.bins)
-            metric_dfs.append(
-                kll_drift(sk_s, sk_t, bins=dcheck.bins).select(
-                    F.col(dcheck.metric).alias(metric_name)
-                )
-            )
         else:
             metric_dfs.append(drift_metrics(source, target, dcheck))
-        val = F.col(f"drift_{dcheck.metric}_{dcheck.column}")
+        val = F.col(metric_name)
         ok = F.coalesce(val, F.lit(0.0)) <= dcheck.threshold
         payload_fields.append(
             F.struct(

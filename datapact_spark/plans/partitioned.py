@@ -39,6 +39,7 @@ from datapact_spark.functions import exprs as E
 from datapact_spark.operators import profile as P
 from datapact_spark.operators import referential as R
 from datapact_spark.operators import rowhash as H
+from datapact_spark.operators.drift import drift_metrics
 from datapact_spark.session import persist_scoped
 from datapact_spark.sources.loader import TableResolver
 
@@ -244,6 +245,15 @@ def compile_partition_verdicts(
                     F.coalesce(F.col("target_distinct_uniqs"), F.lit(-1))
                     == F.coalesce(F.col("target_count"), F.lit(-2))
                 )
+            elif task.uniqueness_columns and task.uniqueness_tolerance is not None:
+                # multiset mode has no gate, but the distinct counts must
+                # stay referenced too (see above). A distinct count never
+                # exceeds its row count, so this holds for every group.
+                for side in ("source", "target"):
+                    fp_equal = fp_equal & (
+                        F.coalesce(F.col(f"{side}_distinct_uniqs"), F.lit(0))
+                        <= F.coalesce(F.col(f"{side}_count"), F.lit(0))
+                    )
             failing_keys = joined.where(~fp_equal).select(
                 *[F.col(g) for g in group_cols]
             )
@@ -294,7 +304,7 @@ def compile_partition_verdicts(
 
     for check in task.referential_checks or []:
         parent = resolver.resolve(check.ref_table)
-        rm = R.grouped_referential_metrics(source, parent, check, group_cols)
+        rm = R.referential_metrics(source, parent, check, group_cols)
         step = step.join(rm, on=group_cols, how="left")
         vc = F.coalesce(F.col(f"violation_count_{check.name}"), F.lit(0))
         cc = F.coalesce(F.col(f"child_count_{check.name}"), F.lit(0))
@@ -303,47 +313,7 @@ def compile_partition_verdicts(
         pass_conds.append((f"ref_{check.name}_passed", ratio <= check.tolerance))
 
     for dcheck in task.drift_checks or []:
-        from datapact_spark.operators.drift import grouped_drift_metrics
-
-        if dcheck.kind == "categorical":
-            from datapact_spark.operators.drift import grouped_categorical_drift
-
-            gd = grouped_categorical_drift(
-                source, target, dcheck.column, group_cols, top_k=dcheck.bins,
-            )
-            dm = gd.select(
-                *group_cols,
-                (F.col("psi") if dcheck.metric == "psi" else F.col("tv")).alias(
-                    f"drift_{dcheck.metric}_{dcheck.column}"
-                ),
-            )
-        elif dcheck.sketch == "tdigest":
-            from datapact_spark.operators.quantiles import grouped_tdigest_drift
-
-            gd = grouped_tdigest_drift(
-                source, target, dcheck.column, group_cols,
-                delta=dcheck.delta, bins=dcheck.bins,
-            )
-            dm = gd.select(
-                *group_cols,
-                (F.col("psi") if dcheck.metric == "psi" else F.col("ks")).alias(
-                    f"drift_{dcheck.metric}_{dcheck.column}"
-                ),
-            )
-        elif dcheck.sketch == "kll":
-            from datapact_spark.operators.quantiles import grouped_kll_drift
-
-            gd = grouped_kll_drift(
-                source, target, dcheck.column, group_cols, bins=dcheck.bins,
-            )
-            dm = gd.select(
-                *group_cols,
-                (F.col("psi") if dcheck.metric == "psi" else F.col("ks")).alias(
-                    f"drift_{dcheck.metric}_{dcheck.column}"
-                ),
-            )
-        else:
-            dm = grouped_drift_metrics(source, target, dcheck, group_cols)
+        dm = drift_metrics(source, target, dcheck, group_cols)
         step = step.join(dm, on=group_cols, how="left")
         val = F.col(f"drift_{dcheck.metric}_{dcheck.column}")
         ok = F.coalesce(val, F.lit(0.0)) <= dcheck.threshold

@@ -623,7 +623,8 @@ def drift_monitor_stream(
     1. build the batch's t-digest (``tdigest_sketch`` — partial/merge
        plan, only centroid rows leave the executors),
     2. compare it against the stored baseline digest with PSI/KS on the
-       baseline's equal-mass bins (``tdigest_drift``),
+       baseline's equal-mass bins (``tdigest_drift``; a batch whose
+       column is entirely NULL is zero mass — maximal drift, FAIL),
     3. append one verdict row ``(batch_id, n_rows, psi, ks, passed,
        replayed)`` to ``verdicts_path`` (parquet, partitioned by
        batch_id — the write is idempotent per batch, so checkpoint
@@ -808,7 +809,7 @@ def kll_drift_monitor_stream(
     def _score(p_cnt: dict[int, int], q_cnt: dict[int, int]) -> tuple[float, float]:
         # tiny frames (<= bins entries) — deterministic bin-ordered
         # folds, same psi arithmetic as the categorical monitor and
-        # the batch _psi_ks tail
+        # the batch psi_ks_from_counts tail
         import math
 
         p_tot = sum(p_cnt.values()) or 1
@@ -845,8 +846,8 @@ def kll_drift_monitor_stream(
             else:
                 # batch whose column is entirely null: no mass to
                 # compare — vacuous pass (scoring empty counts against
-                # the baseline would read as max drift), matching the
-                # t-digest monitor's treatment of an empty batch digest
+                # the baseline would read as max drift; the t-digest
+                # monitor does score it so, like the batch drift check)
                 psi, ks = 0.0, 0.0
             passed = (psi if metric == "psi" else ks) <= threshold
             if update_baseline and batch_id > last_seen:
@@ -966,10 +967,10 @@ def windowed_drift_scores(
 ) -> DataFrame:
     """(window_start, window_end, psi, ks) — drift of each window's
     histogram against the baseline sketch, via the exact same
-    ``grouped_psi_ks_from_counts`` arithmetic as batch grouped drift.
+    ``psi_ks_from_counts`` tail as every batch drift family.
     Runs as a batch query over the streaming sink (each window's bin
     set is completed there once its watermark passes)."""
-    from datapact_spark.operators.drift import grouped_psi_ks_from_counts
+    from datapact_spark.operators.drift import psi_ks_from_counts
 
     group_cols = ["window_start", "window_end"]
     windows = windowed_hist.select(*group_cols).distinct()
@@ -988,7 +989,7 @@ def windowed_drift_scores(
             F.coalesce(F.col("q_cnt"), F.lit(0)).alias("q_cnt"),
         )
     )
-    return grouped_psi_ks_from_counts(merged, group_cols)
+    return psi_ks_from_counts(merged, group_cols).select(*group_cols, "psi", "ks")
 
 
 def categorical_drift_monitor_stream(

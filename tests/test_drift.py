@@ -11,7 +11,6 @@ from datapact_spark.config import DataPactConfig, DriftCheck, ValidationTask
 from datapact_spark.engine import DataPactEngine
 from datapact_spark.operators.drift import (
     drift_metrics,
-    drift_vs_snapshot,
     histogram_snapshot,
 )
 from datapact_spark.sources.loader import TableResolver
@@ -69,7 +68,7 @@ def test_snapshot_roundtrip(spark, dists, tmp_path):
     snap_path = str(tmp_path / "snap")
     histogram_snapshot(dfa, "x", bins=32).write.parquet(snap_path)
     snap = spark.read.parquet(snap_path)
-    got = drift_vs_snapshot(dfb, snap, check).collect()[0][f"drift_psi_x"]
+    got = drift_metrics(None, dfb, check, snapshot=snap).collect()[0][f"drift_psi_x"]
     exp_psi, _ = _np_psi_ks(a, b, 32, a.min(), a.max())
     assert got == pytest.approx(exp_psi, rel=1e-9)
 
@@ -104,7 +103,6 @@ def test_grouped_drift_per_partition(spark):
     """Per-group PSI: the drifted group fails, the stable group doesn't,
     and each group's value matches the numpy reference on that group."""
     import numpy as np
-    from datapact_spark.operators.drift import grouped_drift_metrics
     from datapact_spark.config import DriftCheck
 
     rng = np.random.RandomState(7)
@@ -122,7 +120,7 @@ def test_grouped_drift_per_partition(spark):
     check = DriftCheck(column="x", metric="psi", bins=32, threshold=0.2)
     rows = {
         r["grp"]: r["drift_psi_x"]
-        for r in grouped_drift_metrics(src, tgt, check, ["grp"]).collect()
+        for r in drift_metrics(src, tgt, check, ["grp"]).collect()
     }
     assert abs(rows["g1"]) < 1e-12
     exp, _ = _np_psi_ks(a_drift, b_drift, 32, a_drift.min(), a_drift.max())
@@ -256,7 +254,6 @@ def test_categorical_drift_two_sample(spark):
     from datapact_spark.config import DriftCheck
     from datapact_spark.operators.drift import (
         OTHER_CATEGORY,
-        categorical_drift_metrics,
         categorical_drift_terms,
     )
 
@@ -267,14 +264,14 @@ def test_categorical_drift_two_sample(spark):
     )
     # same distribution → ~0 drift on both metrics
     same = DriftCheck(column="cat", metric="tv", kind="categorical", bins=3)
-    v0 = categorical_drift_metrics(src, src, same).collect()[0][0]
+    v0 = drift_metrics(src, src, same).collect()[0][0]
     assert v0 == 0.0
     # swap A and C mass → large drift
     tgt = src.replace({"A": "C", "C": "A"}, subset=["cat"])
-    v1 = categorical_drift_metrics(src, tgt, same).collect()[0][0]
+    v1 = drift_metrics(src, tgt, same).collect()[0][0]
     assert v1 > 0.5  # TV between the two is |pA-qA| etc ~ 0.54
     psi = DriftCheck(column="cat", metric="psi", kind="categorical", bins=3)
-    assert categorical_drift_metrics(src, tgt, psi).collect()[0][0] > 1.0
+    assert drift_metrics(src, tgt, psi).collect()[0][0] > 1.0
     # top_k=3 folds D (the rarest) into __OTHER__
     terms = {r["category"]: r for r in categorical_drift_terms(src, tgt, "cat", 3).collect()}
     assert OTHER_CATEGORY in terms and set(terms) == {"A", "B", "C", OTHER_CATEGORY}
@@ -326,8 +323,6 @@ def test_categorical_snapshot_lifecycle_and_family_guard(spark, tmp_path):
 
 
 def test_grouped_categorical_drift(spark):
-    from datapact_spark.operators.drift import grouped_categorical_drift
-
     h = F.pmod(F.xxhash64("id"), F.lit(10))
     src = spark.range(30_000).select(
         (F.col("id") % 3).cast("string").alias("grp"),
@@ -339,7 +334,11 @@ def test_grouped_categorical_drift(spark):
             (F.col("grp") == "1") & (F.col("cat") == "x"), F.lit("y")
         ).otherwise(F.col("cat")),
     )
-    rows = {r["grp"]: r for r in grouped_categorical_drift(src, tgt, "cat", ["grp"]).collect()}
+    rows = {}
+    for metric in ("psi", "tv"):
+        check = DriftCheck(column="cat", metric=metric, kind="categorical", bins=20)
+        for r in drift_metrics(src, tgt, check, ["grp"]).collect():
+            rows.setdefault(r["grp"], {})[metric] = r[f"drift_{metric}_cat"]
     assert rows["1"]["tv"] > 0.3 and rows["1"]["psi"] > 0.5
     assert all(rows[g]["tv"] == 0.0 for g in ("0", "2"))
 
@@ -407,3 +406,118 @@ def test_categorical_drift_monitor_stream(spark, tmp_path):
     assert spark.read.parquet(verdicts_path).count() == 3
     snap2 = {r["category"]: r["cnt"] for r in baselines.read("cmon", "lang__cat_stream").collect()}
     assert sum(snap2.values()) == 60_000
+
+
+# ---------------------------------------------------------------------------
+# one builder per sketch family: task level (no group keys), per group
+# and snapshot mode must agree
+# ---------------------------------------------------------------------------
+
+_FAMILY_CHECKS = {
+    "histogram": dict(column="x", bins=16),
+    "tdigest": dict(column="x", sketch="tdigest", bins=8),
+    "kll": dict(column="x", sketch="kll", bins=8),
+    "categorical": dict(column="c", kind="categorical", bins=4),
+}
+
+
+@pytest.fixture(scope="module")
+def family_frames(spark):
+    """Two groups with a numeric ``x`` and a six-valued ``c``, and a
+    copy drifted on both columns."""
+    cats = F.array(*[F.lit(v) for v in "abcdef"])
+    source = spark.range(4000).select(
+        (F.col("id") % 2).alias("grp"),
+        (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0).alias("x"),
+        F.element_at(cats, (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(6)) + 1).cast("int"))
+        .alias("c"),
+    )
+    target = source.select(
+        "grp",
+        (F.col("x") * 1.3 + 5.0).alias("x"),
+        F.when(F.col("c") == "a", F.lit("b")).otherwise(F.col("c")).alias("c"),
+    )
+    return source, target
+
+
+@pytest.mark.parametrize(
+    "family,metric",
+    [(f, m) for f in ("histogram", "tdigest", "kll") for m in ("psi", "ks")]
+    + [("categorical", "psi"), ("categorical", "tv")],
+)
+def test_task_level_drift_equals_one_group_drift(spark, family_frames, family, metric):
+    """A mergeable summary over no group keys is the global summary:
+    task-level drift equals per-group drift on a one-group table,
+    bitwise."""
+    source, target = family_frames
+    check = DriftCheck(metric=metric, **_FAMILY_CHECKS[family])
+    name = f"drift_{metric}_{check.column}"
+    (task,) = drift_metrics(source, target, check).collect()
+    one = F.lit("all").alias("g")
+    (grouped,) = drift_metrics(
+        source.select(one, "*"), target.select(one, "*"), check, ["g"]
+    ).collect()
+    assert task[name] > 0.0  # a real comparison, not a vacuous 0
+    assert grouped[name] == task[name]
+
+
+@pytest.mark.parametrize("family", list(_FAMILY_CHECKS))
+def test_snapshot_compare_equals_two_sample(spark, family_frames, family, tmp_path):
+    """Snapshot mode is the two-sample builder fed the stored baseline:
+    a compare against ``baseline_snapshot(source)``, written and read
+    back, equals the two-sample compare against ``source``, bitwise."""
+    from datapact_spark.operators.drift import baseline_snapshot
+
+    source, target = family_frames
+    check = DriftCheck(**_FAMILY_CHECKS[family])
+    name = f"drift_{check.metric}_{check.column}"
+    baseline_snapshot(source, check).write.parquet(str(tmp_path / "snap"))
+    snap = spark.read.parquet(str(tmp_path / "snap"))
+    got = drift_metrics(None, target, check, snapshot=snap).collect()[0][name]
+    want = drift_metrics(source, target, check).collect()[0][name]
+    assert want > 0.0 and got == want
+
+
+@pytest.mark.parametrize("mode", ["task", "group", "snapshot"])
+@pytest.mark.parametrize("family", list(_FAMILY_CHECKS))
+def test_all_null_side_fails_drift(spark, family_frames, family, mode, tmp_path):
+    """An all-NULL compared side is zero mass — maximal drift — so the
+    check FAILs on every family and path. (The task-level and snapshot
+    t-digest paths used to score it NULL, which passed.)"""
+    from datapact_spark.ledger import BaselineStore
+    from datapact_spark.operators.drift import baseline_snapshot
+    from datapact_spark.plans.compiler import compile_task
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
+
+    source, _ = family_frames
+    nulls = source.select(
+        "grp",
+        F.lit(None).cast("double").alias("x"),
+        F.lit(None).cast("string").alias("c"),
+    )
+    baseline = "snapshot" if mode == "snapshot" else "target"
+    check = DriftCheck(baseline=baseline, **_FAMILY_CHECKS[family])
+    task = ValidationTask(
+        task_key=f"nulls_{family}_{mode}", source="src", target="tgt",
+        drift_checks=[check], partition_by=["grp"] if mode == "group" else None,
+    )
+    resolver = TableResolver(spark)
+    resolver.register("src", source)
+    resolver.register("tgt", nulls)
+    if mode == "group":
+        rows = compile_partition_verdicts(spark, task, resolver).collect()
+        assert len(rows) == 2
+        assert not any(r[f"drift_{check.column}_{check.metric}_passed"] for r in rows)
+        return
+    store = None
+    if mode == "snapshot":
+        # the snapshot compares the task's source against the baseline
+        store = BaselineStore(spark, str(tmp_path / "res"))
+        store.write(task.task_key, check.column, baseline_snapshot(source, check))
+        resolver.register("src", nulls)
+    row = compile_task(spark, task, resolver, baseline_store=store).metrics_df.collect()[0]
+    drift = json.loads(row["result_payload"])[
+        f"drift_validation_{check.column}_{check.metric}"
+    ]
+    assert drift["status"] == "FAIL", drift
+    assert not row["overall_validation_passed"]

@@ -327,6 +327,42 @@ def test_salted_profile_with_fingerprint_mode(engine, spark):
     assert all(v[4] for v in fp.values())
 
 
+def test_multiset_uniqueness_reuses_profile_scans(spark, tmp_path):
+    """fingerprint_multiset with a uniqueness check reads no distinct
+    count, yet its key-pruned copy of the joined profile must still
+    equal the full profile so AQE reuses the profile scans: the executed
+    plan reads as many parquet scan nodes as fingerprint mode (it read
+    2 more, with 2 fewer reused exchanges, when the distinct counts were
+    pruned), and on unique-PK data its verdict rows equal fingerprint
+    mode's."""
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
+    from datapact_spark.session import cache_scope
+
+    src = synthesize_code_table(spark, 2000, n_repos=5, seed=7)
+    src.write.parquet(str(tmp_path / "src"))
+    corrupt_code_table(src, mutate_every=100).write.parquet(str(tmp_path / "tgt"))
+    resolver = TableResolver(spark)
+    resolver.register("code_src", spark.read.parquet(str(tmp_path / "src")))
+    resolver.register("code_tgt", spark.read.parquet(str(tmp_path / "tgt")))
+
+    def run(mode):
+        task = _task(
+            task_key=f"ms_{mode}", row_hash_mode=mode,
+            uniqueness_columns=["repo", "path"], uniqueness_tolerance=0.0,
+        )
+        with cache_scope():
+            df = compile_partition_verdicts(spark, task, resolver)
+            rows = sorted(tuple(r) for r in df.collect())
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        return rows, plan.count("Scan parquet"), plan.count("ReusedExchange")
+
+    fp_rows, fp_scans, fp_reused = run("fingerprint")
+    ms_rows, ms_scans, ms_reused = run("fingerprint_multiset")
+    assert ms_scans == fp_scans and ms_reused == fp_reused, (ms_scans, fp_scans)
+    assert ms_rows == fp_rows
+    assert any(not r[-1] for r in ms_rows) and any(r[-1] for r in ms_rows)
+
+
 def test_fingerprint_mode_localized_corruption_scopes_join(spark, tmp_path):
     """With corruption confined to one repo, every other group passes by
     fingerprint and only the dirty repo's rows enter the exact join."""

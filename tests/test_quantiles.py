@@ -304,7 +304,7 @@ def test_kll_drift_single_bin_is_zero(spark, tables):
 
 
 def test_grouped_kll_drift(spark, skewed_df):
-    from datapact_spark.operators.quantiles import grouped_kll_drift
+    from datapact_spark.operators.quantiles import kll_drift, kll_sketch
 
     src = skewed_df
     tgt = src.withColumn(
@@ -312,7 +312,12 @@ def test_grouped_kll_drift(spark, skewed_df):
     )
     rows = {
         r["grp"]: r
-        for r in grouped_kll_drift(src, tgt, "v", ["grp"], bins=8).collect()
+        for r in kll_drift(
+            kll_sketch(src, "v", 8, group_cols=["grp"]),
+            kll_sketch(tgt, "v", 8, group_cols=["grp"]),
+            8,
+            group_cols=["grp"],
+        ).collect()
     }
     assert rows[2]["ks"] > 0.3
     assert all(r["ks"] < 0.05 for g, r in rows.items() if g != 2)
@@ -388,9 +393,16 @@ def test_exact_quantile_drift_terms(spark, tables):
         assert r["w1_term"] >= 0.0
 
 
-def test_grouped_tdigest_drift(spark, skewed_df):
-    from datapact_spark.operators.quantiles import grouped_tdigest_drift
+def _grouped_tdigest_drift(source, target, bins=10):
+    return tdigest_drift(
+        tdigest_sketch(source, "v", group_cols=["grp"]),
+        tdigest_sketch(target, "v", group_cols=["grp"]),
+        bins,
+        ["grp"],
+    )
 
+
+def test_grouped_tdigest_drift(spark, skewed_df):
     # drift only group 2: scale its values; other groups identical
     target = skewed_df.select(
         "grp",
@@ -398,9 +410,7 @@ def test_grouped_tdigest_drift(spark, skewed_df):
     )
     out = {
         r["grp"]: (r["psi"], r["ks"])
-        for r in grouped_tdigest_drift(
-            skewed_df, target, "v", ["grp"], bins=10
-        ).collect()
+        for r in _grouped_tdigest_drift(skewed_df, target, bins=10).collect()
     }
     assert set(out) == {0, 1, 2, 3}
     for g in (0, 1, 3):
@@ -411,14 +421,10 @@ def test_grouped_tdigest_drift(spark, skewed_df):
 
 
 def test_grouped_tdigest_drift_missing_group_is_max_drift(spark, skewed_df):
-    from datapact_spark.operators.quantiles import grouped_tdigest_drift
-
     target = skewed_df.where(F.col("grp") != 1)
     out = {
         r["grp"]: r["ks"]
-        for r in grouped_tdigest_drift(
-            skewed_df, target, "v", ["grp"], bins=10
-        ).collect()
+        for r in _grouped_tdigest_drift(skewed_df, target, bins=10).collect()
     }
     assert out[1] > 0.9  # all target mass missing
     assert out[0] < 0.02
@@ -573,22 +579,39 @@ def test_drift_monitor_stream(spark, tmp_path):
     # self-comparison: batch 2 is inside the baseline now, so the
     # replayed score is lower than the honest original
     assert redo[2]["ks"] < verdicts[2]["ks"]
+
     # and the baseline itself was not double-merged
     snap3 = baselines.read("mon", "v__stream").collect()[0]
     assert snap3["last_batch_id"] == 2
     assert snap3["total"] == pytest.approx(60_000)
+
+    # an all-NULL batch is zero mass against the baseline: maximal
+    # drift, FAIL (it passed with a NULL score before), and it folds
+    # nothing into the baseline
+    spark.range(100).select(F.lit(None).cast("double").alias("v")).coalesce(
+        1
+    ).write.mode("append").parquet(src_dir)
+    q5 = drift_monitor_stream(
+        spark, stream, "v", baselines, "mon", str(tmp_path / "ckpt"),
+        verdicts_path, metric="ks", threshold=0.1,
+    )
+    q5.awaitTermination(60)
+    nulls = {r["batch_id"]: r for r in spark.read.parquet(verdicts_path).collect()}
+    assert len(nulls) == 4
+    assert not nulls[3]["passed"] and nulls[3]["ks"] == pytest.approx(1.0)
+    snap5 = baselines.read("mon", "v__stream").collect()[0]
+    assert snap5["last_batch_id"] == 3
+    assert snap5["total"] == pytest.approx(60_000)
 
 
 def test_grouped_tdigest_drift_tiny_groups_no_crash(spark):
     """1-row groups produce degenerate digests (single centroid, all
     quantile edges equal); identical sides must still read as zero
     drift and nothing may crash."""
-    from datapact_spark.operators.quantiles import grouped_tdigest_drift
-
     df = spark.createDataFrame(
         [(0, 1.0), (1, 5.0), (1, 5.5), (2, 9.0)], "grp int, v double"
     )
-    out = {r["grp"]: r for r in grouped_tdigest_drift(df, df, "v", ["grp"]).collect()}
+    out = {r["grp"]: r for r in _grouped_tdigest_drift(df, df).collect()}
     assert set(out) == {0, 1, 2}
     for g, r in out.items():
         assert r["ks"] == pytest.approx(0.0, abs=1e-12), (g, r)
@@ -862,8 +885,7 @@ def test_kll_drift_monitor_stream(spark, tmp_path):
 
 def test_kll_monitor_all_null_batch_vacuous_pass(spark, tmp_path):
     """A post-bootstrap batch whose column is entirely null must pass
-    vacuously (no mass to compare) and still fold harmlessly — the
-    t-digest monitor's contract for empty batch digests."""
+    vacuously (no mass to compare) and still fold harmlessly."""
     from datapact_spark.ledger import BaselineStore
     from datapact_spark.streaming.incremental import kll_drift_monitor_stream
 
