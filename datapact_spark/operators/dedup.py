@@ -9,15 +9,16 @@
   distance within identical high-bit prefixes.
 * n-gram Jaccard: exact verified similarity on candidate pairs.
 
-Everything before the (tiny) candidate stage is JVM-side; minhash
-signatures use the standard (a·h + b) mod p universal-hash family over
-xxhash64 shingle hashes — all Column arithmetic, no Python UDFs.
+Minhash signatures (a·h + b) mod p over xxhash64 shingle hashes are
+one numpy kernel in ``mapInPandas``; each LSH self-join reads its bucket
+rows through one shuffle (``_bucket_self_join``), so the kernel runs once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def cap_bucket_size(
@@ -26,16 +27,17 @@ def cap_bucket_size(
     """Drop rows belonging to degenerate LSH buckets (more than
     ``max_bucket_size`` members). Without a cap, one adversarial bucket —
     every empty document, a templated boilerplate page, a constant
-    column — funnels n rows into a single key and the within-bucket
-    self-join goes O(n²): fatal at 100 TB.
+    column — funnels n rows into a single key and a within-bucket join
+    goes O(n²): fatal at 100 TB. Callers: ``lsh_topk`` and
+    ``codeops.near_clone_pairs``, which do not self-join the capped rows
+    (the self-joins cap inside ``_bucket_self_join``).
 
     Implementation: ``groupBy(bucket).count()`` (map-side partial
     aggregation → the shuffle carries one partial row per distinct
     bucket per task, not the exploded fact rows), filter to the
     oversized keys (a handful by construction), broadcast anti-join
-    them back. The exploded rows are never shuffled for the cap — the
-    prior window-count variant shuffled the full exploded fact an extra
-    time because window and join Exchanges don't dedupe.
+    them back. A window-count cap costs an extra shuffle of the
+    exploded rows only when its exchange differs from the consumer's.
 
     Recall trade-off (documented): members of an over-full bucket lose
     THIS bucket's collisions but still meet in their other bands/tables
@@ -43,9 +45,8 @@ def cap_bucket_size(
     ``exact_duplicates`` before LSH.
 
     The anti-join condition is null-safe (``eqNullSafe`` per bucket
-    column), so an oversized all-NULL bucket is dropped exactly like the
-    prior window-count variant did — callers may pass nullable bucket
-    keys."""
+    column), so an oversized all-NULL bucket is dropped — callers may
+    pass nullable bucket keys."""
     if not max_bucket_size:
         return df
     oversized = (
@@ -62,6 +63,26 @@ def cap_bucket_size(
         clause = F.col(c).eqNullSafe(F.col(f"__cap_{c}"))
         cond = clause if cond is None else cond & clause
     return df.join(F.broadcast(renamed), cond, "left_anti")
+
+
+def _bucket_self_join(
+    df: DataFrame, bucket_cols: list[str], max_bucket_size: int | None
+) -> DataFrame:
+    """Row pairs sharing a bucket, aliased ``a``/``b`` with ``a.id <
+    b.id``, over buckets of at most ``max_bucket_size`` rows (NULL-id
+    rows count toward the size). One repartition on the bucket key
+    feeds the cap — a ``count(*)`` window over that partitioning, so no
+    extra exchange — and both join sides, which AQE reuses: the Python
+    kernel under ``df`` runs once (a groupBy + anti-join cap re-ran it)."""
+    b = df.repartition(*bucket_cols)
+    if max_bucket_size:
+        bn = F.count(F.lit(1)).over(Window.partitionBy(*bucket_cols))
+        b = b.withColumn("__bn", bn).where(F.col("__bn") <= max_bucket_size).drop("__bn")
+    cond = F.col("a.id") < F.col("b.id")
+    for c in bucket_cols:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    return b.alias("a").join(b.alias("b"), cond)
+
 
 # 2^31-1: keeps (h mod M) * a < 2^62, inside 64-bit long arithmetic
 _MERSENNE = (1 << 31) - 1
@@ -291,16 +312,8 @@ def minhash_lsh_candidates(
     (band_idx, band_hash), so identical bands collide and the shuffle
     carries only (id, band_hash) pairs."""
     exploded = minhash_band_hashes(signatures, bands, rows_per_band)
-    exploded = cap_bucket_size(exploded, ["band", "band_hash"], max_bucket_size)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _bucket_self_join(exploded, ["band", "band_hash"], max_bucket_size)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates()
     )
@@ -583,14 +596,9 @@ def simhash_near_dups(
         ]
     )
     bucketed = sim_df.select("id", "simhash", F.explode(buckets).alias("bucket"))
-    bucketed = cap_bucket_size(bucketed, ["bucket"], max_bucket_size)
-    a, b = bucketed.alias("a"), bucketed.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")),
-        )
+        _bucket_self_join(bucketed, ["bucket"], max_bucket_size)
         .where(ham <= max_hamming)
         .select(
             F.col("a.id").alias("id_a"),
@@ -823,8 +831,6 @@ def doc_duplication_score(
     ).withColumnRenamed("occ", "__occ")
 
     if carrier_strategy == "window":
-        from pyspark.sql.window import Window
-
         wg = Window.partitionBy("gram_hash")
         scored = gi.withColumn("__n_docs", F.count(F.lit(1)).over(wg)).withColumn(
             "__shared", F.col("__n_docs") >= min_docs

@@ -91,8 +91,10 @@ def drift_metrics(
     The baseline is ``source`` (two-sample), or the stored
     ``baseline_snapshot`` when ``snapshot`` is given (``source`` is then
     unused). Stored baselines carry no group key, so snapshot compares
-    are task-level. A side with no rows (empty, or all NULL) is zero
-    mass, so it reads as maximal drift, never as no comparison."""
+    are task-level. A side with no rows (empty, or all NULL) — the
+    baseline as well as the target, in every mode — is zero mass, so it
+    reads as maximal drift against a non-empty other side, never as no
+    comparison."""
     g = list(group_cols)
     family = _family(check)
     if snapshot is not None:
@@ -250,13 +252,14 @@ def _binned(
     """(group..., bin, cnt) histogram of ``column`` over the bounds
     grid. Over no keys the 1-row ``bounds`` relation is broadcast, so
     the whole computation stays lazy and distributed; per group it
-    joins on the group key."""
+    joins on the group key. A group without bounds (its baseline had
+    no value) bins everything into bin 0."""
     g = list(group_cols)
     width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
     return (
         df.select(*g, F.col(column).cast("double").alias("__v"))
         .where(F.col("__v").isNotNull())
-        .join(bounds if g else F.broadcast(bounds), on=g or None, how="inner")
+        .join(bounds if g else F.broadcast(bounds), on=g or None, how="left")
         .select(
             *g,
             F.coalesce(
@@ -294,7 +297,8 @@ def _histogram_counts(
         bounds = _bounds(source, column, g)
         base = _binned(source, column, bins, bounds, g)
     else:
-        # the stored grid rides every snapshot row, so bins align
+        # the stored grid rides every snapshot row, so bins align (an
+        # empty snapshot has no grid: the target lands in bin 0)
         bounds = snapshot.select("__lo", "__hi").limit(1)
         base = snapshot
     return merge_counts(base, _binned(target, column, bins, bounds, g), [*g, "bin"])
@@ -384,6 +388,10 @@ def _categorical_counts(
         # baseline tail mass
         cats = snapshot.select("category").where(F.col("category") != OTHER_CATEGORY)
         base = snapshot
+    # a baseline (group) with no non-NULL value has an empty frame: it
+    # is zero mass, not an __OTHER__ row that matches any target
+    framed = cats.select(*g).distinct() if g else cats.limit(1).select()
+    base = base.join(framed, on=g or None, how="left_semi")
     return merge_counts(
         base, category_counts(target, column, cats, g), [*g, "category"]
     )

@@ -323,15 +323,17 @@ def tdigest_drift(
     baseline) — the shared ``drift.psi_ks_from_counts`` tail of every
     sketch family. Only #groups digest rows are joined and evaluated.
     A group with no current digest (no rows, or all NULL) gets
-    all-zero current mass — maximal drift, never no comparison."""
+    all-zero current mass, and a group with no baseline digest gets
+    all-zero baseline mass against current mass in one bin — maximal
+    drift either way, never no comparison."""
     from datapact_spark.operators.drift import psi_ks_from_counts
 
     g = list(group_cols)
     fields = ("means", "weights", "total", "vmin", "vmax")
     p1 = digest_p.select(*g, *[F.col(c).alias(f"p_{c}") for c in fields])
     q1 = digest_q.select(*g, *[F.col(c).alias(f"q_{c}") for c in fields])
-    # over no keys the 1-row current digest is broadcast
-    both = p1.join(q1 if g else F.broadcast(q1), on=g or None, how="left")
+    # over no keys both digests are one row (or none)
+    both = p1.join(q1, on=g or None, how="full")
     schema = StructType(
         [p1.schema[c] for c in g]
         + [StructField("bin", LongType(), False),
@@ -339,10 +341,27 @@ def tdigest_drift(
            StructField("q_cnt", DoubleType(), False)]
     )
 
+    def absent(v) -> bool:
+        # a side absent from the outer join
+        return v is None or (isinstance(v, float) and pd.isna(v))
+
+    def mass_rows(r, p_mass, q_mass) -> list[dict]:
+        return [
+            {**{c: r[c] for c in g}, "bin": i,
+             "p_cnt": float(p_mass[i]), "q_cnt": float(q_mass[i])}
+            for i in range(bins)
+        ]
+
     def masses(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for _, r in pdf.iterrows():
+                if absent(r["p_means"]):
+                    # no baseline: no edges, so the current mass is one bin
+                    p_mass, q_mass = np.zeros(bins), np.zeros(bins)
+                    q_mass[0] = float(r["q_total"])
+                    out.extend(mass_rows(r, p_mass, q_mass))
+                    continue
                 pm = np.asarray(r["p_means"], dtype=np.float64)
                 pw = np.asarray(r["p_weights"], dtype=np.float64)
                 edges = _digest_quantile(
@@ -354,9 +373,7 @@ def tdigest_drift(
                 p_cdf = _digest_cdf(edges, pm, pw, float(r["p_total"]),
                                     float(r["p_vmin"]), float(r["p_vmax"]))
                 p_mass = np.diff(p_cdf) * float(r["p_total"])
-                if r["q_means"] is None or (
-                    isinstance(r["q_means"], float) and pd.isna(r["q_means"])
-                ):
+                if absent(r["q_means"]):
                     q_mass = np.zeros(bins)
                 else:
                     qm = np.asarray(r["q_means"], dtype=np.float64)
@@ -364,11 +381,7 @@ def tdigest_drift(
                     q_cdf = _digest_cdf(edges, qm, qw, float(r["q_total"]),
                                         float(r["q_vmin"]), float(r["q_vmax"]))
                     q_mass = np.diff(q_cdf) * float(r["q_total"])
-                for i in range(bins):
-                    row = {c: r[c] for c in g}
-                    row.update(bin=i, p_cnt=float(p_mass[i]),
-                               q_cnt=float(q_mass[i]))
-                    out.append(row)
+                out.extend(mass_rows(r, p_mass, q_mass))
             yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
     return psi_ks_from_counts(both.mapInPandas(masses, schema=schema), g)
@@ -451,10 +464,13 @@ def kll_drift(
     lands in bin 1 + #(edges strictly below it). Everything is a
     join/agg over O(bins·points_per_bin) rows per group — lazy and
     JVM-only. With ``bins == 1`` there are no interior edges, every
-    point lands in bin 1 and drift is 0."""
+    point lands in bin 1 and drift is 0. A summary of no value (its
+    quantiles are NULL) is zero mass: its points are dropped, and the
+    other side's points all land in bin 1."""
     from datapact_spark.operators.drift import merge_counts, psi_ks_from_counts
 
     g = list(group_cols)
+    base, now = (s.where(F.col("quantile").isNotNull()) for s in (base, now))
     edges = _kll_edges(base, bins, points_per_bin, g)
     # over no keys the edges are broadcast; the left join keeps every
     # point when there are none

@@ -464,6 +464,8 @@ def embedding_near_dups(
     in corpus size instead of leaving the 8M-vector cliff to the
     caller. The count is one column-pruned aggregate scan; pass an
     explicit ``bits`` to skip it."""
+    from datapact_spark.operators.dedup import _bucket_self_join
+
     if bits is None:
         bits = derive_lsh_bits(df.count())
     planes = _hyperplanes(dim, bits, tables, seed)
@@ -473,29 +475,8 @@ def embedding_near_dups(
         F.col(vec_col).alias("v"),
         buckets_udf(F.col(vec_col)).alias("__buckets"),
     ).select("id", "v", F.explode_outer("__buckets").alias("bucket"))
-    # One explicit Exchange on the join key, then a WINDOW-count cap on
-    # top of it. Unlike the groupBy+anti-join cap (right for the cheap
-    # JVM-side minhash/simhash buckets), an anti-join here would sit
-    # between the Exchange and the self-join sides and break their
-    # structural identity — each side (and the cap's count) re-runs the
-    # expensive GEMM signature UDF (the r3 bench regression, 3 UDF
-    # passes). With repartition("bucket") + Window.partitionBy("bucket")
-    # the window adds NO exchange (clustering already satisfied, only a
-    # sort), both join sides stay byte-identical, and AQE's
-    # ReusedExchange runs the UDF exactly once.
-    if max_bucket_size:
-        from pyspark.sql.window import Window
-
-        wb = Window.partitionBy("bucket")
-        b = (
-            b.repartition("bucket")
-            .withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .where(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
     pairs = (
-        b.alias("a")
-        .join(b.alias("b"), (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
+        _bucket_self_join(b, ["bucket"], max_bucket_size)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),

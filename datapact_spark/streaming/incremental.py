@@ -814,14 +814,16 @@ def kll_drift_monitor_stream(
 
         p_tot = sum(p_cnt.values()) or 1
         q_tot = sum(q_cnt.values()) or 1
-        psi = ks = p_cdf = q_cdf = 0.0
+        psi = ks = 0.0
+        p_run = q_run = 0
         for b in range(1, bins + 1):
             p = p_cnt.get(b, 0) / float(p_tot)
             q = q_cnt.get(b, 0) / float(q_tot)
             psi += (p + _EPS - (q + _EPS)) * math.log((p + _EPS) / (q + _EPS))
-            p_cdf += p
-            q_cdf += q
-            ks = max(ks, abs(p_cdf - q_cdf))
+            # CDFs from exact running counts: a full side ends at 1.0
+            p_run += p_cnt.get(b, 0)
+            q_run += q_cnt.get(b, 0)
+            ks = max(ks, abs(p_run / float(p_tot) - q_run / float(q_tot)))
         return psi, ks
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -840,15 +842,11 @@ def kll_drift_monitor_stream(
                 r["edge_hi"] for r in base_rows if r["edge_hi"] is not None
             )
             base_counts = {r["bin"]: r["cnt"] for r in base_rows}
+            # a batch whose column is entirely null has empty counts:
+            # zero mass, maximal drift (FAIL), like the t-digest monitor
+            # and the batch drift check; it folds nothing into the baseline
             now_counts = _bin_counts(batch_df, edges)
-            if now_counts:
-                psi, ks = _score(base_counts, now_counts)
-            else:
-                # batch whose column is entirely null: no mass to
-                # compare — vacuous pass (scoring empty counts against
-                # the baseline would read as max drift; the t-digest
-                # monitor does score it so, like the batch drift check)
-                psi, ks = 0.0, 0.0
+            psi, ks = _score(base_counts, now_counts)
             passed = (psi if metric == "psi" else ks) <= threshold
             if update_baseline and batch_id > last_seen:
                 edge_by_bin = {r["bin"]: r["edge_hi"] for r in base_rows}

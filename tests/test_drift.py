@@ -478,12 +478,21 @@ def test_snapshot_compare_equals_two_sample(spark, family_frames, family, tmp_pa
     assert want > 0.0 and got == want
 
 
-@pytest.mark.parametrize("mode", ["task", "group", "snapshot"])
+@pytest.mark.parametrize(
+    "mode",
+    ["task", "group", "snapshot", "baseline_task", "baseline_group", "baseline_snapshot"],
+)
 @pytest.mark.parametrize("family", list(_FAMILY_CHECKS))
 def test_all_null_side_fails_drift(spark, family_frames, family, mode, tmp_path):
-    """An all-NULL compared side is zero mass — maximal drift — so the
-    check FAILs on every family and path. (The task-level and snapshot
-    t-digest paths used to score it NULL, which passed.)"""
+    """An all-NULL side is zero mass — maximal drift — so the check
+    FAILs on every family and path, whichever side it is. The plain
+    modes make the compared side all NULL (the task-level and snapshot
+    t-digest paths used to score it NULL, which passed); the
+    ``baseline_`` modes make the baseline side all NULL: the source in
+    two-sample and per-group mode (where a group with no baseline rows
+    at all is zero mass too), the stored snapshot in snapshot mode
+    (t-digest and KLL read NULL or 0.0 there, and a snapshot of an
+    all-NULL source stored no rows, so every later compare passed)."""
     from datapact_spark.ledger import BaselineStore
     from datapact_spark.operators.drift import baseline_snapshot
     from datapact_spark.plans.compiler import compile_task
@@ -495,15 +504,22 @@ def test_all_null_side_fails_drift(spark, family_frames, family, mode, tmp_path)
         F.lit(None).cast("double").alias("x"),
         F.lit(None).cast("string").alias("c"),
     )
+    null_baseline = mode.startswith("baseline_")
+    mode = mode.removeprefix("baseline_")
+    # (baseline side, compared side); per group, the NULL baseline also
+    # lacks group 1's rows altogether
+    base_df, other_df = (nulls, source) if null_baseline else (source, nulls)
+    if null_baseline and mode == "group":
+        base_df = nulls.where(F.col("grp") == 0)
     baseline = "snapshot" if mode == "snapshot" else "target"
     check = DriftCheck(baseline=baseline, **_FAMILY_CHECKS[family])
     task = ValidationTask(
-        task_key=f"nulls_{family}_{mode}", source="src", target="tgt",
+        task_key=f"nulls_{family}_{mode}_{null_baseline}", source="src", target="tgt",
         drift_checks=[check], partition_by=["grp"] if mode == "group" else None,
     )
     resolver = TableResolver(spark)
-    resolver.register("src", source)
-    resolver.register("tgt", nulls)
+    resolver.register("src", base_df)
+    resolver.register("tgt", other_df)
     if mode == "group":
         rows = compile_partition_verdicts(spark, task, resolver).collect()
         assert len(rows) == 2
@@ -513,8 +529,8 @@ def test_all_null_side_fails_drift(spark, family_frames, family, mode, tmp_path)
     if mode == "snapshot":
         # the snapshot compares the task's source against the baseline
         store = BaselineStore(spark, str(tmp_path / "res"))
-        store.write(task.task_key, check.column, baseline_snapshot(source, check))
-        resolver.register("src", nulls)
+        store.write(task.task_key, check.column, baseline_snapshot(base_df, check))
+        resolver.register("src", other_df)
     row = compile_task(spark, task, resolver, baseline_store=store).metrics_df.collect()[0]
     drift = json.loads(row["result_payload"])[
         f"drift_validation_{check.column}_{check.metric}"

@@ -242,24 +242,55 @@ def test_uniqueness_approx_no_key_shuffle(spark, sf_dir):
     assert uniq["status"] == "PASS"
 
 
-def test_lsh_bucket_cap_avoids_window_shuffle(spark):
-    """The degenerate-bucket cap must NOT window-count over the exploded
-    band rows (an extra full shuffle before the self-join's own): it
-    aggregates bucket sizes (map-side partials) and broadcast-anti-joins
-    the handful of oversized keys back. Plan: zero Window operators, and
-    a BroadcastExchange feeding the anti-join."""
-    from datapact_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
+def _final_plan(df) -> str:
+    """The Final Plan section of the executed AQE plan."""
+    df.collect()  # let AQE finalize stage reuse
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
 
+
+def test_lsh_self_joins_run_python_kernel_once(spark, sf_dir):
+    """Each LSH self-join reads its bucket rows through ONE shuffle: the
+    bucket cap is a window over the bucket repartition and both join
+    sides reuse that exchange, so the Python signature kernel below it
+    is evaluated once in the executed plan (a groupBy + anti-join cap
+    re-ran it: 2 MapInPandas for minhash and simhash)."""
+    from datapact_spark.operators.dedup import (
+        minhash_dedup,
+        simhash_near_dups,
+        simhash_portable_vectorized,
+    )
+    from datapact_spark.operators.similarity import embedding_near_dups
+
+    # 150 copies of one page: every band / segment bucket of those rows
+    # is over the cap of 100, so the cap really drops rows (an empty
+    # anti-join build side lets AQE drop the second kernel pass)
     docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i % 7}") for i in range(200)],
+        [
+            (i, "one template page body text" if i < 150
+             else f"alpha beta gamma delta {i % 7} eps {i % 3} w{i}")
+            for i in range(300)
+        ],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(sigs, max_bucket_size=100)
-    plan = _explain(cands)
-    assert "Window" not in plan, "cap must not add a window shuffle"
-    assert "BroadcastExchange" in plan, "oversized-key cap must broadcast"
-    assert "LeftAnti" in plan
+    minhash = _final_plan(minhash_dedup(docs, max_bucket_size=100))
+    assert minhash.count("MapInPandas") == 1, minhash
+    simhash = _final_plan(simhash_near_dups(
+        simhash_portable_vectorized(docs, bits=60), bits=60, max_bucket_size=100
+    ))
+    assert simhash.count("MapInPandas") == 1, simhash
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    embedding = _final_plan(embedding_near_dups(emb, threshold=0.99, bits=12, tables=4))
+    assert embedding.count("ArrowEvalPython") == 1, embedding
+    for final, key in ((minhash, "band"), (simhash, "bucket"), (embedding, "bucket")):
+        assert "Window" in final, final  # the cap ran
+        # the cap's window adds no exchange: the only materialized
+        # exchange on the bucket key is the repartition itself
+        keyed = [
+            ln for ln in final.splitlines()
+            if f"Exchange hashpartitioning({key}#" in ln and "ReusedExchange" not in ln
+        ]
+        assert len(keyed) == 1 and "REPARTITION_BY_COL" in keyed[0], keyed
 
 
 @pytest.mark.parametrize("salt,n_exchanges", [(32, 2), (1, 1)])

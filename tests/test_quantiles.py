@@ -883,9 +883,10 @@ def test_kll_drift_monitor_stream(spark, tmp_path):
     assert sum(r["cnt"] for r in snap3) == 60_000
 
 
-def test_kll_monitor_all_null_batch_vacuous_pass(spark, tmp_path):
-    """A post-bootstrap batch whose column is entirely null must pass
-    vacuously (no mass to compare) and still fold harmlessly."""
+def test_kll_monitor_all_null_batch_fails(spark, tmp_path):
+    """A post-bootstrap batch whose column is entirely null is zero
+    mass: it FAILs with ks 1.0, like the t-digest monitor, and still
+    folds nothing into the baseline while advancing its replay guard."""
     from datapact_spark.ledger import BaselineStore
     from datapact_spark.streaming.incremental import kll_drift_monitor_stream
 
@@ -912,7 +913,7 @@ def test_kll_monitor_all_null_batch_vacuous_pass(spark, tmp_path):
         r["batch_id"]: r
         for r in spark.read.parquet(str(tmp_path / "verdicts")).collect()
     }
-    assert verdicts[1]["passed"] and verdicts[1]["ks"] == 0.0
+    assert not verdicts[1]["passed"] and verdicts[1]["ks"] == 1.0
     snap = baselines.read("mon_null", "v__kll_stream").collect()
     assert sum(r["cnt"] for r in snap) == 5_000  # nothing spurious folded
     assert max(r["last_batch_id"] for r in snap) == 1  # replay guard advanced
