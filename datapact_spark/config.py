@@ -313,10 +313,7 @@ class DriftCheck(BaseModel):
     bins: int = 64
     # sketch family: "histogram" = fixed-grid counts (drift.py);
     # "tdigest" = mergeable quantile digest (quantiles.py) — PSI/KS on
-    # equal-mass bins cut at the baseline's quantiles; "kll" = Spark's
-    # built-in percentile_approx (GK/KLL-family one-pass summary,
-    # zero-Python) compared the same way (north-star: "t-digest/KLL
-    # sketches ... with PSI/KS thresholds")
+    # equal-mass bins cut at the baseline's quantiles
     sketch: str = "histogram"
     delta: float = 200.0  # t-digest compression (~delta/2 centroids)
     # "numeric" (default): binned/quantile sketches over a numeric
@@ -371,8 +368,13 @@ class DriftCheck(BaseModel):
     @field_validator("sketch")
     @classmethod
     def _validate_sketch(cls, v: str) -> str:
-        if v not in {"histogram", "tdigest", "kll"}:
-            raise ValueError("sketch must be 'histogram', 'tdigest', or 'kll'")
+        if v == "kll":
+            raise ValueError(
+                "sketch 'kll' was removed; use sketch: tdigest, which scores "
+                "PSI/KS on the same equal-mass bins of the baseline"
+            )
+        if v not in {"histogram", "tdigest"}:
+            raise ValueError("sketch must be 'histogram' or 'tdigest'")
         return v
 
 

@@ -11,8 +11,8 @@ dispatches on the family (``drift_metrics``, ``baseline_snapshot``):
   baseline's min/max; counts per (group, bin).
 * **categorical** — counts per (group, category) on the baseline's
   top-k categories plus ``__OTHER__``.
-* **tdigest** / **kll** — quantile sketches (operators/quantiles.py):
-  masses per (group, bin) on the baseline's equal-mass bins.
+* **tdigest** — the quantile sketch (operators/quantiles.py): masses
+  per (group, bin) on the baseline's equal-mass bins.
 
 Every family reduces to per-(group, bin) counts and shares one tail
 (``drift_terms`` + ``psi_ks_from_counts``): per-bin PSI terms and
@@ -47,7 +47,6 @@ _SKETCH_SNAPSHOT_COLS = {
     # marker columns unique to each sketch family's stored snapshot
     "histogram": {"bin", "cnt"},
     "tdigest": {"means", "weights", "total"},
-    "kll": {"prob", "quantile", "cnt"},
     "categorical": {"category", "cnt"},
 }
 
@@ -109,7 +108,7 @@ def drift_metrics(
             g,
             "category",
         )
-    elif family == "tdigest":
+    else:
         from datapact_spark.operators.quantiles import tdigest_drift, tdigest_sketch
 
         base = snapshot if snapshot is not None else tdigest_sketch(
@@ -117,14 +116,6 @@ def drift_metrics(
         )
         now = tdigest_sketch(target, check.column, check.delta, g)
         scores = tdigest_drift(base, now, check.bins, g)
-    else:
-        from datapact_spark.operators.quantiles import kll_drift, kll_sketch
-
-        base = snapshot if snapshot is not None else kll_sketch(
-            source, check.column, check.bins, group_cols=g
-        )
-        now = kll_sketch(target, check.column, check.bins, group_cols=g)
-        scores = kll_drift(base, now, check.bins, group_cols=g)
     return scores.select(
         *g, F.col(check.metric).alias(f"drift_{check.metric}_{check.column}")
     )
@@ -139,11 +130,9 @@ def baseline_snapshot(df: DataFrame, check: DriftCheck) -> DataFrame:
         return histogram_snapshot(df, check.column, check.bins)
     if family == "categorical":
         return categorical_snapshot(df, check.column, check.bins)
-    from datapact_spark.operators.quantiles import kll_sketch, tdigest_sketch
+    from datapact_spark.operators.quantiles import tdigest_sketch
 
-    if family == "tdigest":
-        return tdigest_sketch(df, check.column, check.delta)
-    return kll_sketch(df, check.column, check.bins)
+    return tdigest_sketch(df, check.column, check.delta)
 
 
 # ---------------------------------------------------------------------------

@@ -16,9 +16,10 @@ this module adds two Spark-native modes:
   shape, expressed as a streaming aggregation so late data within the
   watermark is folded into the right window.
 
-* ``drift_monitor_stream`` — per-micro-batch t-digest drift vs a
-  RUNNING baseline digest (replay-safe fold; north-star mergeable-
-  sketch lifecycle, continuous edition).
+* ``drift_monitor_stream`` / ``categorical_drift_monitor_stream`` —
+  per-micro-batch t-digest (or category-count) drift vs a RUNNING
+  baseline, folded replay-safely by one shared ``foreachBatch`` loop
+  (north-star mergeable-sketch lifecycle, continuous edition).
 
 * ``windowed_drift_profile`` / ``windowed_drift_scores`` — per-event-
   time-window drift: windows are binned on the stored baseline's grid
@@ -79,6 +80,23 @@ def _dir_has_parquet(spark: SparkSession, root: str) -> bool:
     return False
 
 
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+):
+    """Start ``stream_df.writeStream.foreachBatch(process)`` on
+    ``checkpoint_dir``; ``available_now`` drains what is there and
+    stops. Returns the StreamingQuery."""
+    writer = stream_df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def validate_stream(
     spark: SparkSession,
     task: ValidationTask,
@@ -120,12 +138,7 @@ def validate_stream(
         if on_batch is not None:
             on_batch(batch_id, row["status"], row["status"] == "SUCCESS")
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _process, checkpoint_dir, trigger_available_now)
 
 
 SESSION_OUTPUT_SCHEMA = (
@@ -307,12 +320,7 @@ def streaming_near_dedup(
         finally:
             batch_df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, process_batch, checkpoint_dir, trigger_available_now)
 
 
 def streaming_embedding_dedup(
@@ -442,12 +450,7 @@ def streaming_embedding_dedup(
         finally:
             batch_df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, process_batch, checkpoint_dir, trigger_available_now)
 
 
 def stateful_sessionize(
@@ -594,8 +597,99 @@ def windowed_profile(
 
 
 # ---------------------------------------------------------------------------
-# continuous drift monitoring with mergeable quantile sketches
+# continuous drift monitoring with mergeable sketches
 # ---------------------------------------------------------------------------
+
+
+def _drift_monitor(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    baselines,
+    task_key: str,
+    bl_column: str,
+    checkpoint_dir: str,
+    verdicts_path: str,
+    *,
+    bootstrap: Callable[[DataFrame], DataFrame],
+    score: Callable[[DataFrame, DataFrame], tuple[float, float, object]],
+    fold: Callable[[DataFrame, object], DataFrame],
+    second: str,
+    metric: str,
+    threshold: float,
+    update_baseline: bool,
+    trigger_available_now: bool,
+    on_batch: Callable[[int, float, bool], None] | None,
+):
+    """The one ``foreachBatch`` loop of the drift monitors. A sketch
+    family supplies three steps:
+
+    * ``bootstrap(batch_df)`` — the first baseline (no rows when the
+      batch's column is entirely NULL: nothing to compare against yet);
+    * ``score(base, batch_df)`` → ``(psi, <second>, now)`` — the batch
+      scored against the stored baseline ``base``, and the batch's own
+      summary ``now``;
+    * ``fold(base, now)`` — the baseline with ``now`` folded in.
+
+    Per non-empty micro-batch the loop scores the batch (the first
+    batch with mass bootstraps and passes vacuously), folds it into the
+    baseline stamped with ``last_batch_id`` (when ``update_baseline``),
+    then writes one verdict row ``(batch_id, n_rows, psi, <second>,
+    passed, replayed)`` to ``verdicts_path`` (parquet partitioned by
+    batch_id, so the write is idempotent per batch).
+
+    Replay semantics: a reprocessed batch id <= ``last_batch_id`` is
+    already IN the baseline, so it is never folded again, and if its
+    verdict partition exists the original verdict stands (re-scoring
+    would self-compare and report artificially low drift). In the
+    narrow crash window where the fold committed but the verdict write
+    didn't, the replay's verdict row is written with ``replayed =
+    true`` so readers know it was measured against a baseline that
+    already contains the batch's own data."""
+
+    def _store(summary: DataFrame, batch_id: int) -> None:
+        stamped = summary.withColumn("last_batch_id", F.lit(batch_id))
+        # materialize before overwriting the dir the baseline was read from
+        rows = stamped.collect()
+        if rows:
+            baselines.write(task_key, bl_column, spark.createDataFrame(rows, stamped.schema))
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        n_rows = batch_df.count()
+        if n_rows == 0:
+            return
+        replayed = False
+        if baselines.exists(task_key, bl_column):
+            stored = baselines.read(task_key, bl_column)
+            last_seen = stored.select(F.max("last_batch_id")).collect()[0][0]
+            if last_seen is None:
+                last_seen = -1
+            if batch_id <= last_seen:
+                if _partition_has_parquet(spark, verdicts_path, batch_id):
+                    return
+                replayed = True
+            base = stored.drop("last_batch_id")
+            psi, other, now = score(base, batch_df)
+            passed = (psi if metric == "psi" else other) <= threshold
+            if update_baseline and batch_id > last_seen:
+                _store(fold(base, now), batch_id)
+        else:
+            psi, other, passed = 0.0, 0.0, True
+            _store(bootstrap(batch_df), batch_id)
+        verdict = spark.createDataFrame(
+            [(batch_id, n_rows, psi, other, bool(passed), replayed)],
+            f"batch_id long, n_rows long, psi double, {second} double,"
+            " passed boolean, replayed boolean",
+        )
+        (
+            verdict.write.mode("overwrite")
+            .partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(verdicts_path)
+        )
+        if on_batch is not None:
+            on_batch(batch_id, psi if metric == "psi" else other, bool(passed))
+
+    return _start_foreach_batch(stream_df, _process, checkpoint_dir, trigger_available_now)
 
 
 def drift_monitor_stream(
@@ -618,42 +712,26 @@ def drift_monitor_stream(
     """Continuous distribution-drift monitor (north-star: mergeable
     sketches vs baseline snapshots, streaming edition).
 
-    Per micro-batch, ``foreachBatch``:
+    Per micro-batch (``_drift_monitor`` drives the batches):
 
     1. build the batch's t-digest (``tdigest_sketch`` — partial/merge
        plan, only centroid rows leave the executors),
     2. compare it against the stored baseline digest with PSI/KS on the
        baseline's equal-mass bins (``tdigest_drift``; a batch whose
        column is entirely NULL is zero mass — maximal drift, FAIL),
-    3. append one verdict row ``(batch_id, n_rows, psi, ks, passed,
-       replayed)`` to ``verdicts_path`` (parquet, partitioned by
-       batch_id — the write is idempotent per batch, so checkpoint
-       replays after a crash cannot duplicate verdicts),
+    3. append one idempotent verdict row ``(batch_id, n_rows, psi, ks,
+       passed, replayed)`` to ``verdicts_path``,
     4. optionally FOLD the batch's digest into the baseline
        (``merge_tdigests``) so the baseline is a running sketch of
-       everything seen — the ``last_batch_id`` column stored with the
-       digest makes the merge replay-safe (a reprocessed batch id
-       <= last_batch_id is never re-merged).
+       everything seen; ``last_batch_id`` keeps the fold replay-safe.
 
-    Replay semantics: a reprocessed batch whose verdict partition
-    already exists is left untouched (the original score stands — a
-    replayed batch is already IN the merged baseline, so re-scoring it
-    would self-compare and report artificially low drift). In the
-    narrow crash window where the baseline merge committed but the
-    verdict write didn't, the replay's verdict row is written with
-    ``replayed = true`` so readers know its psi/ks were measured
-    against a baseline that already contains the batch's own data.
-
-    The first batch bootstraps the baseline (vacuous pass), exactly
-    like the batch engine's snapshot lifecycle.  Returns the
+    The first batch with mass bootstraps the baseline (vacuous pass),
+    exactly like the batch engine's snapshot lifecycle.  Returns the
     StreamingQuery.
 
-    Sketch family: t-digest only. The running-baseline fold needs a
-    MERGEABLE stored sketch; a KLL/percentile_approx summary
-    (DriftCheck sketch='kll') is already collapsed to quantile points
-    when stored, so it supports batch snapshot comparison but not this
-    incremental merge (histograms would merge, but the digest adapts
-    its support as the stream drifts — the right default here).
+    The running-baseline fold needs a MERGEABLE stored sketch; histograms
+    would merge too, but the digest adapts its support as the stream
+    drifts — the right default here.
     """
     from datapact_spark.operators.quantiles import (
         merge_tdigests,
@@ -661,83 +739,28 @@ def drift_monitor_stream(
         tdigest_sketch,
     )
 
-    bl_column = f"{column}__stream"
-
-    def _verdict_exists(batch_id: int) -> bool:
-        return _partition_has_parquet(spark, verdicts_path, batch_id)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return
-        replayed = False
+    def sketch(batch_df: DataFrame) -> DataFrame:
         # microbatches are small; skip the salted sub-merge level
-        dig_now = tdigest_sketch(batch_df, column, delta, merge_salt_buckets=1)
-        if baselines.exists(task_key, bl_column):
-            base = baselines.read(task_key, bl_column)
-            # None if the stored baseline is empty (bootstrapped from a
-            # batch whose column was entirely null)
-            last_seen = base.select(F.max("last_batch_id")).collect()[0][0]
-            if last_seen is None:
-                last_seen = -1
-            if batch_id <= last_seen:
-                # checkpoint replay of a batch already merged into the
-                # baseline: its original verdict (scored against a
-                # baseline that did NOT yet contain it) is the honest
-                # one — keep it untouched if it was committed
-                if _verdict_exists(batch_id):
-                    return
-                replayed = True  # crash between merge and verdict write
-            m = tdigest_drift(
-                base.drop("last_batch_id"), dig_now, bins=bins
-            ).collect()[0]
-            psi, ks = float(m["psi"] or 0.0), float(m["ks"] or 0.0)
-            passed = (psi if metric == "psi" else ks) <= threshold
-            if update_baseline and batch_id > last_seen:
-                merged = merge_tdigests(
-                    base.drop("last_batch_id"), dig_now, delta
-                ).withColumn("last_batch_id", F.lit(batch_id))
-                # materialize before overwriting the dir it was read from
-                rows = merged.collect()
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(rows, merged.schema),
-                )
-        else:
-            psi, ks, passed = 0.0, 0.0, True  # bootstrap batch
-            # an all-null column yields an empty digest — writing it
-            # would create a vacuous baseline dir; only bootstrap once
-            # there is real mass to compare against
-            boot = dig_now.withColumn("last_batch_id", F.lit(batch_id))
-            boot_rows = boot.collect()  # 0 or 1 rows
-            if boot_rows:
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(boot_rows, boot.schema),
-                )
-        verdict = spark.createDataFrame(
-            [(batch_id, n_rows, psi, ks, bool(passed), replayed)],
-            "batch_id long, n_rows long, psi double, ks double,"
-            " passed boolean, replayed boolean",
-        )
-        (
-            verdict.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(verdicts_path)
-        )
-        if on_batch is not None:
-            on_batch(batch_id, psi if metric == "psi" else ks, bool(passed))
+        return tdigest_sketch(batch_df, column, delta, merge_salt_buckets=1)
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    def score(base: DataFrame, batch_df: DataFrame):
+        now = sketch(batch_df)
+        m = tdigest_drift(base, now, bins=bins).collect()[0]
+        return float(m["psi"] or 0.0), float(m["ks"] or 0.0), now
+
+    return _drift_monitor(
+        spark, stream_df, baselines, task_key, f"{column}__stream",
+        checkpoint_dir, verdicts_path,
+        bootstrap=sketch,
+        score=score,
+        fold=lambda base, now: merge_tdigests(base, now, delta),
+        second="ks", metric=metric, threshold=threshold,
+        update_baseline=update_baseline,
+        trigger_available_now=trigger_available_now, on_batch=on_batch,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def kll_drift_monitor_stream(
+def categorical_drift_monitor_stream(
     spark: SparkSession,
     stream_df: DataFrame,
     column: str,
@@ -746,169 +769,70 @@ def kll_drift_monitor_stream(
     checkpoint_dir: str,
     verdicts_path: str,
     *,
-    bins: int = 10,
-    accuracy: int = 10_000,
-    metric: str = "psi",
-    threshold: float = 0.2,
+    top_k: int = 20,
+    metric: str = "tv",
+    threshold: float = 0.1,
     update_baseline: bool = True,
     trigger_available_now: bool = True,
     on_batch: Callable[[int, float, bool], None] | None = None,
 ):
-    """Continuous drift monitor for ``sketch='kll'`` configs — the
-    quantile-grid sibling of ``drift_monitor_stream``.
+    """Continuous CATEGORICAL drift monitor — the frequency sibling of
+    ``drift_monitor_stream``. Category counts are trivially mergeable
+    (they add), so the running baseline is exact forever.
 
-    The stored KLL form (percentile_approx quantile points) is already
-    collapsed, so unlike the t-digest it cannot be re-merged as a
-    running sketch. What IS exactly mergeable is the bin-count frame
-    it induces: the bootstrap batch's KLL sketch fixes ``bins``
-    equal-mass bin EDGES (baseline quantiles at k/bins — the same
-    comparison contract as ``kll_drift``), and from then on the
-    running baseline is per-bin COUNTS on that frozen grid, which add
-    exactly (the same fixed-frame contract as
-    ``categorical_drift_monitor_stream`` and the windowed-drift grid).
-    Edges are frozen at bootstrap — a stream whose support migrates
-    far off the bootstrap grid should re-bootstrap (delete the
-    baseline) or use the t-digest monitor, whose support adapts.
-
-    Per micro-batch: count batch rows on the frozen grid (one JVM
-    conditional aggregate — bin of a value is 1 + #(edges < value)),
-    score PSI / KS against the running baseline counts (deterministic
-    bin-ordered folds), append one idempotent verdict row
-    ``(batch_id, n_rows, psi, ks, passed, replayed)``, then add the
-    batch's counts into the baseline guarded by ``last_batch_id``.
-    Replay semantics identical to the other monitors: committed
-    verdicts are kept; a crash-window rescore is flagged ``replayed``
-    (it self-compares against a baseline already containing the
-    batch)."""
-    from datapact_spark.operators.drift import _EPS  # noqa: PLC2701
-    from datapact_spark.operators.quantiles import (
-        KLL_POINTS_PER_BIN,
-        _kll_edges,
-        kll_sketch,
+    Per micro-batch: fold the batch onto the stored frame (the FIRST
+    batch's top-``top_k`` categories + ``__OTHER__`` — novel later
+    categories pool into __OTHER__, the standard fixed-frame monitoring
+    contract), score psi / total-variation against the running
+    baseline, append one idempotent verdict row ``(batch_id, n_rows,
+    psi, tv, passed, replayed)``, then add the batch's counts into the
+    baseline. Replay semantics are the numeric monitor's (one loop,
+    ``_drift_monitor``)."""
+    from datapact_spark.operators.drift import (
+        OTHER_CATEGORY,
+        categorical_snapshot,
+        category_counts,
     )
+    from datapact_spark.operators.drift import _EPS  # noqa: PLC2701
 
-    bl_column = f"{column}__kll_stream"
+    def counts(base: DataFrame) -> dict:
+        return {r["category"]: r["cnt"] for r in base.collect()}  # <= top_k + 1
 
-    def _verdict_exists(batch_id: int) -> bool:
-        return _partition_has_parquet(spark, verdicts_path, batch_id)
-
-    def _bin_counts(batch_df: DataFrame, edges: list[float]) -> dict[int, int]:
-        c = F.col(column).cast("double")
-        b = F.lit(1)
-        for e in edges:
-            b = b + F.when(c > F.lit(e), 1).otherwise(0)
-        rows = (
-            batch_df.where(c.isNotNull())
-            .select(b.alias("bin"))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )  # <= bins rows
-        return {int(r["bin"]): int(r["cnt"]) for r in rows}
-
-    def _score(p_cnt: dict[int, int], q_cnt: dict[int, int]) -> tuple[float, float]:
-        # tiny frames (<= bins entries) — deterministic bin-ordered
-        # folds, same psi arithmetic as the categorical monitor and
-        # the batch psi_ks_from_counts tail
+    def score(base: DataFrame, batch_df: DataFrame):
+        # tiny frames — plain python, deterministic category-ordered
+        # folds, same arithmetic as the batch path
         import math
 
-        p_tot = sum(p_cnt.values()) or 1
-        q_tot = sum(q_cnt.values()) or 1
-        psi = ks = 0.0
-        p_run = q_run = 0
-        for b in range(1, bins + 1):
-            p = p_cnt.get(b, 0) / float(p_tot)
-            q = q_cnt.get(b, 0) / float(q_tot)
+        base_counts = counts(base)
+        frame = [c for c in base_counts if c != OTHER_CATEGORY]
+        cats = spark.createDataFrame([(c,) for c in frame], "category string")
+        now = counts(category_counts(batch_df, column, cats))
+        p_tot = sum(base_counts.values()) or 1
+        q_tot = sum(now.values()) or 1
+        psi = tv = 0.0
+        for c in sorted(set(base_counts) | set(now)):
+            p = base_counts.get(c, 0) / float(p_tot)
+            q = now.get(c, 0) / float(q_tot)
             psi += (p + _EPS - (q + _EPS)) * math.log((p + _EPS) / (q + _EPS))
-            # CDFs from exact running counts: a full side ends at 1.0
-            p_run += p_cnt.get(b, 0)
-            q_run += q_cnt.get(b, 0)
-            ks = max(ks, abs(p_run / float(p_tot) - q_run / float(q_tot)))
-        return psi, ks
+            tv += abs(p - q)
+        return psi, tv * 0.5, now
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return
-        replayed = False
-        if baselines.exists(task_key, bl_column):
-            base_rows = baselines.read(task_key, bl_column).collect()  # <= bins
-            last_seen = max((r["last_batch_id"] for r in base_rows), default=-1)
-            if batch_id <= last_seen:
-                if _verdict_exists(batch_id):
-                    return
-                replayed = True
-            edges = sorted(
-                r["edge_hi"] for r in base_rows if r["edge_hi"] is not None
-            )
-            base_counts = {r["bin"]: r["cnt"] for r in base_rows}
-            # a batch whose column is entirely null has empty counts:
-            # zero mass, maximal drift (FAIL), like the t-digest monitor
-            # and the batch drift check; it folds nothing into the baseline
-            now_counts = _bin_counts(batch_df, edges)
-            psi, ks = _score(base_counts, now_counts)
-            passed = (psi if metric == "psi" else ks) <= threshold
-            if update_baseline and batch_id > last_seen:
-                edge_by_bin = {r["bin"]: r["edge_hi"] for r in base_rows}
-                merged = [
-                    (
-                        b,
-                        edge_by_bin.get(b),
-                        base_counts.get(b, 0) + now_counts.get(b, 0),
-                        batch_id,
-                    )
-                    for b in range(1, bins + 1)
-                ]
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(
-                        merged,
-                        "bin int, edge_hi double, cnt long, last_batch_id long",
-                    ),
-                )
-        else:
-            psi, ks, passed = 0.0, 0.0, True  # bootstrap batch
-            sk = kll_sketch(batch_df, column, bins, accuracy)
-            edge_rows = _kll_edges(sk, bins, KLL_POINTS_PER_BIN).collect()
-            if edge_rows:  # empty when the column was entirely null
-                edges = sorted(float(r["__e"]) for r in edge_rows)
-                counts = _bin_counts(batch_df, edges)
-                boot = [
-                    (
-                        b,
-                        edges[b - 1] if b <= len(edges) else None,
-                        counts.get(b, 0),
-                        batch_id,
-                    )
-                    for b in range(1, bins + 1)
-                ]
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(
-                        boot,
-                        "bin int, edge_hi double, cnt long, last_batch_id long",
-                    ),
-                )
-        verdict = spark.createDataFrame(
-            [(batch_id, n_rows, psi, ks, bool(passed), replayed)],
-            "batch_id long, n_rows long, psi double, ks double,"
-            " passed boolean, replayed boolean",
-        )
-        (
-            verdict.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(verdicts_path)
-        )
-        if on_batch is not None:
-            on_batch(batch_id, psi if metric == "psi" else ks, bool(passed))
+    def fold(base: DataFrame, now: dict) -> DataFrame:
+        merged = counts(base)
+        for c, n in now.items():
+            merged[c] = merged.get(c, 0) + n
+        return spark.createDataFrame(list(merged.items()), "category string, cnt long")
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _drift_monitor(
+        spark, stream_df, baselines, task_key, f"{column}__cat_stream",
+        checkpoint_dir, verdicts_path,
+        bootstrap=lambda batch_df: categorical_snapshot(batch_df, column, top_k),
+        score=score,
+        fold=fold,
+        second="tv", metric=metric, threshold=threshold,
+        update_baseline=update_baseline,
+        trigger_available_now=trigger_available_now, on_batch=on_batch,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_drift_profile(
@@ -988,129 +912,3 @@ def windowed_drift_scores(
         )
     )
     return psi_ks_from_counts(merged, group_cols).select(*group_cols, "psi", "ks")
-
-
-def categorical_drift_monitor_stream(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    column: str,
-    baselines,
-    task_key: str,
-    checkpoint_dir: str,
-    verdicts_path: str,
-    *,
-    top_k: int = 20,
-    metric: str = "tv",
-    threshold: float = 0.1,
-    update_baseline: bool = True,
-    trigger_available_now: bool = True,
-    on_batch: Callable[[int, float, bool], None] | None = None,
-):
-    """Continuous CATEGORICAL drift monitor — the frequency sibling of
-    ``drift_monitor_stream``. Category counts are trivially mergeable
-    (they add), so the running baseline is exact forever.
-
-    Per micro-batch: fold the batch onto the stored frame (the FIRST
-    batch's top-``top_k`` categories + ``__OTHER__`` — novel later
-    categories pool into __OTHER__, the standard fixed-frame monitoring
-    contract), score psi / total-variation against the running
-    baseline, append one idempotent verdict row ``(batch_id, n_rows,
-    psi, tv, passed, replayed)``, then add the batch's counts into the
-    baseline. Replay semantics identical to the numeric monitor:
-    committed verdicts are kept; a crash-window rescore is flagged
-    ``replayed`` (it self-compares against a baseline already
-    containing the batch)."""
-    from datapact_spark.operators.drift import (
-        OTHER_CATEGORY,
-        categorical_snapshot,
-        category_counts,
-    )
-    from datapact_spark.operators.drift import _EPS  # noqa: PLC2701
-
-    bl_column = f"{column}__cat_stream"
-
-    def _verdict_exists(batch_id: int) -> bool:
-        return _partition_has_parquet(spark, verdicts_path, batch_id)
-
-    def _score(base_rows, now_rows) -> tuple[float, float]:
-        # tiny frames (<= top_k + 1 rows) — plain python, deterministic
-        # category-ordered folds, same arithmetic as the batch path
-        import math
-
-        cats = sorted(set(base_rows) | set(now_rows))
-        p_tot = sum(base_rows.values()) or 1
-        q_tot = sum(now_rows.values()) or 1
-        psi = tv = 0.0
-        for c in cats:
-            p = base_rows.get(c, 0) / float(p_tot)
-            q = now_rows.get(c, 0) / float(q_tot)
-            psi += (p + _EPS - (q + _EPS)) * math.log((p + _EPS) / (q + _EPS))
-            tv += abs(p - q)
-        return psi, tv * 0.5
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return
-        replayed = False
-        if baselines.exists(task_key, bl_column):
-            base = baselines.read(task_key, bl_column)
-            rows = base.collect()  # <= top_k + 1 rows + batch marker
-            last_seen = max((r["last_batch_id"] for r in rows), default=-1)
-            if batch_id <= last_seen:
-                if _verdict_exists(batch_id):
-                    return
-                replayed = True
-            base_counts = {r["category"]: r["cnt"] for r in rows}
-            frame = [c for c in base_counts if c != OTHER_CATEGORY]
-            cats = spark.createDataFrame(
-                [(c,) for c in frame], "category string"
-            )
-            now_rows = {
-                r["category"]: r["cnt"]
-                for r in category_counts(batch_df, column, cats).collect()
-            }
-            psi, tv = _score(base_counts, now_rows)
-            passed = (psi if metric == "psi" else tv) <= threshold
-            if update_baseline and batch_id > last_seen:
-                merged = dict(base_counts)
-                for c, n in now_rows.items():
-                    merged[c] = merged.get(c, 0) + n
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(
-                        [(c, n, batch_id) for c, n in merged.items()],
-                        "category string, cnt long, last_batch_id long",
-                    ),
-                )
-        else:
-            psi, tv, passed = 0.0, 0.0, True  # bootstrap batch
-            boot = categorical_snapshot(batch_df, column, top_k).withColumn(
-                "last_batch_id", F.lit(batch_id)
-            )
-            rows = boot.collect()
-            if rows:
-                baselines.write(
-                    task_key, bl_column,
-                    spark.createDataFrame(rows, boot.schema),
-                )
-        verdict = spark.createDataFrame(
-            [(batch_id, n_rows, psi, tv, bool(passed), replayed)],
-            "batch_id long, n_rows long, psi double, tv double,"
-            " passed boolean, replayed boolean",
-        )
-        (
-            verdict.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(verdicts_path)
-        )
-        if on_batch is not None:
-            on_batch(batch_id, psi if metric == "psi" else tv, bool(passed))
-
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -314,3 +314,27 @@ class TestRound2Validators:
                     {"column": "v", "metric": "psi"},
                 ]
             )
+
+
+class TestDriftSketch:
+    def test_sketch_families(self):
+        from datapact_spark.config import DriftCheck
+
+        for family in ("histogram", "tdigest"):
+            assert DriftCheck(column="x", sketch=family).sketch == family
+        with pytest.raises(ValidationError, match="'histogram' or 'tdigest'"):
+            DriftCheck(column="x", sketch="histgram")
+
+    def test_removed_kll_sketch_fails_at_load(self, tmp_path):
+        p = tmp_path / "c.yml"
+        p.write_text(
+            "validations:\n"
+            "  - task_key: t\n"
+            "    source: a\n"
+            "    target: b\n"
+            "    drift_checks:\n"
+            "      - column: x\n"
+            "        sketch: kll\n"
+        )
+        with pytest.raises(ValidationError, match="removed; use sketch: tdigest"):
+            load_config(p)

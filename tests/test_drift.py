@@ -157,22 +157,6 @@ def test_grouped_drift_in_partitioned_task(spark, tmp_path):
     assert rows["g2"]["drift_x_psi_passed"] is False
     assert rows["g2"]["overall_validation_passed"] is False
 
-    # same verdict decisions through the grouped KLL sketch path
-    task_kll = ValidationTask(
-        task_key="gdk", source="s", target="t", partition_by=["grp"],
-        count_tolerance=0.0,
-        drift_checks=[{
-            "column": "x", "metric": "ks", "threshold": 0.1, "sketch": "kll",
-        }],
-    )
-    rows = {
-        r["grp"]: r
-        for r in compile_partition_verdicts(spark, task_kll, resolver).collect()
-    }
-    assert rows["g1"]["drift_x_ks_passed"] is True
-    assert rows["g2"]["drift_x_ks_passed"] is False
-    assert rows["g2"]["overall_validation_passed"] is False
-
 
 def test_snapshot_baseline_lifecycle(spark, dists, tmp_path):
     """Snapshot-mode drift: run 1 bootstraps the baseline (vacuous
@@ -416,7 +400,6 @@ def test_categorical_drift_monitor_stream(spark, tmp_path):
 _FAMILY_CHECKS = {
     "histogram": dict(column="x", bins=16),
     "tdigest": dict(column="x", sketch="tdigest", bins=8),
-    "kll": dict(column="x", sketch="kll", bins=8),
     "categorical": dict(column="c", kind="categorical", bins=4),
 }
 
@@ -442,7 +425,7 @@ def family_frames(spark):
 
 @pytest.mark.parametrize(
     "family,metric",
-    [(f, m) for f in ("histogram", "tdigest", "kll") for m in ("psi", "ks")]
+    [(f, m) for f in ("histogram", "tdigest") for m in ("psi", "ks")]
     + [("categorical", "psi"), ("categorical", "tv")],
 )
 def test_task_level_drift_equals_one_group_drift(spark, family_frames, family, metric):
@@ -491,7 +474,7 @@ def test_all_null_side_fails_drift(spark, family_frames, family, mode, tmp_path)
     ``baseline_`` modes make the baseline side all NULL: the source in
     two-sample and per-group mode (where a group with no baseline rows
     at all is zero mass too), the stored snapshot in snapshot mode
-    (t-digest and KLL read NULL or 0.0 there, and a snapshot of an
+    (t-digest read NULL there, and a snapshot of an
     all-NULL source stored no rows, so every later compare passed)."""
     from datapact_spark.ledger import BaselineStore
     from datapact_spark.operators.drift import baseline_snapshot

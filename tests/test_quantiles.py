@@ -1,7 +1,7 @@
 """t-digest quantile sketch: accuracy, mergeability, drift wiring.
 
-North-star: "distribution drift via t-digest/KLL sketches compared
-against baseline snapshots with PSI/KS thresholds" (BASELINE.json).
+North-star (BASELINE.json): distribution drift via quantile sketches
+compared against baseline snapshots with PSI/KS thresholds.
 """
 
 import math
@@ -222,6 +222,78 @@ def test_drift_check_tdigest_two_sample_e2e(spark, skewed_df):
     ).collect()[0][0] == pytest.approx(0.0, abs=1e-12)
 
 
+def _exact_equal_mass_psi_ks(base: np.ndarray, now: np.ndarray, bins: int):
+    """The oracle of ``sketch='tdigest'``: edges at the baseline's exact
+    quantiles, open tails, a value in bin 1 + #(interior edges below
+    it), and the same eps-smoothed PSI terms as the shared tail."""
+    eps = 1e-6
+    inner = np.quantile(base, np.linspace(0.0, 1.0, bins + 1))[1:-1]
+    p = np.bincount(np.searchsorted(inner, base), minlength=bins) / len(base)
+    q = np.bincount(np.searchsorted(inner, now), minlength=bins) / len(now)
+    psi = float(np.sum((p + eps - (q + eps)) * np.log((p + eps) / (q + eps))))
+    ks = float(np.max(np.abs(np.cumsum(p) - np.cumsum(q))))
+    return psi, ks
+
+
+def test_tdigest_drift_matches_exact_equal_mass_oracle(spark):
+    """t-digest PSI/KS track exact equal-mass binning on 20k lognormal
+    rows against a x1.05 scale shift, a mu+0.2 shift and sigma 1.2 —
+    task level and per group (one shift per group)."""
+    from datapact_spark.config import DriftCheck
+    from datapact_spark.operators.drift import drift_metrics
+
+    rng = np.random.default_rng(7)
+    n = 20_000
+    base = rng.lognormal(0.0, 1.0, n)
+    shifts = {
+        "scale": base * 1.05,
+        "mu": rng.lognormal(0.2, 1.0, n),
+        "sigma": rng.lognormal(0.0, 1.2, n),
+    }
+
+    def frame(groups: dict):
+        import pandas as pd
+
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {"g": np.repeat(list(groups), [len(v) for v in groups.values()]),
+                 "x": np.concatenate(list(groups.values()))}
+            )
+        )
+
+    def check_close(metric, got, base_v, now_v):
+        psi, ks = _exact_equal_mass_psi_ks(base_v, now_v, 10)
+        if metric == "psi":
+            # 2.5 %, floored at 1e-4 absolute: at 20k rows a PSI near
+            # 0.002 (the x1.05 case) moves by ~7e-5 with the partials'
+            # arrival order, 3 % of its value
+            assert got == pytest.approx(psi, rel=0.025, abs=1e-4), (got, psi)
+        else:
+            assert got == pytest.approx(ks, abs=0.0015), (got, ks)
+
+    src = frame({"b": base})
+    for metric in ("psi", "ks"):
+        check = DriftCheck(column="x", metric=metric, sketch="tdigest", bins=10)
+        for name, now in shifts.items():
+            (row,) = drift_metrics(src, frame({"b": now}), check).collect()
+            check_close(metric, row[f"drift_{metric}_x"], base, now)
+
+    # two groups, each with its own baseline and its own shift
+    base2 = rng.lognormal(1.0, 0.5, n)
+    now2 = rng.lognormal(1.2, 0.5, n)
+    for metric in ("psi", "ks"):
+        check = DriftCheck(column="x", metric=metric, sketch="tdigest", bins=10)
+        rows = drift_metrics(
+            frame({"a": base, "b": base2}),
+            frame({"a": shifts["scale"], "b": now2}),
+            check,
+            ["g"],
+        ).collect()
+        got = {r["g"]: r[f"drift_{metric}_x"] for r in rows}
+        check_close(metric, got["a"], base, shifts["scale"])
+        check_close(metric, got["b"], base2, now2)
+
+
 def test_engine_tdigest_snapshot_lifecycle(spark, tables, tmp_path):
     """Bootstrap run persists the digest; a later drifted run compares
     against it and fails the threshold (the north-star snapshot
@@ -270,103 +342,6 @@ def test_engine_tdigest_snapshot_lifecycle(spark, tables, tmp_path):
     )
     r3 = engine.run(cfg(), job_name="drifted")
     assert r3.failed_task_keys == ["td_snap"]
-
-
-def test_kll_drift_separates_same_from_shifted(spark, tables):
-    """sketch='kll' core: same distribution scores ~0; a shifted copy
-    scores high on both psi and ks."""
-    from datapact_spark.operators.quantiles import kll_drift, kll_sketch
-
-    orders = tables["orders"]
-    base = kll_sketch(orders, "o_totalprice", bins=10)
-    same = kll_drift(base, kll_sketch(orders, "o_totalprice", bins=10), 10).collect()[0]
-    assert same["ks"] == 0.0 and abs(same["psi"]) < 1e-6
-    shifted = orders.withColumn("o_totalprice", F.col("o_totalprice") * 3.0)
-    far = kll_drift(base, kll_sketch(shifted, "o_totalprice", bins=10), 10).collect()[0]
-    assert far["ks"] > 0.3 and far["psi"] > 0.5
-
-
-def test_kll_drift_single_bin_is_zero(spark, tables):
-    """bins==1: no interior edges exist, every point of both summaries
-    lands in the single bin, so drift is 0 by construction — the edge
-    cross join would otherwise drop all point rows and return nulls."""
-    from datapact_spark.operators.quantiles import kll_drift, kll_sketch
-
-    orders = tables["orders"]
-    base = kll_sketch(orders, "o_totalprice", bins=10)
-    shifted = kll_sketch(
-        orders.withColumn("o_totalprice", F.col("o_totalprice") * 3.0),
-        "o_totalprice",
-        bins=10,
-    )
-    row = kll_drift(base, shifted, bins=1).collect()[0]
-    assert row["psi"] == 0.0 and row["ks"] == 0.0
-
-
-def test_grouped_kll_drift(spark, skewed_df):
-    from datapact_spark.operators.quantiles import kll_drift, kll_sketch
-
-    src = skewed_df
-    tgt = src.withColumn(
-        "v", F.when(F.col("grp") == 2, F.col("v") + 500.0).otherwise(F.col("v"))
-    )
-    rows = {
-        r["grp"]: r
-        for r in kll_drift(
-            kll_sketch(src, "v", 8, group_cols=["grp"]),
-            kll_sketch(tgt, "v", 8, group_cols=["grp"]),
-            8,
-            group_cols=["grp"],
-        ).collect()
-    }
-    assert rows[2]["ks"] > 0.3
-    assert all(r["ks"] < 0.05 for g, r in rows.items() if g != 2)
-
-
-def test_kll_snapshot_lifecycle(spark, tables, tmp_path):
-    """DriftCheck sketch='kll' end-to-end: bootstrap persists the
-    quantile-summary snapshot, an identical second run passes, a
-    drifted third run fails — mirroring the t-digest lifecycle."""
-    from datapact_spark.config import DataPactConfig, ValidationTask
-    from datapact_spark.engine import DataPactEngine
-    from datapact_spark.sources.loader import TableResolver
-
-    def cfg():
-        return DataPactConfig(
-            validations=[
-                ValidationTask(
-                    task_key="kll_snap",
-                    source="orders",
-                    target="orders",
-                    primary_keys=["o_orderkey"],
-                    drift_checks=[
-                        {
-                            "column": "o_totalprice",
-                            "metric": "ks",
-                            "threshold": 0.05,
-                            "sketch": "kll",
-                            "bins": 10,
-                            "baseline": "snapshot",
-                        }
-                    ],
-                )
-            ]
-        )
-
-    resolver = TableResolver(spark)
-    resolver.register("orders", tables["orders"])
-    engine = DataPactEngine(spark, resolver, results_path=str(tmp_path / "res"))
-    r1 = engine.run(cfg(), job_name="boot")
-    assert r1.passed
-    snap = engine.baselines.read("kll_snap", "o_totalprice")
-    assert {"prob", "quantile", "cnt"} <= set(snap.columns)
-    assert engine.run(cfg(), job_name="same").passed
-    resolver.register(
-        "orders",
-        tables["orders"].withColumn("o_totalprice", F.col("o_totalprice") * 3.0),
-    )
-    r3 = engine.run(cfg(), job_name="drifted")
-    assert r3.failed_task_keys == ["kll_snap"]
 
 
 def test_exact_quantile_drift_terms(spark, tables):
@@ -729,24 +704,6 @@ def test_drift_monitor_stream_all_null_first_batch(spark, tmp_path):
     assert snap["total"] == pytest.approx(10_000)
 
 
-def test_approx_quantile_sketch_matches_exact_within_bound(spark, skewed_df):
-    from datapact_spark.operators.quantiles import approx_quantile_sketch
-
-    probs = [0.1, 0.5, 0.9]
-    rows = approx_quantile_sketch(skewed_df, "v", probs, accuracy=10_000).collect()
-    assert len(rows) == 3 and all(r["cnt"] == 100_000 for r in rows)
-    v = np.sort(np.array([x["v"] for x in skewed_df.select("v").collect()]))
-    for r in rows:
-        rank = np.searchsorted(v, r["quantile"]) / len(v)
-        assert abs(rank - r["prob"]) <= 1e-4 + 1e-3  # 1/accuracy + slack
-
-    grouped = approx_quantile_sketch(
-        skewed_df, "v", [0.5], accuracy=10_000, group_cols=["grp"]
-    ).collect()
-    assert {r["grp"] for r in grouped} == {0, 1, 2, 3}
-    assert all(r["cnt"] == 25_000 for r in grouped)
-
-
 def test_tdigest_two_level_merge_exact_regime_identical(spark, tables):
     """The salted sub-merge level (bounds the final per-group merge at
     merge_salt_buckets rows) must be byte-identical to the one-level
@@ -788,132 +745,3 @@ def test_tdigest_two_level_merge_general_regime_accuracy(spark, tables):
     }
     for p in probs:
         assert abs(ranks[p] - p) < 0.05, (p, ranks[p], est[p], exact)
-
-
-def test_kll_drift_monitor_stream(spark, tmp_path):
-    """sketch='kll' streaming monitor: bootstrap freezes the KLL
-    equal-mass grid, in-distribution batch passes, drifted batch
-    fails; the running baseline is exact additive bin counts with the
-    same replay-honest semantics as the t-digest monitor."""
-    from datapact_spark.ledger import BaselineStore
-    from datapact_spark.streaming.incremental import kll_drift_monitor_stream
-
-    src_dir = str(tmp_path / "src")
-    base = spark.range(20_000).select(
-        (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0).alias("v")
-    )
-    base.coalesce(1).write.mode("append").parquet(src_dir)
-    spark.range(20_000, 40_000).select(
-        (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0).alias("v")
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-    spark.range(40_000, 60_000).select(
-        (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0 + 200.0).alias("v")
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-
-    baselines = BaselineStore(spark, str(tmp_path / "res"))
-    verdicts_path = str(tmp_path / "verdicts")
-    stream = (
-        spark.readStream.schema("v double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = kll_drift_monitor_stream(
-        spark, stream, "v", baselines, "mon", str(tmp_path / "ckpt"),
-        verdicts_path, metric="ks", threshold=0.1,
-    )
-    q.awaitTermination(120)
-    verdicts = {
-        r["batch_id"]: r for r in spark.read.parquet(verdicts_path).collect()
-    }
-    assert len(verdicts) == 3
-    assert verdicts[0]["passed"] and verdicts[0]["ks"] == 0.0  # bootstrap
-    assert verdicts[1]["passed"] and verdicts[1]["ks"] < 0.05
-    assert not verdicts[2]["passed"] and verdicts[2]["ks"] > 0.5
-    snap = baselines.read("mon", "v__kll_stream").collect()
-    assert max(r["last_batch_id"] for r in snap) == 2
-    assert sum(r["cnt"] for r in snap) == 60_000
-    # the grid is frozen from bootstrap: bins-1 finite edges + 1 open
-    assert sum(1 for r in snap if r["edge_hi"] is None) == 1
-
-    # replay safety: restart on the same checkpoint — no duplicate
-    # verdicts, no double-fold
-    q2 = kll_drift_monitor_stream(
-        spark, stream, "v", baselines, "mon", str(tmp_path / "ckpt"),
-        verdicts_path, metric="ks", threshold=0.1,
-    )
-    q2.awaitTermination(60)
-    assert spark.read.parquet(verdicts_path).count() == 3
-    snap2 = baselines.read("mon", "v__kll_stream").collect()
-    assert sum(r["cnt"] for r in snap2) == 60_000
-
-    import os as _os
-    import shutil as _shutil
-
-    def _uncommit(batch: int) -> None:
-        for f in (str(batch), f".{batch}.crc"):
-            p = str(tmp_path / "ckpt" / "commits" / f)
-            if _os.path.exists(p):
-                _os.remove(p)
-
-    # forced replay with the verdict committed: original score kept
-    _uncommit(2)
-    q3 = kll_drift_monitor_stream(
-        spark, stream, "v", baselines, "mon", str(tmp_path / "ckpt"),
-        verdicts_path, metric="ks", threshold=0.1,
-    )
-    q3.awaitTermination(60)
-    kept = {r["batch_id"]: r for r in spark.read.parquet(verdicts_path).collect()}
-    assert len(kept) == 3
-    assert kept[2]["ks"] == verdicts[2]["ks"] and not kept[2]["replayed"]
-
-    # crash window: baseline folded but verdict missing — replay writes
-    # a flagged self-compared verdict and does not double-fold
-    _uncommit(2)
-    _shutil.rmtree(str(tmp_path / "verdicts" / "batch_id=2"))
-    q4 = kll_drift_monitor_stream(
-        spark, stream, "v", baselines, "mon", str(tmp_path / "ckpt"),
-        verdicts_path, metric="ks", threshold=0.1,
-    )
-    q4.awaitTermination(60)
-    redo = {r["batch_id"]: r for r in spark.read.parquet(verdicts_path).collect()}
-    assert len(redo) == 3 and redo[2]["replayed"]
-    assert redo[2]["ks"] < verdicts[2]["ks"]
-    snap3 = baselines.read("mon", "v__kll_stream").collect()
-    assert max(r["last_batch_id"] for r in snap3) == 2
-    assert sum(r["cnt"] for r in snap3) == 60_000
-
-
-def test_kll_monitor_all_null_batch_fails(spark, tmp_path):
-    """A post-bootstrap batch whose column is entirely null is zero
-    mass: it FAILs with ks 1.0, like the t-digest monitor, and still
-    folds nothing into the baseline while advancing its replay guard."""
-    from datapact_spark.ledger import BaselineStore
-    from datapact_spark.streaming.incremental import kll_drift_monitor_stream
-
-    src_dir = str(tmp_path / "src")
-    spark.range(5_000).select(
-        (F.col("id") % 100).cast("double").alias("v")
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-    spark.range(100).select(
-        F.lit(None).cast("double").alias("v")
-    ).coalesce(1).write.mode("append").parquet(src_dir)
-
-    baselines = BaselineStore(spark, str(tmp_path / "res"))
-    stream = (
-        spark.readStream.schema("v double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = kll_drift_monitor_stream(
-        spark, stream, "v", baselines, "mon_null", str(tmp_path / "ckpt"),
-        str(tmp_path / "verdicts"), metric="ks", threshold=0.1,
-    )
-    q.awaitTermination(120)
-    verdicts = {
-        r["batch_id"]: r
-        for r in spark.read.parquet(str(tmp_path / "verdicts")).collect()
-    }
-    assert not verdicts[1]["passed"] and verdicts[1]["ks"] == 1.0
-    snap = baselines.read("mon_null", "v__kll_stream").collect()
-    assert sum(r["cnt"] for r in snap) == 5_000  # nothing spurious folded
-    assert max(r["last_batch_id"] for r in snap) == 1  # replay guard advanced

@@ -17,7 +17,7 @@ it), and diffs the two dumps:
 Configs covered: the demo, every ``examples/*.yml`` with validations
 (run twice, so snapshot drift checks bootstrap and then compare), the
 benchmark's ``validate_tables`` config on its seed-3 inputs, and a drift
-matrix — 4 sketch families × 2 metrics × {two-sample, snapshot
+matrix — 3 sketch families × 2 metrics × {two-sample, snapshot
 bootstrap + compare} × {task level, ``partition_by``} — on a drifted and
 on an all-NULL target. Floats are dumped with ``repr`` (round-trip
 exact); freshness ``age_hours`` (wall-clock dependent) is dropped.
@@ -127,7 +127,7 @@ def dump(repo: str, out: str, work: str, sf_dir: str) -> None:
     all_null = orders.withColumn("o_totalprice", F.lit(None).cast("double")).withColumn(
         "o_orderstatus", F.lit(None).cast("string"))
     families = [("histogram", "numeric", ("psi", "ks")), ("tdigest", "numeric", ("psi", "ks")),
-                ("kll", "numeric", ("psi", "ks")), ("histogram", "categorical", ("psi", "tv"))]
+                ("histogram", "categorical", ("psi", "tv"))]
 
     def matrix(baseline):
         tasks = []

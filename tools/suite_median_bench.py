@@ -126,7 +126,10 @@ def main() -> None:
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
     ap.add_argument("--cpus",
-                    default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+                    default=os.environ.get("SPARK_GRAFT_CPUS",
+                                           str(len(os.sched_getaffinity(0)))),
+                    help="local[N] cores (default: $SPARK_GRAFT_CPUS, else "
+                         "the cores this process may run on)")
     ap.add_argument("--repo", default=os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))))
     ap.add_argument("--child", action="store_true", help=argparse.SUPPRESS)
