@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SEP = "\x1f"
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -312,60 +310,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return exact_duplicates(dup_input).select("keep_id", "dup_id")
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 of normalized text per doc."""
-    from datapact_spark.operators.textops import doc_fingerprint
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return doc_fingerprint(docs).select("doc_id", "fingerprint")
-
-
-def q_minhash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-ingest near-dup probe: a NEW batch (every 13th doc
-    perturbed at the tail, ids +2M, plus one unrelated doc) probed
-    against the indexed corpus band relation — the corpus side never
-    reshuffles (broadcast probe, plan-asserted in tests). STRICT
-    oracle: DuckDB computes exact all-pairs new-vs-corpus word-3-gram
-    Jaccard ground truth; found == truth at the same bands=16/r=2
-    recall margin as minhash_dedup. In-repo (extended) entry."""
-    from datapact_spark.operators.dedup import (
-        minhash_band_hashes,
-        minhash_signatures,
-        probe_near_dups,
-    )
-
-    corpus = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    news = corpus.where(F.col("doc_id") % 13 == 0).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz")).alias("text"),
-    ).unionByName(
-        spark.createDataFrame(
-            [(9_900_001, "zq wq vq uq totally unrelated probe tokens")],
-            "doc_id long, text string",
-        )
-    )
-    sigs = minhash_signatures(corpus, num_hashes=32)
-    corpus_bands = minhash_band_hashes(sigs, bands=16, rows_per_band=2)
-    return probe_near_dups(
-        news, corpus, corpus_bands,
-        num_hashes=32, bands=16, threshold=0.5,
-    ).orderBy("new_id", "corpus_id")
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style intra-document repetition filters (dup-token mass,
-    top-token share, top-bigram share) — the standard quality gates a
-    training pipeline applies before dedup. STRICT oracle: every count
-    is exact and every fraction a single IEEE division, so DuckDB
-    recomputes the full feature row bitwise from the same tokenization.
-    In-repo (extended) board entry — the driver cap holds the active
-    board at 50."""
-    from datapact_spark.operators.textops import repetition_stats
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return repetition_stats(docs).withColumnRenamed("id", "doc_id")
 
 
 def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,44 +638,6 @@ def q_code_near_clones(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_clone_pairs(code).orderBy("file_a", "file_b")
 
 
-def q_code_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language complexity/style rollup over the derived code
-    table: branch-keyword decision points (AST-less cyclomatic
-    approximation), comment-line counts, and densities derived as one
-    IEEE division of exact integer sums. STRICT oracle: regexp_count ==
-    len(regexp_extract_all) for the same RE2-portable patterns. In-repo
-    (extended registry) entry."""
-    from datapact_spark.operators.codeops import complexity_rollup
-
-    return complexity_rollup(_code_table(spark, sf_dir)).orderBy("lang")
-
-
-
-def q_freshness_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-partition freshness (SLA) verdicts through the engine's
-    grouped profile fold: per event_type MAX(ts) with a 24h budget.
-    The events corpus is pinned at 2024-01, so every group is
-    deterministically stale — the emitted verdict columns are
-    strict-oracle-safe (the wall-clock age itself is never selected).
-    In-repo (extended registry) entry."""
-    from datapact_spark.config import FreshnessCheck, ValidationTask
-    from datapact_spark.plans.partitioned import compile_partition_verdicts
-    from datapact_spark.sources.loader import TableResolver
-
-    resolver = TableResolver(spark)
-    resolver.register("fv_events", _t(spark, sf_dir, "events"))
-    task = ValidationTask(
-        task_key="fv", source="fv_events", target="fv_events",
-        partition_by=["event_type"], count_tolerance=0.0,
-        freshness_checks=[FreshnessCheck(column="ts", max_age_hours=24.0)],
-    )
-    return compile_partition_verdicts(spark, task, resolver).select(
-        "event_type", "source_count", "freshness_max_ts_source",
-        "freshness_ts_source_passed", "count_passed",
-        "overall_validation_passed",
-    ).orderBy("event_type")
-
-
 def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: char-20-gram overlap of every
     training doc against a synthetic eval set (120-char excerpts of
@@ -948,34 +854,6 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_code_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-code quality gates (The Stack / StarCoder preprocessing):
-    line-shape stats + alphanumeric fraction + keep verdict, over
-    documents plus injected code-shaped rows that exercise each gate.
-    STRICT oracle: every metric is integer arithmetic or a single IEEE
-    division, bitwise-portable to DuckDB."""
-    from datapact_spark.operators.textops import code_stats
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    injected = spark.createDataFrame(
-        [
-            (9_100_001, "def f(x):\n    return x + 1\n"),
-            (9_100_002, "x" * 1200),  # max_line_len gate
-            (9_100_003, "### " + "- " * 120 + "\nok"),  # low alnum_frac
-            (9_100_004, None),
-        ],
-        "doc_id long, text string",
-    )
-    return (
-        code_stats(docs.unionByName(injected))
-        .select(
-            "doc_id", "n_lines", "max_line_len", "avg_line_len",
-            "alnum_frac", "code_keep",
-        )
-        .orderBy("doc_id")
-    )
-
-
 def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-level boilerplate removal (The Stack-style license-header
     dedup): lines carried verbatim by >= 3 docs are stripped, text is
@@ -1003,7 +881,6 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUOTA_BUDGETS = {"en": 20_000, "de": 6_000, "fr": 0}
-SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
 
 
 def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,26 +895,6 @@ def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     return quota_sample_summary(docs, QUOTA_BUDGETS, group_col="lang").orderBy(
         "lang"
-    )
-
-
-def q_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test assignment by hash-bucket interval
-    (the property randomSplit lacks: adding documents never reshuffles
-    existing assignments). STRICT oracle: membership is pinned by
-    summing the member ids per split — DuckDB reproduces the portable
-    hash, the interval boundaries, and the sums exactly."""
-    from datapact_spark.operators.sampling import deterministic_split
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return (
-        deterministic_split(docs, SPLIT_WEIGHTS)
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_id").alias("id_sum"),
-        )
-        .orderBy("split")
     )
 
 
@@ -1063,25 +920,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         lang_id(docs)
         .groupBy("lang", "detected_lang")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text quality features: per-doc token/char/stopword stats (raw
-    doubles, no rounding)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    t = F.col("text")
-    n_chars = F.length(t)
-    tokens = F.split(F.trim(t), r"\s+")
-    n_tokens = F.size(tokens)
-    stop_arr = F.array(*[F.lit(w) for w in ["the", "and", "of", "is", "a"]])
-    n_stop = F.size(F.filter(tokens, lambda x: F.array_contains(stop_arr, x)))
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        n_chars.alias("n_chars"),
-        n_stop.alias("n_stopwords"),
-        (n_stop / n_tokens.cast("double")).alias("stopword_ratio"),
     )
 
 
@@ -1145,107 +983,6 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("jaccard") >= 0.5)
 
 
-def q_run_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run-level aggregation (A8) over a deterministic synthetic ledger
-    derived from the orders table."""
-    from datapact_spark.aggregate import run_summary
-
-    orders = _t(spark, sf_dir, "orders")
-    ledger = orders.where("o_orderkey % 100 = 0").select(
-        F.lit(1).cast("long").alias("run_id"),
-        F.lit(1).cast("long").alias("job_id"),
-        F.lit("sim").alias("job_name"),
-        F.concat(F.lit("task_"), F.col("o_orderkey").cast("string")).alias("task_key"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILURE"))
-        .otherwise(F.lit("SUCCESS"))
-        .alias("status"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", F.lit("CRITICAL"))
-        .otherwise(F.lit("HIGH"))
-        .alias("business_priority"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 0 + 100).cast("double").alias(
-            "estimated_impact_usd"
-        ),
-        F.lit(4.0).alias("expected_sla_hours"),
-    )
-    s = run_summary(ledger)
-    return s.select(
-        "total_tasks",
-        "failure_count",
-        "success_count",
-        "success_rate_percent",
-        "data_quality_score",
-        "critical_failures",
-        "potential_impact_usd",
-        "realized_impact_usd",
-        # scalar string, not ARRAY: the driver canonicalizer can't sort/
-        # hash list cells (CORRECTNESS_r01 run_aggregation harness err)
-        F.array_join(F.array_sort("failed_task_keys"), ",").alias(
-            "failed_task_keys"
-        ),
-    )
-
-
-def q_domain_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 domain breakdown (aggregate_results.sql.j2:46-62) over a
-    deterministic synthetic ledger, including the blank→'Unspecified'
-    normalization."""
-    from datapact_spark.aggregate import domain_breakdown
-
-    orders = _t(spark, sf_dir, "orders")
-    ledger = orders.where("o_orderkey % 50 = 0").select(
-        F.lit(7).cast("long").alias("run_id"),
-        F.lit("sim").alias("job_name"),
-        F.concat(F.lit("task_"), F.col("o_orderkey").cast("string")).alias("task_key"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILURE"))
-        .otherwise(F.lit("SUCCESS"))
-        .alias("status"),
-        F.when(F.col("o_custkey") % 3 == 0, F.lit("Sales"))
-        .when(F.col("o_custkey") % 3 == 1, F.lit("Finance"))
-        .otherwise(F.lit(" "))  # blank → 'Unspecified'
-        .alias("business_domain"),
-        F.lit(2.0).alias("expected_sla_hours"),
-        (F.col("o_orderkey") % 1000).cast("double").alias("estimated_impact_usd"),
-        F.col("o_orderdate").alias("validation_begin_ts"),
-    )
-    return domain_breakdown(ledger).select(
-        "business_domain",
-        "total_validations",
-        "failed_validations",
-        "success_rate_percent",
-        "potential_impact_usd",
-        "realized_impact_usd",
-        "last_failure_ts",
-    )
-
-
-def q_latest_per_task(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 window dedup: latest event per (user_id, event_type) — the
-    row_number()-over-desc pattern (client.py:480-487)."""
-    ev = _t(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id", "ts")
-    )
-
-
-def q_top_failing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 top-k: top-10 users by error events (TakeOrderedAndProject)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.where("event_type = 'error'")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("error_count"))
-        .orderBy(F.col("error_count").desc(), F.col("user_id").asc())
-        .limit(10)
-    )
-
-
 def q_filtered_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter-scoped validation (P1/S2): the filter applies to BOTH
     sides once and feeds every builtin check (validation.sql.j2:104-118)."""
@@ -1270,62 +1007,6 @@ def q_filtered_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self theta-join on time-interval overlap (J5) — the reference's
-    peak-parallelism KPI (client.py:1632-1642): events become 10-minute
-    intervals; count overlapping pairs per user (users < 40)."""
-    ev = (
-        _t(spark, sf_dir, "events")
-        .where("user_id < 40")
-        .select(
-            "user_id",
-            F.col("event_id"),
-            F.col("ts").alias("begin_ts"),
-            (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("end_ts"),
-        )
-    )
-    a, b = ev.alias("a"), ev.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.user_id") == F.col("b.user_id"))
-        & (F.col("a.event_id") < F.col("b.event_id"))
-        & (F.col("a.begin_ts") <= F.col("b.end_ts"))
-        & (F.col("b.begin_ts") <= F.col("a.end_ts")),
-    )
-    return pairs.groupBy(F.col("a.user_id").alias("user_id")).agg(
-        F.count(F.lit(1)).alias("overlap_pairs")
-    )
-
-
-def q_dense_rank_recency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2 recency ranking: DENSE_RANK over event days desc, keep the 3
-    most recent days (client.py:1667-1739)."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("day"), "event_type", "value"
-    )
-    daily = ev.groupBy("day", "event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("decimal(38,4)").alias("total_value"),
-    )
-    w = Window.orderBy(F.col("day").desc())
-    return (
-        daily.withColumn("recency_rank", F.dense_rank().over(w))
-        .where(F.col("recency_rank") <= 3)
-        # day as ISO string / exact-decimal sum as one double cast:
-        # pandas date-vs-Timestamp and Decimal-vs-float reprs fail the
-        # driver hash even when values are identical (VERDICT r1)
-        .select(
-            F.col("day").cast("string").alias("day"),
-            "event_type",
-            "n",
-            F.col("total_value").cast("double").alias("total_value"),
-            "recency_rank",
-        )
-    )
-
-
 def q_percentile_runtimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 performance metrics: exact p95 / median per group (the
     reference dashboards use percentile over task runtimes,
@@ -1340,57 +1021,7 @@ def q_percentile_runtimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_status_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5 CASE-mapping projections: status → label/emoji banding +
-    failure-first ordering key (client.py:966-994)."""
-    orders = _t(spark, sf_dir, "orders")
-    status_label = (
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILED"))
-        .when(F.col("o_orderstatus") == "O", F.lit("OPEN"))
-        .otherwise(F.lit("PARTIAL"))
-    )
-    band = (
-        F.when(F.col("o_totalprice") >= 200000, F.lit("critical"))
-        .when(F.col("o_totalprice") >= 100000, F.lit("high"))
-        .otherwise(F.lit("normal"))
-    )
-    return (
-        orders.select(
-            status_label.alias("status_label"),
-            band.alias("impact_band"),
-            F.concat_ws("|", status_label, band).alias("combined_key"),
-        )
-        .groupBy("status_label", "impact_band", "combined_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 order-insensitive dataset fingerprint, reference shape
-    (sha2(array_join(sort_array(collect_list(md5(row))), '||'), 256),
-    validation.sql.j2:268-277) with a portable row serialization, plus
-    the scale-path commutative fingerprint (sum of xxhash64 + count) as
-    a second column pair computed the portable way."""
-    orders = _t(spark, sf_dir, "orders")
-    ds = orders.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
-    row = F.md5(
-        F.concat_ws(SEP, F.col("o_orderstatus"), F.col("n").cast("string"))
-    )
-    return ds.agg(
-        F.sha2(F.array_join(F.sort_array(F.collect_list(row)), "||"), 256).alias(
-            "reference_fingerprint"
-        ),
-        F.count(F.lit(1)).alias("fingerprint_count"),
-    )
-
-
 SIMHASH_PORTABLE_BITS = 60  # 15 md5 hex chars → fits a signed 64-bit int
-
-
-def _portable_token_hash(c: F.Column) -> F.Column:
-    """60-bit token hash both engines can compute bit-identically:
-    integer value of the first 15 hex chars of md5(token)."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1509,22 +1140,6 @@ def q_drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_drift_psi_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bin PSI terms + running CDFs (A11): each row is a fixed
-    sequence of IEEE ops from exact counts (ln verified bitwise-portable
-    Spark↔DuckDB on this platform), so the whole drift computation short
-    of the final Σ is value-checked; `drift_psi_value` keeps the
-    rows-only Σ."""
-    from datapact_spark.operators.drift import _binned, _bounds, psi_ks_terms
-
-    li = _t(spark, sf_dir, "lineitem")
-    tgt = li.where("l_discount > 0.02")
-    bounds = _bounds(li, "l_extendedprice")
-    hs = _binned(li, "l_extendedprice", 16, bounds)
-    ht = _binned(tgt, "l_extendedprice", 16, bounds)
-    return psi_ks_terms(hs, ht)
-
-
 QUANTILE_DRIFT_PROBS = [0.1, 0.25, 0.5, 0.75, 0.9]
 # midpoint cell widths of the (non-uniform) prob grid — the W1
 # quadrature weights; same Python literals feed the Spark plan and the
@@ -1572,28 +1187,6 @@ def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     dig = tdigest_sketch(docs, "doc_id", delta=4000.0)
     probs = [(i - 0.5) / 500.0 for i in TDIGEST_KNOTS]
     return tdigest_quantiles(dig, probs)
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing, oracle-checked: binary payload →
-    Arrow-batched feature extraction via mapInPandas. The deterministic
-    stub decode is a sha256 chain DuckDB can replicate exactly;
-    ``round(f0*1000)`` recovers the integer (digest_u32 % 1000) so the
-    rollup sums BIGINTs (order-independent) instead of float32s."""
-    from datapact_spark.operators.multimodal import (
-        extract_features,
-        synthesize_media_table,
-    )
-
-    media = synthesize_media_table(spark, n=96)
-    feats = extract_features(media, feature_dim=8)
-    return feats.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.sum(F.round(F.element_at("feature", 1) * 1000).cast("long")).alias(
-            "f0_millis_sum"
-        ),
-    )
 
 
 def q_multimodal_real_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1960,222 +1553,6 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_semi_join_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7 semi-join scoping: events restricted to users that exist as
-    high-balance customers (`IN (subquery)` → left_semi,
-    client.py:1795-1800)."""
-    ev = _t(spark, sf_dir, "events")
-    cust = _t(spark, sf_dir, "customer").where("c_acctbal > 5000").select(
-        F.col("c_custkey").alias("user_id")
-    )
-    return (
-        ev.join(cust, on="user_id", how="left_semi")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-    )
-
-
-def q_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window aggregation (the batch shape of the
-    streaming windowed profile): hourly count/sum/nulls over events."""
-    ev = _t(spark, sf_dir, "events")
-    w = F.window(F.col("ts"), "1 hour")
-    return (
-        ev.groupBy(w.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,4)")
-            .cast("double")  # exact decimal agg, one portable double cast
-            .alias("total_value"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n", "total_value", "n_users")
-    )
-
-
-def q_genie_table_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Genie per-table quality rollup (S6, client.py:480-510) over a
-    deterministic ledger derived from orders."""
-    from datapact_spark.aggregate import genie_table_quality
-
-    orders = _t(spark, sf_dir, "orders")
-    ledger = orders.where("o_orderkey % 20 = 0").select(
-        F.concat(F.lit("task_"), (F.col("o_orderkey") % 7).cast("string")).alias(
-            "task_key"
-        ),
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILURE"))
-        .otherwise(F.lit("SUCCESS"))
-        .alias("status"),
-        F.lit(1).cast("long").alias("run_id"),
-        F.lit("").alias("target_catalog"),
-        F.lit("").alias("target_schema"),
-        F.concat(F.lit("tbl_"), (F.col("o_custkey") % 3).cast("string")).alias(
-            "target_table"
-        ),
-        F.col("o_orderdate").alias("validation_begin_ts"),
-    )
-    return genie_table_quality(ledger)
-
-
-def q_owner_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 owner breakdown (aggregate_results.sql.j2:63-79) incl. the
-    blank/NULL→'Unassigned' normalization and SLA averaging."""
-    from datapact_spark.aggregate import owner_breakdown
-
-    orders = _t(spark, sf_dir, "orders")
-    ledger = orders.where("o_orderkey % 50 = 0").select(
-        F.lit(7).cast("long").alias("run_id"),
-        F.lit("sim").alias("job_name"),
-        F.concat(F.lit("task_"), F.col("o_orderkey").cast("string")).alias("task_key"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILURE"))
-        .otherwise(F.lit("SUCCESS"))
-        .alias("status"),
-        F.when(F.col("o_custkey") % 4 == 0, F.lit("alice"))
-        .when(F.col("o_custkey") % 4 == 1, F.lit("bob"))
-        .when(F.col("o_custkey") % 4 == 2, F.lit(" "))  # blank → Unassigned
-        .otherwise(F.lit(None).cast("string"))  # NULL → Unassigned
-        .alias("business_owner"),
-        (F.col("o_orderkey") % 5).cast("double").alias("expected_sla_hours"),
-        (F.col("o_orderkey") % 1000).cast("double").alias("estimated_impact_usd"),
-        F.col("o_orderdate").alias("validation_begin_ts"),
-    )
-    return owner_breakdown(ledger).select(
-        "business_owner",
-        "total_validations",
-        "failed_validations",
-        "success_rate_percent",
-        "avg_expected_sla_hours",
-        "potential_impact_usd",
-        "realized_impact_usd",
-        "last_failure_ts",
-    )
-
-
-def q_priority_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 priority breakdown (aggregate_results.sql.j2:81-97):
-    blank→'UNSPECIFIED', no SLA column (reference shape)."""
-    from datapact_spark.aggregate import priority_breakdown
-
-    orders = _t(spark, sf_dir, "orders")
-    ledger = orders.where("o_orderkey % 50 = 0").select(
-        F.lit(7).cast("long").alias("run_id"),
-        F.lit("sim").alias("job_name"),
-        F.concat(F.lit("task_"), F.col("o_orderkey").cast("string")).alias("task_key"),
-        F.when(F.col("o_orderstatus") == "F", F.lit("FAILURE"))
-        .otherwise(F.lit("SUCCESS"))
-        .alias("status"),
-        F.when(F.col("o_custkey") % 3 == 0, F.lit("CRITICAL"))
-        .when(F.col("o_custkey") % 3 == 1, F.lit("HIGH"))
-        .otherwise(F.lit(""))
-        .alias("business_priority"),
-        F.lit(0.0).alias("expected_sla_hours"),  # aggregated then dropped
-        (F.col("o_orderkey") % 1000).cast("double").alias("estimated_impact_usd"),
-        F.col("o_orderdate").alias("validation_begin_ts"),
-    )
-    return priority_breakdown(ledger).select(
-        "business_priority",
-        "total_validations",
-        "failed_validations",
-        "success_rate_percent",
-        "potential_impact_usd",
-        "realized_impact_usd",
-        "last_failure_ts",
-    )
-
-
-def _issues_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-run synthetic ledger with real JSON payloads: run 1 fails on a
-    %7 pattern (must be superseded), run 2 fails when the count or
-    row-hash check fails. Exercises the payload-flattening surface
-    (client.py:451-534, 1311-1435) end to end."""
-    orders = _t(spark, sf_dir, "orders").where("o_orderkey % 100 = 0")
-
-    def mk(run_id: int, day_offset: int, count_fail, hash_fail) -> DataFrame:
-        failed = count_fail | hash_fail
-        payload = F.to_json(
-            F.struct(
-                F.lit(None).cast("string").alias("applied_filter"),  # metadata key
-                F.struct(
-                    F.when(count_fail, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status")
-                ).alias("count_validation"),
-                F.struct(
-                    F.when(hash_fail, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("status")
-                ).alias("row_hash_validation"),
-            )
-        )
-        return orders.select(
-            F.concat(F.lit("task_"), F.col("o_orderkey").cast("string")).alias("task_key"),
-            F.when(failed, F.lit("FAILURE")).otherwise(F.lit("SUCCESS")).alias("status"),
-            F.lit(run_id).cast("long").alias("run_id"),
-            F.lit("sim").alias("job_name"),
-            (F.col("o_orderdate").cast("timestamp") + F.expr(f"INTERVAL {day_offset} DAYS")).alias(
-                "validation_begin_ts"
-            ),
-            F.lit("").alias("source_catalog"),
-            F.lit("").alias("source_schema"),
-            F.lit("src").alias("source_table"),
-            F.lit("").alias("target_catalog"),
-            F.lit("").alias("target_schema"),
-            F.lit("tgt").alias("target_table"),
-            F.lit("ops").alias("business_domain"),
-            F.lit("alice").alias("business_owner"),
-            F.lit("HIGH").alias("business_priority"),
-            F.lit(100.0).alias("estimated_impact_usd"),
-            payload.alias("result_payload"),
-        )
-
-    r1 = mk(1, 0, F.col("o_orderkey") % 7 == 0, F.lit(False))
-    r2 = mk(2, 40, F.col("o_totalprice") <= 1000, F.col("o_orderkey") % 3 == 0)
-    return r1.unionByName(r2)
-
-
-def q_payload_check_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Payload explosion → per-check-type status counts
-    (explode_payload_checks + check_status_counts; replaces the
-    reference's LATERAL VIEW ×4 / UNION ALL ×6, client.py:901-925,
-    1311-1435)."""
-    from datapact_spark.aggregate import check_status_counts
-
-    return check_status_counts(_issues_ledger(spark, sf_dir))
-
-
-def q_genie_current_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Genie current-status table (S6, client.py:451-478): one row per
-    task from its most recent run — the run-2 rows of the two-run
-    superseding ledger, with flattened table FQNs and business metadata.
-    Timestamps go out as ISO strings (driver canonicalizer contract)."""
-    from datapact_spark.aggregate import genie_current_status
-
-    return genie_current_status(_issues_ledger(spark, sf_dir)).select(
-        "task_key",
-        "status",
-        "run_id",
-        "job_name",
-        F.col("validation_begin_ts").cast("string").alias("validation_begin_ts"),
-        "source_table_fqn",
-        "target_table_fqn",
-        "business_domain",
-        "business_owner",
-        "business_priority",
-        "estimated_impact_usd",
-    )
-
-
-def q_genie_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Genie open-issues table (client.py:512-534): FAILED checks from
-    the LATEST run of each task only — run-1 failures superseded by run 2
-    must not appear."""
-    from datapact_spark.aggregate import genie_issues
-
-    return genie_issues(_issues_ledger(spark, sf_dir)).select(
-        "task_key", "run_id", "check_type", "check_key"
-    )
-
-
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard on candidate pairs (the verify stage of
     near-dup dedup) computed over gram STRINGS so DuckDB can mirror it
@@ -2214,34 +1591,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_failure_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trend dashboard shape (client.py:861-871, 1585-1602): daily
-    failure rate over the ledger, restricted to the 30 most recent days
-    (dense_rank over day desc)."""
-    from pyspark.sql.window import Window
-
-    orders = _t(spark, sf_dir, "orders").where("o_orderkey % 20 = 0")
-    daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("total_validations"),
-        F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias(
-            "failed_validations"
-        ),
-    )
-    w = Window.orderBy(F.col("day").desc())
-    return (
-        daily.withColumn("recency", F.dense_rank().over(w))
-        .where(F.col("recency") <= 30)
-        .select(
-            F.col("day").cast("string").alias("day"),
-            "total_validations",
-            "failed_validations",
-            F.round(
-                F.col("failed_validations") * 100.0 / F.col("total_validations"), 2
-            ).alias("failure_rate_percent"),
-        )
-    )
-
-
 def q_range_join_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 validity-window range join (client.py:1830-1838 shape): events
     priced against a per-day rate table via the bucketed (shuffle) range
@@ -2266,59 +1615,6 @@ def q_range_join_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-
-
-# Retired from the ACTIVE driver board (the driver verifies at most 50
-# entries per round; r4 showed entries past #50 are silently dropped).
-# All are redundant with still-active entries — doc_fingerprint's
-# md5 content fingerprint is exercised by dedup_exact, quality_score's
-# ratio projections by text_token_stats, the owner/priority breakdowns
-# are the same A9 rollup shape as the active domain_breakdown,
-# status_labels' CASE projection is exercised by genie_current_status,
-# dense_rank_recency's window ranking by latest_per_task, and
-# interval_overlap's theta join by range_join_validity — but they
-# remain fully oracle-checked in-repo: queries_all() feeds
-# tests/test_oracle_parity.py, which sweeps ACTIVE + RETIRED every run.
-# NONE of their backing operators changed in r5, so their last driver
-# rows are not stale.
-#
-# Second rotation (late r5), making room for the five code-payload
-# queries (the north-star input is a source-code table):
-# multimodal_features is the stub-codec path (the real-codec siblings
-# multimodal_real_codec and multimodal_video stay active),
-# domain_breakdown / failure_rate_daily / payload_check_rollup are
-# aggregate.py rollup shapes with seven still-active siblings
-# (run_aggregation, latest_per_task, top_failing, percentile_runtimes,
-# genie_* ×3) giving that file fresh driver rows, and
-# tumbling_window_agg is entry-level batch window code whose streaming
-# family keeps three active rows (sessionization, streaming_sessions,
-# windowed_drift).
-RETIRED_QUERY_KEYS = (
-    "doc_fingerprint",
-    "quality_score",
-    "owner_breakdown",
-    "priority_breakdown",
-    "status_labels",
-    "dense_rank_recency",
-    "interval_overlap",
-    "multimodal_features",
-    "domain_breakdown",
-    "failure_rate_daily",
-    "payload_check_rollup",
-    "tumbling_window_agg",
-    # r6 rotation: cheap long-stable projections/aggregations with 5
-    # consecutive strict driver rows — cycled off to make room for the
-    # never-driver-verified extended entries (VERDICT r5 #2).
-    "run_aggregation",
-    "latest_per_task",
-    "top_failing",
-    "dataset_fingerprint",
-    "semi_join_scope",
-    "genie_table_quality",
-    "genie_issues",
-    "genie_current_status",
-    "drift_psi_terms",
-)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2383,55 +1679,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Queries rotated off the 50-entry driver board (see
-    RETIRED_QUERY_KEYS) — still oracle-checked by the in-repo parity
-    sweep."""
-    retired = {
-        "doc_fingerprint": q_doc_fingerprint,
-        "quality_score": q_quality_score,
-        "owner_breakdown": q_owner_breakdown,
-        "priority_breakdown": q_priority_breakdown,
-        "status_labels": q_status_labels,
-        "dense_rank_recency": q_dense_rank_recency,
-        "interval_overlap": q_interval_overlap,
-        "multimodal_features": q_multimodal_features,
-        "domain_breakdown": q_domain_breakdown,
-        "failure_rate_daily": q_failure_rate_daily,
-        "payload_check_rollup": q_payload_check_rollup,
-        "tumbling_window_agg": q_tumbling_window_agg,
-        "run_aggregation": q_run_aggregation,
-        "latest_per_task": q_latest_per_task,
-        "top_failing": q_top_failing,
-        "dataset_fingerprint": q_dataset_fingerprint,
-        "semi_join_scope": q_semi_join_scope,
-        "genie_table_quality": q_genie_table_quality,
-        "genie_issues": q_genie_issues,
-        "genie_current_status": q_genie_current_status,
-        "drift_psi_terms": q_drift_psi_terms,
-    }
-    assert set(retired) == set(RETIRED_QUERY_KEYS)
-    return retired
-
-
-def extended_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-backed queries ADDED after the active board hit the
-    driver's 50-entry cap — never on the driver board, strict-checked
-    by the in-repo parity sweep only."""
-    return {
-        "repetition_stats": q_repetition_stats,
-        "minhash_probe": q_minhash_probe,
-        "deterministic_split": q_deterministic_split,
-        "code_stats": q_code_stats,
-        "code_complexity": q_code_complexity,
-        "freshness_verdict": q_freshness_verdict,
-    }
-
-
 def queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """ACTIVE + RETIRED + EXTENDED — the full oracle-backed surface;
-    what tests/test_oracle_parity.py sweeps."""
-    return {**queries(), **retired_queries(), **extended_queries()}
+    """Every oracle-backed query: what tests/test_oracle_parity.py
+    sweeps and the tools run. An off-board query belongs here only
+    while it is the sole test of some product behaviour; every other
+    operator is checked by a ``queries()`` entry or a unit test, so
+    today this is the board."""
+    return queries()
 
 
 # ------------------------------------------------------------------ oracles
@@ -2524,8 +1778,8 @@ def _oracle_sql_all() -> dict[str, str]:
     lang_case = "CASE " + " ".join(case_parts) + " ELSE 'und' END"
 
     # Portable simhash rebuilt in SQL: 60-bit md5-prefix token hash →
-    # per-bit ±1 balances → sign bits (mirrors operators/dedup.simhash
-    # with the query's _portable_token_hash), then brute-force all-pairs
+    # per-bit ±1 balances → sign bits (mirrors the query's
+    # dedup.simhash_portable_vectorized), then brute-force all-pairs
     # Hamming ≤ 6 — the exact ground truth the pigeonhole-bucketed Spark
     # operator is guaranteed (and checked) to reproduce.
     n_bits = 60
@@ -2756,11 +2010,6 @@ def _oracle_sql_all() -> dict[str, str]:
             FROM fp f JOIN keepers k USING (fingerprint)
             WHERE f.dup_id <> k.keep_id
         """,
-        "doc_fingerprint": """
-            SELECT doc_id,
-                   md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint
-            FROM documents
-        """,
         "text_token_stats": """
             SELECT lang,
                    COUNT(*) AS n_docs,
@@ -2778,17 +2027,6 @@ def _oracle_sql_all() -> dict[str, str]:
             SELECT lang, {lang_case} AS detected_lang, COUNT(*) AS n
             FROM scored GROUP BY 1, 2
         """,
-        "quality_score": """
-            SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens,
-                   length(text) AS n_chars,
-                   len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                       x -> list_contains(['the','and','of','is','a'], x))) AS n_stopwords,
-                   len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                       x -> list_contains(['the','and','of','is','a'], x)))
-                     / CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) AS stopword_ratio
-            FROM documents
-        """,
         "ann_bruteforce": """
             WITH q AS (SELECT vec_id AS query_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
                        FROM embeddings WHERE vec_id < 5),
@@ -2805,59 +2043,6 @@ def _oracle_sql_all() -> dict[str, str]:
             SELECT query_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank
             FROM ranked WHERE rank <= 5
         """,
-        "run_aggregation": """
-            WITH ledger AS (
-              SELECT 'task_' || CAST(o_orderkey AS VARCHAR) AS task_key,
-                     CASE WHEN o_orderstatus = 'F' THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                     CASE WHEN o_orderpriority = '1-URGENT' THEN 'CRITICAL' ELSE 'HIGH' END AS business_priority,
-                     100.0 AS estimated_impact_usd,
-                     4.0 AS expected_sla_hours
-              FROM orders WHERE o_orderkey % 100 = 0)
-            SELECT COUNT(*) AS total_tasks,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' THEN 1 ELSE 0 END) AS BIGINT) AS failure_count,
-                   CAST(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) AS BIGINT) AS success_count,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0 ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 100.0 / COUNT(*), 2) END AS success_rate_percent,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0 ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 4) END AS data_quality_score,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' AND business_priority = 'CRITICAL' THEN 1 ELSE 0 END) AS BIGINT) AS critical_failures,
-                   SUM(estimated_impact_usd) AS potential_impact_usd,
-                   SUM(CASE WHEN status = 'FAILURE' THEN estimated_impact_usd ELSE 0.0 END) AS realized_impact_usd,
-                   array_to_string(list_sort(list_filter(list(CASE WHEN status = 'FAILURE' THEN task_key END), x -> x IS NOT NULL)), ',') AS failed_task_keys
-            FROM ledger
-        """,
-        "domain_breakdown": """
-            WITH ledger AS (
-              SELECT CASE WHEN o_orderstatus = 'F' THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                     CASE WHEN o_custkey % 3 = 0 THEN 'Sales'
-                          WHEN o_custkey % 3 = 1 THEN 'Finance'
-                          ELSE ' ' END AS business_domain,
-                     CAST(o_orderkey % 1000 AS DOUBLE) AS estimated_impact_usd,
-                     o_orderdate AS validation_begin_ts
-              FROM orders WHERE o_orderkey % 50 = 0)
-            SELECT COALESCE(NULLIF(TRIM(business_domain), ''), 'Unspecified') AS business_domain,
-                   COUNT(*) AS total_validations,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' THEN 1 ELSE 0 END) AS BIGINT) AS failed_validations,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0
-                        ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 100.0 / COUNT(*), 2)
-                   END AS success_rate_percent,
-                   SUM(COALESCE(estimated_impact_usd, 0.0)) AS potential_impact_usd,
-                   SUM(CASE WHEN status = 'FAILURE' THEN COALESCE(estimated_impact_usd, 0.0) ELSE 0.0 END) AS realized_impact_usd,
-                   MAX(CASE WHEN status = 'FAILURE' THEN validation_begin_ts END) AS last_failure_ts
-            FROM ledger GROUP BY 1
-        """,
-        "latest_per_task": """
-            SELECT user_id, event_type, event_id, ts
-            FROM (SELECT user_id, event_type, event_id, ts,
-                         ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events)
-            WHERE rn = 1
-        """,
-        "top_failing": """
-            SELECT user_id, COUNT(*) AS error_count
-            FROM events WHERE event_type = 'error'
-            GROUP BY user_id
-            ORDER BY error_count DESC, user_id ASC
-            LIMIT 10
-        """,
         "filtered_validation": """
             WITH s AS (SELECT COUNT(*) AS source_count, COUNT(DISTINCT o_custkey) AS source_distinct_uniqs
                        FROM orders WHERE o_orderpriority = '1-URGENT'),
@@ -2869,48 +2054,12 @@ def _oracle_sql_all() -> dict[str, str]:
                         THEN 'PASS' ELSE 'FAIL' END AS status
             FROM s, t
         """,
-        "interval_overlap": """
-            WITH iv AS (
-              SELECT user_id, event_id, ts AS begin_ts, ts + INTERVAL 10 MINUTE AS end_ts
-              FROM events WHERE user_id < 40)
-            SELECT a.user_id, COUNT(*) AS overlap_pairs
-            FROM iv a JOIN iv b
-              ON a.user_id = b.user_id AND a.event_id < b.event_id
-             AND a.begin_ts <= b.end_ts AND b.begin_ts <= a.end_ts
-            GROUP BY a.user_id
-        """,
-        "dense_rank_recency": """
-            WITH daily AS (
-              SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS n,
-                     CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS total_value
-              FROM events GROUP BY 1, 2),
-            ranked AS (
-              SELECT *, DENSE_RANK() OVER (ORDER BY day DESC) AS recency_rank FROM daily)
-            SELECT CAST(day AS VARCHAR) AS day, event_type, n,
-                   CAST(total_value AS DOUBLE) AS total_value,
-                   CAST(recency_rank AS INT) AS recency_rank
-            FROM ranked WHERE recency_rank <= 3
-        """,
         "percentile_runtimes": """
             SELECT event_type, COUNT(*) AS n,
                    quantile_cont(value, 0.95) AS p95_value,
                    median(value) AS median_value,
                    MIN(value) AS min_value, MAX(value) AS max_value
             FROM events GROUP BY event_type
-        """,
-        "status_labels": """
-            WITH labeled AS (
-              SELECT CASE WHEN o_orderstatus = 'F' THEN 'FAILED'
-                          WHEN o_orderstatus = 'O' THEN 'OPEN'
-                          ELSE 'PARTIAL' END AS status_label,
-                     CASE WHEN o_totalprice >= 200000 THEN 'critical'
-                          WHEN o_totalprice >= 100000 THEN 'high'
-                          ELSE 'normal' END AS impact_band
-              FROM orders)
-            SELECT status_label, impact_band,
-                   concat_ws('|', status_label, impact_band) AS combined_key,
-                   COUNT(*) AS n
-            FROM labeled GROUP BY 1, 2, 3
         """,
         "sessionization": """
             WITH marked AS (
@@ -2927,12 +2076,6 @@ def _oracle_sql_all() -> dict[str, str]:
             SELECT user_id, session_id, COUNT(*) AS n_events,
                    epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS duration_us
             FROM sessioned GROUP BY user_id, session_id
-        """,
-        "semi_join_scope": """
-            SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users
-            FROM events
-            WHERE user_id IN (SELECT c_custkey FROM customer WHERE c_acctbal > 5000)
-            GROUP BY event_type
         """,
         "categorical_drift": """
             -- same frame/fold arithmetic from exact counts: top-4
@@ -3155,166 +2298,6 @@ def _oracle_sql_all() -> dict[str, str]:
                    MAX(cdf_gap) AS ks
             FROM folded GROUP BY window_start
         """,
-        "tumbling_window_agg": """
-            SELECT date_trunc('hour', ts) AS window_start,
-                   COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS DOUBLE) AS total_value,
-                   COUNT(DISTINCT user_id) AS n_users
-            FROM events GROUP BY 1
-        """,
-        "genie_table_quality": """
-            WITH ledger AS (
-              SELECT 'task_' || CAST(o_orderkey % 7 AS VARCHAR) AS task_key,
-                     CASE WHEN o_orderstatus = 'F' THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                     'tbl_' || CAST(o_custkey % 3 AS VARCHAR) AS table_fqn,
-                     o_orderdate AS validation_begin_ts
-              FROM orders WHERE o_orderkey % 20 = 0)
-            SELECT table_fqn,
-                   COUNT(*) AS total_validations,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' THEN 1 ELSE 0 END) AS BIGINT) AS failed_validations,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0
-                        ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 100.0 / COUNT(*), 2)
-                   END AS success_rate_percent,
-                   MAX(CASE WHEN status = 'FAILURE' THEN validation_begin_ts END) AS last_failure_ts,
-                   COUNT(DISTINCT task_key) AS distinct_tasks
-            FROM ledger GROUP BY 1
-        """,
-        "owner_breakdown": """
-            WITH ledger AS (
-              SELECT CASE WHEN o_orderstatus = 'F' THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                     CASE WHEN o_custkey % 4 = 0 THEN 'alice'
-                          WHEN o_custkey % 4 = 1 THEN 'bob'
-                          WHEN o_custkey % 4 = 2 THEN ' '
-                          ELSE NULL END AS business_owner,
-                     CAST(o_orderkey % 5 AS DOUBLE) AS expected_sla_hours,
-                     CAST(o_orderkey % 1000 AS DOUBLE) AS estimated_impact_usd,
-                     o_orderdate AS validation_begin_ts
-              FROM orders WHERE o_orderkey % 50 = 0)
-            SELECT COALESCE(NULLIF(TRIM(business_owner), ''), 'Unassigned') AS business_owner,
-                   COUNT(*) AS total_validations,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' THEN 1 ELSE 0 END) AS BIGINT) AS failed_validations,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0
-                        ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 100.0 / COUNT(*), 2)
-                   END AS success_rate_percent,
-                   AVG(expected_sla_hours) AS avg_expected_sla_hours,
-                   SUM(COALESCE(estimated_impact_usd, 0.0)) AS potential_impact_usd,
-                   SUM(CASE WHEN status = 'FAILURE' THEN COALESCE(estimated_impact_usd, 0.0) ELSE 0.0 END) AS realized_impact_usd,
-                   MAX(CASE WHEN status = 'FAILURE' THEN validation_begin_ts END) AS last_failure_ts
-            FROM ledger GROUP BY 1
-        """,
-        "priority_breakdown": """
-            WITH ledger AS (
-              SELECT CASE WHEN o_orderstatus = 'F' THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                     CASE WHEN o_custkey % 3 = 0 THEN 'CRITICAL'
-                          WHEN o_custkey % 3 = 1 THEN 'HIGH'
-                          ELSE '' END AS business_priority,
-                     CAST(o_orderkey % 1000 AS DOUBLE) AS estimated_impact_usd,
-                     o_orderdate AS validation_begin_ts
-              FROM orders WHERE o_orderkey % 50 = 0)
-            SELECT COALESCE(NULLIF(TRIM(business_priority), ''), 'UNSPECIFIED') AS business_priority,
-                   COUNT(*) AS total_validations,
-                   CAST(SUM(CASE WHEN status = 'FAILURE' THEN 1 ELSE 0 END) AS BIGINT) AS failed_validations,
-                   CASE WHEN COUNT(*) = 0 THEN 0.0
-                        ELSE ROUND(SUM(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) * 100.0 / COUNT(*), 2)
-                   END AS success_rate_percent,
-                   SUM(COALESCE(estimated_impact_usd, 0.0)) AS potential_impact_usd,
-                   SUM(CASE WHEN status = 'FAILURE' THEN COALESCE(estimated_impact_usd, 0.0) ELSE 0.0 END) AS realized_impact_usd,
-                   MAX(CASE WHEN status = 'FAILURE' THEN validation_begin_ts END) AS last_failure_ts
-            FROM ledger GROUP BY 1
-        """,
-        "payload_check_rollup": """
-            -- independent derivation: the Spark side round-trips through
-            -- JSON payload build → map explode → classify; the oracle
-            -- computes the same counts straight from the base predicates
-            WITH base AS (
-              SELECT (o_totalprice <= 1000) AS count_fail_r2,
-                     (o_orderkey % 3 = 0) AS hash_fail_r2,
-                     (o_orderkey % 7 = 0) AS count_fail_r1
-              FROM orders WHERE o_orderkey % 100 = 0),
-            checks AS (
-              SELECT CAST(1 AS BIGINT) AS run_id, 'count' AS check_type,
-                     CASE WHEN count_fail_r1 THEN 'FAIL' ELSE 'PASS' END AS check_status FROM base
-              UNION ALL
-              SELECT CAST(1 AS BIGINT), 'row_hash', 'PASS' FROM base
-              UNION ALL
-              SELECT CAST(2 AS BIGINT), 'count',
-                     CASE WHEN count_fail_r2 THEN 'FAIL' ELSE 'PASS' END FROM base
-              UNION ALL
-              SELECT CAST(2 AS BIGINT), 'row_hash',
-                     CASE WHEN hash_fail_r2 THEN 'FAIL' ELSE 'PASS' END FROM base)
-            SELECT run_id, check_type, check_status, COUNT(*) AS n
-            FROM checks GROUP BY 1, 2, 3
-        """,
-        "genie_issues": """
-            WITH base AS (
-              SELECT o_orderkey AS k,
-                     (o_totalprice <= 1000) AS count_fail,
-                     (o_orderkey % 3 = 0) AS hash_fail
-              FROM orders WHERE o_orderkey % 100 = 0),
-            fails AS (SELECT * FROM base WHERE count_fail OR hash_fail)
-            SELECT 'task_' || CAST(k AS VARCHAR) AS task_key,
-                   CAST(2 AS BIGINT) AS run_id,
-                   'count' AS check_type, 'count_validation' AS check_key
-            FROM fails WHERE count_fail
-            UNION ALL
-            SELECT 'task_' || CAST(k AS VARCHAR), CAST(2 AS BIGINT),
-                   'row_hash', 'row_hash_validation'
-            FROM fails WHERE hash_fail
-        """,
-        "multimodal_features": """
-            -- mirrors multimodal.synthesize_media_table + the stub
-            -- decode: payload = ASCII hex of sha256('42'||id); feature
-            -- u32 = first 4 bytes (LE) of sha256(payload); f0_millis =
-            -- u32 % 1000
-            WITH media AS (
-              SELECT range AS id,
-                     list_extract(['image','audio','video'], CAST(range % 3 AS INT) + 1) AS kind,
-                     sha256('42' || CAST(range AS VARCHAR)) AS payload_hex
-              FROM range(96)),
-            feat AS (
-              SELECT kind, length(payload_hex) AS n_bytes,
-                     sha256(payload_hex) AS d
-              FROM media),
-            u AS (
-              SELECT kind, n_bytes,
-                     CAST('0x' || substr(d, 1, 2) AS BIGINT)
-                   + CAST('0x' || substr(d, 3, 2) AS BIGINT) * 256
-                   + CAST('0x' || substr(d, 5, 2) AS BIGINT) * 65536
-                   + CAST('0x' || substr(d, 7, 2) AS BIGINT) * 16777216 AS u32
-              FROM feat)
-            SELECT kind, COUNT(*) AS n,
-                   CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
-                   CAST(SUM(u32 % 1000) AS BIGINT) AS f0_millis_sum
-            FROM u GROUP BY kind
-        """,
-        "drift_psi_terms": """
-            WITH b AS (SELECT MIN(CAST(l_extendedprice AS DOUBLE)) AS lo, MAX(CAST(l_extendedprice AS DOUBLE)) AS hi FROM lineitem),
-            binned_s AS (
-              SELECT CAST(LEAST(GREATEST(FLOOR((CAST(l_extendedprice AS DOUBLE) - lo) / NULLIF((hi - lo) / 16.0, 0)), 0), 15) AS INT) AS bin
-              FROM lineitem, b WHERE l_extendedprice IS NOT NULL),
-            binned_t AS (
-              SELECT CAST(LEAST(GREATEST(FLOOR((CAST(l_extendedprice AS DOUBLE) - lo) / NULLIF((hi - lo) / 16.0, 0)), 0), 15) AS INT) AS bin
-              FROM lineitem, b WHERE l_extendedprice IS NOT NULL AND l_discount > 0.02),
-            hp AS (SELECT bin, COUNT(*) AS p_cnt FROM binned_s GROUP BY bin),
-            hq AS (SELECT bin, COUNT(*) AS q_cnt FROM binned_t GROUP BY bin),
-            merged AS (
-              SELECT COALESCE(hp.bin, hq.bin) AS bin,
-                     COALESCE(p_cnt, 0) AS p_cnt, COALESCE(q_cnt, 0) AS q_cnt
-              FROM hp FULL OUTER JOIN hq ON hp.bin = hq.bin),
-            tot AS (SELECT SUM(p_cnt) AS p_tot, SUM(q_cnt) AS q_tot FROM merged),
-            ratios AS (
-              SELECT bin,
-                     COALESCE(p_cnt / NULLIF(CAST(p_tot AS DOUBLE), 0), 0.0) AS p,
-                     COALESCE(q_cnt / NULLIF(CAST(q_tot AS DOUBLE), 0), 0.0) AS q
-              FROM merged, tot),
-            staged AS (
-              SELECT bin, p + 1e-6 AS ps, q + 1e-6 AS qs,
-                     SUM(p) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p_cdf,
-                     SUM(q) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS q_cdf
-              FROM ratios)
-            SELECT bin, (ps - qs) * ln(ps / qs) AS psi_term, p_cdf, q_cdf
-            FROM staged
-        """,
         "ngram_jaccard": """
             WITH base AS (
               SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
@@ -3338,18 +2321,6 @@ def _oracle_sql_all() -> dict[str, str]:
                      / NULLIF(CAST(len(list_distinct(list_concat(ga.grams, gb.grams))) AS DOUBLE), 0) AS jaccard
             FROM ga JOIN gb ON gb.id_b - 1000000 = ga.id_a
         """,
-        "failure_rate_daily": """
-            WITH daily AS (
-              SELECT o_orderdate AS day,
-                     COUNT(*) AS total_validations,
-                     CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS failed_validations
-              FROM orders WHERE o_orderkey % 20 = 0 GROUP BY 1),
-            ranked AS (
-              SELECT *, DENSE_RANK() OVER (ORDER BY day DESC) AS recency FROM daily)
-            SELECT CAST(day AS VARCHAR) AS day, total_validations, failed_validations,
-                   ROUND(failed_validations * 100.0 / total_validations, 2) AS failure_rate_percent
-            FROM ranked WHERE recency <= 30
-        """,
         "range_join_validity": """
             WITH rates AS (
               SELECT n_nationkey AS rate_id,
@@ -3361,13 +2332,6 @@ def _oracle_sql_all() -> dict[str, str]:
             FROM events e JOIN rates r
               ON e.ts >= r.valid_from AND e.ts < r.valid_to
             GROUP BY rate_id
-        """,
-        "dataset_fingerprint": """
-            WITH ds AS (SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY o_orderstatus),
-                 hashed AS (SELECT md5(concat_ws(chr(31), o_orderstatus, CAST(n AS VARCHAR))) AS h FROM ds)
-            SELECT sha256(string_agg(h, '||' ORDER BY h)) AS reference_fingerprint,
-                   COUNT(*) AS fingerprint_count
-            FROM hashed
         """,
         "minhash_dedup": """
             -- exact all-pairs ground truth: every pair with word-3-gram
@@ -3399,47 +2363,6 @@ def _oracle_sql_all() -> dict[str, str]:
               JOIN grams ga ON ga.doc_id = cand.id_a
               JOIN grams gb ON gb.doc_id = cand.id_b)
             SELECT id_a, id_b, jaccard FROM scored WHERE jaccard >= 0.5
-        """,
-        "minhash_probe": """
-            -- exact new-vs-corpus ground truth: every (new, corpus)
-            -- pair with word-3-gram Jaccard >= 0.5. The Spark side
-            -- must find EXACTLY these pairs by probing the corpus
-            -- band-hash index with the new batch broadcast.
-            WITH corpus AS (SELECT doc_id, text FROM documents),
-            news AS (
-              SELECT doc_id + 2000000 AS doc_id, text || ' zzz' AS text
-              FROM documents WHERE doc_id % 13 = 0
-              UNION ALL
-              SELECT 9900001 AS doc_id,
-                     'zq wq vq uq totally unrelated probe tokens' AS text),
-            cg AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS g
-              FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-                    FROM corpus)
-              WHERE len(toks) >= 3),
-            ng AS (
-              SELECT doc_id,
-                     list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS g
-              FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-                    FROM news)
-              WHERE len(toks) >= 3),
-            cand AS (
-              SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
-              FROM (SELECT doc_id, unnest(g) AS gram FROM ng) n
-              JOIN (SELECT doc_id, unnest(g) AS gram FROM cg) c
-                ON n.gram = c.gram),
-            scored AS (
-              SELECT new_id, corpus_id,
-                     len(list_intersect(gn.g, gc.g))
-                       / NULLIF(CAST(len(list_distinct(list_concat(gn.g, gc.g))) AS DOUBLE), 0) AS jaccard
-              FROM cand
-              JOIN ng gn ON gn.doc_id = cand.new_id
-              JOIN cg gc ON gc.doc_id = cand.corpus_id)
-            SELECT new_id, corpus_id, jaccard FROM scored
-            WHERE jaccard >= 0.5 ORDER BY new_id, corpus_id
         """,
         "simhash_pairs": simhash_pairs_sql,
         "lsh_topk": """
@@ -3558,24 +2481,6 @@ def _oracle_sql_all() -> dict[str, str]:
                    CAST(SUM(content) AS BIGINT), CAST(SUM(units) AS BIGINT)
             FROM aud_sum
         """,
-        "genie_current_status": """
-            -- latest run per task = run 2 by construction (its
-            -- validation_begin_ts is +40 days); status from run 2's
-            -- failure predicates
-            SELECT 'task_' || CAST(o_orderkey AS VARCHAR) AS task_key,
-                   CASE WHEN (o_totalprice <= 1000) OR (o_orderkey % 3 = 0)
-                        THEN 'FAILURE' ELSE 'SUCCESS' END AS status,
-                   CAST(2 AS BIGINT) AS run_id,
-                   'sim' AS job_name,
-                   CAST(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 40 DAY AS VARCHAR) AS validation_begin_ts,
-                   'src' AS source_table_fqn,
-                   'tgt' AS target_table_fqn,
-                   'ops' AS business_domain,
-                   'alice' AS business_owner,
-                   'HIGH' AS business_priority,
-                   100.0 AS estimated_impact_usd
-            FROM orders WHERE o_orderkey % 100 = 0
-        """,
         "quantile_drift": f"""
             -- exact quantile_cont == Spark exact percentile (bitwise);
             -- |a-b|*dp single IEEE ops (dp = midpoint cell width of the
@@ -3611,48 +2516,6 @@ def _oracle_sql_all() -> dict[str, str]:
             SELECT CAST(p.prob AS DOUBLE) AS prob, r.v AS quantile
             FROM probs p JOIN ranked r USING (rn)
             ORDER BY prob
-        """,
-        "repetition_stats": """
-            -- Gopher repetition filters recomputed from the same
-            -- whitespace tokenization; every count exact, every
-            -- fraction one IEEE division (engine-portable)
-            WITH t AS (
-              SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS toks
-              FROM documents),
-            u AS (
-              SELECT doc_id, tok, count(*) AS c
-              FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-              GROUP BY doc_id, tok),
-            us AS (
-              SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-                     COUNT(*) AS n_distinct_tokens, MAX(c) AS top_tok
-              FROM u GROUP BY doc_id),
-            b AS (
-              SELECT doc_id, bg, count(*) AS c
-              FROM (
-                SELECT doc_id,
-                       unnest(list_transform(
-                         range(1, len(toks)),
-                         i -> toks[i] || ' ' || toks[i + 1]
-                       )) AS bg
-                FROM t)
-              GROUP BY doc_id, bg),
-            bs AS (
-              SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bi,
-                     MAX(c) AS top_bi
-              FROM b GROUP BY doc_id)
-            SELECT us.doc_id,
-                   n_tokens,
-                   n_distinct_tokens,
-                   CAST(1 AS DOUBLE) -
-                     n_distinct_tokens / CAST(n_tokens AS DOUBLE)
-                     AS dup_token_frac,
-                   top_tok / CAST(n_tokens AS DOUBLE) AS top_token_frac,
-                   COALESCE(top_bi / CAST(n_bi AS DOUBLE),
-                            CAST(0 AS DOUBLE)) AS top_bigram_frac
-            FROM us LEFT JOIN bs USING (doc_id)
-            ORDER BY doc_id
         """,
         "tfidf_terms": """
             -- TF-IDF-style top terms recomputed from the same
@@ -3739,27 +2602,6 @@ def _oracle_sql_all() -> dict[str, str]:
                    COALESCE(sampled_tokens, 0) AS sampled_tokens
             FROM frac f LEFT JOIN samp USING (lang)
             ORDER BY lang
-        """,
-        "deterministic_split": f"""
-            -- hash-interval split assignment; membership pinned by the
-            -- per-split id sums
-            WITH b AS (
-              SELECT doc_id,
-                     CAST('0x' || substr(
-                       md5(CAST(doc_id AS VARCHAR) || ':split'), 1, 15)
-                       AS BIGINT) % 1000000 AS bucket
-              FROM documents),
-            labeled AS (
-              SELECT doc_id,
-                     CASE
-                       WHEN bucket < {int(0.9 * 1_000_000)} THEN 'train'
-                       WHEN bucket < {int(0.95 * 1_000_000)} THEN 'val'
-                       ELSE 'test'
-                     END AS split
-              FROM b)
-            SELECT split, COUNT(*) AS n_docs,
-                   CAST(SUM(doc_id) AS BIGINT) AS id_sum
-            FROM labeled GROUP BY split ORDER BY split
         """,
         "contamination_check": """
             -- literal gram strings both sides (hash-agnostic overlap);
@@ -3887,35 +2729,6 @@ def _oracle_sql_all() -> dict[str, str]:
             FROM scanned s JOIN red r USING (doc_id)
             WHERE n_email + n_ipv4 + n_aws_key + n_hex_secret > 0
             ORDER BY s.doc_id
-        """,
-        "code_stats": """
-            WITH all_docs AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT * FROM (VALUES
-                (9100001, 'def f(x):' || chr(10) || '    return x + 1' || chr(10)),
-                (9100002, repeat('x', 1200)),
-                (9100003, '### ' || repeat('- ', 120) || chr(10) || 'ok'),
-                (9100004, NULL)
-              ) AS v(doc_id, text)),
-            m AS (
-              SELECT doc_id,
-                CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines,
-                CAST(list_max(list_transform(string_split(text, chr(10)),
-                  s -> length(s))) AS BIGINT) AS max_line_len,
-                CAST(length(text) AS BIGINT) AS total,
-                CAST(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-                  AS BIGINT) AS alnum
-              FROM all_docs)
-            SELECT doc_id, n_lines, max_line_len,
-              (total - (n_lines - 1)) / CAST(n_lines AS DOUBLE)
-                AS avg_line_len,
-              alnum / CAST(nullif(total, 0) AS DOUBLE) AS alnum_frac,
-              COALESCE(max_line_len <= 1000
-                AND (total - (n_lines - 1)) / CAST(n_lines AS DOUBLE) <= 100.0
-                AND alnum / CAST(nullif(total, 0) AS DOUBLE) >= 0.25,
-                FALSE) AS code_keep
-            FROM m ORDER BY doc_id
         """,
         "strip_boilerplate": """
             WITH all_docs AS (
@@ -4242,37 +3055,6 @@ def _oracle_sql_all() -> dict[str, str]:
                 / CAST(COUNT(*) AS DOUBLE)) <= 0.0 AS passed
             FROM checked GROUP BY lang ORDER BY lang
         """,
-        "freshness_verdict": """
-            SELECT event_type,
-              CAST(COUNT(*) AS BIGINT) AS source_count,
-              MAX(ts) AS freshness_max_ts_source,
-              FALSE AS freshness_ts_source_passed,
-              TRUE AS count_passed,
-              FALSE AS overall_validation_passed
-            FROM events GROUP BY event_type ORDER BY event_type
-        """,
-        "code_complexity": _CODE_TABLE_SQL + """,
-            m AS (
-              SELECT lang,
-                CAST(len(string_split(content, chr(10))) AS BIGINT) AS n_lines,
-                CAST(len(regexp_extract_all(content,
-                  '\\b(if|else|elif|for|while|switch|case|catch|when|match)\\b'))
-                  AS BIGINT) AS n_branches,
-                CAST(len(regexp_extract_all(content, '(?m)^[ \t]*(//|#)'))
-                  AS BIGINT) AS n_comment
-              FROM code)
-            SELECT lang,
-              CAST(COUNT(*) AS BIGINT) AS n_files,
-              CAST(SUM(n_lines) AS BIGINT) AS total_lines,
-              CAST(SUM(n_branches) AS BIGINT) AS total_branches,
-              CAST(SUM(n_comment) AS BIGINT) AS total_comment_lines,
-              CAST(MAX(n_branches + 1) AS BIGINT) AS max_cyclomatic,
-              CAST(SUM(n_branches) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS branches_per_file,
-              CAST(SUM(n_comment) AS DOUBLE)
-                / CAST(NULLIF(SUM(n_lines), 0) AS DOUBLE) AS comment_density
-            FROM m GROUP BY lang ORDER BY lang
-        """,
         "code_pipeline": _CODE_TABLE_SQL + """,
             -- code prep pipeline: hygiene -> license gate -> clone
             -- dedup -> quality gate; each stage pinned by count +
@@ -4365,12 +3147,6 @@ def oracle_sql() -> dict[str, str]:
     return {k: v for k, v in _oracle_sql_all().items() if k in active}
 
 
-def retired_oracle_sql() -> dict[str, str]:
-    """Oracles for the retired board entries (see RETIRED_QUERY_KEYS)."""
-    allq = _oracle_sql_all()
-    return {k: allq[k] for k in RETIRED_QUERY_KEYS}
-
-
 def oracle_sql_all() -> dict[str, str]:
-    """ACTIVE + RETIRED oracles — what tests/test_oracle_parity.py runs."""
+    """The oracle of every ``queries_all()`` entry."""
     return _oracle_sql_all()

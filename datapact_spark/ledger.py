@@ -308,12 +308,14 @@ class MinHashIndexStore:
 
 
 class CheckpointStore:
-    """Per-partition completion manifest for resume-exactly semantics.
+    """Batch-granular completion manifest for resume-exactly semantics.
 
-    A unit of work is identified by the task's partition key columns
-    (e.g. repo, lang). ``mark_done`` atomically records completed units
-    (a parquet write of the tiny verdict slice); ``pending`` filters a
-    work list to units not yet recorded.
+    A partitioned task's groups are hashed into numbered batches.
+    ``write_batches`` writes the verdict rows of many batches in one
+    job (one ``batch=<n>`` directory each), ``finalize_batch`` then
+    touches that batch's ``_SUCCESS`` marker, and ``batch_done`` reads
+    the marker on resume, so a killed run recomputes only the batches
+    it never committed. ``read_verdicts`` serves every committed row.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -322,18 +324,6 @@ class CheckpointStore:
 
     def _dir(self, task_key: str, run_id: int) -> str:
         return os.path.join(self.path, "checkpoints", task_key, f"run_id={run_id}")
-
-    def mark_done(self, task_key: str, run_id: int, verdicts: DataFrame) -> None:
-        verdicts.write.mode("append").parquet(self._dir(task_key, run_id))
-
-    def done(self, task_key: str, run_id: int) -> DataFrame | None:
-        d = self._dir(task_key, run_id)
-        if not os.path.exists(d):
-            return None
-        try:
-            return self.spark.read.parquet(d)
-        except Exception:
-            return None
 
     # ---- batch-granular commits (used by engine.run_partitioned) ----
     def _batch_dir(self, task_key: str, run_id: int, batch: int) -> str:
@@ -345,9 +335,6 @@ class CheckpointStore:
         (idempotent overwrite) on resume."""
         return os.path.exists(os.path.join(self._batch_dir(task_key, run_id, batch), "_SUCCESS"))
 
-    def write_batch(self, task_key: str, run_id: int, batch: int, verdicts: DataFrame) -> None:
-        verdicts.write.mode("overwrite").parquet(self._batch_dir(task_key, run_id, batch))
-
     def clear_uncommitted_batches(
         self, task_key: str, run_id: int, batches: list[int]
     ) -> None:
@@ -357,9 +344,9 @@ class CheckpointStore:
         data — a batch that is empty in the current computation but has
         orphan parquet files from a killed prior attempt would otherwise
         keep its stale rows once ``finalize_batch`` marks it done. This
-        restores the per-batch ``mode('overwrite')`` idempotency contract
-        without giving up the one-scan write. Committed batches (marker
-        present) are never touched."""
+        keeps each batch's recompute idempotent without giving up the
+        one-scan write. Committed batches (marker present) are never
+        touched."""
         import shutil
 
         for b in batches:
@@ -372,10 +359,9 @@ class CheckpointStore:
         ``batch`` column; one Spark job writes every bucket directory via
         dynamic partition overwrite (only the bucket dirs present in the
         data are replaced — committed batches from a previous attempt are
-        untouched). This is the one-scan replacement for looping
-        ``write_batch`` per bucket. Callers recomputing a batch set must
-        first ``clear_uncommitted_batches`` so a now-empty batch cannot
-        serve stale rows from a killed attempt."""
+        untouched). Callers recomputing a batch set must first
+        ``clear_uncommitted_batches`` so a now-empty batch cannot serve
+        stale rows from a killed attempt."""
         (
             verdicts.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -402,15 +388,3 @@ class CheckpointStore:
     def read_verdicts(self, task_key: str, run_id: int) -> DataFrame:
         return self.spark.read.parquet(self._dir(task_key, run_id)).drop("batch")
 
-    def pending(
-        self, task_key: str, run_id: int, work: DataFrame, key_cols: list[str]
-    ) -> DataFrame:
-        """work minus completed units (left anti join on the unit key)."""
-        done = self.done(task_key, run_id)
-        if done is None:
-            return work
-        return work.join(
-            F.broadcast(done.select(*key_cols).dropDuplicates()),
-            on=key_cols,
-            how="left_anti",
-        )

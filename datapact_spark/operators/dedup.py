@@ -527,21 +527,27 @@ def simhash_portable_vectorized(
     ``[ \\t\\n\\x0b\\f\\r]`` — NOT unicode whitespace — leading AND
     trailing empty tokens kept, null text drops the row, empty text is
     one empty token). Only valid for the md5-prefix token hash; use
-    ``simhash`` for arbitrary Column token hashes."""
+    ``simhash`` for arbitrary Column token hashes. The id column keeps
+    its Spark type, as in ``minhash_signatures``."""
     import hashlib
     import re
 
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
     shifts = np.arange(bits, dtype=np.int64)
+    schema = StructType([
+        StructField("id", df.schema[id_col].dataType),
+        StructField("simhash", LongType()),
+    ])
 
     def batches(it):
         for pdf in it:
             memo: dict = {}
-            ids, sims = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            rows, sims = [], []
+            for row, text in enumerate(pdf[text_col]):
                 if text is None:
                     continue
                 toks = ws.split(str(text).strip(" ").lower())
@@ -559,15 +565,13 @@ def simhash_portable_vectorized(
                 sims.append(int(
                     (((2 * ones > len(toks)).astype(np.int64)) << shifts).sum()
                 ))
-                ids.append(int(did))
+                rows.append(row)
             yield pd.DataFrame(
-                {"id": pd.Series(ids, dtype="int64"),
+                {"id": pdf[id_col].take(rows).reset_index(drop=True),
                  "simhash": pd.Series(sims, dtype="int64")}
             )
 
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema="id long, simhash long"
-    )
+    return df.select(id_col, text_col).mapInPandas(batches, schema=schema)
 
 
 def simhash_near_dups(

@@ -35,17 +35,6 @@ def max_ts_exprs(checks: list[FreshnessCheck], side: str) -> list[Column]:
     ]
 
 
-def freshness_metrics(
-    df: DataFrame, checks: list[FreshnessCheck], side: str
-) -> DataFrame:
-    """Standalone 1-row metrics relation for a side with no profile
-    scan to ride."""
-    return df.agg(
-        F.count(F.lit(1)).cast("long").alias(f"freshness_rows_{side}"),
-        *max_ts_exprs(checks, side),
-    )
-
-
 def foldable_freshness(
     df: DataFrame,
     all_checks: list[FreshnessCheck],

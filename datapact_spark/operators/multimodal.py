@@ -199,15 +199,3 @@ def synthesize_real_video_table(spark, n: int = 40) -> DataFrame:
         build, schema="media_id long, kind string, payload binary, mime string"
     )
 
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for video rows: one output row per sampled
-    timestamp (JVM-side sequence explode — the expensive decode of each
-    frame would hang off this skeleton)."""
-    video = media.where(F.col("kind") == "video")
-    return video.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )

@@ -7,7 +7,7 @@ codegen, no Python). These run over the ``documents`` table shape
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # A tiny multilingual stopword table for the language-ID heuristic.
@@ -18,61 +18,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "et", "les", "des"],
     "zh": ["的", "是", "了", "在", "我"],
 }
-
-
-def token_count(text: Column | str) -> Column:
-    """Whitespace token count (codegen-friendly)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(F.split(F.trim(c), r"\s+"))
-
-
-def word_tokens(text: Column | str) -> Column:
-    """BPE-ish word/punct tokens: letters-or-digits runs OR single
-    non-space punctuation — a deterministic regex tokenizer."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(
-        c, F.lit(r"[\p{L}\p{N}]+|[^\p{L}\p{N}\s]"), F.lit(0)
-    )
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features: token count, mean word length,
-    punctuation ratio, stopword ratio, uppercase ratio. One projection,
-    zero shuffles."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    tokens = F.split(F.trim(t), r"\s+")
-    n_tokens = F.size(tokens)
-    stop_arr = F.array(*[F.lit(w) for w in _LANG_MARKERS["en"]])
-    n_stop = F.size(F.filter(tokens, lambda x: F.array_contains(stop_arr, x)))
-    punct = F.length(F.regexp_replace(t, r"[\p{L}\p{N}\s]", ""))
-    upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-    return df.select(
-        "*",
-        n_tokens.alias("q_n_tokens"),
-        (
-            (n_chars - (n_tokens - F.lit(1)))
-            / F.nullif(n_tokens.cast("double"), F.lit(0.0))
-        ).alias("q_mean_word_len"),
-        (punct / F.nullif(n_chars.cast("double"), F.lit(0.0))).alias("q_punct_ratio"),
-        (n_stop / F.nullif(n_tokens.cast("double"), F.lit(0.0))).alias("q_stopword_ratio"),
-        (upper / F.nullif(n_chars.cast("double"), F.lit(0.0))).alias("q_upper_ratio"),
-    )
-
-
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality score in [0,1]: rewards mid-length docs with a
-    healthy stopword presence and low punctuation noise."""
-    feats = quality_features(df, text_col)
-    len_score = F.least(F.col("q_n_tokens") / F.lit(100.0), F.lit(1.0))
-    stop_score = F.least(F.col("q_stopword_ratio") * F.lit(5.0), F.lit(1.0))
-    punct_penalty = F.greatest(
-        F.lit(1.0) - F.col("q_punct_ratio") * F.lit(4.0), F.lit(0.0)
-    )
-    return feats.withColumn(
-        "quality_score",
-        F.round((len_score * 0.4 + stop_score * 0.3 + punct_penalty * 0.3), 6),
-    )
 
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -630,6 +630,8 @@ def _drift_monitor(
       summary ``now``;
     * ``fold(base, now)`` — the baseline with ``now`` folded in.
 
+    ``base`` is a local frame of the stored rows, read once per batch.
+
     Per non-empty micro-batch the loop scores the batch (the first
     batch with mass bootstraps and passes vacuously), folds it into the
     baseline stamped with ``last_batch_id`` (when ``update_baseline``),
@@ -648,7 +650,7 @@ def _drift_monitor(
 
     def _store(summary: DataFrame, batch_id: int) -> None:
         stamped = summary.withColumn("last_batch_id", F.lit(batch_id))
-        # materialize before overwriting the dir the baseline was read from
+        # a summary without rows (an all-NULL first batch) stores nothing
         rows = stamped.collect()
         if rows:
             baselines.write(task_key, bl_column, spark.createDataFrame(rows, stamped.schema))
@@ -659,15 +661,17 @@ def _drift_monitor(
             return
         replayed = False
         if baselines.exists(task_key, bl_column):
+            # one read per batch: the stored summary is small (<= top_k
+            # + 1 categories, ~delta/2 + 2 centroids), so collect it and
+            # hand score and fold a local frame of those rows
             stored = baselines.read(task_key, bl_column)
-            last_seen = stored.select(F.max("last_batch_id")).collect()[0][0]
-            if last_seen is None:
-                last_seen = -1
+            rows = stored.collect()
+            last_seen = max((r["last_batch_id"] for r in rows), default=-1)
             if batch_id <= last_seen:
                 if _partition_has_parquet(spark, verdicts_path, batch_id):
                     return
                 replayed = True
-            base = stored.drop("last_batch_id")
+            base = spark.createDataFrame(rows, stored.schema).drop("last_batch_id")
             psi, other, now = score(base, batch_df)
             passed = (psi if metric == "psi" else other) <= threshold
             if update_baseline and batch_id > last_seen:
@@ -815,10 +819,13 @@ def categorical_drift_monitor_stream(
             q = now.get(c, 0) / float(q_tot)
             psi += (p + _EPS - (q + _EPS)) * math.log((p + _EPS) / (q + _EPS))
             tv += abs(p - q)
-        return psi, tv * 0.5, now
+        # the batch summary carries the base counts, so fold needs no
+        # second collect of the base
+        return psi, tv * 0.5, (base_counts, now)
 
-    def fold(base: DataFrame, now: dict) -> DataFrame:
-        merged = counts(base)
+    def fold(base: DataFrame, summary: tuple[dict, dict]) -> DataFrame:
+        base_counts, now = summary
+        merged = dict(base_counts)
         for c, n in now.items():
             merged[c] = merged.get(c, 0) + n
         return spark.createDataFrame(list(merged.items()), "category string, cnt long")

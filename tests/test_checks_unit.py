@@ -373,6 +373,18 @@ class TestBucketCaps:
         assert a == b
         assert 5 not in a  # null text drops the row on both paths
 
+        # string ids keep their type on both paths
+        sdocs = docs.select(
+            F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"),
+            "text",
+        )
+        sa = {r["id"]: r["simhash"]
+              for r in simhash(sdocs, bits=60, token_hash=portable).collect()}
+        vec = simhash_portable_vectorized(sdocs, bits=60)
+        assert vec.schema["id"].dataType.simpleString() == "string"
+        sb = {r["id"]: r["simhash"] for r in vec.collect()}
+        assert sa == sb == {f"d{k}": v for k, v in a.items()}
+
     def test_simhash_constant_docs_bounded(self, spark):
         from datapact_spark.operators.dedup import simhash, simhash_near_dups
 
@@ -716,6 +728,29 @@ class TestRound5Fixes:
             for r in embedding_near_dups(df, threshold=0.99, bits=None).collect()
         }
         assert (1000, 1001) in ids
+
+    def test_doc_fingerprint_normalizes_case_and_whitespace(self, spark):
+        """The exact-dup key is md5 of the lowercased text with space
+        trimmed and whitespace runs collapsed to one space."""
+        import hashlib
+
+        from datapact_spark.operators.textops import doc_fingerprint
+
+        docs = spark.createDataFrame(
+            [
+                (1, "Hello   World"),
+                (2, "  hello world "),
+                (3, "hello\tWORLD"),
+                (4, "hello world!"),
+                (5, None),
+            ],
+            "doc_id long, text string",
+        )
+        fp = {r["doc_id"]: r["fingerprint"] for r in doc_fingerprint(docs).collect()}
+        key = hashlib.md5(b"hello world").hexdigest()
+        assert fp[1] == fp[2] == fp[3] == key
+        assert fp[4] == hashlib.md5(b"hello world!").hexdigest()
+        assert fp[5] is None
 
     def test_repetition_stats_known_values(self, spark):
         from datapact_spark.operators.textops import repetition_stats

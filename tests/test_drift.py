@@ -392,6 +392,42 @@ def test_categorical_drift_monitor_stream(spark, tmp_path):
     assert sum(snap2.values()) == 60_000
 
 
+def test_categorical_monitor_reads_baseline_once_per_batch(spark, tmp_path):
+    """A non-bootstrap categorical batch reads the stored baseline once
+    and scores and folds a local frame of its rows: its stream run is
+    11 Spark jobs at local[4]. Reading the stored baseline again in
+    score and fold made it 13."""
+    from datapact_spark.ledger import BaselineStore
+    from datapact_spark.streaming.incremental import (
+        categorical_drift_monitor_stream,
+    )
+
+    src_dir = str(tmp_path / "src")
+    h = F.pmod(F.xxhash64("id"), F.lit(10))
+    baselines = BaselineStore(spark, str(tmp_path / "res"))
+    tracker = spark.sparkContext.statusTracker()
+
+    def run_batch(lo: int, hi: int) -> int:
+        spark.range(lo, hi).select(
+            F.when(h < 7, F.lit("en")).otherwise(F.lit("de")).alias("lang")
+        ).coalesce(1).write.mode("append").parquet(src_dir)
+        stream = spark.readStream.schema("lang string").parquet(src_dir)
+        q = categorical_drift_monitor_stream(
+            spark, stream, "lang", baselines, "jobs", str(tmp_path / "ckpt"),
+            str(tmp_path / "verdicts"), metric="tv", threshold=0.1, top_k=4,
+        )
+        q.awaitTermination(120)
+        return len(tracker.getJobIdsForGroup(str(q.runId)))
+
+    run_batch(0, 2_000)  # bootstrap
+    assert run_batch(2_000, 4_000) <= 11
+    v = spark.read.parquet(str(tmp_path / "verdicts")).collect()
+    assert sorted(r["batch_id"] for r in v) == [0, 1]
+    snap = baselines.read("jobs", "lang__cat_stream").collect()
+    assert sum(r["cnt"] for r in snap) == 4_000
+    assert {r["last_batch_id"] for r in snap} == {1}
+
+
 # ---------------------------------------------------------------------------
 # one builder per sketch family: task level (no group keys), per group
 # and snapshot mode must agree

@@ -20,9 +20,8 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# Sweep the FULL surface: the active 50-entry driver board plus the
-# retired-but-still-supported entries (the driver caps at 50; parity
-# for the retired ones is enforced here instead).
+# Sweep every oracle-backed query: the 50-entry driver board plus any
+# off-board query that is the sole test of some product behaviour.
 ORACLES = entry_mod.oracle_sql_all()
 QUERIES = entry_mod.queries_all()
 ORACLE_KEYS = sorted(ORACLES.keys())
@@ -96,19 +95,19 @@ def test_all_queries_have_oracle_or_are_rows_only():
 def test_active_board_fits_driver_cap():
     """The driver verifies at most 50 queries() entries per round (r4
     silently dropped entries past #50): the active board must fit, and
-    active/retired must partition the full surface with matching
-    oracle sets."""
+    the board and the off-board queries must partition the swept
+    surface with matching oracle sets."""
     active_q = entry_mod.queries()
     active_o = entry_mod.oracle_sql()
-    retired_q = entry_mod.retired_queries()
-    extended_q = entry_mod.extended_queries()
+    off_board_q = set(QUERIES) - set(active_q)
+    off_board_o = set(ORACLES) - set(active_o)
     assert len(active_q) <= 50
     assert set(active_o) == set(active_q)
-    assert set(active_q).isdisjoint(retired_q)
-    assert set(active_q).isdisjoint(extended_q)
-    assert set(retired_q).isdisjoint(extended_q)
-    assert set(active_q) | set(retired_q) | set(extended_q) == set(QUERIES)
-    assert set(entry_mod.retired_oracle_sql()) == set(retired_q)
+    # the sweep runs the board's own functions and oracles; off-board
+    # entries are disjoint from the board by construction
+    assert all(QUERIES[k] is fn for k, fn in active_q.items())
+    assert all(ORACLES[k] == sql for k, sql in active_o.items())
+    assert off_board_o == off_board_q
 
 
 def test_entry_smoke(spark):
@@ -160,9 +159,27 @@ def test_drift_psi_value_positive(spark):
 
 
 def test_multimodal_features_deterministic(spark):
-    a = {tuple(r) for r in QUERIES["multimodal_features"](spark, SF_DIR).collect()}
-    b = {tuple(r) for r in QUERIES["multimodal_features"](spark, SF_DIR).collect()}
-    assert a == b and len(a) == 3  # image/audio/video groups
+    """The stub decode: feature i is the i-th little-endian u32 of the
+    sha256 of the payload, mod 1000, over 1000; equal on every run."""
+    import hashlib
+
+    import numpy as np
+
+    from datapact_spark.operators.multimodal import (
+        extract_features,
+        synthesize_media_table,
+    )
+
+    media = synthesize_media_table(spark, n=96)
+    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
+    a = {r["media_id"]: tuple(r) for r in extract_features(media, feature_dim=8).collect()}
+    b = {r["media_id"]: tuple(r) for r in extract_features(media, feature_dim=8).collect()}
+    assert a == b and len(a) == 96
+    assert {r[1] for r in a.values()} == {"image", "audio", "video"}
+    for mid, (_, _, n_bytes, feature) in a.items():
+        u32 = np.frombuffer(hashlib.sha256(payloads[mid]).digest(), dtype=np.uint32)
+        assert n_bytes == len(payloads[mid]) == 64
+        assert list(feature) == list((u32 % 1000).astype(np.float32) / 1000.0)
 
 
 def test_embedding_near_dups_finds_injected(spark):

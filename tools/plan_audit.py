@@ -53,9 +53,9 @@ def main(names: list[str]) -> int:
         if "Expand" in tree:
             flags.append("Expand")
         if "collect_list" in plan:
-            # justified in exactly two places: run_summary's
+            # justified only where bounded, e.g. run_summary's
             # failed_task_keys (bounded by task count, reference
-            # contract) and dataset_fingerprint's reference-parity hash
+            # contract)
             flags.append("collect_list")
         if "CartesianProduct" in tree:
             flags.append("CartesianProduct")
