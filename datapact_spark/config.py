@@ -440,7 +440,7 @@ class ValidationTask(BaseModel):
     #   when most groups are clean. Bit-identical to 'join' only when PKs
     #   are unique per group, so it REQUIRES a uniqueness check on (a
     #   subset of) the PKs; groups with dup PKs are routed to the exact
-    #   join (see plans/partitioned.py ``fp_in_profile``);
+    #   join (see plans/compiler.py ``fp_in_profile``);
     # 'fingerprint_multiset' — same plan WITHOUT the uniqueness
     #   requirement: group equality is (pk, row_hash) MULTISET equality.
     #   Never misses corruption (unequal multisets always fingerprint-
@@ -557,7 +557,7 @@ class ValidationTask(BaseModel):
     @model_validator(mode="after")
     def _validate_fingerprint_requires_pk_uniqueness(self) -> "ValidationTask":
         # fingerprint row-hash mode is only exact when PKs are unique per
-        # group (plans/partitioned.py ``fp_in_profile``: equal multisets
+        # group (plans/compiler.py ``fp_in_profile``: equal multisets
         # with duplicate PKs fingerprint-match while the join path would
         # count cross-pair mismatches). Enforce the guard at
         # compile time: a uniqueness check over (a subset of) the primary

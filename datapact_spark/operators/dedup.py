@@ -800,7 +800,6 @@ def doc_duplication_score(
     stride: int = 1,
     min_docs: int = 2,
     mod_sample: int | None = None,
-    carrier_strategy: str = "join",
     broadcast_rep_max: int = 2_000_000,
 ) -> DataFrame:
     """Per-document verbatim-duplication score: the fraction of a
@@ -809,65 +808,46 @@ def doc_duplication_score(
     pipelines drop or trim documents past a score threshold. Expects
     one row per document id (see ``char_ngram_doc_counts_vectorized``).
 
-    ``carrier_strategy``:
-
-    * ``"join"`` (default, the 100-TB shape) — persist the per-(gram,
-      doc) occurrence aggregate ONCE (the persist is what keeps the
-      gram hashing single-pass: Exchange reuse does not fire across
-      two consumers of a mapInPandas-fed aggregate, and re-hashing
-      measured ~2× the total cost at 1M docs), derive carrier counts
-      with a ``groupBy(gram_hash)`` whose MAP-SIDE PARTIALS absorb
-      even a gram present in every document, and join only the
-      >= ``min_docs`` gram set back. The join is AQE-skew-splittable
-      (unlike a window partition, which pins all carrier rows of one
-      gram to a single task — a near-universal boilerplate gram sends
-      O(corpus) rows through one reducer at scale).
-    * ``"window"`` — the former single-shuffle window shape, kept as a
-      small-data opt-in: no persist and one fewer exchange, but the
-      carrier count runs over ``Window.partitionBy(gram_hash)`` and
-      AQE never splits skewed windows.
+    The per-(gram, doc) occurrence aggregate is persisted ONCE (the
+    persist is what keeps the gram hashing single-pass: Exchange reuse
+    does not fire across two consumers of a mapInPandas-fed aggregate,
+    and re-hashing measured ~2× the total cost at 1M docs). Carrier
+    counts come from a ``groupBy(gram_hash)`` whose MAP-SIDE PARTIALS
+    absorb even a gram present in every document, and only the >=
+    ``min_docs`` gram set joins back. The join is AQE-skew-splittable,
+    unlike a window partition, which pins all carrier rows of one gram
+    to a single task — a near-universal boilerplate gram would send
+    O(corpus) rows through one reducer at scale.
     """
+    from pyspark.storagelevel import StorageLevel
+
+    from datapact_spark.session import persist_scoped
+
     # per-doc distinct counts complete the (id, gram) aggregation
     # inside the Python worker — no per-occurrence Arrow transfer and
     # no per-(gram, id) groupBy shuffle of the raw gram stream
     gi = char_ngram_doc_counts_vectorized(
         df, id_col, text_col, k, stride, mod_sample
     ).withColumnRenamed("occ", "__occ")
-
-    if carrier_strategy == "window":
-        wg = Window.partitionBy("gram_hash")
-        scored = gi.withColumn("__n_docs", F.count(F.lit(1)).over(wg)).withColumn(
-            "__shared", F.col("__n_docs") >= min_docs
-        )
-    elif carrier_strategy == "join":
-        from pyspark.storagelevel import StorageLevel
-
-        from datapact_spark.session import persist_scoped
-
-        # Rows of gi are distinct (gram, doc) pairs, so count == the
-        # carrier-doc count. The caller's cache_scope releases the
-        # persist.
-        gi = persist_scoped(gi, StorageLevel.MEMORY_AND_DISK)
-        rep = (
-            gi.groupBy("gram_hash")
-            .agg(F.count(F.lit(1)).alias("__n_docs"))
-            .where(F.col("__n_docs") >= min_docs)
-            .select("gram_hash", F.lit(True).alias("__shared"))
-        )
-        # One cache-scan count picks the join strategy (gi is persisted,
-        # so this populates the cache the join needs anyway): when the
-        # >= min_docs gram set fits a broadcast, the big gi side never
-        # shuffles for the join at all; past the cap it stays a
-        # shuffled join, which AQE skew-splits.
-        if broadcast_rep_max and rep.count() <= broadcast_rep_max:
-            rep = F.broadcast(rep)
-        scored = gi.join(rep, "gram_hash", "left").withColumn(
-            "__shared", F.coalesce(F.col("__shared"), F.lit(False))
-        )
-    else:
-        raise ValueError(
-            f"carrier_strategy must be 'join' or 'window', got {carrier_strategy!r}"
-        )
+    # Rows of gi are distinct (gram, doc) pairs, so count == the
+    # carrier-doc count. The caller's cache_scope releases the persist.
+    gi = persist_scoped(gi, StorageLevel.MEMORY_AND_DISK)
+    rep = (
+        gi.groupBy("gram_hash")
+        .agg(F.count(F.lit(1)).alias("__n_docs"))
+        .where(F.col("__n_docs") >= min_docs)
+        .select("gram_hash", F.lit(True).alias("__shared"))
+    )
+    # One cache-scan count picks the join strategy (gi is persisted, so
+    # this populates the cache the join needs anyway): when the >=
+    # min_docs gram set fits a broadcast, the big gi side never shuffles
+    # for the join at all; past the cap it stays a shuffled join, which
+    # AQE skew-splits.
+    if broadcast_rep_max and rep.count() <= broadcast_rep_max:
+        rep = F.broadcast(rep)
+    scored = gi.join(rep, "gram_hash", "left").withColumn(
+        "__shared", F.coalesce(F.col("__shared"), F.lit(False))
+    )
 
     return scored.groupBy("id").agg(
         F.sum("__occ").alias("n_grams"),

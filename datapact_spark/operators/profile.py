@@ -21,7 +21,7 @@ row per upstream partition, never as its raw rows.
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -158,29 +158,19 @@ def profile_df(
     df: DataFrame,
     task: ValidationTask,
     side: str,
+    group_cols: Sequence[str] = (),
     extra_exprs: list[Column] | None = None,
 ) -> DataFrame:
-    """One-row stats profile for one side — a single scan.
+    """Stats profile for one side — a single scan: one row, or one row
+    per group of ``group_cols`` (the per-partition verdict key, e.g.
+    repo, lang) with exact distinct counts whatever the task's
+    uniqueness strategy. Grouped, it is one shuffle on the group key
+    with partial aggregation map-side.
 
-    ``extra_exprs`` folds additional commutative aggregates (e.g.
-    constraint-violation sums) into the SAME scan."""
-    return df.agg(*profile_exprs(task, side), *(extra_exprs or []))
-
-
-def grouped_profile_df(
-    df: DataFrame,
-    task: ValidationTask,
-    side: str,
-    group_cols: list[str],
-    extra_exprs: list[Column] | None = None,
-) -> DataFrame:
-    """Per-partition-group stats profile (north-star per-partition
-    verdicts): same single-pass expressions, grouped by the verdict key
-    (e.g. repo, lang), with exact distinct counts whatever the task's
-    uniqueness strategy. One shuffle on the group key, partial
-    aggregation map-side. ``extra_exprs`` lets callers fold additional
-    commutative aggregates (e.g. the row-hash group fingerprint) into
-    the SAME scan."""
+    ``extra_exprs`` folds additional commutative aggregates (constraint
+    sums, freshness MAX(ts), the row-hash group fingerprint) into the
+    SAME scan."""
     return df.groupBy(*[F.col(c) for c in group_cols]).agg(
-        *profile_exprs(task, side, exact_distinct=True), *(extra_exprs or [])
+        *profile_exprs(task, side, exact_distinct=bool(group_cols)),
+        *(extra_exprs or []),
     )

@@ -33,8 +33,9 @@ import datetime as dt
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from datapact_spark.config import ValidationTask
 from datapact_spark.plans.compiler import compile_task
@@ -611,8 +612,8 @@ def _drift_monitor(
     verdicts_path: str,
     *,
     bootstrap: Callable[[DataFrame], DataFrame],
-    score: Callable[[DataFrame, DataFrame], tuple[float, float, object]],
-    fold: Callable[[DataFrame, object], DataFrame],
+    score: Callable[[list[Row], StructType, DataFrame], tuple[float, float, object]],
+    fold: Callable[[object], DataFrame],
     second: str,
     metric: str,
     threshold: float,
@@ -625,12 +626,14 @@ def _drift_monitor(
 
     * ``bootstrap(batch_df)`` — the first baseline (no rows when the
       batch's column is entirely NULL: nothing to compare against yet);
-    * ``score(base, batch_df)`` → ``(psi, <second>, now)`` — the batch
-      scored against the stored baseline ``base``, and the batch's own
-      summary ``now``;
-    * ``fold(base, now)`` — the baseline with ``now`` folded in.
+    * ``score(base, schema, batch_df)`` → ``(psi, <second>, summary)``
+      — the batch scored against the stored baseline, and what ``fold``
+      needs of the batch;
+    * ``fold(summary)`` — the baseline with the batch folded in.
 
-    ``base`` is a local frame of the stored rows, read once per batch.
+    ``base`` holds the stored baseline's rows (of ``schema``), read and
+    collected once per batch: the families work on the driver rows, and
+    only a family that needs a frame of them builds one.
 
     Per non-empty micro-batch the loop scores the batch (the first
     batch with mass bootstraps and passes vacuously), folds it into the
@@ -649,11 +652,9 @@ def _drift_monitor(
     already contains the batch's own data."""
 
     def _store(summary: DataFrame, batch_id: int) -> None:
-        stamped = summary.withColumn("last_batch_id", F.lit(batch_id))
-        # a summary without rows (an all-NULL first batch) stores nothing
-        rows = stamped.collect()
-        if rows:
-            baselines.write(task_key, bl_column, spark.createDataFrame(rows, stamped.schema))
+        baselines.write(
+            task_key, bl_column, summary.withColumn("last_batch_id", F.lit(batch_id))
+        )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         n_rows = batch_df.count()
@@ -671,14 +672,20 @@ def _drift_monitor(
                 if _partition_has_parquet(spark, verdicts_path, batch_id):
                     return
                 replayed = True
-            base = spark.createDataFrame(rows, stored.schema).drop("last_batch_id")
-            psi, other, now = score(base, batch_df)
+            schema = StructType([f for f in stored.schema if f.name != "last_batch_id"])
+            base = [Row(**{n: r[n] for n in schema.names}) for r in rows]
+            psi, other, summary = score(base, schema, batch_df)
             passed = (psi if metric == "psi" else other) <= threshold
             if update_baseline and batch_id > last_seen:
-                _store(fold(base, now), batch_id)
+                _store(fold(summary), batch_id)
         else:
             psi, other, passed = 0.0, 0.0, True
-            _store(bootstrap(batch_df), batch_id)
+            boot = bootstrap(batch_df)
+            # collected once: a baseline without rows (an all-NULL first
+            # batch) stores nothing, and the write does not recompute it
+            boot_rows = boot.collect()
+            if boot_rows:
+                _store(spark.createDataFrame(boot_rows, boot.schema), batch_id)
         verdict = spark.createDataFrame(
             [(batch_id, n_rows, psi, other, bool(passed), replayed)],
             f"batch_id long, n_rows long, psi double, {second} double,"
@@ -747,17 +754,18 @@ def drift_monitor_stream(
         # microbatches are small; skip the salted sub-merge level
         return tdigest_sketch(batch_df, column, delta, merge_salt_buckets=1)
 
-    def score(base: DataFrame, batch_df: DataFrame):
+    def score(base: list[Row], schema: StructType, batch_df: DataFrame):
+        base_df = spark.createDataFrame(base, schema)
         now = sketch(batch_df)
-        m = tdigest_drift(base, now, bins=bins).collect()[0]
-        return float(m["psi"] or 0.0), float(m["ks"] or 0.0), now
+        m = tdigest_drift(base_df, now, bins=bins).collect()[0]
+        return float(m["psi"] or 0.0), float(m["ks"] or 0.0), (base_df, now)
 
     return _drift_monitor(
         spark, stream_df, baselines, task_key, f"{column}__stream",
         checkpoint_dir, verdicts_path,
         bootstrap=sketch,
         score=score,
-        fold=lambda base, now: merge_tdigests(base, now, delta),
+        fold=lambda summary: merge_tdigests(*summary, delta),
         second="ks", metric=metric, threshold=threshold,
         update_baseline=update_baseline,
         trigger_available_now=trigger_available_now, on_batch=on_batch,
@@ -799,18 +807,18 @@ def categorical_drift_monitor_stream(
     )
     from datapact_spark.operators.drift import _EPS  # noqa: PLC2701
 
-    def counts(base: DataFrame) -> dict:
-        return {r["category"]: r["cnt"] for r in base.collect()}  # <= top_k + 1
-
-    def score(base: DataFrame, batch_df: DataFrame):
-        # tiny frames — plain python, deterministic category-ordered
-        # folds, same arithmetic as the batch path
+    def score(base: list[Row], schema: StructType, batch_df: DataFrame):
+        # tiny frames (<= top_k + 1 rows) — plain python, deterministic
+        # category-ordered folds, same arithmetic as the batch path
         import math
 
-        base_counts = counts(base)
+        base_counts = {r["category"]: r["cnt"] for r in base}
         frame = [c for c in base_counts if c != OTHER_CATEGORY]
         cats = spark.createDataFrame([(c,) for c in frame], "category string")
-        now = counts(category_counts(batch_df, column, cats))
+        now = {
+            r["category"]: r["cnt"]
+            for r in category_counts(batch_df, column, cats).collect()
+        }
         p_tot = sum(base_counts.values()) or 1
         q_tot = sum(now.values()) or 1
         psi = tv = 0.0
@@ -820,10 +828,10 @@ def categorical_drift_monitor_stream(
             psi += (p + _EPS - (q + _EPS)) * math.log((p + _EPS) / (q + _EPS))
             tv += abs(p - q)
         # the batch summary carries the base counts, so fold needs no
-        # second collect of the base
+        # second pass over the base
         return psi, tv * 0.5, (base_counts, now)
 
-    def fold(base: DataFrame, summary: tuple[dict, dict]) -> DataFrame:
+    def fold(summary: tuple[dict, dict]) -> DataFrame:
         base_counts, now = summary
         merged = dict(base_counts)
         for c, n in now.items():

@@ -567,33 +567,35 @@ class TestRound5Fixes:
             "doc_id long, text string",
         )
 
-    def test_carrier_join_matches_window(self, spark):
-        """The default AQE-skew-splittable join carrier strategy must
-        produce byte-identical scores to the former window shape
-        (rows of gi are distinct (gram, doc) pairs, so a groupBy count
-        == the window count-over-partition)."""
+    def test_carrier_counts_match_python_kgrams(self, spark):
+        """Per-document scores equal a pure-Python k-gram count: a
+        document's windows, and those of its windows whose gram occurs
+        in >= 2 distinct documents (doc 4 repeats a gram inside itself:
+        every occurrence counts, its one document counts once)."""
+        from collections import Counter
+
         from datapact_spark.operators.dedup import doc_duplication_score
 
+        k = 20
         docs = self._boiler_docs(spark)
-        join_rows = sorted(
-            tuple(r) for r in doc_duplication_score(docs, k=20).collect()
-        )
-        win_rows = sorted(
-            tuple(r)
-            for r in doc_duplication_score(
-                docs, k=20, carrier_strategy="window"
-            ).collect()
-        )
-        assert join_rows == win_rows
-        assert len(join_rows) == 4
-
-    def test_carrier_strategy_invalid_raises(self, spark):
-        from datapact_spark.operators.dedup import doc_duplication_score
-
-        with pytest.raises(ValueError, match="carrier_strategy"):
-            doc_duplication_score(
-                self._boiler_docs(spark), k=20, carrier_strategy="bogus"
+        texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+        grams = {
+            d: Counter(t[i : i + k] for i in range(len(t) - k + 1))
+            for d, t in texts.items()
+        }
+        carriers = Counter(g for c in grams.values() for g in c)
+        expected = sorted(
+            (
+                d,
+                sum(c.values()),
+                sum(n for g, n in c.items() if carriers[g] >= 2),
             )
+            for d, c in grams.items()
+        )
+        rows = sorted(doc_duplication_score(docs, k=k).collect())
+        assert [tuple(r)[:3] for r in rows] == expected
+        assert [r["dup_score"] for r in rows] == [s / n for _, n, s in expected]
+        assert expected[3][1] > len(set(grams[4])) and expected[2][2] == 0
 
     def test_vectorized_windows_are_codepoint_aligned(self, spark):
         """Non-ASCII text: the numpy gram kernel must count the same

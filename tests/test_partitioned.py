@@ -600,7 +600,7 @@ def test_distinct_path_spreads_skewed_group(spark):
       with AQE coalescing off, no reducer of it receives > 2x the median
       bytes;
     * the distinct counts equal countDistinct."""
-    from datapact_spark.operators.profile import grouped_profile_df
+    from datapact_spark.operators.profile import profile_df
 
     coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -618,7 +618,7 @@ def test_distinct_path_spreads_skewed_group(spark):
             count_tolerance=0.0,
             uniqueness_columns=["repo", "path"], uniqueness_tolerance=0.0,
         )
-        prof = grouped_profile_df(df, task, "source", ["repo"])
+        prof = profile_df(df, task, "source", ["repo"])
         got = {r["repo"]: r["source_distinct_uniqs"] for r in prof.collect()}
 
         stages = _shuffle_stages(prof._jdf.queryExecution().executedPlan(), [])
@@ -648,3 +648,136 @@ def test_distinct_path_spreads_skewed_group(spark):
         assert got == truth
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+
+
+# per family: the task's checks, then per payload struct its grouped
+# *_passed column (None: the pair is observed, not enforced) and its
+# numbers' grouped columns
+_CONSTRAINTS = [
+    {"name": "small", "predicate": "x < 250", "side": "source", "null_passes": False},
+    {"name": "nonneg", "predicate": "x >= 0", "side": "both", "tolerance": 0.02},
+]
+_ONE_GROUP_FAMILIES = {
+    "count": (
+        dict(count_tolerance=0.05),
+        [("count_validation", "count_passed",
+          {"source_count": "source_count", "target_count": "target_count"})],
+    ),
+    "null_pk": (
+        dict(primary_keys=["id"], null_validation_columns=["v", "x"],
+             null_validation_tolerance=0.3),
+        [(f"null_validation_{c}", f"null_{c}_passed",
+          {"source_nulls": f"source_nulls_{c}", "target_nulls": f"target_nulls_{c}"})
+         for c in ("v", "x")],
+    ),
+    "null_counts": (
+        dict(null_validation_columns=["v", "x"], null_validation_tolerance=0.3),
+        [(f"null_validation_{c}", f"null_{c}_passed",
+          {"source_nulls": f"source_nulls_{c}", "target_nulls": f"target_nulls_{c}"})
+         for c in ("v", "x")],
+    ),
+    "agg": (
+        dict(agg_validations=[{"column": "x", "validations": [
+            {"agg": a, "tolerance": 0.01} for a in ("SUM", "AVG", "MIN", "MAX", "COUNT")]}]),
+        [(f"agg_validation_x_{a}", f"agg_x_{a}_passed",
+          {"source_value": f"source_value_x_{a}", "target_value": f"target_value_x_{a}"})
+         for a in ("SUM", "AVG", "MIN", "MAX", "COUNT")],
+    ),
+    "uniqueness": (
+        dict(uniqueness_columns=["id"], uniqueness_tolerance=0.0),
+        [("uniqueness_validation_id", "uniqueness_passed",
+          {"source_duplicates": "source_duplicates", "target_duplicates": "target_duplicates"})],
+    ),
+    "row_hash": (
+        dict(primary_keys=["id"], pk_row_hash_check=True, pk_hash_tolerance=0.2),
+        [("row_hash_validation", "row_hash_passed",
+          {"compared_rows": "total_compared_rows", "mismatch_count": "mismatch_count"})],
+    ),
+    "row_hash_multiset": (
+        dict(primary_keys=["id"], pk_row_hash_check=True, pk_hash_tolerance=0.05,
+             row_hash_mode="fingerprint_multiset"),
+        [("row_hash_validation", "row_hash_passed",
+          {"compared_rows": "total_compared_rows", "mismatch_count": "mismatch_count"})],
+    ),
+    "referential": (
+        dict(referential_checks=[{"name": "fk", "fk_columns": ["fk"], "ref_table": "og_parent",
+                                  "ref_columns": ["pk"], "tolerance": 0.2}]),
+        [("referential_validation_fk", "ref_fk_passed", {"violation_rows": "violation_count_fk"})],
+    ),
+    "constraint": (
+        dict(constraint_checks=_CONSTRAINTS),
+        [(f"constraint_validation_{n}", p, {"violation_rows": f"constraint_violations_{n}"})
+         for n, p in (("small_source", "constraint_small_source_passed"),
+                      ("nonneg_source", "constraint_nonneg_source_passed"),
+                      ("small_target", None),
+                      ("nonneg_target", "constraint_nonneg_target_passed"))],
+    ),
+    "freshness": (
+        dict(freshness_checks=[{"column": "ts", "max_age_hours": 1e7, "side": "target"}],
+             count_tolerance=0.5),
+        [(f"freshness_validation_ts_{s}", p, {"latest": f"freshness_max_ts_{s}"})
+         for s, p in (("source", None), ("target", "freshness_ts_target_passed"))],
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def one_group(spark):
+    """One group (grp = 'g'): 200 source rows, and a target that drops
+    five, NULLs, mutates and negates some values, and repeats one key;
+    the source's FKs 0..6 miss parent key 6."""
+    ts = F.expr("timestamp'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, id)")
+    src = spark.range(200).select(
+        F.lit("g").alias("grp"),
+        "id",
+        F.when(F.col("id") % 10 == 0, None).otherwise(F.concat(F.lit("v"), "id")).alias("v"),
+        F.when(F.col("id") % 25 == 0, None).otherwise(F.col("id") * 1.5).alias("x"),
+        (F.col("id") % 7).alias("fk"),
+        ts.alias("ts"),
+    )
+    tgt = src.where(F.col("id") >= 5).select(
+        "grp", "id",
+        F.when(F.col("id") % 8 == 0, None).otherwise(F.col("v")).alias("v"),
+        F.when(F.col("id") % 20 == 0, -F.col("x")).otherwise(F.col("x")).alias("x"),
+        "fk", "ts",
+    )
+    tgt = tgt.unionByName(tgt.where(F.col("id") == 10))
+    resolver = TableResolver(spark)
+    resolver.register("og_src", src)
+    resolver.register("og_tgt", tgt)
+    resolver.register("og_parent", spark.range(6).select(F.col("id").alias("pk")))
+    return resolver
+
+
+@pytest.mark.parametrize("family", list(_ONE_GROUP_FAMILIES))
+def test_one_group_verdict_equals_task_verdict(spark, one_group, family):
+    """Both levels render one check walk: on a one-group table each
+    grouped ``*_passed`` column is the task payload's status and each
+    grouped metric is the payload's number (FORMAT_NUMBER'd), family by
+    family, and the overall verdicts agree."""
+    import datetime as dt
+    import json
+
+    from datapact_spark.plans.compiler import compile_task
+    from datapact_spark.plans.partitioned import compile_partition_verdicts
+
+    checks, structs = _ONE_GROUP_FAMILIES[family]
+    task = dict(task_key=f"one_{family}", source="og_src", target="og_tgt", **checks)
+    (verdict,) = compile_task(spark, ValidationTask(**task), one_group).metrics_df.collect()
+    payload = json.loads(verdict["result_payload"])
+    (row,) = compile_partition_verdicts(
+        spark, ValidationTask(**task, partition_by=["grp"]), one_group
+    ).collect()
+
+    def shown(value) -> str:
+        if isinstance(value, dt.datetime):
+            return value.strftime("%Y-%m-%d %H:%M:%S")
+        return f"{value:,}" if isinstance(value, int) else f"{value:,.2f}"
+
+    for key, passed, numbers in structs:
+        got = payload[key]
+        if passed is not None:
+            assert (got["status"] == "PASS") is row[passed], (key, got, row)
+        for field, column in numbers.items():
+            assert got[field] == shown(row[column]), (key, field, got, row[column])
+    assert row["overall_validation_passed"] is verdict["overall_validation_passed"]

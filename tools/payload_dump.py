@@ -16,11 +16,15 @@ it), and diffs the two dumps:
 
 Configs covered: the demo, every ``examples/*.yml`` with validations
 (run twice, so snapshot drift checks bootstrap and then compare), the
-benchmark's ``validate_tables`` config on its seed-3 inputs, and a drift
+benchmark's ``validate_tables`` config on its seed-3 inputs, a drift
 matrix — 3 sketch families × 2 metrics × {two-sample, snapshot
 bootstrap + compare} × {task level, ``partition_by``} — on a drifted and
-on an all-NULL target. Floats are dumped with ``repr`` (round-trip
-exact); freshness ``age_hours`` (wall-clock dependent) is dropped.
+on an all-NULL target, and a check-family matrix — every groupable
+family × {task level, ``partition_by``} — on clean and on corrupted
+inputs. Beside each run's payloads and group verdicts, the sorted rows
+of every violations file the run writes are dumped. Floats are dumped
+with ``repr`` (round-trip exact); freshness ``age_hours`` (wall-clock
+dependent) is dropped.
 """
 
 from __future__ import annotations
@@ -64,19 +68,25 @@ def dump(repo: str, out: str, work: str, sf_dir: str) -> None:
                       extra_conf={"spark.ui.enabled": "false"})
     result: dict = {}
 
+    def rows_of(df):
+        return sorted(json.dumps(r.asDict(), default=str, sort_keys=True) for r in df.collect())
+
     def run(prefix, cfg, resolver, results):
         engine = DataPactEngine(spark, resolver, results_path=results)
         res = engine.run(cfg, job_name=prefix, raise_on_failure=False)
         for k, o in sorted(res.outcomes.items()):
             p = json.dumps(_strip(json.loads(o.payload)), sort_keys=True) if o.payload else None
             result[f"{prefix}/{k}"] = {"status": o.status, "payload": p, "error": o.error}
+        vdir = os.path.join(results, "violations", f"run_id={res.run_id}")
+        for path in sorted(glob.glob(os.path.join(vdir, "*", "*"))):
+            task_key, kind = path.split(os.sep)[-2:]
+            result[f"{prefix}/{task_key}/violations/{kind}"] = rows_of(spark.read.parquet(path))
         for t in cfg.validations:
             if not t.partition_by:
                 continue
             try:
                 with cache_scope():
-                    rows = compile_partition_verdicts(spark, t, resolver).collect()
-                rows = sorted(json.dumps(r.asDict(), default=str, sort_keys=True) for r in rows)
+                    rows = rows_of(compile_partition_verdicts(spark, t, resolver))
             except ValueError as e:
                 rows = f"ValueError: {e}"
             result[f"{prefix}/{t.task_key}/groups"] = rows
@@ -155,6 +165,86 @@ def dump(repo: str, out: str, work: str, sf_dir: str) -> None:
         run(f"matrix_{variant}/snapshot_boot", matrix("snapshot"), r, f"{work}/m_{variant}_s")
         r.register("src", tgt)
         run(f"matrix_{variant}/snapshot_cmp", matrix("snapshot"), r, f"{work}/m_{variant}_s")
+
+    # the check-family matrix: clean inputs, then a corrupted source
+    # (dangling FKs, negative prices) against a corrupted target (dropped,
+    # mutated, NULLed and duplicated rows, and a group only it has)
+    k = F.col("o_orderkey")
+    src_bad = orders.select(
+        *[c for c in orders.columns if c not in ("o_custkey", "o_totalprice")],
+        F.when(k % 19 == 0, F.col("o_custkey") + 1_000_000).otherwise(F.col("o_custkey"))
+        .alias("o_custkey"),
+        F.when(k % 23 == 0, -F.col("o_totalprice")).otherwise(F.col("o_totalprice"))
+        .alias("o_totalprice"),
+    )
+    tgt_bad = orders.where(k % 97 != 0).select(
+        "o_orderkey", "o_orderdate",
+        F.when(k % 31 == 0, F.lit(None)).otherwise(F.col("o_custkey")).alias("o_custkey"),
+        F.when(k % 17 == 0, F.lit(None)).otherwise(F.col("o_orderstatus"))
+        .alias("o_orderstatus"),
+        F.when(k % 29 == 0, F.lit(None).cast("double"))
+        .when(k % 13 == 0, F.col("o_totalprice") * 1.01)
+        .otherwise(F.col("o_totalprice")).alias("o_totalprice"),
+        F.when(k % 211 == 0, F.lit("6-PHANTOM")).otherwise(F.col("o_orderpriority"))
+        .alias("o_orderpriority"),
+    )
+    tgt_bad = tgt_bad.unionByName(tgt_bad.where(k % 101 == 0))
+    pk = {"primary_keys": ["o_orderkey"]}
+    uniq = {"uniqueness_columns": ["o_orderkey"], "uniqueness_tolerance": 0.0}
+    row_hash = {**pk, "pk_row_hash_check": True, "pk_hash_tolerance": 0.0,
+                "materialize_violations": True}
+    nulls = {"null_validation_columns": ["o_custkey", "o_orderstatus"],
+             "null_validation_tolerance": 0.05}
+    constraints = {"materialize_violations": True, "constraint_checks": [
+        {"name": "pos_src", "predicate": "o_totalprice > 0", "side": "source"},
+        {"name": "pos_tgt_strict", "predicate": "o_totalprice > 0", "side": "target",
+         "null_passes": False},
+        {"name": "status_both", "predicate": "o_orderstatus IN ('F', 'O')", "side": "both",
+         "tolerance": 0.5},
+        {"name": "status_both_strict", "predicate": "o_orderstatus IN ('F', 'O', 'P')",
+         "side": "both", "null_passes": False},
+    ]}
+    # ~1,100 years and 1 hour: data from the 1990s passes the one and
+    # fails the other whenever the dump runs
+    freshness = {"freshness_checks": [
+        {"column": "o_orderdate", "max_age_hours": 1e7, "side": "both"}]}
+    stale = {"freshness_checks": [
+        {"column": "o_orderdate", "max_age_hours": 1.0, "side": "target"}]}
+    family_tasks = {
+        "count": {"count_tolerance": 0.0},
+        "count_tol": {"count_tolerance": 0.05},
+        "null_pk": {**pk, **nulls},
+        "null_nopk": nulls,
+        "agg": {"agg_validations": [{"column": "o_totalprice", "validations": [
+            {"agg": a, "tolerance": 0.001} for a in ("SUM", "AVG", "MIN", "MAX", "COUNT")]}]},
+        "uniq_auto": {**uniq, "materialize_violations": True},
+        "uniq_approx": {**uniq, "uniqueness_strategy": "approx"},
+        "rowhash_join": row_hash,
+        "rowhash_join_nulls": {**row_hash, **nulls},
+        "rowhash_fingerprint": {**row_hash, **uniq, **nulls, "row_hash_mode": "fingerprint"},
+        "rowhash_multiset": {**row_hash, "row_hash_mode": "fingerprint_multiset"},
+        "rowhash_multiset_cons": {**row_hash, **constraints, **freshness,
+                                  "row_hash_mode": "fingerprint_multiset"},
+        "referential": {"materialize_violations": True, "referential_checks": [
+            {"name": "fk_cust", "fk_columns": ["o_custkey"], "ref_table": "customer",
+             "ref_columns": ["c_custkey"], "tolerance": 0.01}]},
+        "constraint": constraints,
+        "constraint_count": {**constraints, "count_tolerance": 0.0},
+        "freshness": freshness,
+        "freshness_count": {**freshness, "count_tolerance": 0.0},
+        "freshness_stale": {**stale, **uniq},
+    }
+    family_cfg = DataPactConfig(max_parallel_tasks=2, validations=[
+        {"task_key": f"{name}_{'part' if part else 'task'}", "source": "src",
+         "target": "tgt", **checks, **({"partition_by": ["o_orderpriority"]} if part else {})}
+        for name, checks in family_tasks.items() for part in (False, True)
+    ])
+    for variant, s_df, t_df in (("clean", orders, orders), ("corrupt", src_bad, tgt_bad)):
+        r = TableResolver(spark)
+        r.register("src", s_df)
+        r.register("tgt", t_df)
+        r.register("customer", tables["customer"])
+        run(f"families_{variant}", family_cfg, r, f"{work}/f_{variant}")
 
     with open(out, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)

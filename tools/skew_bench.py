@@ -5,7 +5,7 @@ Every document in the synthetic corpus carries the same license-header
 boilerplate, so its char-20-grams occur in ALL documents — the exact
 regime where the former ``Window.partitionBy(gram_hash)`` carrier count
 pinned O(corpus) rows to one task (AQE never splits skewed windows).
-The default ``carrier_strategy="join"`` derives carrier counts with a
+``doc_duplication_score`` derives carrier counts with a
 ``groupBy(gram_hash).count()`` whose map-side partials absorb the
 universal gram; this script proves it on the event log: for every
 stage of the scoring job, max task time must stay within 2x the median
@@ -14,8 +14,7 @@ jitter dominates).
 
 Usage:  python tools/skew_bench.py [--docs 200000] [--cores 16]
 Prints one JSON line with per-stage (median, max) task millis and the
-verdict; optionally add ``--strategy window`` to watch the straggler
-reappear for comparison.
+verdict.
 """
 
 from __future__ import annotations
@@ -94,7 +93,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=200_000)
     ap.add_argument("--cores", type=int, default=16)
-    ap.add_argument("--strategy", default="join", choices=["join", "window"])
     ap.add_argument("--words", type=int, default=30,
                     help="unique pseudo-words per doc; small values make the"
                          " universal boilerplate grams DOMINATE the gram volume"
@@ -138,7 +136,7 @@ def main() -> None:
         spark, args.docs, words=args.words, boiler_grams=args.boiler_grams
     )
     t0 = time.monotonic()
-    out = doc_duplication_score(docs, k=20, carrier_strategy=args.strategy)
+    out = doc_duplication_score(docs, k=20)
     # noop sink: materialize every output column without driver collect
     out.write.format("noop").mode("overwrite").save()
     wall = time.monotonic() - t0
@@ -161,7 +159,6 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "doc_duplication_score straggler check",
-                "strategy": args.strategy,
                 "docs": n_docs,
                 "words": args.words,
                 "boiler_grams": args.boiler_grams,
