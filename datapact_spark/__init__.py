@@ -16,7 +16,8 @@ Design pillars (see SURVEY.md):
   * referential-integrity anti-joins with violation materialization
     (north-star addition, BASELINE.json)
   * distribution-drift sketches vs baseline snapshots (PSI/KS)
-  * per-partition verdicts, checkpoint/resume ledger, salting for skew
+  * per-partition verdicts checkpointed once per run (resume reads a
+    committed run back), partial aggregation for skewed group keys
 """
 
 from datapact_spark.config import (

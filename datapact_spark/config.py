@@ -457,9 +457,6 @@ class ValidationTask(BaseModel):
     # corruption, where an unbounded broadcast could OOM the driver.
     fingerprint_scope_join: str = "broadcast"
     partition_by: list[str] | None = None
-    # resume granularity (checkpointed batches; each batch re-filters the
-    # input, so more batches = finer resume but more scans)
-    partition_batches: int = 4
     schema_check: SchemaCheck | bool | None = None
     freshness_checks: list[FreshnessCheck] | None = None
     referential_checks: list[ReferentialCheck] | None = None
@@ -586,13 +583,6 @@ class ValidationTask(BaseModel):
                     "no uniqueness check needed)"
                 )
         return self
-
-    @field_validator("partition_batches")
-    @classmethod
-    def _validate_partition_batches(cls, v: int) -> int:
-        if v < 1:
-            raise ValueError("partition_batches must be >= 1")
-        return v
 
     @model_validator(mode="after")
     def _validate_refs(self) -> "ValidationTask":

@@ -244,12 +244,7 @@ class DataPactEngine:
         summary (group counts + up-to-10 failing group keys) into the
         task's payload; any failing group fails the task."""
         try:
-            verdicts = self.run_partitioned(
-                task,
-                run_id,
-                batches=task.partition_batches,
-                resolver=resolver,
-            )
+            verdicts = self.run_partitioned(task, run_id, resolver=resolver)
         except ValueError:
             # no groupable checks configured (e.g. custom-SQL only) —
             # the task verdict stands alone
@@ -291,24 +286,16 @@ class DataPactEngine:
         self,
         task: ValidationTask,
         run_id: int,
-        batches: int = 4,
         resume: bool = True,
         resolver: TableResolver | None = None,
     ):
-        """North-star execution mode: per-partition verdicts with
-        checkpointed, exactly-resumable batches.
+        """North-star execution mode: per-partition verdicts, checkpointed
+        once per run with ``PipelineRunner``'s commit rule.
 
-        The verdict keyspace (task.partition_by) is split into
-        ``batches`` deterministic hash buckets. ALL uncommitted buckets
-        are computed and written in ONE Spark job — the verdict DataFrame
-        gains a ``batch`` column and is written ``partitionBy(batch)``
-        with dynamic partition overwrite, so the input is scanned once
-        per side regardless of ``batches`` (round 1 looped
-        ``verdicts.where(bucket == b)`` per batch: ``batches``× full
-        rescans of the join/profile DAG — fatal at 100 TB). Each bucket
-        directory then gets its own commit marker; a killed run resumes
-        by recomputing only unmarked buckets (idempotent dynamic
-        overwrite replaces exactly those directories).
+        With ``resume`` set and the run's checkpoint committed, the
+        verdicts are read back and the verdict plan is not compiled;
+        otherwise the plan is written in one overwrite (replacing a torn
+        attempt) and read back.
 
         ``resolver`` is the calling run's scoped resolver, so the task's
         tables are read once per run; default: a scope of its own.
@@ -317,40 +304,19 @@ class DataPactEngine:
         from datapact_spark.plans.partitioned import compile_partition_verdicts
 
         store = CheckpointStore(self.spark, self.ledger.path)
-        group_cols = task.partition_by or []
         self._log_colocation(task)
         # the scope releases what the verdict plan persisted (the joined
-        # profile, with constraint/freshness folds) once the batches are
-        # written: the checkpoint is the durable copy from then on
+        # profile, with constraint/freshness folds) once the verdicts are
+        # written: the checkpoint is the durable copy
         with cache_scope():
-            verdicts = compile_partition_verdicts(
-                self.spark, task, resolver or self.resolver.scoped()
+            return store.commit(
+                task.task_key,
+                run_id,
+                lambda: compile_partition_verdicts(
+                    self.spark, task, resolver or self.resolver.scoped()
+                ),
+                resume,
             )
-            missing = [
-                b
-                for b in range(batches)
-                if not (resume and store.batch_done(task.task_key, run_id, b))
-            ]
-            if len(missing) < batches:
-                log.info(
-                    "task %s: %d/%d batches already committed — recomputing %s",
-                    task.task_key, batches - len(missing), batches, missing,
-                )
-            if missing:
-                bucket = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(batches)
-                ).cast("int")
-                out = verdicts.withColumn("batch", bucket)
-                if len(missing) < batches:
-                    out = out.where(F.col("batch").isin(missing))
-                # drop orphan files of killed attempts first: a batch that
-                # is EMPTY in this recompute produces no dir in the dynamic
-                # overwrite, so leftovers would otherwise survive finalize
-                store.clear_uncommitted_batches(task.task_key, run_id, missing)
-                store.write_batches(task.task_key, run_id, out)
-                for b in missing:
-                    store.finalize_batch(task.task_key, run_id, b, verdicts.schema)
-        return store.read_verdicts(task.task_key, run_id)
 
     def _refresh_exec_tables(self, run_id: int, run_rows: DataFrame) -> None:
         """Write the run's four exec tables from its in-memory ledger

@@ -8,10 +8,10 @@ the sandbox there's no transactional table format, so:
 * the run-history ledger is a parquet dataset partitioned by ``run_id``
   (append = write a new run partition; idempotent re-run = dynamic
   partition overwrite of just that run_id);
-* per-partition checkpoints (north-star resume) are tiny parquet files
-  under ``checkpoints/<task_key>/run_id=<id>/`` written once per
-  completed unit — the manifest IS the source of truth, so a killed run
-  resumes by anti-joining the work list against it.
+* a partitioned task's verdicts are checkpointed under
+  ``checkpoints/<task_key>/run_id=<id>/`` with one write per run; a
+  resumed run reads a ``committed`` checkpoint back and rewrites one
+  that is not.
 
 On a real cluster, swap the writes for Delta/Iceberg ``MERGE``/
 ``replaceWhere`` — the engine code above this layer is unchanged.
@@ -28,6 +28,7 @@ plan — fixed at query start, before the scan ran.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,13 @@ LEDGER_SCHEMA = (
     "estimated_impact_usd double, result_payload string"
 )
 LEDGER_COLUMNS = [c.split()[0] for c in LEDGER_SCHEMA.split(", ")]
+
+
+def committed(path: str) -> bool:
+    """A written directory counts as committed once Spark's ``_SUCCESS``
+    marker exists: the marker lands only when the write's job commits,
+    so a kill mid-write leaves none."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 class ResultsLedger:
@@ -106,7 +114,7 @@ class BaselineStore:
         return os.path.join(self.path, "baselines", task_key, column)
 
     def exists(self, task_key: str, column: str) -> bool:
-        return os.path.exists(os.path.join(self._dir(task_key, column), "_SUCCESS"))
+        return committed(self._dir(task_key, column))
 
     def read(self, task_key: str, column: str) -> DataFrame:
         return self.spark.read.parquet(self._dir(task_key, column))
@@ -141,8 +149,8 @@ class IvfIndexStore:
 
     def exists(self, name: str) -> bool:
         d = self._dir(name)
-        return os.path.exists(os.path.join(d, "centroids", "_SUCCESS")) and (
-            os.path.exists(os.path.join(d, "corpus", "_SUCCESS"))
+        return committed(os.path.join(d, "centroids")) and committed(
+            os.path.join(d, "corpus")
         )
 
     def write(
@@ -239,9 +247,7 @@ class MinHashIndexStore:
 
     def exists(self, name: str) -> bool:
         d = os.path.join(self._dir(name), "bands")
-        return os.path.exists(os.path.join(d, "_SUCCESS")) or os.path.exists(
-            os.path.join(d, "ingest=base", "_SUCCESS")
-        )
+        return committed(d) or committed(os.path.join(d, "ingest=base"))
 
     def write(self, name: str, band_rows: DataFrame, meta: dict) -> None:
         """``band_rows``: the corpus ``minhash_band_hashes`` output;
@@ -308,14 +314,14 @@ class MinHashIndexStore:
 
 
 class CheckpointStore:
-    """Batch-granular completion manifest for resume-exactly semantics.
+    """Per-run checkpoint of a partitioned task's verdicts.
 
-    A partitioned task's groups are hashed into numbered batches.
-    ``write_batches`` writes the verdict rows of many batches in one
-    job (one ``batch=<n>`` directory each), ``finalize_batch`` then
-    touches that batch's ``_SUCCESS`` marker, and ``batch_done`` reads
-    the marker on resume, so a killed run recomputes only the batches
-    it never committed. ``read_verdicts`` serves every committed row.
+    ``commit`` writes the run's whole verdict set under
+    ``checkpoints/<task_key>/run_id=<id>/`` in one overwrite
+    (``write_batches``), and the directory counts as committed once
+    Spark's ``_SUCCESS`` marker exists. A kill mid-write leaves no
+    marker, so a resume rewrites the torn attempt; a committed run is
+    only read back (``read_verdicts``).
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -325,66 +331,25 @@ class CheckpointStore:
     def _dir(self, task_key: str, run_id: int) -> str:
         return os.path.join(self.path, "checkpoints", task_key, f"run_id={run_id}")
 
-    # ---- batch-granular commits (used by engine.run_partitioned) ----
-    def _batch_dir(self, task_key: str, run_id: int, batch: int) -> str:
-        return os.path.join(self._dir(task_key, run_id), f"batch={batch}")
-
-    def batch_done(self, task_key: str, run_id: int, batch: int) -> bool:
-        """A batch counts as committed only when Spark's _SUCCESS marker
-        exists — a kill mid-write leaves no marker, so the batch reruns
-        (idempotent overwrite) on resume."""
-        return os.path.exists(os.path.join(self._batch_dir(task_key, run_id, batch), "_SUCCESS"))
-
-    def clear_uncommitted_batches(
-        self, task_key: str, run_id: int, batches: list[int]
-    ) -> None:
-        """Remove leftover data files of UNCOMMITTED batch dirs (no
-        _SUCCESS marker) before a ``write_batches`` recompute. Dynamic
-        partition overwrite only replaces directories present in the new
-        data — a batch that is empty in the current computation but has
-        orphan parquet files from a killed prior attempt would otherwise
-        keep its stale rows once ``finalize_batch`` marks it done. This
-        keeps each batch's recompute idempotent without giving up the
-        one-scan write. Committed batches (marker present) are never
-        touched."""
-        import shutil
-
-        for b in batches:
-            d = self._batch_dir(task_key, run_id, b)
-            if os.path.isdir(d) and not os.path.exists(os.path.join(d, "_SUCCESS")):
-                shutil.rmtree(d, ignore_errors=True)
+    def commit(
+        self,
+        task_key: str,
+        run_id: int,
+        verdicts: Callable[[], DataFrame],
+        resume: bool = True,
+    ) -> DataFrame:
+        """The run's committed verdicts. Unless ``resume`` is set and the
+        run is already committed, ``verdicts()`` is built and written
+        first."""
+        if not (resume and committed(self._dir(task_key, run_id))):
+            self.write_batches(task_key, run_id, verdicts())
+        return self.read_verdicts(task_key, run_id)
 
     def write_batches(self, task_key: str, run_id: int, verdicts: DataFrame) -> None:
-        """Single-pass commit of MANY batches: ``verdicts`` carries a
-        ``batch`` column; one Spark job writes every bucket directory via
-        dynamic partition overwrite (only the bucket dirs present in the
-        data are replaced — committed batches from a previous attempt are
-        untouched). Callers recomputing a batch set must first
-        ``clear_uncommitted_batches`` so a now-empty batch cannot serve
-        stale rows from a killed attempt."""
-        (
-            verdicts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(self._dir(task_key, run_id))
-        )
+        verdicts.write.mode("overwrite").parquet(self._dir(task_key, run_id))
 
-    def finalize_batch(self, task_key: str, run_id: int, batch: int, schema) -> None:
-        """Commit marker for one batch after a successful
-        ``write_batches`` job. Spark writes _SUCCESS only at the dataset
-        root, and an empty bucket produces no directory at all — so
-        materialize an empty, schema-bearing directory when needed (keeps
-        ``read_verdicts`` schema-safe) and touch the per-batch marker the
-        resume check looks for. Driver-side only; a kill before this
-        point leaves no marker, so the batch reruns idempotently."""
-        d = self._batch_dir(task_key, run_id, batch)
-        has_data = os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
-        if not has_data:
-            self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(d)
-        open(os.path.join(d, "_SUCCESS"), "a").close()
+    def finalize_batch(self, *_) -> None:
+        """No-op: ``perfbench/layers.py:44`` still wraps this name."""
 
     def read_verdicts(self, task_key: str, run_id: int) -> DataFrame:
-        return self.spark.read.parquet(self._dir(task_key, run_id)).drop("batch")
-
+        return self.spark.read.parquet(self._dir(task_key, run_id))

@@ -81,18 +81,6 @@ def foldable_checks(
     return out
 
 
-def constraint_metrics(
-    df: DataFrame, checks: list[ConstraintCheck], side: str
-) -> DataFrame:
-    """Standalone 1-row metrics relation for a side with no profile
-    scan to ride: ``constraint_rows_<side>`` + one violation count per
-    check, in a single aggregate."""
-    return df.agg(
-        F.count(F.lit(1)).cast("long").alias(f"constraint_rows_{side}"),
-        *violation_exprs(checks, side),
-    )
-
-
 def constraint_violations(df: DataFrame, check: ConstraintCheck) -> DataFrame:
     """The violating rows themselves (for ``materialize_violations``),
     tagged with the constraint name. The predicate filter pushes down

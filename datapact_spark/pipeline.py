@@ -6,9 +6,9 @@ each stage's prefix lazily — fine at test scale, the wrong shape for a
 real 100 TB run, where a kill at stage 5 must NOT recompute stages 1-4
 (`__spark_entry__.q_corpus_pipeline`'s own production note).
 
-``PipelineRunner`` composes the operators with the checkpoint
-conventions the partitioned-verdict engine already uses
-(`ledger.CheckpointStore`): every stage materializes to parquet under
+``PipelineRunner`` composes the operators with the commit rule the
+partitioned-verdict checkpoints use (`ledger.committed`): every stage
+materializes to parquet under
 ``<root>/<key>/run_id=<id>/stage_NN_<name>/`` and only counts as
 committed once Spark's ``_SUCCESS`` marker exists — a kill mid-write
 leaves no marker, so resume recomputes exactly the interrupted stage
@@ -34,6 +34,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from datapact_spark.ledger import committed
 from datapact_spark.session import cache_scope
 
 
@@ -77,10 +78,6 @@ class PipelineRunner:
             self.root, key, f"run_id={run_id}", f"stage_{idx:02d}_{name}"
         )
 
-    @staticmethod
-    def _committed(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
-
     def run(
         self,
         key: str,
@@ -111,7 +108,7 @@ class PipelineRunner:
         for idx, st in enumerate(stages):
             d = self._stage_dir(key, run_id, idx, st.name)
             t0 = time.monotonic()
-            if self._committed(d):
+            if committed(d):
                 prev = self.spark.read.parquet(d)
                 results.append(StageResult(
                     stage=st.name, index=idx, path=d, resumed=True,

@@ -212,6 +212,7 @@ class TestReviewRegressions:
     def test_empty_partitioned_task_passes_vacuously(self, spark, tmp_path):
         from datapact_spark.config import DataPactConfig, ValidationTask
         from datapact_spark.engine import DataPactEngine
+        from datapact_spark.plans.partitioned import compile_partition_verdicts
         from datapact_spark.sources.loader import TableResolver
 
         resolver = TableResolver(spark)
@@ -226,11 +227,21 @@ class TestReviewRegressions:
                 )
             ]
         )
-        res = engine.run(cfg, job_name="t")
+        res = engine.run(cfg, job_name="t", run_id=1)
         # empty verdict set => vacuous pass, not ERROR/TypeError
         assert res.outcomes["empty_pp"].status == "SUCCESS", res.outcomes[
             "empty_pp"
         ].error
+        pv = json.loads(res.outcomes["empty_pp"].payload)["partition_verdicts"]
+        assert (pv["total_groups"], pv["status"]) == (0, "PASS")
+        # the committed checkpoint still carries the verdict schema
+        (task,) = cfg.validations
+        vdf = engine.run_partitioned(task, run_id=1)
+        expected = compile_partition_verdicts(spark, task, resolver).schema
+        assert vdf.count() == 0
+        assert [(f.name, f.dataType) for f in vdf.schema] == [
+            (f.name, f.dataType) for f in expected
+        ]
 
     def test_colliding_task_slugs_isolated_views(self, spark, tmp_path):
         from datapact_spark.config import DataPactConfig, ValidationTask

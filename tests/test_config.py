@@ -263,11 +263,6 @@ class TestRound2Validators:
 
         return ValidationTask(task_key="t", source="a", target="b", **kw)
 
-    def test_partition_batches_must_be_positive(self):
-        with pytest.raises(ValueError, match="partition_batches"):
-            self._task(partition_batches=0)
-        assert self._task(partition_batches=1).partition_batches == 1
-
     def test_uniqueness_strategy_validated(self):
         assert self._task().uniqueness_strategy == "auto"
         assert self._task(uniqueness_strategy="approx").uniqueness_strategy == "approx"

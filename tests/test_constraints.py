@@ -9,10 +9,8 @@ from pyspark.sql import functions as F
 
 from datapact_spark.config import ConstraintCheck, DataPactConfig, ValidationTask
 from datapact_spark.engine import DataPactEngine
-from datapact_spark.operators.constraints import (
-    constraint_metrics,
-    violation_flag,
-)
+from datapact_spark.operators.constraints import violation_flag
+from datapact_spark.plans.compiler import compile_task
 from datapact_spark.sources.loader import TableResolver
 
 
@@ -75,15 +73,27 @@ def test_null_semantics_ansi_vs_strict(spark):
 
 
 def test_standalone_metrics_relation(spark):
+    """A constraint-only task has no profiled stats to ride, so the
+    compiler builds the side's standalone one-row aggregate: the side's
+    row count plus one violation count per check."""
     df = spark.createDataFrame([(1, 10), (2, -5), (3, 0)], "id int, v int")
-    checks = [
-        ConstraintCheck(name="pos", predicate="v > 0"),
-        ConstraintCheck(name="nonzero", predicate="v <> 0"),
-    ]
-    row = constraint_metrics(df, checks, "source").collect()[0]
-    assert row["constraint_rows_source"] == 3
-    assert row["constraint_violations_pos_source"] == 2
-    assert row["constraint_violations_nonzero_source"] == 1
+    resolver = TableResolver(spark)
+    resolver.register("t", df)
+    task = ValidationTask(
+        task_key="standalone",
+        source="t",
+        target="t",
+        constraint_checks=[
+            ConstraintCheck(name="pos", predicate="v > 0", side="source"),
+            ConstraintCheck(name="nonzero", predicate="v <> 0", side="source"),
+        ],
+    )
+    row = compile_task(spark, task, resolver).metrics_df.collect()[0]
+    payload = json.loads(row["result_payload"])
+    pos = payload["constraint_validation_pos_source"]
+    nonzero = payload["constraint_validation_nonzero_source"]
+    assert (pos["rows"], pos["violation_rows"]) == ("3", "2")
+    assert (nonzero["rows"], nonzero["violation_rows"]) == ("3", "1")
 
 
 # ---- end-to-end through the engine -------------------------------------
@@ -209,8 +219,6 @@ def test_constraint_violations_materialized(engine, spark):
 def test_constraints_fold_into_profile_scan(spark, tables):
     """N constraints on a profiled side add ZERO extra scans: the
     compiled plan aggregates the source exactly once."""
-    from datapact_spark.plans.compiler import compile_task
-
     resolver = TableResolver(spark)
     resolver.register("orders", tables["orders"])
     task = ValidationTask(

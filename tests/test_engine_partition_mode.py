@@ -138,9 +138,10 @@ def test_genie_tables(engine, spark):
 
 
 def test_retired_salt_and_strategy_keys_load_and_run(engine, tmp_path):
-    """A config saved with the retired ``partition_salt_buckets`` key and
-    ``uniqueness_strategy: scalable`` still loads (the strategy reads as
-    the exact default, the salt key is ignored) and runs."""
+    """A config saved with the retired ``partition_salt_buckets`` and
+    ``partition_batches`` keys and ``uniqueness_strategy: scalable`` still
+    loads (the strategy reads as the exact default, the other two keys
+    are ignored) and runs."""
     from datapact_spark.config import load_config
 
     path = tmp_path / "saved.yml"
@@ -152,6 +153,7 @@ def test_retired_salt_and_strategy_keys_load_and_run(engine, tmp_path):
         "    primary_keys: [repo, path]\n"
         "    partition_by: [repo, lang]\n"
         "    partition_salt_buckets: 16\n"
+        "    partition_batches: 8\n"
         "    count_tolerance: 0.0\n"
         "    uniqueness_columns: [repo, path]\n"
         "    uniqueness_tolerance: 0.0\n"
@@ -161,6 +163,7 @@ def test_retired_salt_and_strategy_keys_load_and_run(engine, tmp_path):
     (task,) = cfg.validations
     assert task.uniqueness_strategy == "auto"
     assert not hasattr(task, "partition_salt_buckets")
+    assert not hasattr(task, "partition_batches")
     res = engine.run(cfg, job_name="saved", run_id=7)
     assert res.passed
     p = json.loads(res.outcomes["saved_keys"].payload)

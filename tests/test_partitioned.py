@@ -48,7 +48,7 @@ def _task(**overrides):
 
 
 def test_partition_verdicts_detect_corruption(engine, code_tables, spark):
-    verdicts = engine.run_partitioned(_task(), run_id=1, batches=2, resume=False)
+    verdicts = engine.run_partitioned(_task(), run_id=1, resume=False)
     rows = verdicts.collect()
     src, tgt = code_tables
     n_groups = src.select("repo", "lang").dropDuplicates().count()
@@ -68,29 +68,47 @@ def test_partition_verdicts_detect_corruption(engine, code_tables, spark):
 
 def test_identical_tables_all_pass(engine, code_tables):
     task = _task(task_key="code_self", target="code_src")
-    verdicts = engine.run_partitioned(task, run_id=2, batches=2, resume=False)
+    verdicts = engine.run_partitioned(task, run_id=2, resume=False)
     assert verdicts.where("NOT overall_validation_passed").count() == 0
 
 
-def test_resume_skips_committed_batches(engine, tmp_path):
+def test_committed_run_is_read_back(engine, monkeypatch):
+    """Resuming a committed run reads its verdicts back: the verdict plan
+    is not compiled again and the commit marker is not rewritten."""
+    from datapact_spark.plans import partitioned
+
     task = _task(task_key="code_resume")
-    engine.run_partitioned(task, run_id=3, batches=4, resume=False)
-    base = os.path.join(engine.ledger.path, "checkpoints", "code_resume", "run_id=3")
-    mtimes = {
-        b: os.path.getmtime(os.path.join(base, f"batch={b}", "_SUCCESS"))
-        for b in range(4)
-    }
-    # simulate a crash that corrupted batch 2 mid-write
-    os.remove(os.path.join(base, "batch=2", "_SUCCESS"))
-    engine.run_partitioned(task, run_id=3, batches=4, resume=True)
-    for b in (0, 1, 3):
-        assert os.path.getmtime(os.path.join(base, f"batch={b}", "_SUCCESS")) == mtimes[b], (
-            f"batch {b} must not be recomputed on resume"
-        )
-    assert os.path.exists(os.path.join(base, "batch=2", "_SUCCESS")), "batch 2 redone"
-    # resumed result is complete and identical in shape
-    verdicts = engine.run_partitioned(task, run_id=3, batches=4, resume=True)
-    assert verdicts.count() > 0
+    first = engine.run_partitioned(task, run_id=3, resume=False).collect()
+    marker = os.path.join(
+        engine.ledger.path, "checkpoints", "code_resume", "run_id=3", "_SUCCESS"
+    )
+    mtime = os.path.getmtime(marker)
+
+    def recompile(*args, **kwargs):
+        raise AssertionError("a committed run must not be recomputed")
+
+    monkeypatch.setattr(partitioned, "compile_partition_verdicts", recompile)
+    resumed = engine.run_partitioned(task, run_id=3, resume=True).collect()
+    assert os.path.getmtime(marker) == mtime
+    assert first and sorted(resumed, key=repr) == sorted(first, key=repr)
+
+
+def test_torn_attempt_is_overwritten(engine, code_tables, spark):
+    """A kill mid-write leaves part files but no ``_SUCCESS``: the resume
+    rewrites the run, and no row of the torn attempt survives."""
+    task = _task(task_key="code_torn", target="code_src")
+    base = os.path.join(engine.ledger.path, "checkpoints", "code_torn", "run_id=4")
+    spark.createDataFrame(
+        [("stale_repo", "py", False)],
+        "repo string, lang string, overall_validation_passed boolean",
+    ).write.parquet(base)
+    os.remove(os.path.join(base, "_SUCCESS"))
+    rows = engine.run_partitioned(task, run_id=4, resume=True).collect()
+    assert os.path.exists(os.path.join(base, "_SUCCESS"))
+    src, _ = code_tables
+    assert len(rows) == src.select("repo", "lang").dropDuplicates().count()
+    assert "stale_repo" not in {r["repo"] for r in rows}
+    assert all(r["overall_validation_passed"] for r in rows)
 
 
 def test_grouped_profile_matches_direct_aggregates(engine, code_tables, spark):
@@ -235,10 +253,9 @@ def test_null_pk_components_match_task_level_row_hash(spark, row_hash_mode):
 
 
 def test_partitioned_write_is_single_pass(engine, spark, tmp_path):
-    """The batched verdict write must scan each input side exactly once
-    regardless of the batch count (round 1 rescanned the full DAG once
-    per batch). Asserted on the physical plan of the DataFrame that
-    write_batches receives."""
+    """The verdict write must scan each input side exactly once.
+    Asserted on the physical plan of the DataFrame that write_batches
+    receives."""
     from datapact_spark.plans.partitioned import compile_partition_verdicts
 
     src_p = str(tmp_path / "src.parquet")
@@ -251,18 +268,15 @@ def test_partitioned_write_is_single_pass(engine, spark, tmp_path):
     resolver.register("p_tgt", spark.read.parquet(tgt_p))
     task = _task(task_key="single_pass", source="p_src", target="p_tgt")
     verdicts = compile_partition_verdicts(spark, task, resolver)
-    batches = 8
-    bucket = F.pmod(F.xxhash64(F.col("repo"), F.col("lang")), F.lit(batches)).cast("int")
-    out = verdicts.withColumn("batch", bucket)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
+    plan = verdicts._sc._jvm.PythonSQLUtils.explainString(
+        verdicts._jdf.queryExecution(), "formatted"
     )
     tree = plan.split("\n\n")[0]
     n_scans = tree.count("Scan parquet")
     assert n_scans <= 4, f"expected ≤2 scans per side, got {n_scans}:\n{tree}"
-    # and batches must not multiply scans: the engine writes this plan ONCE
+    # and the engine writes this plan ONCE
     eng = DataPactEngine(spark, resolver, results_path=str(tmp_path / "res2"))
-    vdf = eng.run_partitioned(task, run_id=9, batches=batches, resume=False)
+    vdf = eng.run_partitioned(task, run_id=9, resume=False)
     assert vdf.count() == src.select("repo", "lang").dropDuplicates().count()
 
 
@@ -542,35 +556,6 @@ def test_fingerprint_scope_join_auto_under_mass_corruption(engine, spark):
         }
 
     assert verdicts("auto") == verdicts("broadcast")
-
-
-def test_clear_uncommitted_batches_drops_stale_rows(spark, tmp_path):
-    """A killed attempt leaves orphan parquet in an unmarked batch dir;
-    if the recompute produces NO rows for that batch, dynamic partition
-    overwrite would leave the orphans in place and finalize would serve
-    them as verdicts. clear_uncommitted_batches must purge them first
-    (the idempotent-rerun contract), while committed batches survive."""
-    from datapact_spark.ledger import CheckpointStore
-
-    store = CheckpointStore(spark, str(tmp_path / "ck"))
-    schema = "repo string, ok boolean, batch int"
-    attempt1 = spark.createDataFrame(
-        [("r0", True, 0), ("r1", False, 1)], schema
-    )
-    store.write_batches("t", 1, attempt1)
-    store.finalize_batch("t", 1, 0, "repo string, ok boolean")
-    # batch 1 was written but NOT finalized (kill before marker)
-    assert not store.batch_done("t", 1, 1)
-    # recompute: batch 1 is now EMPTY (e.g. the group moved buckets after
-    # a config change, or the prior write was partial garbage)
-    attempt2 = spark.createDataFrame([("r0", True, 0)], schema).where("batch = 1")
-    store.clear_uncommitted_batches("t", 1, [1])
-    store.write_batches("t", 1, attempt2)
-    store.finalize_batch("t", 1, 1, "repo string, ok boolean")
-    got = store.read_verdicts("t", 1).collect()
-    assert [(r["repo"], r["ok"]) for r in got] == [("r0", True)], (
-        "stale attempt-1 rows for batch 1 must not survive"
-    )
 
 
 def _shuffle_stages(node, out: list) -> list:

@@ -22,7 +22,8 @@ bootstrap + compare} × {task level, ``partition_by``} — on a drifted and
 on an all-NULL target, and a check-family matrix — every groupable
 family × {task level, ``partition_by``} — on clean and on corrupted
 inputs. Beside each run's payloads and group verdicts, the sorted rows
-of every violations file the run writes are dumped. Floats are dumped
+of every violations file the run writes and, for every ``partition_by``
+task, of the verdicts its checkpoint reads back are dumped. Floats are dumped
 with ``repr`` (round-trip exact); freshness ``age_hours`` (wall-clock
 dependent) is dropped.
 """
@@ -58,6 +59,7 @@ def dump(repo: str, out: str, work: str, sf_dir: str) -> None:
     from datapact_spark.config import DataPactConfig, load_config
     from datapact_spark.demo import build_demo_tables, demo_config
     from datapact_spark.engine import DataPactEngine
+    from datapact_spark.ledger import CheckpointStore
     from datapact_spark.plans.partitioned import compile_partition_verdicts
     from datapact_spark.session import cache_scope, get_spark
     from datapact_spark.sources.codegen import corrupt_code_table, synthesize_code_table
@@ -90,6 +92,12 @@ def dump(repo: str, out: str, work: str, sf_dir: str) -> None:
             except ValueError as e:
                 rows = f"ValueError: {e}"
             result[f"{prefix}/{t.task_key}/groups"] = rows
+            # the verdicts the run committed, read back from its checkpoint
+            try:
+                rows = rows_of(CheckpointStore(spark, results).read_verdicts(t.task_key, res.run_id))
+            except Exception as e:  # no checkpoint: no groupable checks
+                rows = type(e).__name__
+            result[f"{prefix}/{t.task_key}/checkpoint"] = rows
 
     # the demo
     r = TableResolver(spark)
