@@ -103,12 +103,12 @@ def q_count_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = src.where("o_orderstatus <> 'F'")
     s = src.agg(F.count(F.lit(1)).alias("source_count"))
     t = tgt.agg(F.count(F.lit(1)).alias("target_count"))
-    diff = count_rel_diff(F.col("source_count"), F.col("target_count"))
-    return s.crossJoin(t).select(
+    diff = count_rel_diff("source_count", "target_count")
+    return s.crossJoin(t).selectExpr(
         "source_count",
         "target_count",
-        diff.alias("relative_diff"),
-        pass_fail(diff <= 0.05).alias("status"),
+        f"{diff} AS relative_diff",
+        f"{pass_fail(f'{diff} <= 0.05D')} AS status",
     )
 
 
@@ -129,20 +129,18 @@ def q_null_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = src.agg(F.sum(F.when(F.col("prio").isNull(), 1).otherwise(0)).alias("source_nulls"))
     t = tgt.agg(F.sum(F.when(F.col("prio").isNull(), 1).otherwise(0)).alias("target_nulls"))
-    sn, tn = F.col("source_nulls"), F.col("target_nulls")
-    return s.crossJoin(t).select(
+    sn, tn = "source_nulls", "target_nulls"
+    return s.crossJoin(t).selectExpr(
         "source_nulls",
         "target_nulls",
-        null_diff_pct_counts(sn, tn).alias("relative_diff_percent"),
-        pass_fail(null_pass_counts(sn, tn, 0.10)).alias("status"),
+        f"{null_diff_pct_counts(sn, tn)} AS relative_diff_percent",
+        f"{pass_fail(null_pass_counts(sn, tn, 0.10))} AS status",
     )
 
 
 def q_agg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate validation (A5): SUM/MIN/MAX with DECIMAL(38,6) values
     and GREATEST-denominator relative diff."""
-    from datapact_spark.functions.exprs import pass_fail
-
     src = _t(spark, sf_dir, "lineitem")
     tgt = src.where("l_quantity < 50")
     qty = F.col("l_quantity").cast("decimal(18,2)")
@@ -170,7 +168,8 @@ def q_agg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # one correctly-rounded conversion → engine-portable
             F.col(f"source_value_{agg}").cast("double").alias(f"source_{agg.lower()}"),
             F.col(f"target_value_{agg}").cast("double").alias(f"target_{agg.lower()}"),
-            pass_fail(F.coalesce(diff, F.lit(0.0)) <= tol).alias(f"status_{agg.lower()}"),
+            F.when(F.coalesce(diff, F.lit(0.0)) <= tol, "PASS").otherwise("FAIL")
+            .alias(f"status_{agg.lower()}"),
         ]
     return j.select(*out_cols)
 
@@ -188,15 +187,13 @@ def q_uniqueness_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         uniqueness_columns=["o_custkey"], uniqueness_tolerance=0.95,
     )
     m = profile_df(orders, task, "source")
-    ratio = dupe_ratio(F.col("source_count"), F.col("source_distinct_uniqs"))
-    return m.select(
-        F.col("source_count").alias("row_count"),
-        F.col("source_distinct_uniqs").alias("distinct_count"),
-        (F.col("source_count") - F.col("source_distinct_uniqs")).alias(
-            "duplicate_count"
-        ),
-        ratio.alias("dupe_ratio"),
-        pass_fail(ratio <= 0.95).alias("status"),
+    ratio = dupe_ratio("source_count", "source_distinct_uniqs")
+    return m.selectExpr(
+        "source_count AS row_count",
+        "source_distinct_uniqs AS distinct_count",
+        "source_count - source_distinct_uniqs AS duplicate_count",
+        f"{ratio} AS dupe_ratio",
+        f"{pass_fail(f'{ratio} <= 0.95D')} AS status",
     )
 
 
@@ -221,12 +218,12 @@ def q_row_hash_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, tgt, ["l_orderkey", "l_linenumber"],
         hash_columns=cols, algo="md5", serialization="concat",
     )
-    ratio = hash_mismatch_ratio(F.col("mismatch_count"), F.col("total_compared_rows"))
-    return m.select(
+    ratio = hash_mismatch_ratio("mismatch_count", "total_compared_rows")
+    return m.selectExpr(
         "total_compared_rows",
         "mismatch_count",
-        ratio.alias("mismatch_ratio"),
-        pass_fail(ratio <= 0.005).alias("status"),
+        f"{ratio} AS mismatch_ratio",
+        f"{pass_fail(f'{ratio} <= 0.005D')} AS status",
     )
 
 
@@ -997,13 +994,13 @@ def q_filtered_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct(F.col("o_custkey")).alias("source_distinct_uniqs"),
     )
     t = tgt.agg(F.count(F.lit(1)).alias("target_count"))
-    diff = count_rel_diff(F.col("source_count"), F.col("target_count"))
-    return s.crossJoin(t).select(
+    diff = count_rel_diff("source_count", "target_count")
+    return s.crossJoin(t).selectExpr(
         "source_count",
         "target_count",
         "source_distinct_uniqs",
-        diff.alias("relative_diff"),
-        pass_fail(diff <= 0.10).alias("status"),
+        f"{diff} AS relative_diff",
+        f"{pass_fail(f'{diff} <= 0.10D')} AS status",
     )
 
 

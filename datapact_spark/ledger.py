@@ -32,6 +32,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from datapact_spark.sources.loader import read_parquet, remember_schema
 
 LEDGER_SCHEMA = (
     "task_key string, status string, run_id long, job_id long, job_name string, "
@@ -117,10 +120,13 @@ class BaselineStore:
         return committed(self._dir(task_key, column))
 
     def read(self, task_key: str, column: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(task_key, column))
+        return read_parquet(self.spark, self._dir(task_key, column))
 
     def write(self, task_key: str, column: str, snapshot: DataFrame) -> None:
-        snapshot.write.mode("overwrite").parquet(self._dir(task_key, column))
+        d = self._dir(task_key, column)
+        snapshot.write.mode("overwrite").parquet(d)
+        # the next run's read plans with the written schema: no inference
+        remember_schema(d, snapshot.schema)
 
 
 class IvfIndexStore:
@@ -340,10 +346,12 @@ class CheckpointStore:
     ) -> DataFrame:
         """The run's committed verdicts. Unless ``resume`` is set and the
         run is already committed, ``verdicts()`` is built and written
-        first."""
-        if not (resume and committed(self._dir(task_key, run_id))):
-            self.write_batches(task_key, run_id, verdicts())
-        return self.read_verdicts(task_key, run_id)
+        first, and read back with the written frame's schema."""
+        if resume and committed(self._dir(task_key, run_id)):
+            return self.read_verdicts(task_key, run_id)
+        df = verdicts()
+        self.write_batches(task_key, run_id, df)
+        return self.read_verdicts(task_key, run_id, df.schema)
 
     def write_batches(self, task_key: str, run_id: int, verdicts: DataFrame) -> None:
         verdicts.write.mode("overwrite").parquet(self._dir(task_key, run_id))
@@ -351,5 +359,10 @@ class CheckpointStore:
     def finalize_batch(self, *_) -> None:
         """No-op: ``perfbench/layers.py:44`` still wraps this name."""
 
-    def read_verdicts(self, task_key: str, run_id: int) -> DataFrame:
-        return self.spark.read.parquet(self._dir(task_key, run_id))
+    def read_verdicts(
+        self, task_key: str, run_id: int, schema: StructType | None = None
+    ) -> DataFrame:
+        """A run's checkpointed verdicts; ``schema`` (what was written)
+        spares the schema-inference job. Run-scoped: never memoized."""
+        d = self._dir(task_key, run_id)
+        return read_parquet(self.spark, d, schema) if schema else self.spark.read.parquet(d)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from datapact_spark.ledger import committed
 from datapact_spark.session import cache_scope
+from datapact_spark.sources.loader import read_parquet
 
 
 @dataclass
@@ -129,7 +130,7 @@ class PipelineRunner:
             # only now: obs.get blocks until the write's metrics arrive,
             # and a failed write has raised before reaching this line
             rows = obs.get["rows"]
-            prev = self.spark.read.schema(out.schema).parquet(d)
+            prev = read_parquet(self.spark, d, out.schema)
             results.append(StageResult(
                 stage=st.name, index=idx, path=d, resumed=False,
                 rows=rows, seconds=round(time.monotonic() - t0, 4),

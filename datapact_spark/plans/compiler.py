@@ -2,12 +2,13 @@
 or per partition group.
 
 ``walk`` emits, per check, its pass condition, its per-group metric
-columns and its payload struct (built only when called) over the
-task's metric relations. ``compile_task`` renders it as the one-row
-``result_payload`` (dynamic keys and formatted strings match the
-reference contract byte-for-byte: FORMAT_NUMBER, '%.2f%%', PASS/FAIL)
-plus ``overall_validation_passed``; ``plans.partitioned`` renders it
-per group. Plan shape (the reference's CTE DAG, validation.sql.j2:
+columns and its payload struct as SQL text (``functions.exprs``) over
+the task's metric relations. ``compile_task`` renders it as the one-row
+``result_payload``, one ``to_json(named_struct(...))`` expression
+(dynamic keys and formatted strings match the reference contract
+byte-for-byte: FORMAT_NUMBER, '%.2f%%', PASS/FAIL), plus
+``overall_validation_passed``; ``plans.partitioned`` renders it per
+group. Plan shape (the reference's CTE DAG, validation.sql.j2:
 101-486, as native DataFrames):
 
     source profile (single-pass agg) ─┐  task level: 1-row relations,
@@ -29,9 +30,9 @@ Grouped drift is two-sample: no baseline store reaches the grouped walk.
 
 from __future__ import annotations
 
+import calendar
 import datetime as dt
 import functools
-import operator
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import NamedTuple, Sequence
@@ -105,18 +106,19 @@ class CompiledTask:
 
 
 class Check(NamedTuple):
-    """One check's share of a verdict: its family (the per-group column
-    order), the name of its per-group ``*_passed`` column (None when the
-    check only observes a side), its pass condition, its per-group
-    metric columns, and its payload struct's key and fields — built only
-    when called; the renderer appends ``status``."""
+    """One check's share of a verdict, as SQL text (``functions.exprs``):
+    its family (the per-group column order), the name of its per-group
+    ``*_passed`` column (None when the check only observes a side), its
+    pass condition, its per-group metric columns as (text, name), and
+    its payload struct's key and (name, text) fields; the renderer
+    appends ``status``."""
 
     family: str
     passed: str | None
-    ok: Column
-    metrics: list[Column]
+    ok: str
+    metrics: list[tuple[str, str]]
     key: str
-    fields: Callable[[], list[Column]]
+    fields: list[tuple[str, str]]
 
 
 class Walk(NamedTuple):
@@ -131,10 +133,10 @@ class Walk(NamedTuple):
     bootstrap_drift: list
 
 
-def _metric(name: str, group_cols: Sequence[str]) -> Column:
+def _metric(name: str, group_cols: Sequence[str]) -> str:
     # (b) per group, a side or relation missing from the group reads 0
-    c = F.col(name)
-    return F.coalesce(c, F.lit(0)) if group_cols else c
+    c = E.ident(name)
+    return f"coalesce({c}, 0)" if group_cols else c
 
 
 def walk(
@@ -254,7 +256,7 @@ def walk(
                 )
             )
         fp_equal = _fingerprint_equal(task)
-        failing_keys = spine.where(~fp_equal).select(*[F.col(g) for g in group_cols])
+        failing_keys = spine.where(f"NOT ({fp_equal})").select(*[F.col(g) for g in group_cols])
         # broadcast (default) vs AQE-decided join for the scoping —
         # see config.fingerprint_scope_join
         if task.fingerprint_scope_join == "broadcast":
@@ -343,7 +345,7 @@ def walk(
     for side, df in sides:
         if not (profile_built or con_by_side[side]):
             continue  # side has no metrics relation carrying the sums
-        total = F.col(f"{side}_count" if profile_built else f"constraint_rows_{side}")
+        total = E.ident(f"{side}_count" if profile_built else f"constraint_rows_{side}")
         enforced = {id(c) for c in con_by_side[side]}
         for cc in con_fold[side]:
             checks.append(
@@ -406,27 +408,28 @@ def compile_task(
     """
     w = walk(spark, task, resolver, baseline_store=baseline_store)
     fields = [
-        F.lit(task.filter).cast("string").alias("applied_filter"),
-        F.lit(", ".join(task.primary_keys) if task.primary_keys else None)
-        .cast("string")
-        .alias("configured_primary_keys"),
+        ("applied_filter", E.string(task.filter)),
+        (
+            "configured_primary_keys",
+            E.string(", ".join(task.primary_keys) if task.primary_keys else None),
+        ),
     ]
     if task.has_any_check():
         fields += [
-            F.struct(*c.fields(), E.pass_fail(c.ok).alias("status")).alias(c.key)
+            (c.key, E.named_struct([*c.fields, ("status", E.pass_fail(c.ok))]))
             for c in w.checks
         ]
         conds = [c.ok for c in w.checks if c.passed]
     else:
         fields.append(
-            F.lit(f"No validations configured for task {task.task_key}").alias("message")
+            ("message", E.string(f"No validations configured for task {task.task_key}"))
         )
-        conds = [F.lit(True)]
+        conds = ["true"]
     # a metadata-only task (e.g. just a schema check) scans nothing
     relation = w.relation if w.relation is not None else spark.range(0, 1, 1, 1)
-    metrics = relation.select(
-        F.to_json(F.struct(*fields)).alias("result_payload"),
-        functools.reduce(operator.and_, conds).alias("overall_validation_passed"),
+    metrics = relation.selectExpr(
+        f"to_json({E.named_struct(fields)}) AS result_payload",
+        f"{E.conjunction(conds)} AS overall_validation_passed",
     )
     return CompiledTask(
         task=task,
@@ -438,7 +441,8 @@ def compile_task(
 
 
 # ---------------------------------------------------------------------------
-# one function per check: its pass rule, metric columns and payload struct
+# one function per check: its pass rule, metric columns and payload struct,
+# as SQL text (functions.exprs)
 # ---------------------------------------------------------------------------
 
 
@@ -474,39 +478,39 @@ def _schema_check(task: ValidationTask, source: DataFrame, target: DataFrame) ->
     else:  # exact
         schema_ok = not missing and not extra and not mismatches and order_ok
 
-    def _opt(values: list[str]) -> Column:
-        return F.lit(", ".join(values) if values else None).cast("string")
+    def _opt(values: list[str]) -> str:
+        return E.string(", ".join(values) if values else None)
 
     return Check(
-        "schema", "schema_passed", F.lit(bool(schema_ok)), [],
+        "schema", "schema_passed", E.num(bool(schema_ok)), [],
         "schema_validation",
-        lambda: [
-            F.lit(sch.mode).alias("mode"),
-            _opt(missing).alias("missing_in_target"),
-            _opt(extra).alias("extra_in_target"),
-            _opt(mismatches).alias("type_mismatches"),
-            F.lit(order_ok).alias("order_ok"),
+        [
+            ("mode", E.string(sch.mode)),
+            ("missing_in_target", _opt(missing)),
+            ("extra_in_target", _opt(extra)),
+            ("type_mismatches", _opt(mismatches)),
+            ("order_ok", E.num(order_ok)),
         ],
     )
 
 
 def _count_check(task: ValidationTask, group_cols: Sequence[str]) -> Check:
-    sc, tc = F.col("source_count"), F.col("target_count")
+    sc, tc = E.ident("source_count"), E.ident("target_count")
     tol = task.count_tolerance
     diff = E.count_rel_diff(sc, tc)
-    ok = diff <= tol
+    ok = f"{diff} <= {E.num(tol)}"
     if group_cols:
         # (a) empty-source vacuous-pass parity EXCEPT the target has
         # rows: per group, source 0 & target > 0 is a phantom group
-        ok = ok & ~((sc == 0) & (tc > 0))
+        ok = f"({ok}) AND NOT ({sc} = 0 AND {tc} > 0)"
     return Check(
-        "count", "count_passed", ok, [diff.alias("count_rel_diff")],
+        "count", "count_passed", ok, [(diff, "count_rel_diff")],
         "count_validation",
-        lambda: [
-            E.fmt_num(sc).alias("source_count"),
-            E.fmt_num(tc).alias("target_count"),
-            E.fmt_pct(diff).alias("relative_diff_percent"),
-            E.fmt_pct(tol).alias("tolerance_percent"),
+        [
+            ("source_count", E.fmt_num(sc)),
+            ("target_count", E.fmt_num(tc)),
+            ("relative_diff_percent", E.fmt_pct(diff)),
+            ("tolerance_percent", E.fmt_pct(tol)),
         ],
     )
 
@@ -533,7 +537,7 @@ def _fingerprint_exprs(task: ValidationTask, hash_cols: list[str], side: str) ->
     ]
 
 
-def _fingerprint_equal(task: ValidationTask) -> Column:
+def _fingerprint_equal(task: ValidationTask) -> str:
     """(d) Whether a group is fingerprint-clean: equal counts, PK-row
     counts and fingerprints on both sides of the spine.
 
@@ -543,17 +547,12 @@ def _fingerprint_equal(task: ValidationTask) -> Column:
     0 ≠ the other side's > 0, and the sentinels -1/-2 never make missing
     == present. Every profile column stays referenced, so the key-pruned
     copy of the spine still reuses the profile scans."""
-    fp_equal = (
-        (F.col("source_count") == F.col("target_count"))
-        & (
-            F.coalesce(F.col("source_pk_rows"), F.lit(-1))
-            == F.coalesce(F.col("target_pk_rows"), F.lit(-2))
-        )
-        & (
-            F.coalesce(F.col("source_rowfp"), F.lit(-1).cast("decimal(38,0)"))
-            == F.coalesce(F.col("target_rowfp"), F.lit(-2).cast("decimal(38,0)"))
-        )
-    )
+    fp = "CAST({} AS decimal(38,0))"
+    conds = [
+        "`source_count` = `target_count`",
+        "coalesce(`source_pk_rows`, -1) = coalesce(`target_pk_rows`, -2)",
+        f"coalesce(`source_rowfp`, {fp.format(-1)}) = coalesce(`target_rowfp`, {fp.format(-2)})",
+    ]
     # dup-PK exactness gate: a fingerprint is only trustworthy when PKs
     # are unique in the group (equal multisets with dup PKs
     # fingerprint-match but pair differently). Config validation
@@ -567,25 +566,23 @@ def _fingerprint_equal(task: ValidationTask) -> Column:
         and task.uniqueness_columns
         and set(task.uniqueness_columns) <= set(task.primary_keys)
     ):
-        for side in ("source", "target"):
-            fp_equal = fp_equal & (
-                F.coalesce(F.col(f"{side}_distinct_uniqs"), F.lit(-1))
-                == F.coalesce(F.col(f"{side}_count"), F.lit(-2))
-            )
+        conds += [
+            f"coalesce(`{side}_distinct_uniqs`, -1) = coalesce(`{side}_count`, -2)"
+            for side in ("source", "target")
+        ]
     elif task.uniqueness_columns and task.uniqueness_tolerance is not None:
         # multiset mode has no gate, but the distinct counts must stay
         # referenced too (see above). A distinct count never exceeds its
         # row count, so this holds for every group.
-        for side in ("source", "target"):
-            fp_equal = fp_equal & (
-                F.coalesce(F.col(f"{side}_distinct_uniqs"), F.lit(0))
-                <= F.coalesce(F.col(f"{side}_count"), F.lit(0))
-            )
-    return fp_equal
+        conds += [
+            f"coalesce(`{side}_distinct_uniqs`, 0) <= coalesce(`{side}_count`, 0)"
+            for side in ("source", "target")
+        ]
+    return E.conjunction(conds)
 
 
 def _row_hash_check(
-    task: ValidationTask, group_cols: Sequence[str], fp_equal: Column | None
+    task: ValidationTask, group_cols: Sequence[str], fp_equal: str | None
 ) -> Check:
     tol = task.pk_hash_tolerance if task.pk_hash_tolerance is not None else 0.0
     tc = _metric("total_compared_rows", group_cols)
@@ -593,18 +590,18 @@ def _row_hash_check(
     if fp_equal is not None:
         # (d) a fingerprint-clean group compares what the exact join
         # would match: its rows with no NULL PK component
-        tc = F.when(fp_equal, F.col("source_pk_rows")).otherwise(tc)
-        mm = F.when(fp_equal, F.lit(0).cast("long")).otherwise(mm)
+        tc = f"CASE WHEN {fp_equal} THEN `source_pk_rows` ELSE {tc} END"
+        mm = f"CASE WHEN {fp_equal} THEN CAST(0 AS BIGINT) ELSE {mm} END"
     ratio = E.hash_mismatch_ratio(mm, tc)
-    ok = ratio <= tol
     return Check(
-        "row_hash", "row_hash_passed", ok, [tc.alias("total_compared_rows"), mm.alias("mismatch_count")],
+        "row_hash", "row_hash_passed", f"{ratio} <= {E.num(tol)}",
+        [(tc, "total_compared_rows"), (mm, "mismatch_count")],
         "row_hash_validation",
-        lambda: [
-            E.fmt_num(tc).alias("compared_rows"),
-            E.fmt_num(mm).alias("mismatch_count"),
-            E.fmt_pct(ratio).alias("mismatch_percent"),
-            E.fmt_pct(tol).alias("tolerance_percent"),
+        [
+            ("compared_rows", E.fmt_num(tc)),
+            ("mismatch_count", E.fmt_num(mm)),
+            ("mismatch_percent", E.fmt_pct(ratio)),
+            ("tolerance_percent", E.fmt_pct(tol)),
         ],
     )
 
@@ -614,36 +611,36 @@ def _null_check(task: ValidationTask, col: str, group_cols: Sequence[str]) -> Ch
     sn = _metric(f"source_nulls_{col}", group_cols)
     tn = _metric(f"target_nulls_{col}", group_cols)
     if task.primary_keys:
-        ok, pct = E.null_pass_pk(sn, tn, tol), E.null_diff_pct_pk
+        ok, pct = E.null_pass_pk(sn, tn, tol), E.null_diff_pct_pk(sn, tn)
     else:
-        ok, pct = E.null_pass_counts(sn, tn, tol), E.null_diff_pct_counts
+        ok, pct = E.null_pass_counts(sn, tn, tol), E.null_diff_pct_counts(sn, tn)
     return Check(
-        "null", f"null_{col}_passed", ok, [sn.alias(f"source_nulls_{col}"), tn.alias(f"target_nulls_{col}")],
+        "null", f"null_{col}_passed", ok,
+        [(sn, f"source_nulls_{col}"), (tn, f"target_nulls_{col}")],
         f"null_validation_{col}",
-        lambda: [
-            E.fmt_num(sn).alias("source_nulls"),
-            E.fmt_num(tn).alias("target_nulls"),
-            F.format_string("%.2f%%", pct(sn, tn).cast("double")).alias(
-                "relative_diff_percent"
-            ),
-            E.fmt_pct(tol).alias("tolerance_percent"),
+        [
+            ("source_nulls", E.fmt_num(sn)),
+            ("target_nulls", E.fmt_num(tn)),
+            ("relative_diff_percent", f"format_string('%.2f%%', CAST({pct} AS DOUBLE))"),
+            ("tolerance_percent", E.fmt_pct(tol)),
         ],
     )
 
 
 def _agg_check(column: str, agg: str, tol: float) -> Check:
-    sv = F.col(f"source_value_{column}_{agg}")
-    tv = F.col(f"target_value_{column}_{agg}")
+    sv_name, tv_name = f"source_value_{column}_{agg}", f"target_value_{column}_{agg}"
+    sv, tv = E.ident(sv_name), E.ident(tv_name)
     diff = E.agg_rel_diff(sv, tv)
-    ok = F.coalesce(diff, F.lit(0).cast(E.DEC12)) <= tol
     return Check(
-        "agg", f"agg_{column}_{agg}_passed", ok, [sv, tv],
+        "agg", f"agg_{column}_{agg}_passed",
+        f"coalesce({diff}, CAST(0 AS {E.DEC12})) <= {E.num(tol)}",
+        [(sv, sv_name), (tv, tv_name)],
         f"agg_validation_{column}_{agg}",
-        lambda: [
-            E.fmt_num(sv, 2).alias("source_value"),
-            E.fmt_num(tv, 2).alias("target_value"),
-            E.fmt_pct(diff).alias("relative_diff_percent"),
-            E.fmt_pct(tol).alias("tolerance_percent"),
+        [
+            ("source_value", E.fmt_num(sv, 2)),
+            ("target_value", E.fmt_num(tv, 2)),
+            ("relative_diff_percent", E.fmt_pct(diff)),
+            ("tolerance_percent", E.fmt_pct(tol)),
         ],
     )
 
@@ -651,46 +648,50 @@ def _agg_check(column: str, agg: str, tol: float) -> Check:
 def _uniqueness_check(task: ValidationTask, group_cols: Sequence[str]) -> Check:
     tol = task.uniqueness_tolerance
     sides = ("source", "target")
-    count = {s: F.col(f"{s}_count") for s in sides}
+    count = {s: E.ident(f"{s}_count") for s in sides}
     distinct = {s: _metric(f"{s}_distinct_uniqs", group_cols) for s in sides}
-    dups = {s: count[s] - distinct[s] for s in sides}
+    dups = {s: f"{count[s]} - {distinct[s]}" for s in sides}
     ratio = {s: E.dupe_ratio(count[s], distinct[s]) for s in sides}
-    ok = (ratio["source"] <= tol) & (ratio["target"] <= tol)
     return Check(
-        "uniqueness", "uniqueness_passed", ok, [dups[s].alias(f"{s}_duplicates") for s in sides],
+        "uniqueness", "uniqueness_passed",
+        E.conjunction([f"{ratio[s]} <= {E.num(tol)}" for s in sides]),
+        [(dups[s], f"{s}_duplicates") for s in sides],
         f"uniqueness_validation_{'_'.join(task.uniqueness_columns)}",
-        lambda: [
-            *[E.fmt_num(dups[s]).alias(f"{s}_duplicates") for s in sides],
-            *[E.fmt_pct(ratio[s]).alias(f"{s}_dupe_percent") for s in sides],
-            E.fmt_pct(tol).alias("tolerance_percent"),
+        [
+            *[(f"{s}_duplicates", E.fmt_num(dups[s])) for s in sides],
+            *[(f"{s}_dupe_percent", E.fmt_pct(ratio[s])) for s in sides],
+            ("tolerance_percent", E.fmt_pct(tol)),
         ],
     )
 
 
 def _custom_sql_check(rendered) -> Check:
     slug = rendered.cte_base_name
-    missing_t = F.coalesce(F.col(f"rows_missing_in_target_{slug}"), F.lit(0))
-    missing_s = F.coalesce(F.col(f"rows_missing_in_source_{slug}"), F.lit(0))
-    hashes_eq = F.coalesce(F.col(f"source_hash_{slug}"), F.lit("EMPTY")) == F.coalesce(
-        F.col(f"target_hash_{slug}"), F.lit("EMPTY")
-    )
-    ok = (missing_t == 0) & (missing_s == 0) & hashes_eq
 
-    def sample(name: str) -> Column:
-        c = F.col(f"{name}_{slug}")
-        return F.when(c == "null", F.lit(None).cast("string")).otherwise(c).alias(name)
+    def col(name: str) -> str:
+        return E.ident(f"{name}_{slug}")
+
+    def sample(name: str) -> tuple[str, str]:
+        c = col(name)
+        return name, f"CASE WHEN {c} = 'null' THEN CAST(NULL AS STRING) ELSE {c} END"
 
     return Check(
-        "custom_sql", f"custom_sql_{slug}_passed", ok, [],
+        "custom_sql", f"custom_sql_{slug}_passed",
+        E.conjunction([
+            f"coalesce({col('rows_missing_in_target')}, 0) = 0",
+            f"coalesce({col('rows_missing_in_source')}, 0) = 0",
+            f"coalesce({col('source_hash')}, 'EMPTY') = coalesce({col('target_hash')}, 'EMPTY')",
+        ]),
+        [],
         f"custom_sql_validation_{slug}",
-        lambda: [
-            F.lit(rendered.name).alias("name"),
-            F.lit(rendered.description).cast("string").alias("description"),
-            F.lit(rendered.base_sql).alias("input_sql_template"),
-            F.lit(rendered.source_sql).alias("rendered_source_sql"),
-            F.lit(rendered.target_sql).alias("rendered_target_sql"),
+        [
+            ("name", E.string(rendered.name)),
+            ("description", E.string(rendered.description)),
+            ("input_sql_template", E.string(rendered.base_sql)),
+            ("rendered_source_sql", E.string(rendered.source_sql)),
+            ("rendered_target_sql", E.string(rendered.target_sql)),
             *[
-                E.fmt_num(F.col(f"{name}_{slug}")).alias(name)
+                (name, E.fmt_num(col(name)))
                 for name in (
                     "source_row_count", "target_row_count",
                     "rows_missing_in_target", "rows_missing_in_source",
@@ -705,70 +706,74 @@ def _custom_sql_check(rendered) -> Check:
 def _referential_check(check, group_cols: Sequence[str]) -> Check:
     vc = _metric(f"violation_count_{check.name}", group_cols)
     cc = _metric(f"child_count_{check.name}", group_cols)
-    ratio = F.coalesce(vc / F.nullif(cc.cast("double"), F.lit(0.0)), F.lit(0.0))
-    ok = ratio <= check.tolerance
+    ratio = E.ratio(vc, cc)
     return Check(
-        "referential", f"ref_{check.name}_passed", ok, [vc.alias(f"violation_count_{check.name}")],
+        "referential", f"ref_{check.name}_passed", f"{ratio} <= {E.num(check.tolerance)}",
+        [(vc, f"violation_count_{check.name}")],
         f"referential_validation_{check.name}",
-        lambda: [
-            E.fmt_num(cc).alias("child_rows"),
-            E.fmt_num(vc).alias("violation_rows"),
-            E.fmt_pct(ratio).alias("violation_percent"),
-            E.fmt_pct(check.tolerance).alias("tolerance_percent"),
+        [
+            ("child_rows", E.fmt_num(cc)),
+            ("violation_rows", E.fmt_num(vc)),
+            ("violation_percent", E.fmt_pct(ratio)),
+            ("tolerance_percent", E.fmt_pct(check.tolerance)),
         ],
     )
 
 
 def _constraint_check(
-    cc, side: str, total: Column, enforced: bool, group_cols: Sequence[str]
+    cc, side: str, total: str, enforced: bool, group_cols: Sequence[str]
 ) -> Check:
     name = f"{cc.name}_{side}"
     vc = _metric(f"constraint_violations_{name}", group_cols)
-    ratio = F.coalesce(vc / F.nullif(total.cast("double"), F.lit(0.0)), F.lit(0.0))
-    ok = ratio <= cc.tolerance
+    ratio = E.ratio(vc, total)
     return Check(
-        "constraint", f"constraint_{name}_passed" if enforced else None, ok, [vc.alias(f"constraint_violations_{name}")],
+        "constraint", f"constraint_{name}_passed" if enforced else None,
+        f"{ratio} <= {E.num(cc.tolerance)}",
+        [(vc, f"constraint_violations_{name}")],
         f"constraint_validation_{name}",
-        lambda: [
-            F.lit(cc.predicate).alias("predicate"),
-            F.lit("ansi" if cc.null_passes else "strict").alias("null_semantics"),
-            F.lit(enforced).alias("enforced"),
-            E.fmt_num(total).alias("rows"),
-            E.fmt_num(vc).alias("violation_rows"),
-            E.fmt_pct(ratio).alias("violation_percent"),
-            E.fmt_pct(cc.tolerance).alias("tolerance_percent"),
+        [
+            ("predicate", E.string(cc.predicate)),
+            ("null_semantics", E.string("ansi" if cc.null_passes else "strict")),
+            ("enforced", E.num(enforced)),
+            ("rows", E.fmt_num(total)),
+            ("violation_rows", E.fmt_num(vc)),
+            ("violation_percent", E.fmt_pct(ratio)),
+            ("tolerance_percent", E.fmt_pct(cc.tolerance)),
         ],
     )
 
 
 def _freshness_check(fc, side: str, enforced: bool, begin_ts: dt.datetime) -> Check:
     name = f"{fc.column}_{side}"
-    mx = F.col(f"freshness_max_{name}")
-    # reference instant: the compile's one deterministic begin_ts
-    age_h = (
-        F.lit(begin_ts).cast("timestamp").cast("double") - mx.cast("double")
-    ) / F.lit(3600.0)
-    ok = F.coalesce(age_h <= fc.max_age_hours, F.lit(False))
+    mx = E.ident(f"freshness_max_{name}")
+    # reference instant: the compile's one deterministic begin_ts (naive
+    # UTC), as epoch seconds — what CAST(<timestamp> AS DOUBLE) yields
+    epoch_us = calendar.timegm(begin_ts.timetuple()) * 1_000_000 + begin_ts.microsecond
+    age_h = f"({E.num(epoch_us / 1_000_000)} - CAST({mx} AS DOUBLE)) / 3600.0D"
     return Check(
-        "freshness", f"freshness_{name}_passed" if enforced else None, ok, [mx.alias(f"freshness_max_{name}")],
+        "freshness", f"freshness_{name}_passed" if enforced else None,
+        f"coalesce({age_h} <= {E.num(fc.max_age_hours)}, false)",
+        [(mx, f"freshness_max_{name}")],
         f"freshness_validation_{name}",
-        lambda: [
-            F.lit(enforced).alias("enforced"),
-            F.date_format(mx, "yyyy-MM-dd HH:mm:ss").alias("latest"),
-            F.round(age_h, 2).alias("age_hours"),
-            F.lit(fc.max_age_hours).alias("max_age_hours"),
+        [
+            ("enforced", E.num(enforced)),
+            ("latest", f"date_format({mx}, 'yyyy-MM-dd HH:mm:ss')"),
+            ("age_hours", f"round({age_h}, 2)"),
+            ("max_age_hours", E.num(fc.max_age_hours)),
         ],
     )
 
 
 def _drift_check(dcheck) -> Check:
-    val = F.col(f"drift_{dcheck.metric}_{dcheck.column}")
-    ok = F.coalesce(val, F.lit(0.0)) <= dcheck.threshold
+    name = f"drift_{dcheck.metric}_{dcheck.column}"
+    val = E.ident(name)
     return Check(
-        "drift", f"drift_{dcheck.column}_{dcheck.metric}_passed", ok, [val],
+        "drift", f"drift_{dcheck.column}_{dcheck.metric}_passed",
+        f"coalesce({val}, 0.0D) <= {E.num(dcheck.threshold)}",
+        [(val, name)],
         f"drift_validation_{dcheck.column}_{dcheck.metric}",
-        lambda: [
-            F.format_string("%.6f", val.cast("double")).alias(f"{dcheck.metric}_value"),
-            F.format_string("%.6f", F.lit(float(dcheck.threshold))).alias("threshold"),
+        [
+            (f"{dcheck.metric}_value", f"format_string('%.6f', CAST({val} AS DOUBLE))"),
+            ("threshold", f"format_string('%.6f', {E.num(float(dcheck.threshold))})"),
         ],
     )

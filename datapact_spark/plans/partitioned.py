@@ -29,13 +29,10 @@ detail re-scan. Clean groups cost no join at all.
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from datapact_spark.config import ValidationTask
+from datapact_spark.functions.exprs import conjunction, ident
 from datapact_spark.plans.compiler import walk
 from datapact_spark.sources.loader import TableResolver
 
@@ -65,13 +62,12 @@ def compile_partition_verdicts(
     enforced = [c for c in checks if c.passed]
     if not enforced:
         raise ValueError(f"task {task.task_key} has no groupable checks configured")
-    return w.relation.select(
-        *[F.col(c) for c in group_cols],
-        F.col("source_count"),
-        F.col("target_count"),
+    columns = [
+        *[(ident(c), c) for c in group_cols],
+        (ident("source_count"), "source_count"),
+        (ident("target_count"), "target_count"),
         *[m for c in checks for m in c.metrics],
-        *[c.ok.alias(c.passed) for c in enforced],
-        functools.reduce(operator.and_, [c.ok for c in enforced]).alias(
-            "overall_validation_passed"
-        ),
-    )
+        *[(c.ok, c.passed) for c in enforced],
+        (conjunction([c.ok for c in enforced]), "overall_validation_passed"),
+    ]
+    return w.relation.selectExpr(*[f"{text} AS {ident(name)}" for text, name in columns])

@@ -12,8 +12,11 @@ This keeps the engine catalog-agnostic: on the target cluster the same
 config reads Iceberg tables; in the sandbox it reads the driver's
 parquet test data.
 
-Every resolve of a path or catalog ref is a new read (a file listing
-and, for parquet, a schema-inference job). The engine therefore takes a
+Every resolve of a path or catalog ref is a new read: a file listing
+plus, for a catalog table, a metastore lookup. Parquet paths read
+through ``read_parquet``, which infers a path's schema with a Spark job
+only when the path is new to this process or its files changed since;
+an unchanged path plans with the schema it had. The engine also takes a
 ``scoped`` resolver per run, which reads each distinct ref once and
 hands every task the same DataFrame.
 """
@@ -25,6 +28,7 @@ import threading
 from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 SF_TABLES = (
     "region",
@@ -38,6 +42,61 @@ SF_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# path -> (listing signature, schema) of every parquet path this process
+# inferred or wrote; one entry per path, replaced when its files change
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _listing(path: str) -> tuple:
+    """The name, size and mtime of every file under ``path``; empty when
+    this process cannot list it (a remote URI, a missing path)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _, names in os.walk(path):
+        for name in names:
+            full = os.path.join(root, name)
+            try:
+                st = os.stat(full)
+            except OSError:  # removed while listing: the next read re-lists
+                continue
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job when
+    the schema is known: given as ``schema`` (a read-back of what the
+    caller just wrote), or memoized for ``path`` and its files unchanged.
+
+    Only a path this process can list is memoized, and only when read
+    without ``schema``: pass ``schema`` for run-scoped paths
+    (checkpoints), so the memo stays one entry per durable path."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    listing = _listing(path)
+    with _SCHEMAS_LOCK:
+        known = _SCHEMAS.get(path)
+    if listing and known is not None and known[0] == listing:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if listing:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[path] = (listing, df.schema)
+    return df
+
+
+def remember_schema(path: str, schema: StructType) -> None:
+    """Record that ``path`` was just written with ``schema``, so its
+    first ``read_parquet`` runs no inference job."""
+    listing = _listing(path)
+    if listing:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[path] = (listing, schema)
 
 
 def parse_iceberg_ref(spec: str) -> tuple[str, dict[str, str]]:
@@ -83,6 +142,9 @@ class TableResolver:
         """A copy of this resolver that reads each distinct ref at most
         once. Take one per run and share it across the run's tasks; the
         next run takes a new one, so it sees rewritten files.
+
+        A parquet path keeps its memoized schema across scopes while its
+        files are unchanged (``read_parquet``); a rewrite is re-inferred.
 
         Thread-safe: tasks resolving the same ref concurrently wait for
         one read. A ref whose read fails raises that error in every task
@@ -140,20 +202,17 @@ class TableResolver:
         if ref.startswith("iceberg:"):
             return self._read_iceberg(ref[len("iceberg:"):])
         if ref in self._paths:
-            return self._read_path(self._paths[ref])
+            return read_parquet(self.spark, self._paths[ref])
         # bare name under base_dir (sandbox layout: <dir>/<name>.parquet)
         if self.base_dir:
             candidate = os.path.join(self.base_dir, f"{ref}.parquet")
             if os.path.exists(candidate):
-                return self.spark.read.parquet(candidate)
+                return read_parquet(self.spark, candidate)
         # filesystem path
         if os.path.exists(ref):
-            return self._read_path(ref)
+            return read_parquet(self.spark, ref)
         # catalog table (Iceberg / Delta / Hive / temp view)
         return self.spark.read.table(ref)
-
-    def _read_path(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
 
     def catalog_name(self, ref: str) -> str | None:
         """The session-catalog table name behind ``ref``, or None when
@@ -195,5 +254,5 @@ def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name in SF_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = read_parquet(spark, path)
     return out

@@ -1,6 +1,7 @@
-"""Warm-run plan reuse: a repeated run reads each table once and
-recompiles almost nothing, and frames shared between tasks (or between
-both sides of one task) give the same verdicts as separate reads.
+"""Warm-run plan reuse: a repeated run reads each table once, plans it
+with its known schema (no inference job), recompiles almost nothing,
+and frames shared between tasks (or between both sides of one task)
+give the same verdicts as separate reads.
 
 Also the partitioned-mode release of the cached joined profile when
 constraint and freshness checks are folded into it.
@@ -14,9 +15,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameReader
 
+from datapact_spark import engine as engine_module
 from datapact_spark.config import DataPactConfig, ValidationTask
 from datapact_spark.engine import DataPactEngine
-from datapact_spark.sources.loader import TableResolver
+from datapact_spark.ledger import CheckpointStore
+from datapact_spark.sources import loader
+from datapact_spark.sources.loader import TableResolver, read_parquet
 
 # generated classes compiled by the second run of REUSE_TASKS. Without
 # plan reuse it recompiles nearly everything (~125 at sf0.001); what
@@ -28,8 +32,10 @@ MAX_WARM_COMPILES = 30
 # py4j round trips the compiling thread makes to compile REUSE_TASKS once
 # more on a warm session. With PySpark's per-call DataFrame call-site
 # capture on, every Column and DataFrame call adds several; with it off
-# (session.py) ~2.1k remain.
-MAX_COMPILE_GATEWAY_CALLS = 2500
+# (session.py) ~2.1k remained while check formulas and payloads were
+# Column trees. Rendered as SQL text (functions/exprs.py) they cost a
+# few calls per task; ~870 remain, nearly all in the metric relations.
+MAX_COMPILE_GATEWAY_CALLS = 1000
 
 REUSE_TASKS = [
     # no freshness check: its reference instant is a per-run literal
@@ -119,6 +125,36 @@ def test_compile_gateway_traffic_is_bounded(spark, sf_dir, monkeypatch):
         compile_task(spark, task, resolver)
     monkeypatch.undo()
     assert calls[0] < MAX_COMPILE_GATEWAY_CALLS, calls[0]
+
+
+# quote, backslash, double quote, newline and a substitution variable:
+# what SQL text could mangle (Spark's parser substitutes ${...} even
+# inside string literals)
+AWKWARD = "it's \\ \"odd\"\n${spark.sql.shuffle.partitions}"
+
+
+def test_payload_keeps_user_strings_exact(spark, sf_dir, tmp_path):
+    """User strings reach the payload as written: the filter, a custom-SQL
+    test's name (its validator admits only the newline of these),
+    description and SQL, and a constraint predicate."""
+    sql_literal = AWKWARD.replace("\\", "\\\\").replace("'", "\\'").replace("\n", " ")
+    flt = f"o_orderpriority <> '{sql_literal}'\nOR o_orderpriority IS NULL"
+    sql = (f"SELECT o_orderstatus, COUNT(*) AS n, '{sql_literal}' AS tag\n"
+           "FROM {{ table_fqn }} GROUP BY o_orderstatus")
+    predicate = f"o_totalprice > 0\nOR o_orderpriority = '{sql_literal}'"
+    outcome, _ = _run_one(
+        spark, sf_dir, tmp_path, source="orders", target="orders", filter=flt,
+        custom_sql_tests=[{"name": "status\ntotals", "description": AWKWARD, "sql": sql}],
+        constraint_checks=[{"name": "priced", "predicate": predicate}],
+    )
+    assert outcome.status == "SUCCESS", outcome.error or outcome.payload
+    p = json.loads(outcome.payload)
+    assert p["applied_filter"] == flt
+    custom = p["custom_sql_validation_status_totals"]
+    assert (custom["name"], custom["description"], custom["input_sql_template"]) == (
+        "status\ntotals", AWKWARD, sql)
+    assert custom["rendered_source_sql"].startswith(sql.split("{{")[0])
+    assert p["constraint_validation_priced_source"]["predicate"] == predicate
 
 
 def test_ledger_row_metadata_attached_on_driver(spark, sf_dir, tmp_path):
@@ -222,7 +258,8 @@ def test_self_referential_foreign_key(spark, tmp_path):
 
 def test_next_run_sees_rewritten_input(spark, tmp_path):
     """The per-run read is not kept across runs: rewriting a table's
-    files between two runs on one engine changes the second verdict."""
+    files between two runs on one engine changes the second verdict, and
+    a rewrite that adds a column is planned with the new schema."""
     base = tmp_path / "data"
     src = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
     src.coalesce(1).write.parquet(str(base / "a.parquet"))
@@ -232,7 +269,7 @@ def test_next_run_sees_rewritten_input(spark, tmp_path):
     )
     config = DataPactConfig(validations=[ValidationTask(
         task_key="t", source="a", target="b", primary_keys=["k"], count_tolerance=0.0,
-        pk_row_hash_check=True, pk_hash_tolerance=0.0,
+        pk_row_hash_check=True, pk_hash_tolerance=0.0, schema_check={"mode": "exact"},
     )])
     assert engine.run(config, run_id=1).passed
     src.where("k < 90").withColumn("v", F.col("v") + F.when(F.col("k") == 0, 1).otherwise(0)) \
@@ -242,6 +279,158 @@ def test_next_run_sees_rewritten_input(spark, tmp_path):
     assert not second.passed
     assert p["count_validation"]["target_count"] == "90"
     assert p["row_hash_validation"]["mismatch_count"] == "1"
+    assert p["schema_validation"]["status"] == "PASS"
+
+    src.withColumn("extra", F.lit("x")).coalesce(1).write.mode("overwrite").parquet(
+        str(base / "b.parquet"))
+    third = engine.run(config, run_id=3)
+    p = json.loads(third.outcomes["t"].payload)
+    assert p["schema_validation"]["status"] == "FAIL"
+    assert p["schema_validation"]["extra_in_target"] == "extra"
+    assert p["count_validation"]["status"] == "PASS"
+
+
+# ------------------------------------------------ known-schema reads
+def _tag_jobs(monkeypatch, spark, owner, name: str, group) -> None:
+    """Run ``owner.name`` under Spark job group ``group(args)``."""
+    sc = spark.sparkContext
+    orig = getattr(owner, name)
+
+    def tagged(*args, **kwargs):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group(args), "tagged")
+        try:
+            return orig(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    monkeypatch.setattr(owner, name, tagged)
+
+
+def _jobs(spark, group: str) -> int:
+    """Jobs submitted under ``group``, from the status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _memo(tmp_path) -> set[str]:
+    return {p for p in loader._SCHEMAS if p.startswith(str(tmp_path))}
+
+
+def test_warm_compile_and_checkpoint_read_back_launch_no_job(spark, sf_dir, tmp_path, monkeypatch):
+    """Fails without known-schema reads: every compile inferred its
+    tables' schemas (one job each) and the checkpoint read-back inferred
+    the verdicts' schema."""
+    engine = DataPactEngine(
+        spark, TableResolver(spark, base_dir=sf_dir), results_path=str(tmp_path / "res")
+    )
+    config = DataPactConfig(validations=[
+        ValidationTask(
+            task_key="drift_snapshot", source="orders", target="orders",
+            drift_checks=[{"column": "o_totalprice", "metric": "psi", "baseline": "snapshot"}],
+        ),
+        ValidationTask(
+            task_key="by_status", source="orders", target="orders",
+            partition_by=["o_orderstatus"], count_tolerance=0.0,
+            null_validation_columns=["o_custkey"], null_validation_tolerance=0.0,
+        ),
+    ], max_parallel_tasks=1)
+    first = engine.run(config, run_id=1)  # bootstraps the drift baseline
+    run = [1]
+    _tag_jobs(monkeypatch, spark, engine_module, "compile_task",
+              lambda args: f"compile_{run[0]}_{args[1].task_key}")
+    _tag_jobs(monkeypatch, spark, CheckpointStore, "read_verdicts",
+              lambda args: f"read_back_{run[0]}")
+    run[0] = 2
+    second = engine.run(config, run_id=2)
+    assert {k: o.status for k, o in second.outcomes.items()} == {
+        k: o.status for k, o in first.outcomes.items()
+    } == {"drift_snapshot": "SUCCESS", "by_status": "SUCCESS"}
+    for task in config.validations:
+        assert _jobs(spark, f"compile_2_{task.task_key}") == 0, task.task_key
+    assert _jobs(spark, "read_back_2") == 0
+
+
+def test_stream_batches_read_static_target_with_known_schema(spark, tmp_path, monkeypatch):
+    """Micro-batch 0 infers the static target's schema; later batches
+    plan it with the memoized one."""
+    from datapact_spark.streaming import incremental
+    from datapact_spark.streaming.incremental import validate_stream
+
+    src_dir = str(tmp_path / "incoming")
+    ref = spark.range(30).select(F.col("id"), (F.col("id") * 0.5).alias("v"))
+    ref.coalesce(1).write.parquet(str(tmp_path / "ref.parquet"))
+    for lo in (0, 10, 20):
+        ref.where(f"id >= {lo} AND id < {lo + 10}").coalesce(1).write.mode("append").parquet(src_dir)
+    resolver = TableResolver(spark)
+    resolver.register("reference", str(tmp_path / "ref.parquet"))
+    task = ValidationTask(task_key="stream_known", source="incoming", target="reference",
+                          count_tolerance=1.0)
+    batches = []
+
+    def group(args):
+        batches.append(len(batches))
+        return f"stream_compile_{batches[-1]}"
+
+    _tag_jobs(monkeypatch, spark, incremental, "compile_task", group)
+    stream = spark.readStream.schema("id long, v double").option(
+        "maxFilesPerTrigger", "1").parquet(src_dir)
+    q = validate_stream(
+        spark, task, resolver, stream, results_path=str(tmp_path / "results"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert batches == [0, 1, 2]
+    assert _jobs(spark, "stream_compile_0") >= 1  # the inference job
+    assert [_jobs(spark, f"stream_compile_{b}") for b in (1, 2)] == [0, 0]
+
+
+def test_unlistable_path_is_inferred_on_every_read(spark, tmp_path):
+    """A path this process cannot list (here a ``file:`` URI) has no
+    listing signature to validate a memoized schema: it is inferred on
+    every read and never memoized. A listable one is inferred once."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).coalesce(1).write.parquet(path)
+    reads = iter(range(4))
+    counts = {}
+    for ref in ("file://" + path, path):
+        for i in range(2):
+            group = f"read_{next(reads)}"
+            spark.sparkContext.setJobGroup(group, "read")
+            try:
+                read_parquet(spark, ref)
+            finally:
+                spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            counts[(ref, i)] = _jobs(spark, group)
+    uri = "file://" + path
+    assert counts[(uri, 0)] >= 1 and counts[(uri, 1)] >= 1
+    assert counts[(path, 0)] >= 1 and counts[(path, 1)] == 0
+    assert _memo(tmp_path) == {path}
+
+
+def test_schema_memo_holds_one_entry_per_durable_path(spark, tmp_path):
+    """Warm runs of a partitioned task that checkpoints its verdicts,
+    writes violations and compares a drift snapshot add no entry for a
+    run-scoped path: the memo keeps the two inputs and the baseline."""
+    base = tmp_path / "data"
+    rows = spark.range(400).select(
+        F.col("id").alias("k"), (F.col("id") % 4).alias("g"), (F.col("id") * 1.5).alias("v"))
+    rows.coalesce(1).write.parquet(str(base / "src.parquet"))
+    rows.where("k <> 7").coalesce(1).write.parquet(str(base / "tgt.parquet"))
+    res = tmp_path / "res"
+    engine = DataPactEngine(spark, TableResolver(spark, base_dir=str(base)), results_path=str(res))
+    config = DataPactConfig(validations=[ValidationTask(
+        task_key="grouped", source="src", target="tgt", primary_keys=["k"],
+        partition_by=["g"], count_tolerance=0.0, pk_row_hash_check=True,
+        uniqueness_columns=["k"], uniqueness_tolerance=0.0, materialize_violations=True,
+        drift_checks=[{"column": "v", "metric": "psi", "baseline": "snapshot"}],
+    )])
+    for run_id in range(1, 7):  # a cold run, then 5 warm ones
+        assert engine.run(config, run_id=run_id).outcomes["grouped"].status == "FAILURE"
+    assert _memo(tmp_path) == {
+        str(base / "src.parquet"), str(base / "tgt.parquet"),
+        os.path.join(str(res), "baselines", "grouped", "v"),
+    }
 
 
 def test_scoped_resolver_reads_each_ref_once_under_contention():
